@@ -3,8 +3,10 @@
 Hashing stays JVM-side (`sha2(unhex(...))` — exact equivalent of the
 reference's Sha256 over tree bytes, ErgoTreeParser.scala:105-108). Only
 base58check and the tree/template/register parsing are Python — they run
-as Arrow-batched pandas UDFs, and only over the (small, deduplicated)
-`ergo_trees` dimension, never the box fact table.
+as Arrow-batched pandas UDFs that parse each distinct tree of an Arrow
+batch once: over the deduplicated `ergo_trees` dimension at ingest, and
+over a sync batch's output rows directly (a hot tree costs one parse per
+batch, not one per box).
 
 Scope matches SURVEY §7's "crypto fidelity" decision: sha256 exact;
 template extraction for the fixture/common tree forms; base58check with
@@ -17,6 +19,7 @@ from __future__ import annotations
 
 import hashlib
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -238,19 +241,30 @@ def _fallback_hash(tree_hex: str) -> str:
     return hashlib.sha256(raw).hexdigest()
 
 
+def _per_distinct(fn, tree_hex: pd.Series) -> pd.Series:
+    """`fn` over each distinct non-empty tree of one Arrow batch, once:
+    a hot tree repeated on many boxes of a batch costs one parse."""
+    codes, uniq = pd.factorize(tree_hex)
+    # null rows carry code -1, which indexes the trailing None
+    vals = np.array(
+        [fn(t) if t else None for t in uniq] + [None], dtype=object
+    )
+    return pd.Series(vals[codes], index=tree_hex.index)
+
+
 @pandas_udf(StringType())
 def ergo_tree_to_address(tree_hex: pd.Series) -> pd.Series:
-    return tree_hex.map(lambda t: _tree_to_address(t) if t else None)
+    return _per_distinct(_tree_to_address, tree_hex)
 
 
 @pandas_udf(StringType())
 def ergo_tree_t8(tree_hex: pd.Series) -> pd.Series:
-    return tree_hex.map(lambda t: _tree_t8(t) if t else None)
+    return _per_distinct(_tree_t8, tree_hex)
 
 
 @pandas_udf(StringType())
 def ergo_tree_hash_py(tree_hex: pd.Series) -> pd.Series:
-    return tree_hex.map(lambda t: _fallback_hash(t) if t else None)
+    return _per_distinct(_fallback_hash, tree_hex)
 
 
 @pandas_udf(StringType())

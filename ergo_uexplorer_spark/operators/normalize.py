@@ -3,9 +3,12 @@ silver tables. One declarative explode pipeline; Catalyst prunes unread
 nested fields at the JSON/Parquet scan.
 
 Scale decisions:
-  * the expensive Python parsing (address/template extraction) runs ONLY
-    over the deduplicated `ergo_trees` dimension, never per-box — hot
-    addresses (millions of boxes, one tree) cost one UDF call each;
+  * the expensive Python parsing (address/template extraction) runs over
+    the deduplicated `ergo_trees` dimension at ingest, never per-box —
+    hot addresses (millions of boxes, one tree) cost one UDF call each;
+    a sync batch applies `with_tree_columns` to its rows directly (no
+    dimension shuffle), and the UDFs parse each distinct tree of an
+    Arrow batch once;
   * mint detection is a pure column predicate
     (asset.tokenId == inputs[0].boxId, OutputBuilder.scala:21-26);
   * everything else is explode/withColumn, fully codegen'd.
@@ -261,16 +264,20 @@ def registers(outputs_df: DataFrame) -> DataFrame:
     )
 
 
-def ergo_trees(outputs_df: DataFrame) -> DataFrame:
-    """Deduplicated tree dimension with the Python-parsed derivations —
-    the ONLY place the crypto UDFs run (T7/T9)."""
-    dim = outputs_df.select("ergo_tree").distinct()
-    dim = dim.withColumn("ergo_tree_hash", ergo_tree_hash(F.col("ergo_tree")))
-    dim = dim.withColumn("ergo_tree_t8", ergo_tree_t8(F.col("ergo_tree")))
-    dim = dim.withColumn(
+def with_tree_columns(df: DataFrame) -> DataFrame:
+    """`df` plus the columns derived from its `ergo_tree` (T7/T9): the
+    tree hash, the T8 template and its hash, and the address."""
+    df = df.withColumn("ergo_tree_hash", ergo_tree_hash(F.col("ergo_tree")))
+    df = df.withColumn("ergo_tree_t8", ergo_tree_t8(F.col("ergo_tree")))
+    df = df.withColumn(
         "ergo_tree_t8_hash", ergo_tree_t8_hash(F.col("ergo_tree_t8"))
     )
-    dim = dim.withColumn("address", ergo_tree_to_address(F.col("ergo_tree")))
+    return df.withColumn("address", ergo_tree_to_address(F.col("ergo_tree")))
+
+
+def ergo_trees(outputs_df: DataFrame) -> DataFrame:
+    """Deduplicated tree dimension with the Python-parsed derivations."""
+    dim = with_tree_columns(outputs_df.select("ergo_tree").distinct())
     return dim.withColumn("address_type", address_type(F.col("address")))
 
 

@@ -20,6 +20,7 @@ for rollback (the reference keeps 10 MVStore versions).
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 
@@ -36,14 +37,27 @@ COMPACT_EVERY = 10  # BlockWriter.scala:79-83 compaction cadence analog
 
 class UtxoState:
     """Versioned UTXO state on plain parquet with **per-batch delta
-    commits**: each version directory holds only the batch's `created/`
-    rows and `spent/` box-ids — write volume is O(batch), never
-    O(state). Every `compact_every`-th commit additionally materializes
-    a full `base/` snapshot (the MVStore `compactFile` / Delta OPTIMIZE
+    commits**: each version directory holds only the batch's rows —
+    write volume is O(batch), never O(state). Layout of `utxo/v{n}/`:
+
+        created/       parquet, the batch's new boxes (UTXO_COLS)
+        spent/         parquet, spent box_id + spending block height
+        base/          parquet, full snapshot (compacting versions only)
+        _batch_id      streaming batch id (exactly-once marker)
+        _tip           "height:block_id" of the version's chain tip
+        _headers.json  {block_id: [height, parent_id]} of its blocks
+
+    Every `compact_every`-th commit additionally materializes the full
+    `base/` snapshot (the MVStore `compactFile` / Delta OPTIMIZE
     analog), so reads reconstruct from the newest base plus a bounded
     delta chain:
 
         state(v) = (base(b) ∪ created(b+1..v)) ∖ spent(b+1..v)
+
+    The sidecars are plain files read without Spark, so the fork-aware
+    sync's per-batch Spark work is three jobs on an extend (the header
+    collect, the created write, the spent write; compaction adds the
+    base write) and the header collect alone on a tie or orphan.
 
     Commits are atomic (tmp dir + rename); a crash between the rename
     and the base write only lengthens the delta chain, never corrupts.
@@ -132,6 +146,24 @@ class UtxoState:
                 return int(h), bid
         return None
 
+    def _headers(self, v: int) -> dict[str, tuple[int, str]]:
+        """Version `v`'s `_headers.json` sidecar ({} when committed
+        without headers, e.g. by the linear `apply_block_batch`)."""
+        vdir = self._vdir(v)
+        path = os.path.join(vdir, "_headers.json")
+        if os.path.exists(path):
+            with open(path) as f:
+                return {b: (h, p) for b, (h, p) in json.load(f).items()}
+        if os.path.exists(os.path.join(vdir, "headers")):
+            # reading it as header-less would empty the fork window and
+            # skip every later batch as an orphan
+            raise RuntimeError(
+                f"{vdir} holds a `headers/` parquet table but no "
+                "`_headers.json` sidecar (pre-sidecar state layout) — "
+                "rebuild the state to resume fork-aware sync"
+            )
+        return {}
+
     def applied_headers(self) -> dict[str, tuple[int, str]]:
         """{block_id: (height, parent_id)} over the RETAINED versions'
         header sidecars — the bounded recent-chain cache the reference's
@@ -139,10 +171,7 @@ class UtxoState:
         window is unrecoverable anyway, so this never grows O(chain)."""
         out: dict[str, tuple[int, str]] = {}
         for v in self.versions():
-            hdir = os.path.join(self._vdir(v), "headers")
-            if os.path.exists(hdir):
-                for r in self.spark.read.parquet(hdir).collect():
-                    out[r["block_id"]] = (r["height"], r["parent_id"])
+            out.update(self._headers(v))
         return out
 
     def commit(
@@ -150,7 +179,7 @@ class UtxoState:
         created: DataFrame,
         spent: DataFrame,
         batch_id: int | None = None,
-        headers: DataFrame | None = None,
+        headers: dict[str, tuple[int, str]] | None = None,
         tip: tuple[int, str] | None = None,
     ) -> int:
         """O(batch) delta commit: write the batch's created rows and
@@ -185,9 +214,8 @@ class UtxoState:
             with open(os.path.join(tmp, "_batch_id"), "w") as f:
                 f.write(str(batch_id))
         if headers is not None:
-            headers.select("block_id", "height", "parent_id").write.mode(
-                "overwrite"
-            ).parquet(os.path.join(tmp, "headers"))
+            with open(os.path.join(tmp, "_headers.json"), "w") as f:
+                json.dump(headers, f)
         if tip is not None:
             with open(os.path.join(tmp, "_tip"), "w") as f:
                 f.write(f"{tip[0]}:{tip[1]}")
@@ -221,24 +249,25 @@ class UtxoState:
 
     def deltas_above(
         self, version: int, below_height: int
-    ) -> tuple[DataFrame, DataFrame, DataFrame | None]:
+    ) -> tuple[DataFrame, DataFrame, dict[str, tuple[int, str]]]:
         """(created, spent, headers) rows of the versions strictly above
         `version`, restricted to blocks BELOW `below_height` — the
         shared-ancestor slice a mid-version fork rollback must preserve
         (the divergence can fall inside a multi-block version, so the
         rolled-back versions hold blocks the arriving branch never
-        re-supplies). Eagerly materialized (localCheckpoint) so the
-        caller may delete the source version dirs immediately after;
-        volume is bounded by the retained rollback window, never
-        O(state)."""
+        re-supplies). The frames are eagerly materialized
+        (localCheckpoint) so the caller may delete the source version
+        dirs immediately after; volume is bounded by the retained
+        rollback window, never O(state)."""
         vs = [v for v in self.versions() if v > version]
+        headers = {
+            b: hp
+            for v in vs
+            for b, hp in self._headers(v).items()
+            if hp[0] < below_height
+        }
         cdirs = [os.path.join(self._vdir(v), "created") for v in vs]
         sdirs = [os.path.join(self._vdir(v), "spent") for v in vs]
-        hdirs = [
-            os.path.join(self._vdir(v), "headers")
-            for v in vs
-            if os.path.exists(os.path.join(self._vdir(v), "headers"))
-        ]
         created = self.spark.read.parquet(*cdirs).filter(
             F.col("height") < below_height
         )
@@ -261,19 +290,10 @@ class UtxoState:
                 "split those versions at the divergence"
             )
         spent = spent.filter(F.col("height") < below_height)
-        headers = (
-            self.spark.read.parquet(*hdirs).filter(
-                F.col("height") < below_height
-            )
-            if hdirs
-            else None
-        )
         return (
             created.localCheckpoint(eager=True),
             spent.localCheckpoint(eager=True),
-            headers.localCheckpoint(eager=True)
-            if headers is not None
-            else None,
+            headers,
         )
 
 
@@ -291,6 +311,18 @@ UTXO_COLS = (
 )
 
 
+def _batch_delta(raw_batch: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(created, spent) rows of a block batch: its outputs with the tree
+    columns in one projection (the rows `N.boxes` joins from the tree
+    dimension, without the dimension's distinct and broadcast jobs;
+    null-tree outputs drop out as in that inner join) and its spent
+    box ids with the spending height."""
+    out = N.outputs(raw_batch).filter(F.col("ergo_tree").isNotNull())
+    created = N.with_tree_columns(out).select(*UTXO_COLS)
+    spent = spent_inputs(N.inputs(raw_batch)).select("box_id", "height")
+    return created, spent
+
+
 def apply_block_batch(
     state: UtxoState, raw_batch: DataFrame, batch_id: int | None = None
 ) -> int:
@@ -301,19 +333,8 @@ def apply_block_batch(
     and reconstruction union-dedups by box_id; passing the streaming
     `batch_id` upgrades that to exactly-once (no duplicate version on
     foreachBatch redelivery)."""
-    out = N.outputs(raw_batch)
-    trees = N.ergo_trees(out)
-    new_boxes = N.boxes(out, trees).select(*UTXO_COLS)
-    spent = spent_inputs(N.inputs(raw_batch)).select("box_id", "height")
-    return state.commit(new_boxes, spent, batch_id=batch_id)
-
-
-def _batch_headers(raw_batch: DataFrame) -> DataFrame:
-    return raw_batch.select(
-        F.col("header.id").alias("block_id"),
-        F.col("header.height").alias("height"),
-        F.col("header.parentId").alias("parent_id"),
-    )
+    created, spent = _batch_delta(raw_batch)
+    return state.commit(created, spent, batch_id=batch_id)
 
 
 def apply_block_batch_forkaware(
@@ -349,7 +370,9 @@ def apply_block_batch_forkaware(
             return existing
     hdrs = {
         r["block_id"]: (r["height"], r["parent_id"])
-        for r in _batch_headers(raw_batch).collect()
+        for r in N.headers(raw_batch)
+        .select("block_id", "height", "parent_id")
+        .collect()
     }
     if not hdrs:
         return None
@@ -429,20 +452,17 @@ def apply_block_batch_forkaware(
                 headers=keep_headers,
                 tip=(diverge_h - 1, ancestor_id),
             )
-    win = (
-        raw_batch
-        if len(path) == len(hdrs)  # pure append: the whole batch wins
-        else raw_batch.filter(F.col("header.id").isin(path))
-    )
-    out = N.outputs(win)
-    trees = N.ergo_trees(out)
-    new_boxes = N.boxes(out, trees).select(*UTXO_COLS)
-    spent = spent_inputs(N.inputs(win)).select("box_id", "height")
+    if len(path) == len(hdrs):  # pure append: the whole batch wins
+        win, win_hdrs = raw_batch, hdrs
+    else:
+        win = raw_batch.filter(F.col("header.id").isin(path))
+        win_hdrs = {b: hdrs[b] for b in path}
+    created, spent = _batch_delta(win)
     return state.commit(
-        new_boxes,
+        created,
         spent,
         batch_id=batch_id,
-        headers=_batch_headers(win),
+        headers=win_hdrs,
         tip=(tip_h, tip_id),
     )
 

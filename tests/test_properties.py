@@ -1615,6 +1615,27 @@ def test_tree_decoders_never_raise(blob):
     assert isinstance(_fallback_hash(h), str)
 
 
+_TREES = st.one_of(st.none(), st.binary(max_size=40).map(bytes.hex), st.text())
+
+
+@settings(max_examples=100, deadline=None)
+@given(st.lists(_TREES, max_size=20))
+def test_tree_udfs_per_distinct_equal_per_row(trees):
+    """The tree UDFs parse each distinct tree of an Arrow batch once;
+    the result must equal the per-row map over repeats, nulls and ''."""
+    import pandas as pd
+
+    from ergo_uexplorer_spark.functions import crypto as C
+
+    batch = pd.Series(trees + trees[::2], dtype=object)
+    for udf, fn in (
+        (C.ergo_tree_to_address, C._tree_to_address),
+        (C.ergo_tree_t8, C._tree_t8),
+        (C.ergo_tree_hash_py, C._fallback_hash),
+    ):
+        assert udf.func(batch).tolist() == [fn(t) if t else None for t in batch]
+
+
 def test_dedup_family_total_over_dirty_text(spark):
     """Null / empty / whitespace-only / non-ASCII text must flow through
     every dedup pipeline without a task failure (JVM string functions

@@ -711,3 +711,90 @@ def test_fork_aware_randomized_scenarios_match_batch(spark, tmp_path, seed):
     }
     got = {r["box_id"] for r in state.read().select("box_id").collect()}
     assert got == want
+
+
+def _deliver_forkaware(spark, state, blocks, path):
+    """(version, Spark jobs run) of one fork-aware delivery of `blocks`,
+    counting the jobs under a job group."""
+    from ergo_uexplorer_spark.sources.blocks import read_blocks
+    from ergo_uexplorer_spark.streaming.incremental import (
+        apply_block_batch_forkaware,
+    )
+
+    raw = read_blocks(spark, write_jsonl_gz(blocks, f"{path}.jsonl.gz"))
+    sc = spark.sparkContext
+    sc.setJobGroup(str(path), "count")
+    try:
+        v = apply_block_batch_forkaware(state, raw)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # feeds the status store
+    return v, len(sc.statusTracker().getJobIdsForGroup(str(path)))
+
+
+def test_fork_aware_sync_job_budget(spark, tmp_path):
+    """An extend runs the header collect and the created and spent
+    writes (at most 3 jobs without compaction); a tie or orphan runs the
+    header collect alone, however many versions are retained."""
+    g = ChainGen(seed=5)
+    g.generate(40)
+    tie = [b for b in g.fork(28, 0, "t") if 28 <= b["header"]["height"] <= 30]
+    state = UtxoState(spark, str(tmp_path / "state"), compact_every=0)
+    for i in range(3):
+        v, jobs = _deliver_forkaware(
+            spark, state, g.blocks[10 * i : 10 * i + 10], tmp_path / f"m{i}"
+        )
+        assert v == i + 1 and jobs <= 3, (i, jobs)
+    assert _deliver_forkaware(spark, state, tie, tmp_path / "t") == (None, 1)
+    orphan = g.blocks[34:]
+    assert _deliver_forkaware(spark, state, orphan, tmp_path / "o") == (None, 1)
+    assert state.tip() == (30, g.blocks[29]["header"]["id"])
+
+
+def test_applied_headers_rejects_pre_sidecar_layout(spark, tmp_path):
+    """A retained version with the old `headers/` parquet table and no
+    `_headers.json` must fail loudly: read as header-less, the fork
+    window would be empty and every later batch skipped as an orphan."""
+    g = ChainGen(seed=9)
+    g.generate(20)
+    state = UtxoState(spark, str(tmp_path / "state"))
+    _deliver_forkaware(spark, state, g.blocks[:10], tmp_path / "a")
+    vdir = state._vdir(1)
+    spark.createDataFrame(
+        [(b, h, p) for b, (h, p) in state.applied_headers().items()],
+        "block_id string, height int, parent_id string",
+    ).write.parquet(os.path.join(vdir, "headers"))
+    os.remove(os.path.join(vdir, "_headers.json"))
+    with pytest.raises(RuntimeError, match="pre-sidecar state layout"):
+        state.applied_headers()
+    with pytest.raises(RuntimeError, match="_headers.json"):
+        _deliver_forkaware(spark, state, g.blocks[10:], tmp_path / "b")
+    assert state.current_version() == 1
+
+
+def test_sync_tree_columns_equal_dimension_join(spark, tmp_path):
+    """The sync path's row-wise tree columns equal the ingest path's
+    join against the tree dimension, with a hot tree on many outputs, a
+    malformed-hex tree and a null tree (dropped on both sides)."""
+    from ergo_uexplorer_spark.fixtures.chaingen import EXCHANGE_PK, p2pk_tree
+    from ergo_uexplorer_spark.operators import normalize as N
+    from ergo_uexplorer_spark.sources.blocks import read_blocks
+    from ergo_uexplorer_spark.streaming.incremental import UTXO_COLS
+
+    g = ChainGen(seed=13)
+    g.generate(20)
+    outs = g.blocks[7]["transactions"][0]["outputs"]
+    planted = [p2pk_tree(EXCHANGE_PK)] * 40 + ["0008cdzz", None]
+    outs += [
+        dict(outs[0], boxId=f"{i:064x}", ergoTree=t, assets=[])
+        for i, t in enumerate(planted)
+    ]
+    state = UtxoState(spark, str(tmp_path / "state"))
+    v, _ = _deliver_forkaware(spark, state, g.blocks, tmp_path / "p")
+    got = spark.read.parquet(os.path.join(state._vdir(v), "created"))
+    out = N.outputs(read_blocks(spark, f"{tmp_path / 'p'}.jsonl.gz"))
+    want = N.boxes(out, N.ergo_trees(out)).select(*UTXO_COLS)
+    got_rows = sorted(got.select(*UTXO_COLS).collect())
+    assert got_rows == sorted(want.collect())
+    assert len(got_rows) == out.count() - 1  # only the null tree drops
+    assert f"{41:064x}" not in {r["box_id"] for r in got_rows}
