@@ -141,17 +141,18 @@ def select_boxes(
         how = "left_semi" if liveness == "spent" else "left_anti"
         boxes = boxes.join(spent_ids, "box_id", how)
     if key_kind == "token_id":
+        # no distinct for the semi-join: it ignores duplicate keys
         holders = (
             tables["assets"]
             .filter(F.col("token_id").isin(list(keys or [])))
             .select("box_id")
-            .distinct()
         )
         probed = False
         if probe_ids:
+            # distinct here: the ids are counted against probe_cap
             ids = [
                 r["box_id"]
-                for r in holders.limit(probe_cap + 1).collect()
+                for r in holders.distinct().limit(probe_cap + 1).collect()
             ]
             if len(ids) <= probe_cap:
                 boxes = boxes.filter(F.col("box_id").isin(ids))

@@ -44,6 +44,19 @@ def ordered_prefix(
 
     One extra narrow shuffle (repartitionByRange) + one tiny collect of
     per-partition aggregates; no single-task stage at any point.
+
+    The range-partitioned input is read twice (the stats collect, then
+    the returned plan), so it is pinned with a lazy ``localCheckpoint``
+    that the stats collect fills. A ``persist()`` would leak: the
+    returned frame is lazy and still reads the pin, so nothing can
+    unpersist it. Its CacheManager entry would live for the session,
+    put the whole upstream lineage into every plan over the result (the
+    served `blocks` table), and be matched by plan — re-ingesting a
+    longer rewrite of the same dump path in one session would hit the
+    old entry and return the old, shorter block table. Checkpoint
+    blocks belong to this frame alone and are reclaimed by the
+    ContextCleaner once it is garbage collected (see
+    `util.materialize_and_release`).
     """
     sum_cols = sum_cols or {}
     lag_cols = lag_cols or {}
@@ -53,7 +66,7 @@ def ordered_prefix(
     ranged = (
         df.repartitionByRange(n, *order_cols)
         .withColumn(_PID, F.spark_partition_id())
-        .persist()
+        .localCheckpoint(eager=False)
     )
 
     aggs = [F.count(F.lit(1)).alias("__cnt")]

@@ -5,6 +5,20 @@ partition coalescing, skew-join splitting — the reference's "supernode"
 answer, see SURVEY §4 / mvstore/SuperNodeMvMap.scala:18-247), broadcast
 threshold sized so dimension tables never shuffle, UTC session time,
 Arrow for the few pandas-UDF paths.
+
+Cached plans may change their output partitioning
+(`spark.sql.optimizer.canChangeCachedPlanOutputPartitioning`, false by
+default in Spark 4.1). With it off, AQE leaves a persisted plan's final
+shuffle uncoalesced, so a 600-row `blocks` pin is stored as 32
+partitions (the shuffle partition count): every served query over it
+runs 32 tasks, and a `limit(n).collect()` that finds its row late
+scales up over them in several jobs. With it on, a small pin coalesces
+to one partition and a served point query runs one one-task job. Large
+pins stay parallel: with
+`spark.sql.adaptive.coalescePartitions.parallelismFirst` (true, Spark's
+default), AQE's coalesce target is the total size over the default
+parallelism (floored at `minPartitionSize`, 1 MB), so a pin larger
+than default-parallelism × 1 MB keeps at least that many partitions.
 """
 
 from __future__ import annotations
@@ -37,6 +51,10 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.adaptive.localShuffleReader.enabled", "true")
+        # let AQE coalesce persisted plans too (see module docstring)
+        .config(
+            "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true"
+        )
         # --- shuffle / scan sizing ---------------------------------------
         .config(
             "spark.sql.shuffle.partitions",

@@ -22,7 +22,7 @@ from ergo_uexplorer_spark.operators.utxo import (
     spent_boxes,
     verify_spend_integrity,
 )
-from ergo_uexplorer_spark.pipeline import ingest_blocks
+from ergo_uexplorer_spark.pipeline import ingest_blocks, materialize_tables
 
 N_BLOCKS = 250
 FORK_AT = N_BLOCKS - 1  # shorter fork: diverges for last 2 heights
@@ -650,3 +650,35 @@ def test_materialize_tables_concurrent_equals_sequential(spark, chain_dir):
         tables["raw"].unpersist(blocking=True)
     assert counts["concurrent"] == counts["sequential"]
     assert counts["concurrent"]["blocks"] == N_BLOCKS
+
+
+def test_rewritten_dump_reingests_fresh_block_table(spark, tmp_path):
+    """Ingesting a longer rewrite of the same dump path in one session
+    must rebuild `blocks` from the new dump: a plan-matched pin left by
+    the first ingest would serve the old, shorter block table."""
+    gen = ChainGen(seed=8)
+    gen.generate(150)
+    path = str(tmp_path / "chain.jsonl.gz")
+    write_jsonl_gz(gen.blocks[:100], path)
+    assert ingest_blocks(spark, path)["blocks"].count() == 100
+    write_jsonl_gz(gen.blocks, path)
+    tables = ingest_blocks(spark, path)
+    n_main = tables["headers_main"].count()
+    assert n_main == 150
+    assert tables["blocks"].count() == n_main
+    assert tables["blocks"].agg(F.max("height")).collect()[0][0] == 150
+
+
+def test_ingest_leaves_no_cache_entry(spark, chain_dir):
+    """After a `cache='raw'` ingest is materialized and its raw pin
+    released, the CacheManager holds nothing: `ordered_prefix` (the
+    `blocks` prefix pass) pins with a checkpoint, not a session-long
+    persist()."""
+    spark.catalog.clearCache()
+    tables = ingest_blocks(
+        spark, str(chain_dir / "blocks_main.jsonl.gz"), cache="raw"
+    )
+    materialize_tables(tables)
+    tables["raw"].unpersist(blocking=True)
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    assert cm.isEmpty(), "ingest left a persisted intermediate behind"

@@ -7,6 +7,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from ergo_uexplorer_spark import api
 from ergo_uexplorer_spark.constants import EXCHANGE_PK, FEE_TREE
 from ergo_uexplorer_spark.fixtures.chaingen import (
     ChainGen,
@@ -38,6 +39,26 @@ def tables(spark, tmp_path_factory):
     gen.generate(N_BLOCKS)
     path = write_jsonl_gz(gen.blocks, str(d / "chain.jsonl.gz"))
     return ingest_blocks(spark, path)
+
+
+# the tables an explorer holds in memory to serve every route
+SERVE_TABLES = ("boxes_main", "inputs_main", "assets", "blocks", "address_stats")
+
+
+@pytest.fixture(scope="module")
+def served(spark, tmp_path_factory):
+    """The ingest's serving tables, persisted and filled."""
+    d = tmp_path_factory.mktemp("served")
+    gen = ChainGen(seed=11)
+    gen.generate(N_BLOCKS)
+    path = write_jsonl_gz(gen.blocks, str(d / "chain.jsonl.gz"))
+    ingested = ingest_blocks(spark, path, cache="raw")
+    held = {name: ingested[name].persist() for name in SERVE_TABLES}
+    for df in held.values():
+        df.count()
+    yield held
+    for df in [*held.values(), ingested["raw"]]:
+        df.unpersist()
 
 
 EXCHANGE_ADDR = _tree_to_address(p2pk_tree(EXCHANGE_PK))
@@ -351,3 +372,75 @@ def test_box_ids_token_probe_equals_semi_join(tables):
         ).collect()
     )
     assert capped == plain
+
+
+def test_token_route_duplicate_holder_row(tables):
+    """A box listed twice for the same token in `assets` is returned
+    once by the token route, and the semi-join equals the id probe both
+    under and over its cap."""
+    assets = tables["assets"]
+    first = assets.select("token_id", "box_id").limit(1).collect()[0]
+    tok, box = first["token_id"], first["box_id"]
+    dup = assets.filter(
+        (F.col("token_id") == tok) & (F.col("box_id") == box)
+    ).limit(1)
+    doubled = {**tables, "assets": assets.unionByName(dup)}
+
+    def ids(**kw) -> list[str]:
+        df = B.select_boxes(
+            doubled, key_kind="token_id", keys=[tok], columns=["box_id"], **kw
+        )
+        return sorted(r["box_id"] for r in df.collect())
+
+    served = sorted(
+        r["box_id"]
+        for r in api.endpoint(
+            doubled, "box-ids/any/by-token-id", keys=[tok]
+        ).collect()
+    )
+    assert served.count(box) == 1
+    assert served == ids(probe_ids=True) == ids(probe_ids=True, probe_cap=0)
+
+
+def _jobs(spark, group: str, action) -> int:
+    """Spark jobs `action()` runs, counted under a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # feeds the status store
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_served_route_job_budget(spark, served):
+    """Over persisted serving tables, the block, info and top-address
+    routes answer in one job and the box and token routes in at most
+    two (a broadcast of the key side, then the scan): AQE coalesces the
+    small cached tables, and nothing pins extra lineage to `blocks`."""
+    blocks = served["blocks"].orderBy("height").collect()
+    tip = blocks[-1]["block_id"]
+    box = served["boxes_main"].select("box_id").limit(1).collect()[0][0]
+    tok = served["assets"].select("token_id").limit(1).collect()[0][0]
+    budget = [
+        ("blocks/latest", None, 1),
+        ("blocks/by-id", tip, 1),
+        ("blocks/by-id", blocks[0]["block_id"], 1),
+        ("info", None, 1),
+        ("stats/top-addresses/by-box-count", None, 1),
+        ("stats/top-addresses/by-value", None, 1),
+        ("boxes/unspent/by-id", box, 2),
+        ("boxes/unspent/by-address", EXCHANGE_ADDR, 2),
+        ("boxes/spent/by-address", EXCHANGE_ADDR, 2),
+        ("box-ids/any/by-token-id", tok, 2),
+    ]
+    over = []
+    for i, (route, key, most) in enumerate(budget):
+        df = api.endpoint(
+            served, route, keys=[key] if key is not None else None, limit=50
+        )
+        n = _jobs(spark, f"serve:{i}:{route}", lambda: df.limit(50).collect())
+        if not 1 <= n <= most:
+            over.append((route, n, most))
+    assert not over, over
