@@ -194,7 +194,8 @@ def paginated_block_batches(
 ):
     """S1+S2 composed: the driver loop the reference runs as a ZStream —
     one DataFrame micro-batch per id page, ready for
-    `incremental.apply_block_batch` (per-page UTXO delta commit)."""
+    `incremental.apply_block_batch_forkaware` (per-page UTXO delta
+    commit)."""
     for ids in block_id_pages(fetch_page, from_height, page_size):
         yield fetch_blocks(spark, ids, fetch_block)
 

@@ -1,28 +1,30 @@
-"""Incremental chain sync (SURVEY §2.1 S7/S10, §2.3 C4-C5, C10).
+"""Incremental chain sync (SURVEY §2.1 S7/S10, §2.3 C3-C5, C10).
 
 The reference's periodic scheduler indexes new blocks into H2+MVStore
 with per-block transactions and version-based rollback
 (StreamScheduler.scala:25-64, MvStorage commit/rollbackTo). The Spark
 shape is Structured Streaming over arriving block files with
-`foreachBatch` applying the UTXO delta per micro-batch:
+`foreachBatch` applying each micro-batch through the scheduler's branch
+resolution (`apply_block_batch_forkaware`; a winning fork first rolls
+back below its divergence), then the UTXO delta:
 
     utxo' = (utxo ∪ batch_outputs) ∖ batch_spent_inputs
 
-On Delta-capable storage this is literally `MERGE INTO utxo` (insert
-outputs / delete inputs) and `RESTORE VERSION AS OF` replaces
-rollbackTo; this module implements the same contract on plain parquet
-with versioned DELTA directories (state/utxo/v{n}/{created,spent}) —
-each commit writes O(batch) rows, a periodic compaction materializes a
-full base snapshot, and reads reconstruct base ∪ deltas ∖ spends. Delta
-writes are atomic via write-then-rename and old versions are retained
-for rollback (the reference keeps 10 MVStore versions).
+On Delta-capable storage this is `MERGE INTO utxo` + `RESTORE VERSION
+AS OF` (SCALE.md); this module implements the same contract on plain
+parquet with versioned DELTA directories (`VersionedDirs`) — each
+commit writes O(batch) rows, a periodic compaction materializes a full
+base snapshot, and reads reconstruct base ∪ deltas ∖ spends. The
+optional token rollup (`token_rollup.TokenStatsRollup`) rides the same
+versions, as the reference's BlockWriter updates its token tables in
+the block's transaction.
 """
-
 from __future__ import annotations
 
 import json
 import os
 import shutil
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -35,37 +37,15 @@ KEEP_VERSIONS = 10  # MvStorage.scala:298
 COMPACT_EVERY = 10  # BlockWriter.scala:79-83 compaction cadence analog
 
 
-class UtxoState:
-    """Versioned UTXO state on plain parquet with **per-batch delta
-    commits**: each version directory holds only the batch's rows —
-    write volume is O(batch), never O(state). Layout of `utxo/v{n}/`:
+class VersionedDirs:
+    """Numbered version dirs `{state_dir}/{subdir}/v{n}` with atomic
+    publish (tmp dir + rename), an exactly-once `_batch_id` marker,
+    compaction on a cadence, pruning behind the retained rollback window
+    and rollback by dropping newer versions. Subclasses name their
+    `subdir` and define `read(version)`, the full snapshot that
+    compaction materializes."""
 
-        created/       parquet, the batch's new boxes (UTXO_COLS)
-        spent/         parquet, spent box_id + spending block height
-        base/          parquet, full snapshot (compacting versions only)
-        _batch_id      streaming batch id (exactly-once marker)
-        _tip           "height:block_id" of the version's chain tip
-        _headers.json  {block_id: [height, parent_id]} of its blocks
-
-    Every `compact_every`-th commit additionally materializes the full
-    `base/` snapshot (the MVStore `compactFile` / Delta OPTIMIZE
-    analog), so reads reconstruct from the newest base plus a bounded
-    delta chain:
-
-        state(v) = (base(b) ∪ created(b+1..v)) ∖ spent(b+1..v)
-
-    The sidecars are plain files read without Spark, so the fork-aware
-    sync's per-batch Spark work is three jobs on an extend (the header
-    collect, the created write, the spent write; compaction adds the
-    base write) and the header collect alone on a tie or orphan.
-
-    Commits are atomic (tmp dir + rename); a crash between the rename
-    and the base write only lengthens the delta chain, never corrupts.
-    Rollback (S10 rollbackTo) drops newer version dirs; pruning removes
-    only versions older than a base that the retained window no longer
-    needs. On Delta-capable storage the whole class collapses to
-    `MERGE INTO utxo` + `RESTORE VERSION AS OF`.
-    """
+    subdir: str
 
     def __init__(
         self,
@@ -75,7 +55,7 @@ class UtxoState:
         keep_versions: int = KEEP_VERSIONS,
     ):
         self.spark = spark
-        self.dir = os.path.join(state_dir, "utxo")
+        self.dir = os.path.join(state_dir, self.subdir)
         self.compact_every = compact_every
         self.keep_versions = keep_versions
         os.makedirs(self.dir, exist_ok=True)
@@ -95,34 +75,6 @@ class UtxoState:
         vs = self.versions()
         return vs[-1] if vs else 0
 
-    def read(self, version: int | None = None) -> DataFrame | None:
-        """Reconstruct the UTXO set at `version` from the newest base at
-        or below it plus the (≤ compact_every + keep_versions) deltas
-        above — a union + one anti-join, distributed end to end."""
-        v = self.current_version() if version is None else version
-        vs = [x for x in self.versions() if x <= v]
-        if not vs:
-            return None
-        bases = [x for x in vs if self._has_base(x)]
-        b = max(bases) if bases else 0
-        created_dirs = [
-            os.path.join(self._vdir(x), "created") for x in vs if x > b
-        ]
-        spent_dirs = [os.path.join(self._vdir(x), "spent") for x in vs if x > b]
-        base_df = (
-            self.spark.read.parquet(os.path.join(self._vdir(b), "base"))
-            if b
-            else None
-        )
-        if not created_dirs:
-            return base_df
-        created = self.spark.read.parquet(*created_dirs)
-        merged = (
-            created if base_df is None else base_df.unionByName(created)
-        ).dropDuplicates(["box_id"])
-        spent = self.spark.read.parquet(*spent_dirs).select("box_id")
-        return merged.join(spent, "box_id", "left_anti")
-
     def batch_version(self, batch_id: int) -> int | None:
         """Version already published for a streaming batch id, if any."""
         for v in self.versions():
@@ -132,6 +84,125 @@ class UtxoState:
                     if f.read().strip() == str(batch_id):
                         return v
         return None
+
+    def _chain(
+        self, version: int | None
+    ) -> tuple[DataFrame | None, list[str]] | None:
+        """(the newest base snapshot at or below `version`, None for
+        none; the dirs of the versions above it up to `version`) — what a
+        read at `version` reconstructs from. None before the first
+        commit."""
+        v = self.current_version() if version is None else version
+        vs = [x for x in self.versions() if x <= v]
+        if not vs:
+            return None
+        b = max((x for x in vs if self._has_base(x)), default=0)
+        base = (
+            self.spark.read.parquet(os.path.join(self._vdir(b), "base"))
+            if b
+            else None
+        )
+        return base, [self._vdir(x) for x in vs if x > b]
+
+    def _publish(
+        self, write: Callable[[str], None], batch_id: int | None
+    ) -> int:
+        """Publish the next version: `write(tmp_dir)` fills it, the
+        rename makes it visible, then (on the compaction cadence) the
+        full `read` is materialized as `base/` and the versions the
+        retained window no longer needs are pruned.
+
+        `batch_id` makes the publish EXACTLY-ONCE under foreachBatch
+        redelivery: Structured Streaming re-runs the last micro-batch
+        after a crash between the sink write and the checkpoint commit,
+        so the id is recorded inside the version dir (same atomic
+        rename) and a replay returns the already-published version. A
+        crash between the rename and the base write only lengthens the
+        delta chain, never corrupts."""
+        if batch_id is not None:
+            existing = self.batch_version(batch_id)
+            if existing is not None:
+                return existing
+        v = self.current_version() + 1
+        tmp = os.path.join(self.dir, f".tmp_v{v}")
+        write(tmp)
+        if batch_id is not None:
+            with open(os.path.join(tmp, "_batch_id"), "w") as f:
+                f.write(str(batch_id))
+        os.rename(tmp, self._vdir(v))
+        if self.compact_every and v % self.compact_every == 0:
+            tmp_base = os.path.join(self._vdir(v), ".tmp_base")
+            self.read(v).write.mode("overwrite").parquet(tmp_base)
+            os.rename(tmp_base, os.path.join(self._vdir(v), "base"))
+        self._prune(v)
+        return v
+
+    def _prune(self, current: int) -> None:
+        """Drop versions strictly older than the newest base that still
+        covers the whole retained rollback window."""
+        window_lo = current - self.keep_versions + 1
+        bases = [
+            x for x in self.versions() if self._has_base(x) and x <= window_lo
+        ]
+        if not bases:
+            return
+        cutoff = max(bases)
+        for old in self.versions():
+            if old < cutoff:
+                shutil.rmtree(self._vdir(old), ignore_errors=True)
+
+    def rollback_to(self, version: int) -> None:
+        """S10 rollbackTo(rev): drop newer versions (fork recovery)."""
+        for v in self.versions():
+            if v > version:
+                shutil.rmtree(self._vdir(v), ignore_errors=True)
+
+
+class UtxoState(VersionedDirs):
+    """Versioned UTXO state on plain parquet with **per-batch delta
+    commits**: each version directory holds only the batch's rows —
+    write volume is O(batch), never O(state). Layout of `utxo/v{n}/`:
+
+        created/       parquet, the batch's new boxes (UTXO_COLS)
+        spent/         parquet, spent box_id + spending block height
+        base/          parquet, full snapshot (compacting versions only)
+        _batch_id      streaming batch id (exactly-once marker)
+        _tip           "height:block_id" of the version's chain tip
+        _headers.json  {block_id: [height, parent_id]} of its blocks
+
+    Reads reconstruct from the newest base plus a bounded delta chain:
+
+        state(v) = (base(b) ∪ created(b+1..v)) ∖ spent(b+1..v)
+
+    The sidecars are plain files read without Spark, so the sync's
+    per-batch Spark work is three jobs on an extend (the header collect,
+    the created write, the spent write; compaction adds the base write)
+    and the header collect alone on a tie or orphan. Publishing,
+    compaction, pruning and rollback are `VersionedDirs`'.
+    """
+
+    subdir = "utxo"
+
+    def read(self, version: int | None = None) -> DataFrame | None:
+        """Reconstruct the UTXO set at `version` from the newest base at
+        or below it plus the (≤ compact_every + keep_versions) deltas
+        above — a union + one anti-join, distributed end to end."""
+        chain = self._chain(version)
+        if chain is None:
+            return None
+        base_df, above = chain
+        if not above:
+            return base_df
+        created = self.spark.read.parquet(
+            *[os.path.join(d, "created") for d in above]
+        )
+        merged = (
+            created if base_df is None else base_df.unionByName(created)
+        ).dropDuplicates(["box_id"])
+        spent = self.spark.read.parquet(
+            *[os.path.join(d, "spent") for d in above]
+        ).select("box_id")
+        return merged.join(spent, "box_id", "left_anti")
 
     def tip(self, version: int | None = None) -> tuple[int, str] | None:
         """(height, block_id) recorded at `version` (default: newest
@@ -148,7 +219,7 @@ class UtxoState:
 
     def _headers(self, v: int) -> dict[str, tuple[int, str]]:
         """Version `v`'s `_headers.json` sidecar ({} when committed
-        without headers, e.g. by the linear `apply_block_batch`)."""
+        without headers, e.g. by a direct `commit`)."""
         vdir = self._vdir(v)
         path = os.path.join(vdir, "_headers.json")
         if os.path.exists(path):
@@ -183,69 +254,32 @@ class UtxoState:
         tip: tuple[int, str] | None = None,
     ) -> int:
         """O(batch) delta commit: write the batch's created rows and
-        spent box-ids, atomically publish the version, then (on the
-        compaction cadence) materialize the full snapshot and prune
-        deltas the retained window no longer needs.
-
-        `batch_id` makes the commit EXACTLY-ONCE under foreachBatch
-        redelivery: Structured Streaming re-runs the last micro-batch
-        after a crash between the sink write and the checkpoint commit,
-        so the batch id is recorded inside the version dir (same atomic
-        rename) and a replay returns the already-published version
-        instead of double-applying (the reference gets this from
-        MVStore's transactional per-block commit)."""
-        if batch_id is not None:
-            existing = self.batch_version(batch_id)
-            if existing is not None:
-                return existing
-        v = self.current_version() + 1
-        tmp = os.path.join(self.dir, f".tmp_v{v}")
-        created.write.mode("overwrite").parquet(os.path.join(tmp, "created"))
+        spent box-ids plus the header/tip sidecars into the next version
+        (atomic, exactly-once via `batch_id` — `VersionedDirs._publish`;
+        the reference gets this from MVStore's transactional per-block
+        commit)."""
         # keep the spending block's height alongside the id: reads only
         # ever project box_id, but a mid-version fork rollback must split
         # a version's spends at the divergence height (see deltas_above)
         spent_cols = ["box_id"] + (
             ["height"] if "height" in spent.columns else []
         )
-        spent.select(*spent_cols).write.mode("overwrite").parquet(
-            os.path.join(tmp, "spent")
-        )
-        if batch_id is not None:
-            with open(os.path.join(tmp, "_batch_id"), "w") as f:
-                f.write(str(batch_id))
-        if headers is not None:
-            with open(os.path.join(tmp, "_headers.json"), "w") as f:
-                json.dump(headers, f)
-        if tip is not None:
-            with open(os.path.join(tmp, "_tip"), "w") as f:
-                f.write(f"{tip[0]}:{tip[1]}")
-        os.rename(tmp, self._vdir(v))
-        if self.compact_every and v % self.compact_every == 0:
-            tmp_base = os.path.join(self._vdir(v), ".tmp_base")
-            self.read(v).write.mode("overwrite").parquet(tmp_base)
-            os.rename(tmp_base, os.path.join(self._vdir(v), "base"))
-        self._prune(v)
-        return v
 
-    def _prune(self, current: int) -> None:
-        """Drop versions strictly older than the newest base that still
-        covers the whole retained rollback window."""
-        window_lo = current - self.keep_versions + 1
-        bases = [
-            x for x in self.versions() if self._has_base(x) and x <= window_lo
-        ]
-        if not bases:
-            return
-        cutoff = max(bases)
-        for old in self.versions():
-            if old < cutoff:
-                shutil.rmtree(self._vdir(old), ignore_errors=True)
+        def write(tmp: str) -> None:
+            created.write.mode("overwrite").parquet(
+                os.path.join(tmp, "created")
+            )
+            spent.select(*spent_cols).write.mode("overwrite").parquet(
+                os.path.join(tmp, "spent")
+            )
+            if headers is not None:
+                with open(os.path.join(tmp, "_headers.json"), "w") as f:
+                    json.dump(headers, f)
+            if tip is not None:
+                with open(os.path.join(tmp, "_tip"), "w") as f:
+                    f.write(f"{tip[0]}:{tip[1]}")
 
-    def rollback_to(self, version: int) -> None:
-        """S10 rollbackTo(rev): drop newer versions (fork recovery)."""
-        for v in self.versions():
-            if v > version:
-                shutil.rmtree(self._vdir(v), ignore_errors=True)
+        return self._publish(write, batch_id)
 
     def deltas_above(
         self, version: int, below_height: int
@@ -323,31 +357,44 @@ def _batch_delta(raw_batch: DataFrame) -> tuple[DataFrame, DataFrame]:
     return created, spent
 
 
-def apply_block_batch(
-    state: UtxoState, raw_batch: DataFrame, batch_id: int | None = None
+def _commit(
+    state: UtxoState,
+    token_rollup,
+    partials: DataFrame | None,
+    created: DataFrame,
+    spent: DataFrame,
+    batch_id: int | None = None,
+    **sidecars,
 ) -> int:
-    """C4/C5 per-batch UTXO application as a pure DELTA: the commit
-    writes only this batch's outputs and spent ids (O(batch) I/O —
-    MvStorage's per-block commit contract, never a full-state rewrite).
-    Idempotence: re-applying the same content re-writes the same delta
-    and reconstruction union-dedups by box_id; passing the streaming
-    `batch_id` upgrades that to exactly-once (no duplicate version on
-    foreachBatch redelivery)."""
-    created, spent = _batch_delta(raw_batch)
-    return state.commit(created, spent, batch_id=batch_id)
+    """Commit the rollup's partials, then the state's delta, under one
+    `batch_id`. Rollup first: a crash between the two writes leaves the
+    rollup one version ahead holding the batch's marker, so the
+    redelivered batch finds its rollup commit already published and
+    commits only the state. Any other skew raises before the state
+    write."""
+    if token_rollup is not None:
+        rv = token_rollup.commit(partials, batch_id=batch_id)
+        if rv != state.current_version() + 1:
+            raise RuntimeError(
+                f"token rollup published version {rv} but the UTXO state "
+                f"is at version {state.current_version()} — the two "
+                "stores have diverged"
+            )
+    return state.commit(created, spent, batch_id=batch_id, **sidecars)
 
 
 def apply_block_batch_forkaware(
     state: UtxoState,
     raw_batch: DataFrame,
     batch_id: int | None = None,
-    genesis_parent: str | None = None,
+    token_rollup=None,
 ) -> int | None:
-    """C3-under-streaming: per-batch UTXO application with the
-    reference scheduler's fork handling (StreamScheduler.scala:25-64,
+    """C3-C5 under streaming: the one per-batch UTXO application, with
+    the reference scheduler's fork handling (StreamScheduler.scala:25-64,
     BlockWriter.scala:35-77 winning-branch semantics):
 
-    - batch extends the tip → plain delta commit;
+    - batch extends the tip (a linear stream's every batch) → plain
+      O(batch) delta commit;
     - batch is a branch diverging below the tip → applied ONLY if its
       best linked tip is strictly higher than the current one (longest
       chain wins; the same-height incumbent keeps — first-seen-wins,
@@ -357,7 +404,15 @@ def apply_block_batch_forkaware(
       MIDDLE of a multi-block version, the rolled-back versions' deltas
       below the divergence height are preserved and re-committed first
       (the branch never re-supplies shared-ancestor blocks);
-    - losing / orphan branch → no-op (returns None).
+    - losing / orphan branch, or blocks already applied → no-op
+      (returns None); a replayed `batch_id` returns its version.
+
+    `token_rollup` (a `token_rollup.TokenStatsRollup`) follows the same
+    resolution at the same version numbers: both roll back to the same
+    target, the rollup's preserved slice is re-committed next to the
+    state's, and the winning slice's token partials are committed with
+    the state's delta (see `_commit`). A rollback target outside the
+    rollup's retained window raises.
 
     Driver-side work is O(|batch headers| + retained window): only the
     3-string header tuples are collected, never block bodies — the same
@@ -390,9 +445,7 @@ def apply_block_batch_forkaware(
         while node in hdrs and node not in seen:
             seen.add(node)
             nh, parent = hdrs[node]
-            if parent in applied or (
-                nh == 1 and (genesis_parent is None or parent == genesis_parent)
-            ):
+            if parent in applied or nh == 1:
                 anchor_child_h = nh
                 break
             node = parent
@@ -429,6 +482,16 @@ def apply_block_batch_forkaware(
                 f"window — cannot rewind (reference keeps {KEEP_VERSIONS} "
                 "versions too)"
             )
+        if (
+            token_rollup is not None
+            and target is not None
+            and target not in token_rollup.versions()
+        ):
+            raise RuntimeError(
+                f"fork rollback target version {target} is outside the "
+                "token rollup's retained window (its keep_versions="
+                f"{token_rollup.keep_versions} is shorter than the state's)"
+            )
         preserved = None
         if (
             target is not None
@@ -443,10 +506,20 @@ def apply_block_batch_forkaware(
             # re-commit it as the post-rollback floor, exactly as if the
             # version boundary had fallen on the divergence.
             preserved = state.deltas_above(target, diverge_h)
+            kept_partials = (
+                token_rollup.deltas_above(target, diverge_h)
+                if token_rollup is not None
+                else None
+            )
         state.rollback_to(target or 0)
+        if token_rollup is not None:
+            token_rollup.rollback_to(target or 0)
         if preserved is not None:
             keep_created, keep_spent, keep_headers = preserved
-            state.commit(
+            _commit(
+                state,
+                token_rollup,
+                kept_partials,
                 keep_created,
                 keep_spent,
                 headers=keep_headers,
@@ -458,7 +531,15 @@ def apply_block_batch_forkaware(
         win = raw_batch.filter(F.col("header.id").isin(path))
         win_hdrs = {b: hdrs[b] for b in path}
     created, spent = _batch_delta(win)
-    return state.commit(
+    partials = None
+    if token_rollup is not None:
+        from .token_rollup import token_partials
+
+        partials = token_partials(N.assets(N.outputs(win)))
+    return _commit(
+        state,
+        token_rollup,
+        partials,
         created,
         spent,
         batch_id=batch_id,
@@ -473,49 +554,29 @@ def incremental_sync(
     state_dir: str,
     checkpoint_dir: str,
     available_now: bool = True,
-    state: "UtxoState | None" = None,
-    fork_aware: bool = False,
     token_rollup=None,
 ):
-    """C10: Structured Streaming over arriving block files; one UTXO
-    version per micro-batch. `Trigger.AvailableNow` drains the backlog
-    then stops (the batch-catchup mode); leave it False for continuous
-    tailing of a node dump directory. Pass `state` to run against a
-    different versioned backend (e.g. `delta_state.DeltaUtxoState`).
-    `fork_aware=True` routes each micro-batch through the reference
-    scheduler's branch resolution (rollback + winning-chain re-apply;
-    parquet `UtxoState` backend — it needs the tip/header sidecars).
+    """C10: Structured Streaming over arriving block files; each
+    micro-batch goes through `apply_block_batch_forkaware` (one UTXO
+    version per applied batch; losing or orphan branches are skipped,
+    winning ones roll back and re-apply). `Trigger.AvailableNow` drains
+    the backlog then stops (the batch-catchup mode); leave it False for
+    continuous tailing of a node dump directory.
 
     `token_rollup` (a `token_rollup.TokenStatsRollup`) additionally
-    maintains the q15b top-tokens aggregate per micro-batch — the
-    serving answer the r11 layout A/B named (SCALE.md: both disk
-    layouts lose to a full scan; the rollup serves top-K from the
-    token DIMENSION). Supported on the linear path only: a fork-aware
-    deployment must drive the rollup from the same branch resolution
-    that drives the UTXO state (winning slice + matched rollback
-    version), which is the caller's integration, so combining the two
-    flags raises rather than silently maintaining a rollup that forks
-    would corrupt."""
-    state = state or UtxoState(spark, state_dir)
-    if token_rollup is not None and fork_aware:
-        raise ValueError(
-            "token_rollup under fork_aware needs the branch resolution "
-            "to drive both states — wire apply_block_batch_forkaware's "
-            "winning slice into the rollup explicitly"
-        )
+    maintains the q15b top-tokens aggregate through the same branch
+    resolution — the serving answer the r11 layout A/B named (SCALE.md:
+    both disk layouts lose to a full scan; the rollup serves top-K from
+    the token DIMENSION)."""
+    state = UtxoState(spark, state_dir)
     stream = spark.readStream.schema(BLOCK_SCHEMA).json(blocks_dir)
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        if fork_aware:
-            apply_block_batch_forkaware(state, batch_df, batch_id=batch_id)
-        else:
-            apply_block_batch(state, batch_df, batch_id=batch_id)
-            if token_rollup is not None:
-                token_rollup.commit(
-                    N.assets(N.outputs(batch_df)), batch_id=batch_id
-                )
+        apply_block_batch_forkaware(
+            state, batch_df, batch_id=batch_id, token_rollup=token_rollup
+        )
 
     writer = (
         stream.writeStream.foreachBatch(_apply)

@@ -334,7 +334,10 @@ def test_token_rollup_exactly_once_and_rollback(spark, tmp_path):
     from ergo_uexplorer_spark.operators import normalize as N
     from ergo_uexplorer_spark.sources.blocks import BLOCK_SCHEMA
     from ergo_uexplorer_spark.fixtures.chaingen import write_jsonl_gz
-    from ergo_uexplorer_spark.streaming.token_rollup import TokenStatsRollup
+    from ergo_uexplorer_spark.streaming.token_rollup import (
+        TokenStatsRollup,
+        token_partials,
+    )
 
     gen = ChainGen(seed=34)
     gen.generate(30)
@@ -342,19 +345,21 @@ def test_token_rollup_exactly_once_and_rollback(spark, tmp_path):
     write_jsonl_gz(gen.blocks, p)
     raw = spark.read.schema(BLOCK_SCHEMA).json(p)
     assets = N.assets(N.outputs(raw))
+    low = token_partials(assets.filter(F.col("height") <= 15))
+    high = token_partials(assets.filter(F.col("height") > 15))
     # -- exactly-once + fork rollback (no compaction interference)
     rollup = TokenStatsRollup(spark, str(tmp_path / "state"))
-    v1 = rollup.commit(assets.filter(F.col("height") <= 15), batch_id=0)
-    v2 = rollup.commit(assets.filter(F.col("height") > 15), batch_id=1)
+    v1 = rollup.commit(low, batch_id=0)
+    v2 = rollup.commit(high, batch_id=1)
     assert (v1, v2) == (1, 2)
     # redelivery of batch 1 returns the published version, no new dir
-    assert rollup.commit(assets.filter(F.col("height") > 15), batch_id=1) == 2
+    assert rollup.commit(high, batch_id=1) == 2
     assert rollup.current_version() == 2
     top_before = [tuple(r) for r in rollup.top(20).collect()]
     # fork recovery: rolling back to v1 must serve exactly the ≤15 slice
     rollup.rollback_to(1)
     only_first = TokenStatsRollup(spark, str(tmp_path / "state2"))
-    only_first.commit(assets.filter(F.col("height") <= 15))
+    only_first.commit(low)
     assert [tuple(r) for r in rollup.top(20).collect()] == [
         tuple(r) for r in only_first.top(20).collect()
     ]
@@ -365,30 +370,15 @@ def test_token_rollup_exactly_once_and_rollback(spark, tmp_path):
     compacted = TokenStatsRollup(
         spark, str(tmp_path / "state3"), compact_every=2, keep_versions=1
     )
-    compacted.commit(assets.filter(F.col("height") <= 15))
-    compacted.commit(assets.filter(F.col("height") > 15))
+    compacted.commit(low)
+    compacted.commit(high)
     assert compacted._has_base(2)
     assert compacted.versions() == [2]
     full_rollup = TokenStatsRollup(spark, str(tmp_path / "state_full"))
-    full_rollup.commit(assets)
+    full_rollup.commit(token_partials(assets))
     assert sorted(
         tuple(r) for r in compacted.read().collect()
     ) == sorted(tuple(r) for r in full_rollup.read().collect())
-
-
-def test_token_rollup_fork_aware_sync_refuses(spark, tmp_path):
-    from ergo_uexplorer_spark.streaming.incremental import incremental_sync
-    from ergo_uexplorer_spark.streaming.token_rollup import TokenStatsRollup
-
-    with pytest.raises(ValueError, match="fork_aware"):
-        incremental_sync(
-            spark,
-            str(tmp_path / "in"),
-            str(tmp_path / "state"),
-            str(tmp_path / "ckpt"),
-            fork_aware=True,
-            token_rollup=TokenStatsRollup(spark, str(tmp_path / "state")),
-        )
 
 
 R12_NEW_ENTRIES = [

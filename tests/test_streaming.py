@@ -13,7 +13,7 @@ from ergo_uexplorer_spark.fixtures.chaingen import ChainGen, write_jsonl_gz
 from ergo_uexplorer_spark.pipeline import ingest_blocks
 from ergo_uexplorer_spark.streaming.incremental import (
     UtxoState,
-    apply_block_batch,
+    apply_block_batch_forkaware,
     incremental_sync,
 )
 from ergo_uexplorer_spark.streaming.mempool import mempool_diff, stream_new_txs
@@ -167,8 +167,8 @@ def test_delta_commit_write_volume_is_o_batch(spark, gen, tmp_path):
     state = UtxoState(spark, str(tmp_path / "wv_state"), compact_every=0)
     p1 = write_jsonl_gz(gen.blocks[:100], str(tmp_path / "wv1.jsonl.gz"))
     p2 = write_jsonl_gz(gen.blocks[100:110], str(tmp_path / "wv2.jsonl.gz"))
-    apply_block_batch(state, read_blocks(spark, p1))
-    v2 = apply_block_batch(state, read_blocks(spark, p2))
+    apply_block_batch_forkaware(state, read_blocks(spark, p1))
+    v2 = apply_block_batch_forkaware(state, read_blocks(spark, p2))
 
     batch2_outputs = N.outputs(read_blocks(spark, p2)).count()
     v2_created = spark.read.parquet(
@@ -192,7 +192,7 @@ def test_delta_compaction_and_pruning(spark, gen, tmp_path):
         p = write_jsonl_gz(
             gen.blocks[i * 30 : (i + 1) * 30], str(tmp_path / f"cp{i}.jsonl.gz")
         )
-        apply_block_batch(state, read_blocks(spark, p))
+        apply_block_batch_forkaware(state, read_blocks(spark, p))
     assert state._has_base(3)
     # v1/v2 are below base v3, which covers the keep_versions=2 window
     assert state.versions() == [3, 4]
@@ -206,98 +206,60 @@ def test_delta_compaction_and_pruning(spark, gen, tmp_path):
     assert state.read(3) is not None
 
 
-def _make_state(spark, path, backend):
-    """Build a versioned-state backend; skip when its storage layer is
-    absent in this environment (delta-spark is not bundled)."""
-    if backend == "delta":
-        pytest.importorskip("delta")
-        from ergo_uexplorer_spark.streaming.delta_state import (
-            DeltaUtxoState,
-            delta_available,
-        )
-
-        if not delta_available(spark):
-            pytest.skip("delta data source not on this session")
-        return DeltaUtxoState(spark, path)
-    return UtxoState(spark, path)
-
-
-def test_utxo_state_backend_factory(spark, tmp_path):
-    """`utxo_state_for` picks parquet when delta is absent and honors an
-    explicit backend choice."""
-    from ergo_uexplorer_spark.streaming.delta_state import (
-        delta_available,
-        utxo_state_for,
-    )
-
-    auto = utxo_state_for(spark, str(tmp_path / "f_state"))
-    if delta_available(spark):
-        from ergo_uexplorer_spark.streaming.delta_state import DeltaUtxoState
-
-        assert isinstance(auto, DeltaUtxoState)
-    else:
-        assert isinstance(auto, UtxoState)
-    assert isinstance(
-        utxo_state_for(spark, str(tmp_path / "f_state2"), backend="parquet"),
-        UtxoState,
-    )
-
-
-@pytest.mark.parametrize("backend", ["parquet", "delta"])
-def test_utxo_state_rollback_backends(spark, gen, tmp_path, backend):
+def test_utxo_state_rollback(spark, gen, tmp_path):
     """S10: rollbackTo(version) restores an older snapshot (fork
-    recovery path) — same contract on parquet deltas and Delta RESTORE."""
-    state = _make_state(spark, str(tmp_path / "rb_state"), backend)
+    recovery path)."""
     from ergo_uexplorer_spark.sources.blocks import read_blocks
+
+    state = UtxoState(spark, str(tmp_path / "rb_state"))
 
     p1 = write_jsonl_gz(gen.blocks[:50], str(tmp_path / "c1.jsonl.gz"))
     p2 = write_jsonl_gz(gen.blocks[50:100], str(tmp_path / "c2.jsonl.gz"))
-    v1 = apply_block_batch(state, read_blocks(spark, p1))
+    v1 = apply_block_batch_forkaware(state, read_blocks(spark, p1))
     count_v1 = state.read().count()
-    v2 = apply_block_batch(state, read_blocks(spark, p2))
+    v2 = apply_block_batch_forkaware(state, read_blocks(spark, p2))
     assert state.current_version() == v2 == v1 + 1
     assert state.read().count() != count_v1
     state.rollback_to(v1)
-    if backend == "parquet":
-        # delta RESTORE appends a restore commit instead of truncating
-        assert state.current_version() == v1
+    assert state.current_version() == v1
     assert state.read().count() == count_v1
 
 
-@pytest.mark.parametrize("backend", ["parquet", "delta"])
-def test_commit_exactly_once_on_batch_redelivery(spark, gen, tmp_path, backend):
+def test_commit_exactly_once_on_batch_redelivery(spark, gen, tmp_path):
     """foreachBatch redelivers the last micro-batch after a crash between
     sink write and checkpoint commit; a batch_id-keyed commit must
-    return the already-published version, not double-apply (parquet:
-    _batch_id marker; delta: commit userMetadata)."""
+    return the already-published version, not double-apply (the
+    _batch_id marker)."""
     from ergo_uexplorer_spark.sources.blocks import read_blocks
 
-    state = _make_state(spark, str(tmp_path / "eo_state"), backend)
+    state = UtxoState(spark, str(tmp_path / "eo_state"))
     p1 = write_jsonl_gz(gen.blocks[:30], str(tmp_path / "eo1.jsonl.gz"))
     p2 = write_jsonl_gz(gen.blocks[30:60], str(tmp_path / "eo2.jsonl.gz"))
 
-    v1 = apply_block_batch(state, read_blocks(spark, p1), batch_id=0)
+    v1 = apply_block_batch_forkaware(state, read_blocks(spark, p1), batch_id=0)
     n1 = state.read().count()
     # redelivery of batch 0 (same id): no new version, same state
-    assert apply_block_batch(state, read_blocks(spark, p1), batch_id=0) == v1
+    assert (
+        apply_block_batch_forkaware(state, read_blocks(spark, p1), batch_id=0)
+        == v1
+    )
     assert state.current_version() == v1
     assert state.read().count() == n1
     # a NEW instance over the same dir (restart) still dedups by marker
-    state2 = _make_state(spark, str(tmp_path / "eo_state"), backend)
-    assert apply_block_batch(state2, read_blocks(spark, p1), batch_id=0) == v1
+    state2 = UtxoState(spark, str(tmp_path / "eo_state"))
+    assert (
+        apply_block_batch_forkaware(state2, read_blocks(spark, p1), batch_id=0)
+        == v1
+    )
     # the next batch advances normally
-    v2 = apply_block_batch(state2, read_blocks(spark, p2), batch_id=1)
+    v2 = apply_block_batch_forkaware(state2, read_blocks(spark, p2), batch_id=1)
     assert v2 == v1 + 1
 
-@pytest.mark.parametrize("backend", ["parquet", "delta"])
-def test_intra_batch_create_and_spend_nets_out(spark, tmp_path, backend):
+def test_intra_batch_create_and_spend_nets_out(spark, tmp_path):
     """A box created AND spent inside the same micro-batch must not
     survive in UTXO state (a realistic case: micro-batches span many
-    blocks). Both backends must agree with the parquet read-side
-    anti-join semantics; the Delta MERGE pre-nets its created source
-    (ADVICE r4 high: the 's' row only deletes MATCHED pre-existing rows,
-    so an un-netted 'c' row would wrongly be inserted)."""
-    state = _make_state(spark, str(tmp_path / "net_state"), backend)
+    blocks)."""
+    state = UtxoState(spark, str(tmp_path / "net_state"))
     mk = lambda rows: spark.createDataFrame(rows, "box_id string, value long")
     ids = lambda: {r["box_id"] for r in state.read().select("box_id").collect()}
 
@@ -419,17 +381,33 @@ def test_streaming_corpus_refresh_redelivery_idempotent(spark, tmp_path):
     assert dec[2]["keep"] and not dec[1]["keep"] and dec[1]["dup_of"] == 100
 
 
+def _assert_rollup_is_batch_top(spark, rollup, chain, tmp_path):
+    """The token rollup's top-20 equals `top_tokens_by_box_count` over
+    the assets of `chain`, the blocks the UTXO state holds; returns that
+    answer."""
+    from ergo_uexplorer_spark.operators import normalize as N
+    from ergo_uexplorer_spark.operators.stats import top_tokens_by_box_count
+    from ergo_uexplorer_spark.sources.blocks import read_blocks
+
+    path = str(tmp_path / f"chain_{chain[-1]['header']['id']}.jsonl.gz")
+    raw = read_blocks(spark, write_jsonl_gz(chain, path))
+    assets = N.assets(N.outputs(raw))
+    want = [tuple(r) for r in top_tokens_by_box_count(assets, k=20).collect()]
+    assert [tuple(r) for r in rollup.top(20).collect()] == want
+    return want
+
+
 def test_fork_mid_stream_rollback_in_availablenow_loop(spark, tmp_path):
     """C3 under streaming (StreamSchedulerSpec.scala:78-83): a fork
     arriving MID-STREAM — prefix, main tip, a same-length losing branch,
     then a longer winning branch, each drained by its own availableNow
-    run of the fork-aware sync — must end in exactly the state of batch-
+    run of the sync — must end in exactly the state of batch-
     recomputing the winning chain. The losing branch must leave state
     untouched; the winning one must roll back to the pre-divergence
-    version and re-apply its blocks in the same micro-batch loop."""
-    from ergo_uexplorer_spark.streaming.incremental import (
-        apply_block_batch_forkaware,
-    )
+    version and re-apply its blocks in the same micro-batch loop. The
+    token rollup the sync maintains equals a batch recompute over the
+    chain the state holds after every drain."""
+    from ergo_uexplorer_spark.streaming.token_rollup import TokenStatsRollup
 
     n, fork_at = 60, 59
     gen = ChainGen(seed=33)
@@ -441,28 +419,28 @@ def test_fork_mid_stream_rollback_in_availablenow_loop(spark, tmp_path):
     blocks_dir.mkdir()
     state_dir = str(tmp_path / "state")
     ckpt = str(tmp_path / "ckpt")
+    rollup = TokenStatsRollup(spark, state_dir, compact_every=2)
 
-    def drain():
+    def drain(chain):
         q = incremental_sync(
-            spark, str(blocks_dir), state_dir, ckpt, fork_aware=True
+            spark, str(blocks_dir), state_dir, ckpt, token_rollup=rollup
         )
         q.awaitTermination(300)
+        return _assert_rollup_is_batch_top(spark, rollup, chain, tmp_path)
 
     def utxo_ids():
         df = UtxoState(spark, state_dir).read()
         return {r["box_id"] for r in df.select("box_id").collect()}
 
     # batch 1: common prefix 1..57; batch 2: main 58..60
-    write_jsonl_gz(
-        [b for b in gen.blocks if b["header"]["height"] <= fork_at - 2],
-        str(blocks_dir / "b1.jsonl.gz"),
-    )
-    drain()
+    prefix = [b for b in gen.blocks if b["header"]["height"] <= fork_at - 2]
+    write_jsonl_gz(prefix, str(blocks_dir / "b1.jsonl.gz"))
+    drain(prefix)
     write_jsonl_gz(
         [b for b in gen.blocks if b["header"]["height"] > fork_at - 2],
         str(blocks_dir / "b2.jsonl.gz"),
     )
-    drain()
+    main_top = drain(gen.blocks)
     state = UtxoState(spark, state_dir)
     assert state.tip()[0] == n
     main_ids = utxo_ids()
@@ -472,7 +450,7 @@ def test_fork_mid_stream_rollback_in_availablenow_loop(spark, tmp_path):
         [b for b in shorter if b["header"]["height"] >= fork_at],
         str(blocks_dir / "b3.jsonl.gz"),
     )
-    drain()
+    drain(gen.blocks)
     assert state.tip()[0] == n
     assert state.tip()[1] == gen.blocks[-1]["header"]["id"]
     assert utxo_ids() == main_ids
@@ -484,10 +462,11 @@ def test_fork_mid_stream_rollback_in_availablenow_loop(spark, tmp_path):
         [b for b in longer if b["header"]["height"] >= fork_at - 1],
         str(blocks_dir / "b4.jsonl.gz"),
     )
-    drain()
+    assert drain(longer) != main_top
     assert state.tip() == (n + 1, longer[-1]["header"]["id"])
     # the losing tip's version was dropped before the new commit
     assert state.current_version() == v_before  # rollback freed v2's slot
+    assert rollup.versions() == state.versions()
 
     win_path = str(tmp_path / "winning.jsonl.gz")
     write_jsonl_gz(longer, win_path)
@@ -500,8 +479,10 @@ def test_fork_mid_stream_rollback_in_availablenow_loop(spark, tmp_path):
     from ergo_uexplorer_spark.sources.blocks import read_blocks
 
     raw = read_blocks(spark, str(blocks_dir / "b4.jsonl.gz"))
-    v = apply_block_batch_forkaware(state, raw, batch_id=3)
-    assert v == state.current_version()
+    v = apply_block_batch_forkaware(
+        state, raw, batch_id=3, token_rollup=rollup
+    )
+    assert v == state.current_version() == rollup.current_version()
     assert utxo_ids() == want
 
 
@@ -514,36 +495,45 @@ def test_fork_mid_version_divergence_preserves_shared_ancestors(
     divergence (tip 7) must NOT lose the shared-ancestor blocks 8..9 —
     they are preserved from the rolled-back version's deltas and
     re-committed before the branch applies. Final state must equal a
-    batch recompute of the winning chain 1..9 + branch."""
+    batch recompute of the winning chain 1..9 + branch, and the token
+    rollup riding the same versions must equal a batch recompute over
+    the held chain after every delivery."""
     from ergo_uexplorer_spark.sources.blocks import read_blocks
-    from ergo_uexplorer_spark.streaming.incremental import (
-        apply_block_batch_forkaware,
-    )
+    from ergo_uexplorer_spark.streaming.token_rollup import TokenStatsRollup
 
     g = ChainGen(seed=77)
     g.generate(10)
     branch = g.fork(10, 1, "fmid")  # heights 10..11, parent = block 9
 
     state = UtxoState(spark, str(tmp_path / "state"))
+    rollup = TokenStatsRollup(spark, str(tmp_path / "state"), compact_every=2)
+
+    def heights(blocks, lo, hi):
+        return [b for b in blocks if lo <= b["header"]["height"] <= hi]
 
     def apply_heights(blocks, lo, hi, batch_id):
         p = str(tmp_path / f"b_{lo}_{hi}.jsonl.gz")
-        write_jsonl_gz(
-            [b for b in blocks if lo <= b["header"]["height"] <= hi], p
-        )
+        write_jsonl_gz(heights(blocks, lo, hi), p)
         return apply_block_batch_forkaware(
-            state, read_blocks(spark, p), batch_id=batch_id
+            state, read_blocks(spark, p), batch_id=batch_id, token_rollup=rollup
         )
 
+    def rollup_top(chain):
+        assert rollup.versions() == state.versions()
+        return _assert_rollup_is_batch_top(spark, rollup, chain, tmp_path)
+
     assert apply_heights(g.blocks, 1, 7, 0) == 1
+    rollup_top(heights(g.blocks, 1, 7))
     assert apply_heights(g.blocks, 8, 10, 1) == 2
     assert state.tip() == (10, g.blocks[-1]["header"]["id"])
+    main_top = rollup_top(g.blocks)
 
     # branch heights 10..11 wins (11 > 10); divergence height 10 falls
     # inside version 2 ([8..10]) — blocks 8..9 must survive the rollback
     v = apply_heights(branch, 10, 11, 2)
     assert v == state.current_version()
     assert state.tip() == (11, branch[-1]["header"]["id"])
+    branch_top = rollup_top(heights(g.blocks, 1, 9) + heights(branch, 10, 11))
 
     win_path = str(tmp_path / "winning.jsonl.gz")
     write_jsonl_gz(
@@ -569,6 +559,8 @@ def test_fork_mid_version_divergence_preserves_shared_ancestors(
     v2 = apply_heights(branch2, 9, 12, 3)
     assert v2 == state.current_version()
     assert state.tip() == (12, branch2[-1]["header"]["id"])
+    branch2_top = rollup_top(heights(g.blocks, 1, 8) + heights(branch2, 9, 12))
+    assert main_top != branch_top or branch_top != branch2_top
     win2 = str(tmp_path / "winning2.jsonl.gz")
     write_jsonl_gz(
         [b for b in g.blocks if b["header"]["height"] <= 8]
@@ -629,13 +621,13 @@ def test_fork_aware_randomized_scenarios_match_batch(spark, tmp_path, seed):
     second diverging below the first → double rollback). Whatever the
     random layout, the final state must equal the batch recompute of
     the last winning chain, and the losing/orphan deliveries must be
-    no-ops at the moment they happen."""
+    no-ops at the moment they happen. The token rollup driven through
+    the same resolution (compacting every 2 versions) must equal a batch
+    recompute over the chain the state holds after every delivery."""
     import random as _random
 
     from ergo_uexplorer_spark.sources.blocks import read_blocks
-    from ergo_uexplorer_spark.streaming.incremental import (
-        apply_block_batch_forkaware,
-    )
+    from ergo_uexplorer_spark.streaming.token_rollup import TokenStatsRollup
 
     rng = _random.Random(seed)
     n = 24
@@ -643,15 +635,25 @@ def test_fork_aware_randomized_scenarios_match_batch(spark, tmp_path, seed):
     g.generate(n)
 
     state = UtxoState(spark, str(tmp_path / "state"))
+    rollup = TokenStatsRollup(spark, str(tmp_path / "state"), compact_every=2)
     next_batch = [0]
+    held = []  # the chain the state holds after the last delivery
+    tops = []  # the rollup's answer after each delivery
 
-    def deliver(blocks):
+    def deliver(blocks, now_held=None):
         p = str(tmp_path / f"b{next_batch[0]}.jsonl.gz")
         write_jsonl_gz(blocks, p)
         v = apply_block_batch_forkaware(
-            state, read_blocks(spark, p), batch_id=next_batch[0]
+            state,
+            read_blocks(spark, p),
+            batch_id=next_batch[0],
+            token_rollup=rollup,
         )
         next_batch[0] += 1
+        if now_held is not None:
+            held[:] = now_held
+        assert rollup.versions() == state.versions()
+        tops.append(_assert_rollup_is_batch_top(spark, rollup, held, tmp_path))
         return v
 
     # random contiguous batch splits of the main chain
@@ -659,7 +661,7 @@ def test_fork_aware_randomized_scenarios_match_batch(spark, tmp_path, seed):
     bounds = [0] + cuts + [n]
     applied_h = 0
     for lo, hi in zip(bounds, bounds[1:]):
-        deliver(g.blocks[lo:hi])
+        deliver(g.blocks[lo:hi], g.blocks[:hi])
         applied_h = hi
         assert state.tip() == (hi, g.blocks[hi - 1]["header"]["id"])
         if applied_h == bounds[1]:
@@ -690,14 +692,16 @@ def test_fork_aware_randomized_scenarios_match_batch(spark, tmp_path, seed):
     # winning branch 1: taller by 1, diverges within the retained window
     d1 = rng.randint(n - 6, n)
     w1 = [b for b in g.fork(d1, 1, f"w1{seed}") if b["header"]["height"] >= d1]
-    deliver(w1)
+    deliver(w1, [b for b in g.blocks if b["header"]["height"] < d1] + w1)
     assert state.tip() == (n + 1, w1[-1]["header"]["id"])
 
     # winning branch 2: taller by 2, diverging at or below d1
     d2 = rng.randint(n - 7, d1)
     w2 = [b for b in g.fork(d2, 2, f"w2{seed}") if b["header"]["height"] >= d2]
-    deliver(w2)
+    deliver(w2, [b for b in g.blocks if b["header"]["height"] < d2] + w2)
     assert state.tip() == (n + 2, w2[-1]["header"]["id"])
+    # the check is not vacuous: a winning branch changed the answer
+    assert tops[-3] != tops[-2] or tops[-2] != tops[-1]
 
     win_path = str(tmp_path / "winning.jsonl.gz")
     write_jsonl_gz(
@@ -711,6 +715,81 @@ def test_fork_aware_randomized_scenarios_match_batch(spark, tmp_path, seed):
     }
     got = {r["box_id"] for r in state.read().select("box_id").collect()}
     assert got == want
+
+
+def test_rollup_ahead_after_crash_heals_on_redelivery(spark, tmp_path):
+    """A crash after the token rollup's commit but before the state's
+    leaves the rollup one version ahead; redelivering the batch through
+    the apply commits only the state, so each store holds the batch
+    exactly once and both still equal a batch recompute."""
+    from ergo_uexplorer_spark.operators import normalize as N
+    from ergo_uexplorer_spark.sources.blocks import read_blocks
+    from ergo_uexplorer_spark.streaming.token_rollup import (
+        TokenStatsRollup,
+        token_partials,
+    )
+
+    g = ChainGen(seed=19)
+    g.generate(20)
+    state = UtxoState(spark, str(tmp_path / "state"))
+    rollup = TokenStatsRollup(spark, str(tmp_path / "state"))
+    first, second = (
+        read_blocks(spark, write_jsonl_gz(blocks, str(tmp_path / name)))
+        for blocks, name in [
+            (g.blocks[:10], "a.jsonl.gz"),
+            (g.blocks[10:], "b.jsonl.gz"),
+        ]
+    )
+    v1 = apply_block_batch_forkaware(
+        state, first, batch_id=0, token_rollup=rollup
+    )
+    assert v1 == 1
+    # the crash: batch 1 reached the rollup only
+    partials = token_partials(N.assets(N.outputs(second)))
+    assert rollup.commit(partials, batch_id=1) == 2
+    assert state.current_version() == 1
+    for _ in range(2):  # the redelivery, then a replay of it
+        v = apply_block_batch_forkaware(
+            state, second, batch_id=1, token_rollup=rollup
+        )
+        assert v == 2
+        assert state.versions() == rollup.versions() == [1, 2]
+        assert state.batch_version(1) == rollup.batch_version(1) == 2
+    _assert_rollup_is_batch_top(spark, rollup, g.blocks, tmp_path)
+    full = write_jsonl_gz(g.blocks, str(tmp_path / "full.jsonl.gz"))
+    batch = ingest_blocks(spark, full)
+    want = {r["box_id"] for r in batch["utxo"].select("box_id").collect()}
+    assert {r["box_id"] for r in state.read().select("box_id").collect()} == want
+
+
+def test_rollup_retention_shorter_than_fork_raises(spark, tmp_path):
+    """A winning fork whose rollback target the token rollup has already
+    pruned raises before either store is rolled back."""
+    from ergo_uexplorer_spark.sources.blocks import read_blocks
+    from ergo_uexplorer_spark.streaming.token_rollup import TokenStatsRollup
+
+    g = ChainGen(seed=23)
+    g.generate(30)
+    state = UtxoState(spark, str(tmp_path / "state"))
+    rollup = TokenStatsRollup(
+        spark, str(tmp_path / "state"), compact_every=1, keep_versions=1
+    )
+
+    def deliver(blocks, batch_id):
+        p = write_jsonl_gz(blocks, str(tmp_path / f"b{batch_id}.jsonl.gz"))
+        return apply_block_batch_forkaware(
+            state, read_blocks(spark, p), batch_id=batch_id, token_rollup=rollup
+        )
+
+    for i in range(3):
+        deliver(g.blocks[10 * i : 10 * i + 10], i)
+    assert (state.versions(), rollup.versions()) == ([1, 2, 3], [3])
+    # heights 21..31 beat the tip 30; the state would roll back to v2
+    fork = [b for b in g.fork(21, 1, "deep") if b["header"]["height"] >= 21]
+    with pytest.raises(RuntimeError, match="token rollup's retained window"):
+        deliver(fork, 3)
+    assert (state.versions(), rollup.versions()) == ([1, 2, 3], [3])
+    assert state.tip() == (30, g.blocks[-1]["header"]["id"])
 
 
 def _deliver_forkaware(spark, state, blocks, path):

@@ -32,7 +32,10 @@ def main() -> None:
 
     from ergo_uexplorer_spark.operators.stats import top_tokens_by_box_count
     from ergo_uexplorer_spark.pipeline import ingest_blocks
-    from ergo_uexplorer_spark.streaming.token_rollup import TokenStatsRollup
+    from ergo_uexplorer_spark.streaming.token_rollup import (
+        TokenStatsRollup,
+        token_partials,
+    )
 
     build_fixture()
     spark = (
@@ -58,8 +61,10 @@ def main() -> None:
     for i in range(N_BATCHES):
         lo, hi = i * step, (i + 1) * step
         rollup.commit(
-            assets.filter(
-                (F.col("height") >= lo) & (F.col("height") < hi)
+            token_partials(
+                assets.filter(
+                    (F.col("height") >= lo) & (F.col("height") < hi)
+                )
             ),
             batch_id=i,
         )
