@@ -72,92 +72,109 @@ def graph_vertices(edges: DataFrame) -> DataFrame:
     )
 
 
-def _k_hop_local_arrow(
-    e: DataFrame, start_ids: list, k: int
-) -> DataFrame:
+def _arrow_id_type(t):
+    """The Spark type an id column of type `t` crosses into a one-task
+    kernel as: integral ids widen to long (lossless), strings pass
+    through, and None for any other type."""
+    from pyspark.sql import types as T
+
+    if isinstance(t, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)):
+        return T.LongType()
+    if isinstance(t, T.StringType):
+        return t
+    return None
+
+
+def _arrow_ids(e: DataFrame):
+    """Spark side of the one Arrow ingest shared by every one-task graph
+    kernel: each id column of `e` is cast to its `_arrow_id_type`.
+    Returns (frame, restore), where `restore(df, cols)` casts the named
+    output columns back to the first column's type (a no-op unless it
+    was a narrow int), or (None, None) when some column has another id
+    type and the caller stays on its distributed path."""
+    types = [e.schema[c].dataType for c in e.columns]
+    wide = [_arrow_id_type(t) for t in types]
+    if None in wide:
+        return None, None
+    if wide != types:
+        e = e.select(
+            *[F.col(c).cast(w).alias(c) for c, w in zip(e.columns, wide)]
+        )
+    t0, w0 = types[0], wide[0]
+
+    def restore(df: DataFrame, cols: list) -> DataFrame:
+        if t0 == w0:
+            return df
+        return df.select(
+            *[
+                F.col(c).cast(t0).alias(c) if c in cols else c
+                for c in df.columns
+            ]
+        )
+
+    return e, restore
+
+
+def _encode_ids(*cols):
+    """Task side of the one Arrow ingest: Arrow id columns (int64 or
+    string, one shared id space) → ([codes per column], uniques). Codes
+    are int64 in VALUE order, −1 for null; `uniques` holds the distinct
+    non-null values sorted, as an Arrow array of the input type, so
+    `_decode_ids` rebuilds output columns with no cast. One hash pass
+    (`dictionary_encode`), then a sort of the dictionary only — not of
+    every row, as `np.unique(return_inverse)` would: numeric for
+    integers, bytewise for strings (the order Spark compares strings
+    in), so a min/`<` over codes is the min/`<` Spark computes over
+    values."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    arr = pa.chunked_array(
+        [ch for c in cols for ch in c.chunks], type=cols[0].type
+    ).combine_chunks()
+    enc = pc.dictionary_encode(arr)
+    order = pc.sort_indices(enc.dictionary).to_numpy()
+    rank = np.empty(len(order), dtype=np.int64)
+    rank[order] = np.arange(len(order))
+    codes = np.full(len(arr), -1, dtype=np.int64)
+    codes[arr.is_valid().to_numpy(zero_copy_only=False)] = rank[
+        pc.drop_null(enc.indices).to_numpy()
+    ]
+    bounds = np.cumsum([len(c) for c in cols])[:-1]
+    return np.split(codes, bounds), enc.dictionary.take(order)
+
+
+def _decode_ids(uniques, codes):
+    """Codes (−1 for null) → an Arrow array of `uniques`' type."""
+    import pyarrow as pa
+
+    return uniques.take(pa.array(codes, type=pa.int64(), mask=codes < 0))
+
+
+def _k_hop_local_arrow(e: DataFrame, start_ids: list, k: int) -> DataFrame:
     """Small-graph execution of `k_hop_neighbors`: the whole BFS in ONE
-    Arrow task over the (already symmetrized) edge table. Exact twin of
-    the distributed loop, property-pinned, including its null-key
-    quirks: a null dst enters the output at EVERY level some frontier
-    node reaches one (the visited anti-join can never match a null
-    key, so null is re-admitted per level — one row per level, the
-    per-level distinct), a null src never matches the frontier join,
-    and duplicate/null start ids pass through at level 0 exactly as
-    given (the distributed seed frame keeps them).
+    Arrow task over the (already symmetrized) edge table, ids encoded
+    by `_encode_ids`. Exactly equal to the distributed loop, property-
+    pinned, including its null-key quirks: a null dst enters the output
+    at EVERY level some frontier node reaches one (the visited
+    anti-join can never match a null key, so null is re-admitted per
+    level — one row per level, the per-level distinct), a null src
+    never matches the frontier join, and duplicate/null start ids pass
+    through at level 0 exactly as given (the distributed seed frame
+    keeps them).
 
     Hop-0 rows are emitted DRIVER-SIDE (a literal seed frame unioned
-    below the kernel), not from inside the mapInPandas function: if the
-    persisted edge DataFrame ever reaches this with ZERO partitions
-    (e.g. built from an empty RDD) the function body is never invoked,
-    and seeds must not depend on it running (r11 ADVICE — previously
-    shielded only by the 0<est gate in `_fits_one_task`)."""
+    below the kernel), not from inside the kernel: if the persisted
+    edge DataFrame ever reaches this with ZERO partitions (e.g. built
+    from an empty RDD) the function body is never invoked, and seeds
+    must not depend on it running."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.compute as pc
 
     id_t = e.schema["src"].dataType.simpleString()
     schema = f"id {id_t}, hops int"
-    seeds = e.sparkSession.createDataFrame(
-        [(s, 0) for s in start_ids], schema
-    )
-
-    def run(batches):
-        parts = list(batches)
-        pdf = (
-            pd.concat(parts, ignore_index=True)
-            if parts
-            else pd.DataFrame({"src": [], "dst": []})
-        )
-        both = pd.concat([pdf["src"], pdf["dst"]], ignore_index=True)
-        codes, uniques = pd.factorize(both, use_na_sentinel=True)
-        val_to_code = {v: i for i, v in enumerate(uniques)}
-        m = len(pdf)
-        s_idx, d_idx = codes[:m], codes[m:]
-        out_ids: list = []  # hop-0 seeds come from the driver-side union
-        out_hops: list = []
-        visited = {
-            val_to_code[s] for s in start_ids if s in val_to_code
-        }
-        frontier = np.array(sorted(visited), dtype=np.int64)
-        for level in range(1, k + 1):
-            if m:
-                mask = np.isin(s_idx, frontier) & (s_idx >= 0)
-                dsts = d_idx[mask]
-            else:
-                dsts = np.array([], dtype=np.int64)
-            null_seen = bool((dsts < 0).any())
-            nxt = np.unique(dsts[dsts >= 0])
-            fresh = np.array(
-                [c for c in nxt if c not in visited], dtype=np.int64
-            )
-            out_ids.extend(uniques[c] for c in fresh)
-            out_hops.extend([level] * len(fresh))
-            if null_seen:
-                out_ids.append(None)
-                out_hops.append(level)
-            visited.update(int(c) for c in fresh)
-            frontier = fresh
-            if len(fresh) + (1 if null_seen else 0) == 0:
-                break
-        yield pd.DataFrame({"id": out_ids, "hops": out_hops})
-
-    return seeds.unionByName(e.coalesce(1).mapInPandas(run, schema))
-
-
-def _k_hop_local_arrow_int(e: DataFrame, start_ids: list, k: int) -> DataFrame:
-    """Integral-id twin of `_k_hop_local_arrow` (r12): the edge table
-    crosses the boundary as EXACT int64 Arrow arrays via `mapInArrow` —
-    no pandas conversion, so nullable ints never become lossy float64
-    and the string round-trip (cast + 3M-object factorize) disappears.
-    Measured on g02's 1.5M-edge graph: 1.79 → 1.15 s, output identical.
-    Null semantics mirror the pandas kernel bit-for-bit: null src rows
-    are dropped up front (null never equi-matches a frontier), a null
-    dst re-enters the output at every level some frontier node reaches
-    one, and hop-0 seed rows (duplicates and nulls included) come from
-    the driver-side literal frame, never from inside the kernel."""
-    import numpy as np
-    import pyarrow as pa
-
-    schema = "id long, hops int"
     seeds = e.sparkSession.createDataFrame(
         [(s, 0) for s in start_ids], schema
     )
@@ -165,44 +182,36 @@ def _k_hop_local_arrow_int(e: DataFrame, start_ids: list, k: int) -> DataFrame:
 
     def run(batches):
         bl = list(batches)
-        if bl:
-            t = pa.Table.from_batches(bl)
-            src, dst = t.column("src"), t.column("dst")
-            s_null = pa.compute.is_null(src).to_numpy(zero_copy_only=False)
-            d_null = pa.compute.is_null(dst).to_numpy(zero_copy_only=False)
-            s = src.fill_null(0).to_numpy(zero_copy_only=False).astype(np.int64)
-            d = dst.fill_null(0).to_numpy(zero_copy_only=False).astype(np.int64)
-        else:
-            s_null = np.zeros(0, bool)
-            d_null = np.zeros(0, bool)
-            s = d = np.zeros(0, np.int64)
-        keep = ~s_null
-        s, d, d_null = s[keep], d[keep], d_null[keep]
-        visited = set(int(v) for v in start_vals)
-        frontier = np.unique(np.array(sorted(visited), dtype=np.int64))
-        out_ids: list = []
-        out_hops: list = []
+        if not bl:
+            return
+        t = pa.Table.from_batches(bl)
+        (s, d), uniques = _encode_ids(t.column("src"), t.column("dst"))
+        keep = s >= 0  # a null src never equi-matches the frontier
+        s, d = s[keep], d[keep]
+        starts = pc.index_in(
+            pa.array(start_vals, uniques.type), value_set=uniques
+        )
+        frontier = np.unique(pc.drop_null(starts).to_numpy().astype(np.int64))
+        visited = np.zeros(len(uniques), dtype=bool)
+        visited[frontier] = True
+        out_codes = [np.empty(0, dtype=np.int64)]
+        out_hops = [np.empty(0, dtype=np.int32)]
         for level in range(1, k + 1):
-            mask = np.isin(s, frontier)
-            dsts, dnull = d[mask], d_null[mask]
-            null_seen = bool(dnull.any())
-            nxt = np.unique(dsts[~dnull])
-            fresh = np.array(
-                [c for c in nxt if c not in visited], dtype=np.int64
-            )
-            out_ids.extend(int(c) for c in fresh)
-            out_hops.extend([level] * len(fresh))
-            if null_seen:
-                out_ids.append(None)
-                out_hops.append(level)
-            visited.update(int(c) for c in fresh)
+            dsts = d[np.isin(s, frontier)]
+            null_seen = bool((dsts < 0).any())
+            nxt = np.unique(dsts[dsts >= 0])
+            fresh = nxt[~visited[nxt]]
+            visited[fresh] = True
+            fresh_out = np.append(fresh, -1) if null_seen else fresh
+            out_codes.append(fresh_out)
+            out_hops.append(np.full(len(fresh_out), level, dtype=np.int32))
             frontier = fresh
-            if len(fresh) + (1 if null_seen else 0) == 0:
+            if len(fresh_out) == 0:
                 break
         yield pa.RecordBatch.from_pydict(
             {
-                "id": pa.array(out_ids, pa.int64()),
-                "hops": pa.array(out_hops, pa.int32()),
+                "id": _decode_ids(uniques, np.concatenate(out_codes)),
+                "hops": pa.array(np.concatenate(out_hops), pa.int32()),
             }
         )
 
@@ -248,8 +257,8 @@ def k_hop_neighbors(
     the materialized edge table fits the broadcast budget, the whole
     BFS runs in ONE Arrow task (`_k_hop_local_arrow` — the pagerank
     posture; per-level scheduled jobs dominate tiny-graph cost).
-    Bit-exact twin, property-pinned; False forces the distributed
-    loop.
+    Bit-exact against the distributed loop, property-pinned; False
+    forces the distributed loop.
 
     `start_ids` may be a SEED FRAME (a one-column DataFrame) instead
     of a Python list (r11 VERDICT #8): at 100 TB a large seed set —
@@ -290,43 +299,13 @@ def k_hop_neighbors(
         # cache every level-1 consumer reads anyway)
         local_tier = _fits_one_task(e)
     if local_tier:
-        from pyspark.sql.types import (
-            ByteType,
-            IntegerType,
-            LongType,
-            ShortType,
-            StringType,
-        )
-
-        src_t = edges.schema["src"].dataType
-        if isinstance(src_t, (ByteType, ShortType, IntegerType, LongType)):
-            # exact int64 Arrow path — no string round-trip (see
-            # _k_hop_local_arrow_int); narrower ints upcast losslessly
-            # and the output id column is cast back
-            e_long = (
-                e
-                if isinstance(src_t, LongType)
-                else e.select(
-                    F.col("src").cast("long").alias("src"),
-                    F.col("dst").cast("long").alias("dst"),
-                )
-            )
-            starts = [None if s is None else int(s) for s in start_ids]
-            out = _k_hop_local_arrow_int(e_long, starts, k).localCheckpoint(
+        e2, restore = _arrow_ids(e)
+        if e2 is not None:
+            out = _k_hop_local_arrow(e2, list(start_ids), k).localCheckpoint(
                 eager=True
             )
             e.unpersist(blocking=False)
-            if isinstance(src_t, LongType):
-                return out
-            return out.select(
-                F.col("id").cast(src_t).alias("id"), "hops"
-            )
-        if isinstance(src_t, StringType):
-            out = _k_hop_local_arrow(e, list(start_ids), k).localCheckpoint(
-                eager=True
-            )
-            e.unpersist(blocking=False)
-            return out
+            return restore(out, ["id"])
         # exotic id types: fall through to the distributed loop
     e_part: DataFrame | None = None
     schema = T.StructType(
@@ -487,11 +466,11 @@ def _local_tier_max_bytes(spark: SparkSession) -> int:
     BFS 3.1 s vs 6.4 s — the distributed loops pay per-round
     scheduled stages for near-empty tasks, a latency that only grows
     on a busy cluster. Default 64 MB: ids ride to the kernel as
-    strings (≈4× pandas expansion), so the one task peaks at a few
-    hundred MB — inside any standard executor; a 100 TB-derived
-    graph is GBs of edges and refuses here exactly as it refused the
-    broadcast gate. Set the conf lower for memory-tight executors
-    (0 disables every local tier)."""
+    exact Arrow columns and are encoded to int64 codes, so the one
+    task peaks well under a few hundred MB — inside any standard
+    executor; a 100 TB-derived graph is GBs of edges and refuses here
+    exactly as it refused the broadcast gate. Set the conf lower for
+    memory-tight executors (0 disables every local tier)."""
     return _parse_size_bytes(
         spark.conf.get(_LOCAL_TIER_MAX_BYTES_CONF, "67108864"),
         64 << 20,
@@ -732,54 +711,48 @@ def _pagerank_local_arrow(
     early_stop: bool,
 ) -> DataFrame:
     """The small-graph execution of `pagerank_int`: the WHOLE iteration
-    loop in ONE Arrow task via mapInPandas over the single-partition
-    distinct edge table. Gated by the same materialized-size check as
-    the broadcast budget — a graph that fits a broadcast fits one task
-    — so the driver schedules ONE job instead of one scheduled action
-    per checkpoint span (each ~0.4 s of fixed latency on local mode,
-    SCALE.md iterative-graph section: at sf0.1 the per-round window +
-    Δ-probe machinery was 2 s of pure scheduling on a 1,100-node
-    graph). At scale the gate never trips and the distributed loop
-    below runs unchanged.
+    loop in ONE Arrow task over the single-partition distinct edge
+    table, ids encoded by `_encode_ids`. Gated by the same
+    materialized-size check as the other one-task tiers, so the driver
+    schedules ONE job instead of one scheduled action per checkpoint
+    span (each ~0.4 s of fixed latency on local mode, SCALE.md
+    iterative-graph section: at sf0.1 the per-round window + Δ-probe
+    machinery was 2 s of pure scheduling on a 1,100-node graph). At
+    scale the gate never trips and the distributed loop runs unchanged.
 
-    Bit-exact twin of the distributed loop (property-pinned), including
-    its null-key semantics: a NULL src/dst is a real node in the fused
-    node dimension (groupBy keeps the null group) whose edges never
-    match the per-round equi-join — null-src edges emit nothing,
-    null-dst receipts are lost, the null node itself earns
-    base + share each round. Integer ops are int64 with python-//
-    semantics (≡ SQL `div` on the non-negative ranks). Early stop is
-    checked every round — stopping at the exact fixpoint returns the
-    same vector as any check cadence, which is what keeps the
-    fixed-round oracle valid."""
+    Bit-exact against the distributed loop (property-pinned),
+    including its null-key semantics: a NULL src/dst is a real node in
+    the fused node dimension (groupBy keeps the null group) whose edges
+    never match the per-round equi-join — null-src edges emit nothing,
+    null-dst receipts are lost, the null node itself earns base + share
+    each round. Integer ops are int64 with python-// semantics (≡ SQL
+    `div` on the non-negative ranks). Early stop is checked every round
+    — stopping at the exact fixpoint returns the same vector as any
+    check cadence, which is what keeps the fixed-round oracle valid."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
     out_fields = e.schema["src"].dataType.simpleString()
     schema = f"id {out_fields}, rank long"
 
     def run(batches):
-        parts = list(batches)
-        if not parts:
+        bl = list(batches)
+        if not bl:
             return
-        pdf = pd.concat(parts, ignore_index=True)
-        if len(pdf) == 0:
+        t = pa.Table.from_batches(bl)
+        if t.num_rows == 0:
             return
-        both = pd.concat([pdf["src"], pdf["dst"]], ignore_index=True)
-        codes, uniques = pd.factorize(both, use_na_sentinel=True)
+        (s_idx, d_idx), uniques = _encode_ids(t.column("src"), t.column("dst"))
         n_real = len(uniques)
-        has_null = bool((codes < 0).any())
-        null_idx = n_real
-        codes = np.where(codes < 0, null_idx, codes)
-        m = len(pdf)
-        s_idx, d_idx = codes[:m], codes[m:]
+        has_null = bool((s_idx < 0).any() or (d_idx < 0).any())
+        # the null node takes the slot after every real node
+        s_idx = np.where(s_idx < 0, n_real, s_idx)
+        d_idx = np.where(d_idx < 0, n_real, d_idx)
         n = n_real + (1 if has_null else 0)
         outdeg = np.bincount(s_idx, minlength=n).astype(np.int64)
         # contributions flow only through edges the distributed
         # equi-joins would match: non-null src AND non-null dst
-        flows = np.ones(m, dtype=bool)
-        if has_null:
-            flows = (s_idx != null_idx) & (d_idx != null_idx)
+        flows = (s_idx != n_real) & (d_idx != n_real)
         fs, fd = s_idx[flows], d_idx[flows]
         rank = np.full(n, int(init), dtype=np.int64)
         dang = outdeg == 0
@@ -796,10 +769,16 @@ def _pagerank_local_arrow(
                 rank = new_rank
                 break
             rank = new_rank
-        ids = list(uniques) + ([None] if has_null else [])
-        yield pd.DataFrame({"id": ids, "rank": rank})
+        ids = np.arange(n, dtype=np.int64)
+        ids[n_real:] = -1
+        yield pa.RecordBatch.from_pydict(
+            {
+                "id": _decode_ids(uniques, ids),
+                "rank": pa.array(rank, pa.int64()),
+            }
+        )
 
-    return e.coalesce(1).mapInPandas(run, schema)
+    return e.coalesce(1).mapInArrow(run, schema)
 
 
 def pagerank_int(
@@ -850,7 +829,7 @@ def pagerank_int(
     Arrow task (`_pagerank_local_arrow`) — a graph that fits a
     broadcast fits one task, and per-round scheduled actions (~0.4 s
     fixed latency each on local mode) dominate a tiny graph's cost.
-    Bit-exact twin of the distributed loop, property-pinned, null-key
+    Bit-exact against the distributed loop, property-pinned, null-key
     semantics included. Passing `stats` (or forcing
     `broadcast_tables`) keeps the distributed loop, which tests use
     to pin local == distributed.
@@ -887,42 +866,16 @@ def pagerank_int(
     # REAL sizes, and the local-Arrow gate must fire before the node-dim
     # build schedules its checkpoint job
     e.count()
-    if broadcast_tables is None and stats is None and not e.isStreaming:
-        est = _plan_size_estimate(e)
-        thr0 = _local_tier_max_bytes(edges.sparkSession)
-        if est is not None and 0 < est <= thr0:
-            from pyspark.sql.types import (
-                ByteType,
-                IntegerType,
-                LongType,
-                ShortType,
-                StringType,
-            )
-
-            src_t = e.schema["src"].dataType
-            args = (iters, base, damp_num, damp_den, init, dangling,
-                    early_stop)
-            out = None
-            if isinstance(src_t, StringType):
-                out = _pagerank_local_arrow(e, *args)
-            elif isinstance(
-                src_t, (ByteType, ShortType, IntegerType, LongType)
-            ):
-                # Arrow→pandas turns a nullable integral column into
-                # float64 (lossy past 2^53); string ids round-trip
-                # integrals exactly, so cast in and back out
-                e_str = e.select(
-                    F.col("src").cast("string").alias("src"),
-                    F.col("dst").cast("string").alias("dst"),
-                )
-                out = _pagerank_local_arrow(e_str, *args).select(
-                    F.col("id").cast(src_t).alias("id"), "rank"
-                )
-            if out is not None:
-                out = out.localCheckpoint(eager=True)
-                e.unpersist(blocking=False)
-                return out
-            # exotic id types (float/binary/struct): distributed loop
+    if broadcast_tables is None and stats is None and _fits_one_task(e):
+        e2, restore = _arrow_ids(e)
+        if e2 is not None:
+            out = _pagerank_local_arrow(
+                e2, iters, base, damp_num, damp_den, init, dangling,
+                early_stop,
+            ).localCheckpoint(eager=True)
+            e.unpersist(blocking=False)
+            return restore(out, ["id"])
+        # exotic id types (float/binary/struct): distributed loop
 
     def maybe_b(df: DataFrame) -> DataFrame:
         return F.broadcast(df) if broadcast_tables else df
@@ -1043,13 +996,16 @@ def pagerank_int(
             # row fused into the round's plan via a broadcast cross
             # join — no per-round node-dim join, no driver roundtrip.
             # int64 `div` (≡ SQL/python floor div on non-negatives)
-            # keeps the share exact and engine-identical.
+            # keeps the share exact and engine-identical. An empty
+            # graph has no node to share with; max(·, 1) only keeps its
+            # one-row aggregate from dividing by zero.
             share_row = (
                 ranks.filter(F.col("__dang"))
                 .agg(F.coalesce(F.sum("rank"), F.lit(0)).alias("__dm"))
                 .select(
                     F.expr(
-                        f"{damp_num} * __dm div {damp_den} div {n_nodes}"
+                        f"{damp_num} * __dm div {damp_den}"
+                        f" div {max(n_nodes, 1)}"
                     ).alias("__share")
                 )
             )
@@ -1202,19 +1158,14 @@ def _triangle_local_arrow(e: DataFrame, orient: str) -> DataFrame:
     ~3 scheduled stages of pure overhead on a one-task graph). Unlike
     the other one-task tiers this one is NOT gated on edge bytes — the
     cost of triangle counting is the WEDGE volume Σ_u outdeg(u)² (the
-    `right_degree_histogram` frame, r11 VERDICT #1: a tiny edge table
-    can still carry a quadratic wedge load), so the caller gates on
-    the measured Σdeg² of the canonically-oriented edge set and only
-    then collapses to one task.
+    `right_degree_histogram` frame: a tiny edge table can still carry a
+    quadratic wedge load), so the caller gates on the measured Σdeg² of
+    the canonically-oriented edge set and only then collapses to one
+    task.
 
-    Orientation inside the kernel runs on factorize CODES, not values
-    (ints round-trip through strings here, and "10" < "9"
-    lexicographically) — sound because the triangle COUNT is invariant
-    under ANY strict total order used to orient: each undirected
-    triangle is enumerated exactly once regardless (the same
-    invariance the orient="id"/"degree" equality pin relies on).
-    Dedup of unordered pairs uses code equality, which IS value
-    equality (factorize is bijective on observed values).
+    Ids are encoded by `_encode_ids`, whose codes are in value order,
+    so orienting and deduplicating on codes is orienting and
+    deduplicating on values.
 
     Pure-numpy, two internal strategies picked by NODE count:
 
@@ -1231,36 +1182,28 @@ def _triangle_local_arrow(e: DataFrame, orient: str) -> DataFrame:
       wedge expansion in bounded CHUNKS (~4M rows) so peak memory is
       O(chunk), not O(Σdeg²).
 
-    Null endpoints never reach this kernel (both orientations drop
-    them exactly like the distributed equi-joins — a property test
-    pins local == distributed on null-bearing inputs); a defensive
-    mask drops them anyway.
+    Null endpoints are dropped exactly like the distributed equi-joins
+    drop them (a property test pins local == distributed on
+    null-bearing inputs).
 
     The one-row total is produced by an aggregate ABOVE the kernel, so
     a zero-partition edge frame still yields the (n_triangles=0) row
-    the distributed agg would (the k-hop hop-0 lesson, r11 ADVICE)."""
+    the distributed agg would (the k-hop hop-0 lesson)."""
     import numpy as np
-    import pandas as pd
-
-    dense_max_n = _TRI_DENSE_MAX_N
+    import pyarrow as pa
 
     def run(batches):
-        parts = list(batches)
-        if not parts:
+        bl = list(batches)
+        if not bl:
             return
-        pdf = pd.concat(parts, ignore_index=True)
-        m0 = len(pdf)
-        if m0 == 0:
-            return
-        both = pd.concat([pdf["u"], pdf["v"]], ignore_index=True)
-        codes, uniques = pd.factorize(both, use_na_sentinel=True)
-        s, d = codes[:m0].astype(np.int64), codes[m0:].astype(np.int64)
+        t = pa.Table.from_batches(bl)
+        (s, d), uniques = _encode_ids(t.column("u"), t.column("v"))
         # nulls never survive the distributed equi-joins/comparisons;
         # self-loops are filtered there by u != v — mirror both
         valid = (s >= 0) & (d >= 0) & (s != d)
         s, d = s[valid], d[valid]
         n = max(len(uniques), 1)
-        # symmetric dedup on unordered code pairs (≡ value pairs)
+        # symmetric dedup on unordered pairs
         lo = np.minimum(s, d)
         hi = np.maximum(s, d)
         key = np.unique(lo * n + hi)
@@ -1278,15 +1221,17 @@ def _triangle_local_arrow(e: DataFrame, orient: str) -> DataFrame:
             s, d = lo, hi
         if m == 0:
             tri = 0
-        elif n <= dense_max_n:
+        elif n <= _TRI_DENSE_MAX_N:
             tri = _triangle_dense_codes(s, d, n)
         else:
             tri = _triangle_sparse_codes(s, d, n, m)
-        yield pd.DataFrame({"n_triangles": [tri]})
+        yield pa.RecordBatch.from_pydict(
+            {"n_triangles": pa.array([tri], pa.int64())}
+        )
 
     return (
         e.coalesce(1)
-        .mapInPandas(run, "n_triangles long")
+        .mapInArrow(run, "n_triangles long")
         .agg(
             F.coalesce(F.sum("n_triangles"), F.lit(0))
             .cast("long")
@@ -1369,7 +1314,7 @@ def triangle_count(
     if tier_stats is not None:
         tier_stats.update(local=use_local, wedges=wedge_vol, budget=budget)
     if use_local:
-        e2, _restore = _cast_ids_for_arrow(e_raw)
+        e2, _ = _arrow_ids(e_raw)
         if e2 is not None:
             return materialize_and_release(
                 _triangle_local_arrow(e2, orient), *pinned
@@ -1441,7 +1386,7 @@ def cooccurrence_triangles(
     item-set table (the `_fits_one_task` broadcast-budget rule): when
     it fits, pair explode → support count → threshold → orientation →
     triangle count all run in ONE Arrow task (numpy unique/bincount —
-    the distributed twin pays two more shuffles plus the
+    the distributed fallback pays two more shuffles plus the
     triangle-gate probes for the same answer on a one-task graph);
     when it does not, the distributed fallback explodes ordered pairs
     from the sorted arrays, counts them with a hash aggregate, and
@@ -1455,42 +1400,25 @@ def cooccurrence_triangles(
 
     Pair counting treats each group's array as a SET (use collect_set
     upstream; duplicate items within one array self-pair-filter but
-    double-count pair support identically on both paths). Integral
-    item ids round-trip through strings (the Arrow cast policy —
-    nullable int→float64 is lossy past 2^53); pair canonicalization
-    inside the kernel is by factorize CODE order, which dedupes
-    unordered pairs exactly (code equality ≡ value equality) and
-    orients the DAG by a strict total order, under which the triangle
-    count is invariant. NULL arrays contribute nothing; null ELEMENTS
+    double-count pair support identically on both paths). Items cross
+    the Arrow boundary through `_arrow_ids`/`_encode_ids` (integral
+    items as exact int64, strings as strings), whose value-ordered
+    codes canonicalize unordered pairs and orient the DAG inside the
+    kernel. NULL arrays contribute nothing; null ELEMENTS
     inside arrays are dropped (collect_set never emits them; the
-    fallback's explode-pair comparisons drop them the same way).
+    fallback drops them with array_compact before pairing).
 
     Reference frame: the reference runs graph closure over its
     embedded JanusGraph whole-graph view (TxGraphWriter.scala:35-73)
     — same one-task reality this tier reproduces with an explicit
     scale gate."""
-    import numpy as np
-    import pandas as pd
+    from pyspark.sql.types import ArrayType
 
     from .util import materialize_and_release
 
-    elem_t = groups.schema[items].dataType.elementType  # type: ignore[attr-defined]
-    from pyspark.sql.types import (
-        ByteType,
-        IntegerType,
-        LongType,
-        ShortType,
-        StringType,
-    )
-
     g = groups.select(F.col(items).alias("items"))
-    kernel_ok = isinstance(
-        elem_t, (ByteType, ShortType, IntegerType, LongType, StringType)
-    )
-    if kernel_ok and not isinstance(elem_t, StringType):
-        g = g.select(
-            F.transform("items", lambda x: x.cast("string")).alias("items")
-        )
+    elem_t = g.schema["items"].dataType.elementType  # type: ignore[attr-defined]
+    wide_t = _arrow_id_type(elem_t)
     use_local = bool(local_tier)
     pinned: list[DataFrame] = []
     if local_tier is None and not g.isStreaming:
@@ -1498,16 +1426,23 @@ def cooccurrence_triangles(
         pinned.append(g)
         g.count()  # materialize: real size for the broadcast-budget gate
         use_local = _fits_one_task(g)
+    use_local = use_local and wide_t is not None
     if tier_stats is not None:
-        tier_stats.update(local=use_local and kernel_ok)
-    if use_local and kernel_ok:
-        out = _cooccur_local_arrow(g, min_support)
+        tier_stats.update(local=use_local)
+    if use_local:
+        out = _cooccur_local_arrow(
+            g.select(F.col("items").cast(ArrayType(wide_t)).alias("items")),
+            min_support,
+        )
         return materialize_and_release(out, *pinned)
     # distributed fallback: ordered-pair explode from sorted arrays →
     # hash-aggregate support count → threshold → triangle_count (its
     # own wedge gate applies); array_sort makes i<j emission the
-    # value-canonical unordered pair
-    pairs = g.select(F.array_sort("items").alias("ss")).select(
+    # value-canonical unordered pair, and array_compact drops null
+    # elements as the kernel does
+    pairs = g.select(
+        F.array_sort(F.array_compact("items")).alias("ss")
+    ).select(
         F.explode(
             F.flatten(
                 F.transform(
@@ -1536,40 +1471,33 @@ def cooccurrence_triangles(
 
 def _cooccur_local_arrow(g: DataFrame, min_support: int) -> DataFrame:
     """One-task kernel for `cooccurrence_triangles`: item arrays
-    (string elements) → pair support counts → thresholded edge set →
-    dense-bitset or chunked compact-forward triangle count. Pair
-    expansion batches rows BY ARRAY LENGTH k (triu_indices(k) per
+    (int64 or string elements) → pair support counts → thresholded
+    edge set → dense-bitset or chunked compact-forward triangle count.
+    Pair expansion batches rows BY ARRAY LENGTH k (triu_indices(k) per
     batch, row-chunked so each expansion stays ~8M cells), so the
     whole explode is a handful of vectorized gathers even with mixed
     basket sizes. The one-row total is produced by an aggregate ABOVE
     the kernel (zero-partition safety, the k-hop hop-0 lesson)."""
 
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.compute as pc
 
     def run(batches):
-        parts = list(batches)
-        if not parts:
+        bl = list(batches)
+        if not bl:
             return
-        pdf = pd.concat(parts, ignore_index=True)
-        arrs = [
-            a for a in pdf["items"].tolist() if a is not None and len(a) >= 2
-        ]
-        if not arrs:
-            yield pd.DataFrame({"n_edges": [0], "n_triangles": [0]})
-            return
-        lens = np.array([len(a) for a in arrs])
-        flat = np.concatenate([np.asarray(a, dtype=object) for a in arrs])
-        codes, uniques = pd.factorize(pd.Series(flat), use_na_sentinel=True)
-        codes = codes.astype(np.int64)
+        arr = pa.Table.from_batches(bl).column("items").combine_chunks()
+        # a NULL array has length 0 here, and flatten() skips its slot
+        lens = pc.list_value_length(arr).fill_null(0).to_numpy()
+        (codes,), uniques = _encode_ids(pa.chunked_array([arr.flatten()]))
         n = max(len(uniques), 1)
         offsets = np.cumsum(lens) - lens
-        key_chunks = []
-        for k in np.unique(lens):
+        key_chunks = [np.empty(0, dtype=np.int64)]
+        for k in np.unique(lens[lens >= 2]):
             rows = np.flatnonzero(lens == k)
             iu, ju = np.triu_indices(int(k), 1)
-            npairs = len(iu)
-            step = max(1, 8_000_000 // max(npairs, 1))
+            step = max(1, 8_000_000 // len(iu))
             for lo in range(0, len(rows), step):
                 sel = rows[lo : lo + step]
                 idx = offsets[sel][:, None] + np.arange(int(k))[None, :]
@@ -1579,12 +1507,8 @@ def _cooccur_local_arrow(g: DataFrame, min_support: int) -> DataFrame:
                 valid = (a >= 0) & (b >= 0) & (a != b)
                 a, b = a[valid], b[valid]
                 key_chunks.append(np.minimum(a, b) * n + np.maximum(a, b))
-        if key_chunks:
-            keys = np.concatenate(key_chunks)
-            uniq, cnt = np.unique(keys, return_counts=True)
-            kept = uniq[cnt >= min_support]
-        else:
-            kept = np.array([], dtype=np.int64)
+        uniq, cnt = np.unique(np.concatenate(key_chunks), return_counts=True)
+        kept = uniq[cnt >= min_support]
         m = len(kept)
         s, d = kept // n, kept % n
         if m == 0:
@@ -1593,11 +1517,16 @@ def _cooccur_local_arrow(g: DataFrame, min_support: int) -> DataFrame:
             tri = _triangle_dense_codes(s, d, n)
         else:
             tri = _triangle_sparse_codes(s, d, n, m)
-        yield pd.DataFrame({"n_edges": [m], "n_triangles": [tri]})
+        yield pa.RecordBatch.from_pydict(
+            {
+                "n_edges": pa.array([m], pa.int64()),
+                "n_triangles": pa.array([tri], pa.int64()),
+            }
+        )
 
     return (
         g.coalesce(1)
-        .mapInPandas(run, "n_edges long, n_triangles long")
+        .mapInArrow(run, "n_edges long, n_triangles long")
         .agg(
             F.coalesce(F.sum("n_edges"), F.lit(0))
             .cast("long")
@@ -1609,117 +1538,34 @@ def _cooccur_local_arrow(g: DataFrame, min_support: int) -> DataFrame:
     )
 
 
-def _components_local_arrow(e: DataFrame, numeric: bool = False) -> DataFrame:
+def _components_local_arrow(e: DataFrame) -> DataFrame:
     """Small-graph execution of `connected_components`: union-find in
-    ONE Arrow task over the symmetrized edge table. Exact twin of the
-    hash-min propagation fixpoint, property-pinned, including its
-    null-key semantics: a null endpoint is a real node (the label table
-    is built from the symmetrized 'u' column, which includes null) but
-    its edges can never deliver a label through the equi-joins — so the
-    null node stays its own singleton component (label null) and a
-    node whose only neighbor is null keeps its own id. Component = the
-    minimum member id by VALUE ordering — `numeric=True` when the
-    caller round-tripped integral ids through strings (the Arrow cast
-    policy), so the min is taken in the ORIGINAL numeric order, not
-    lexicographic ("10" < "9" would mislabel components)."""
-    import pandas as pd
-
-    id_t = e.schema["u"].dataType.simpleString()
-    schema = f"id {id_t}, component {id_t}"
-
-    def run(batches):
-        parts = list(batches)
-        if not parts:
-            return
-        pdf = pd.concat(parts, ignore_index=True)
-        if len(pdf) == 0:
-            return
-        both = pd.concat([pdf["u"], pdf["v"]], ignore_index=True)
-        codes, uniques = pd.factorize(both, use_na_sentinel=True)
-        n = len(uniques)
-        m = len(pdf)
-        s_idx, d_idx = codes[:m], codes[m:]
-        parent = list(range(n))
-
-        def find(x: int) -> int:
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        for a, b in zip(s_idx, d_idx):
-            if a < 0 or b < 0:
-                continue  # null never equi-matches
-            ra, rb = find(int(a)), find(int(b))
-            if ra != rb:
-                parent[rb] = ra
-        # component label = min member VALUE per root (original-type
-        # ordering: numeric ids arrive as strings via the Arrow cast)
-        key = (lambda v: int(v)) if numeric else (lambda v: v)
-        best: dict = {}
-        for c in range(n):
-            r = find(c)
-            v = uniques[c]
-            if r not in best or key(v) < key(best[r]):
-                best[r] = v
-        # node set = distinct symmetrized 'u' values (== all endpoints),
-        # incl null when present (it labels itself null)
-        ids = list(uniques)
-        comps = [best[find(c)] for c in range(n)]
-        has_null = bool((codes < 0).any())
-        if has_null:
-            ids.append(None)
-            comps.append(None)
-        yield pd.DataFrame({"id": ids, "component": comps})
-
-    return e.coalesce(1).mapInPandas(run, schema)
-
-
-def _components_local_arrow_int(e: DataFrame) -> DataFrame:
-    """Integral-id twin of `_components_local_arrow` (r13, closing the
-    r12 honest-list port): the ONE-DIRECTION pair table crosses the
-    boundary as EXACT int64 Arrow arrays via `mapInArrow` (no string
-    cast, no object factorize; pyarrow int64 is exact at any magnitude
-    so the 2^53 hazard never arises), and union-find needs no mirrored
-    rows — merging (a,b) merges (b,a). Semantics identical to the
-    pandas twin: the node set is every distinct non-null endpoint,
-    component = minimum member id in NUMERIC order, a null endpoint is
-    its own (null, null) singleton emitted only when nulls exist, and
-    null never merges anything. A 0 injected by fill_null at null
-    positions is emitted only when 0 really occurs as a value (its
-    code is never referenced by a real position otherwise)."""
+    ONE Arrow task over the ONE-DIRECTION pair table (merging (a, b)
+    merges (b, a), so no mirrored rows are needed), ids encoded by
+    `_encode_ids`. Exactly equal to the hash-min propagation fixpoint,
+    property-pinned, including its null-key semantics: a null endpoint
+    is a real node (the label table is built from the symmetrized 'u'
+    column, which includes null) but its edges can never deliver a
+    label through the equi-joins — so the null node is its own (null,
+    null) singleton, emitted only when nulls exist, and a node whose
+    only neighbor is null keeps its own id. The node set is every
+    distinct non-null endpoint; component = the minimum member id,
+    which is the minimum CODE because codes are in value order."""
     import numpy as np
     import pyarrow as pa
 
-    schema = "id long, component long"
+    id_t = e.schema["u"].dataType.simpleString()
+    schema = f"id {id_t}, component {id_t}"
 
     def run(batches):
         bl = list(batches)
         if not bl:
             return
         t = pa.Table.from_batches(bl)
-        m = t.num_rows
-        if m == 0:
+        if t.num_rows == 0:
             return
-        u_c, v_c = t.column("u"), t.column("v")
-        null_mask = np.concatenate(
-            [
-                pa.compute.is_null(u_c).to_numpy(zero_copy_only=False),
-                pa.compute.is_null(v_c).to_numpy(zero_copy_only=False),
-            ]
-        )
-        vals = np.concatenate(
-            [
-                u_c.fill_null(0).to_numpy(zero_copy_only=False),
-                v_c.fill_null(0).to_numpy(zero_copy_only=False),
-            ]
-        ).astype(np.int64)
-        uniques, codes = np.unique(vals, return_inverse=True)
+        (u_idx, v_idx), uniques = _encode_ids(t.column("u"), t.column("v"))
         n = len(uniques)
-        used = np.zeros(n, dtype=bool)
-        used[codes[~null_mask]] = True  # drop a fill_null-injected 0
-        codes = np.where(null_mask, -1, codes)
-        u_idx, v_idx = codes[:m], codes[m:]
         parent = list(range(n))
 
         def find(x: int) -> int:
@@ -1728,29 +1574,26 @@ def _components_local_arrow_int(e: DataFrame) -> DataFrame:
                 x = parent[x]
             return x
 
-        for a, b in zip(u_idx, v_idx):
+        for a, b in zip(u_idx.tolist(), v_idx.tolist()):
             if a < 0 or b < 0:
                 continue  # null never equi-matches
-            ra, rb = find(int(a)), find(int(b))
+            ra, rb = find(a), find(b)
             if ra != rb:
                 parent[rb] = ra
-        best: dict = {}
-        for c in range(n):
-            if not used[c]:
-                continue
-            r = find(c)
-            v = int(uniques[c])
-            if r not in best or v < best[r]:
-                best[r] = v
-        ids = [int(uniques[c]) for c in range(n) if used[c]]
-        comps = [best[find(c)] for c in range(n) if used[c]]
-        if bool(null_mask.any()):
-            ids.append(None)
-            comps.append(None)
+        roots = np.array([find(c) for c in range(n)], dtype=np.int64)
+        # codes ascend, so a root's first member is its minimum
+        _, first, inv = np.unique(
+            roots, return_index=True, return_inverse=True
+        )
+        ids = np.arange(n, dtype=np.int64)
+        comps = first[inv].astype(np.int64)
+        if bool((u_idx < 0).any() or (v_idx < 0).any()):
+            ids = np.append(ids, -1)
+            comps = np.append(comps, -1)
         yield pa.RecordBatch.from_pydict(
             {
-                "id": pa.array(ids, pa.int64()),
-                "component": pa.array(comps, pa.int64()),
+                "id": _decode_ids(uniques, ids),
+                "component": _decode_ids(uniques, comps),
             }
         )
 
@@ -1786,8 +1629,8 @@ def connected_components(
     `local_tier=None` (default) auto-gates the small-graph tier: when
     the materialized pair table fits the broadcast budget, the whole
     fixpoint runs as union-find in ONE Arrow task
-    (`_components_local_arrow` — the pagerank posture). Bit-exact twin,
-    property-pinned; False forces the distributed loop."""
+    (`_components_local_arrow` — the pagerank posture). Bit-exact
+    against the distributed loop, property-pinned; False forces it."""
     u, v = F.col("u"), F.col("v")
     # Every per-round exchange is pinned to an EXPLICIT partition count
     # instead of the session's spark.sql.shuffle.partitions: the label
@@ -1826,45 +1669,10 @@ def connected_components(
         # size estimate is real; symmetrized edges ≤ 2× pairs bytes
         local_tier = _fits_one_task(pairs)
     if local_tier and not pairs.isStreaming:
-        from pyspark.sql.types import (
-            ByteType,
-            IntegerType,
-            LongType,
-            ShortType,
-        )
-
         one = pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
-        id_t = one.schema["u"].dataType
-        if isinstance(id_t, (ByteType, ShortType, IntegerType, LongType)):
-            # exact int64 kernel over the ONE-DIRECTION pairs (r13):
-            # union-find needs no mirrored rows, ids cross as int64
-            # (no string round trip, no object factorize)
-            one_long = (
-                one
-                if isinstance(id_t, LongType)
-                else one.select(
-                    F.col("u").cast("long").alias("u"),
-                    F.col("v").cast("long").alias("v"),
-                )
-            )
-            out = _components_local_arrow_int(one_long).localCheckpoint(
-                eager=True
-            )
-            if isinstance(id_t, LongType):
-                return out
-            return out.select(
-                F.col("id").cast(id_t).alias("id"),
-                F.col("component").cast(id_t).alias("component"),
-            )
-        sym = one.unionByName(
-            pairs.select(F.col(b_col).alias("u"), F.col(a_col).alias("v"))
-        )
-        e2, restore = _cast_ids_for_arrow(sym)
+        e2, restore = _arrow_ids(one)
         if e2 is not None:
-            numeric = e2 is not sym  # integral ids took the string cast
-            out = _components_local_arrow(
-                e2, numeric=numeric
-            ).localCheckpoint(eager=True)
+            out = _components_local_arrow(e2).localCheckpoint(eager=True)
             return restore(out, ["id", "component"])
         # exotic id types: fall through to the distributed loop
     edges = (
@@ -2193,65 +2001,28 @@ def _pair_count_local_arrow(
     same one-task posture as `_triangle_local_arrow`, gated by the
     caller on measured wedge volume (Σ_r deg(r)²), never edge bytes.
 
-    Pure numpy: factorize both id columns to codes, dedupe (l, r)
-    (a NULL r keeps its own slot so LEFT degrees still count it, like
-    the distributed groupBy — NULL l rows are dropped, as the
-    distributed pair/degree joins drop them), optionally a-priori-prune
-    left nodes below `min_left_degree` (support is anti-monotone, the
-    market-basket prune), then expand each right block's i<j pairs in
-    bounded chunks and aggregate with one np.unique. Pair identity is
-    canonical in CODE space (min code, max code) — a bijection on
-    observed values, so the multiset of unordered VALUE pairs is exact;
-    the caller restores value order with least/greatest AFTER the id
-    restore cast (string ids factorize in appearance order, so code
-    order is not value order — the triangle-kernel lesson).
+    Pure numpy: encode each id column on its own (`_encode_ids`; the
+    two columns may differ in type), dedupe (l, r) (a NULL r keeps its
+    own slot so LEFT degrees still count it, like the distributed
+    groupBy — NULL l rows are dropped, as the distributed pair/degree
+    joins drop them), optionally a-priori-prune left nodes below
+    `min_left_degree` (support is anti-monotone, the market-basket
+    prune), then expand each right block's i<j pairs in bounded chunks
+    and aggregate with one np.unique.
 
-    Output: (x, y, common[, deg_x, deg_y]) with (x, y) in code order;
+    Output: (x, y, common[, deg_x, deg_y]) with x < y in VALUE order
+    (left codes are value-ordered) and ids typed like the left column;
     `common` ≥ min_pair; degrees are per-left-node distinct-(l, r)-row
     counts over the edge set as given (post hub-cap when the caller
     capped). NULL rights never pair (the distributed equi-join
-    behaviour) but DO count toward degrees.
-
-    r12: runs via `mapInArrow` with PER-COLUMN decoding — integral id
-    columns cross as exact int64 Arrow arrays (codes from one
-    `np.unique(return_inverse)`, no 2^53 hazard, no string cast of the
-    edge table), string columns factorize as before; the two columns
-    may mix types freely. A fill_null-injected spurious unique only
-    widens the code space by one unused slot (null codes are remapped
-    to −1 before any use), so pair keys and degree bincounts are
-    untouched. Output ids are typed by the LEFT column (long for
-    integral input — the caller's restore only down-casts narrow
-    ints)."""
+    behaviour) but DO count toward degrees."""
     import numpy as np
     import pyarrow as pa
 
-    left_integral = e.schema["l"].dataType.simpleString() in (
-        "tinyint",
-        "smallint",
-        "int",
-        "bigint",
-    )
-    out_t = "bigint" if left_integral else "string"
+    out_t = e.schema["l"].dataType.simpleString()
     out_schema = f"x {out_t}, y {out_t}, common long"
     if with_degrees:
         out_schema += ", deg_x long, deg_y long"
-
-    def _codes(arr: "pa.ChunkedArray"):
-        """(codes int64 with −1 for NULL, uniques) for one id column."""
-        null = pa.compute.is_null(arr).to_numpy(zero_copy_only=False)
-        if pa.types.is_integer(arr.type):
-            vals = (
-                arr.fill_null(0)
-                .to_numpy(zero_copy_only=False)
-                .astype(np.int64)
-            )
-            uniques, inv = np.unique(vals, return_inverse=True)
-            codes = np.where(null, -1, inv).astype(np.int64)
-            return codes, uniques
-        import pandas as pd
-
-        codes, uniques = pd.factorize(arr.to_pandas(), use_na_sentinel=True)
-        return codes.astype(np.int64), np.asarray(uniques, dtype=object)
 
     def run(batches):
         bl = list(batches)
@@ -2260,8 +2031,8 @@ def _pair_count_local_arrow(
         t = pa.Table.from_batches(bl)
         if t.num_rows == 0:
             return
-        lc, ul = _codes(t.column("l"))
-        rc, ur = _codes(t.column("r"))
+        (lc,), ul = _encode_ids(t.column("l"))
+        (rc,), ur = _encode_ids(t.column("r"))
         keep_l = lc >= 0
         lc, rc = lc[keep_l], rc[keep_l]
         n_l = max(len(ul), 1)
@@ -2279,13 +2050,13 @@ def _pair_count_local_arrow(
         order = np.argsort(rcp, kind="stable")
         ls, rs = lcp[order], rcp[order]
         m = len(rs)
+        chunks = [np.empty(0, dtype=np.int64)]
         if m:
             new_blk = np.r_[True, rs[1:] != rs[:-1]]
             blk_starts = np.flatnonzero(new_blk)
             starts = blk_starts[np.cumsum(new_blk) - 1]
             pj = np.arange(m) - starts  # row's position within its block
             cum = np.cumsum(pj)
-            chunks = []
             chunk_rows = 8_000_000
             lo = 0
             while lo < m:
@@ -2305,87 +2076,22 @@ def _pair_count_local_arrow(
                     b = np.maximum(i_side, j_side)
                     chunks.append(a * n_l + b)
                 lo = hi
-            keys = (
-                np.concatenate(chunks)
-                if chunks
-                else np.empty(0, dtype=np.int64)
-            )
-            uk, counts = np.unique(keys, return_counts=True)
-        else:
-            uk = np.empty(0, dtype=np.int64)
-            counts = np.empty(0, dtype=np.int64)
+        uk, counts = np.unique(np.concatenate(chunks), return_counts=True)
         if min_pair and min_pair > 1:
             sel = counts >= min_pair
             uk, counts = uk[sel], counts[sel]
         ca, cb = uk // n_l, uk % n_l
-        if left_integral:
-            xs = pa.array(ul[ca] if len(ca) else [], pa.int64())
-            ys = pa.array(ul[cb] if len(cb) else [], pa.int64())
-        else:
-            vals = np.asarray(ul, dtype=object)
-            xs = pa.array(
-                list(vals[ca]) if len(ca) else [], pa.string()
-            )
-            ys = pa.array(
-                list(vals[cb]) if len(cb) else [], pa.string()
-            )
         cols = {
-            "x": xs,
-            "y": ys,
+            "x": _decode_ids(ul, ca),
+            "y": _decode_ids(ul, cb),
             "common": pa.array(counts, pa.int64()),
         }
         if with_degrees:
-            cols["deg_x"] = pa.array(
-                deg[ca] if len(ca) else [], pa.int64()
-            )
-            cols["deg_y"] = pa.array(
-                deg[cb] if len(cb) else [], pa.int64()
-            )
+            cols["deg_x"] = pa.array(deg[ca], pa.int64())
+            cols["deg_y"] = pa.array(deg[cb], pa.int64())
         yield pa.RecordBatch.from_pydict(cols)
 
     return e.coalesce(1).mapInArrow(run, out_schema)
-
-
-def _cast_bipartite_for_arrow(e: DataFrame):
-    """Per-column variant of `_cast_ids_for_arrow` for bipartite (l, r)
-    frames whose two id columns may carry different types: since the
-    pair kernel reads exact int64 via `mapInArrow` (r12 — no pandas
-    float64 lossiness, so no string round-trip), integral columns only
-    UPCAST to long (lossless), strings pass through, any other type
-    bails to the distributed path. `restore` casts the named output
-    columns back to the LEFT column's type (the only one that appears
-    in kernel output) when it was a narrower integral."""
-    from pyspark.sql.types import (
-        ByteType,
-        IntegerType,
-        LongType,
-        ShortType,
-        StringType,
-    )
-
-    integral = (ByteType, ShortType, IntegerType, LongType)
-    cols = []
-    types = [e.schema[c].dataType for c in e.columns]
-    for c, t in zip(e.columns, types):
-        if isinstance(t, (StringType, LongType)):
-            cols.append(F.col(c))
-        elif isinstance(t, integral):
-            cols.append(F.col(c).cast("long").alias(c))
-        else:
-            return None, None
-    lt = types[0]
-    if isinstance(lt, (StringType, LongType)):
-        return e.select(*cols), lambda df, out_cols: df
-
-    def restore(df: DataFrame, out_cols: list) -> DataFrame:
-        return df.select(
-            *[
-                F.col(c).cast(lt).alias(c) if c in out_cols else F.col(c)
-                for c in df.columns
-            ]
-        )
-
-    return e.select(*cols), restore
 
 
 def common_neighbor_links(
@@ -2559,26 +2265,17 @@ def common_neighbor_links(
     if tier_stats is not None:
         tier_stats.update(local=use_local, wedges=wedge_vol, budget=budget)
     if use_local and not e.isStreaming:
-        e2, restore = _cast_bipartite_for_arrow(e)
+        e2, restore = _arrow_ids(e)
         if e2 is not None:
             raw = _pair_count_local_arrow(
                 e2, min_pair=min_common, with_degrees=True
             )
-            out = restore(raw, ["x", "y"])
-            # value order is restored AFTER the id cast-back: the pair
-            # is canonical in code space inside the kernel, and the
-            # degrees swap with their nodes
-            x_first = F.col("x") <= F.col("y")
-            return out.select(
-                F.least("x", "y").alias("node_a"),
-                F.greatest("x", "y").alias("node_b"),
+            return restore(raw, ["x", "y"]).select(
+                F.col("x").alias("node_a"),
+                F.col("y").alias("node_b"),
                 "common",
-                F.when(x_first, F.col("deg_x"))
-                .otherwise(F.col("deg_y"))
-                .alias("deg_a"),
-                F.when(x_first, F.col("deg_y"))
-                .otherwise(F.col("deg_x"))
-                .alias("deg_b"),
+                F.col("deg_x").alias("deg_a"),
+                F.col("deg_y").alias("deg_b"),
             )
         if tier_stats is not None:
             tier_stats["local"] = False
@@ -2660,11 +2357,10 @@ def _is_checkpoint_backed(df: DataFrame) -> bool:
 
 
 def _fits_one_task(e: DataFrame) -> bool:
-    """Gate for the small-graph one-Arrow-task tier (shared by
-    pagerank/k-hop/kcore/components): the MATERIALIZED edge table fits
-    the broadcast budget — a graph that fits a broadcast fits one
-    task. Callers must have materialized `e` (persist+count or
-    checkpoint) so the estimate is a real size, not a plan guess; for
+    """Gate for the small-graph one-Arrow-task tiers (the triangle and
+    pair tiers add a wedge-volume check): the MATERIALIZED edge table
+    fits the local-tier budget (`_local_tier_max_bytes`). Callers must
+    have materialized `e` (persist+count or checkpoint) so the estimate is a real size, not a plan guess; for
     checkpoint-backed frames the real size comes from the block
     manager (`_checkpoint_size_estimate`)."""
     if e.isStreaming:
@@ -2682,89 +2378,44 @@ def _fits_one_task(e: DataFrame) -> bool:
     return est is not None and 0 < est <= thr
 
 
-def _cast_ids_for_arrow(e: DataFrame):
-    """Arrow→pandas turns a NULLABLE integral column into float64,
-    which is lossy past 2^53 — so integral id columns round-trip
-    through strings (exact both ways); strings pass through; other id
-    types (float/binary/struct) return (None, None) and the caller
-    stays on the distributed path. Returns (e_cast, restore) where
-    restore(df, out_cols) casts the named output columns back."""
-    from pyspark.sql.types import (
-        ByteType,
-        IntegerType,
-        LongType,
-        ShortType,
-        StringType,
-    )
-
-    t = e.schema[e.columns[0]].dataType
-    if isinstance(t, StringType):
-        return e, lambda df, out_cols: df
-    if isinstance(t, (ByteType, ShortType, IntegerType, LongType)):
-        e2 = e.select(
-            *[F.col(c).cast("string").alias(c) for c in e.columns]
-        )
-
-        def restore(df: DataFrame, out_cols: list) -> DataFrame:
-            return df.select(
-                *[
-                    F.col(c).cast(t).alias(c) if c in out_cols else F.col(c)
-                    for c in df.columns
-                ]
-            )
-
-        return e2, restore
-    return None, None
-
-
-def _kcore_local_arrow(
-    e: DataFrame, k: int, max_rounds: int, mirror: bool = False
-) -> DataFrame:
+def _kcore_local_arrow(e: DataFrame, k: int, max_rounds: int) -> DataFrame:
     """Small-graph execution of `kcore`: the whole peel in ONE Arrow
-    task over the mirrored edge multiset (`mirror=True` takes ONE row
-    per undirected edge and mirrors inside the kernel — bit-identical,
-    half the Arrow ingest; the pagerank tier's posture —
-    a graph that fits the broadcast budget fits one task, and on local
-    mode each peel round otherwise costs a scheduled job of fixed
-    latency). Exact twin of the distributed loop, property-pinned,
-    including its null-key semantics: a null endpoint contributes to
-    ROUND-1 degrees (the groupBy counts every row) but its edges can
-    never survive a semi-join (null never equi-matches), so null rows
-    die in the first restriction and a null node can never reach the
-    converged output. The convergence check is the same
-    survivor-count-equality sequence, so the raise-past-max_rounds
-    contract fires on exactly the same inputs."""
+    task. The input is ONE row per undirected edge and the kernel
+    mirrors it in numpy, so the Arrow ingest is half the mirrored
+    multiset; ids are encoded by `_encode_ids`. On local mode each
+    peel round otherwise costs a scheduled job of fixed latency. Exactly
+    equal to the distributed loop, property-pinned, including its
+    null-key semantics: a null endpoint contributes to ROUND-1 degrees
+    (the groupBy counts every row) but its edges can never survive a
+    semi-join (null never equi-matches), so null rows die in the first
+    restriction and a null node can never reach the converged output.
+    The convergence check is the same survivor-count-equality
+    sequence, so the raise-past-max_rounds contract fires on exactly
+    the same inputs."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
     id_t = e.schema["a"].dataType.simpleString()
     schema = f"v {id_t}, deg long"
 
     def run(batches):
-        parts = list(batches)
-        if not parts:
+        bl = list(batches)
+        if not bl:
             return
-        pdf = pd.concat(parts, ignore_index=True)
-        if len(pdf) == 0:
+        t = pa.Table.from_batches(bl)
+        if t.num_rows == 0:
             return
-        both = pd.concat([pdf["a"], pdf["b"]], ignore_index=True)
-        codes, uniques = pd.factorize(both, use_na_sentinel=True)
-        n_real = len(uniques)
-        null_idx = n_real  # sentinel slot: participates in degrees,
-        codes = np.where(codes < 0, null_idx, codes)  # never in semi-joins
-        m = len(pdf)
-        a_idx, b_idx = codes[:m], codes[m:]
-        if mirror:
-            # input is ONE row per undirected edge: mirror in numpy
-            # (r13 — halves the Arrow ingest and lets the caller skip
-            # materializing the union)
-            a_idx, b_idx = (
-                np.concatenate([a_idx, b_idx]),
-                np.concatenate([b_idx, a_idx]),
-            )
-            m *= 2
-        n = n_real + 1
-        alive = np.ones(m, dtype=bool)
+        (a_c, b_c), uniques = _encode_ids(t.column("a"), t.column("b"))
+        null_idx = len(uniques)  # one sentinel slot: counts in degrees,
+        # never in semi-joins
+        a_idx = np.where(a_c < 0, null_idx, a_c)
+        b_idx = np.where(b_c < 0, null_idx, b_c)
+        a_idx, b_idx = (
+            np.concatenate([a_idx, b_idx]),
+            np.concatenate([b_idx, a_idx]),
+        )
+        n = null_idx + 1
+        alive = np.ones(len(a_idx), dtype=bool)
         prev = None
         for _ in range(max_rounds):
             deg = np.bincount(a_idx[alive], minlength=n).astype(np.int64)
@@ -2775,117 +2426,27 @@ def _kcore_local_arrow(
             n_surv = int(surv.sum())
             if n_surv == prev or n_surv == 0:
                 vs = np.flatnonzero(surv)
-                ids = [
-                    None if v == null_idx else uniques[v] for v in vs
-                ]
-                yield pd.DataFrame({"v": ids, "deg": deg[vs]})
-                return
-            prev = n_surv
-            surv_join = surv.copy()
-            surv_join[null_idx] = False  # null never equi-matches
-            alive = (
-                alive
-                & surv_join[a_idx]
-                & surv_join[b_idx]
-                & (a_idx != null_idx)
-                & (b_idx != null_idx)
-            )
-        # non-convergence: a raise here would surface as an opaque
-        # PythonException — emit a sentinel row (deg < 0 is impossible
-        # for a count) and let the driver raise the contract's
-        # RuntimeError
-        yield pd.DataFrame({"v": [None], "deg": [-1]})
-
-    return e.coalesce(1).mapInPandas(run, schema)
-
-
-def _kcore_local_arrow_int(
-    e: DataFrame, k: int, max_rounds: int, mirror: bool = False
-) -> DataFrame:
-    """Integral-id twin of `_kcore_local_arrow` (r12, the k-hop int-
-    kernel posture): the mirrored edge table crosses the boundary as
-    EXACT int64 Arrow arrays via `mapInArrow` — no string cast of the
-    whole table, no multi-million-object factorize; dense node codes
-    come from one `np.unique(return_inverse)` over int64. Null
-    semantics identical: nulls share one sentinel code that counts
-    toward round-1 degrees but never survives a restriction. A 0
-    injected by fill_null can create a spurious unique, but its code is
-    never referenced by any row (null positions are remapped to the
-    sentinel), so its degree stays 0 and `deg >= 1` excludes it —
-    exactly the existing zero-degree-nodes-are-never-members rule."""
-    import numpy as np
-    import pyarrow as pa
-
-    schema = "v long, deg long"
-
-    def run(batches):
-        bl = list(batches)
-        if not bl:
-            return
-        t = pa.Table.from_batches(bl)
-        m = t.num_rows
-        if m == 0:
-            return
-        a_c, b_c = t.column("a"), t.column("b")
-        null_mask = np.concatenate(
-            [
-                pa.compute.is_null(a_c).to_numpy(zero_copy_only=False),
-                pa.compute.is_null(b_c).to_numpy(zero_copy_only=False),
-            ]
-        )
-        vals = np.concatenate(
-            [
-                a_c.fill_null(0).to_numpy(zero_copy_only=False),
-                b_c.fill_null(0).to_numpy(zero_copy_only=False),
-            ]
-        ).astype(np.int64)
-        uniques, codes = np.unique(vals, return_inverse=True)
-        n_real = len(uniques)
-        null_idx = n_real
-        codes = np.where(null_mask, null_idx, codes)
-        a_idx, b_idx = codes[:m], codes[m:]
-        if mirror:
-            # input is ONE row per undirected edge: mirror in numpy
-            # (r13 — halves the Arrow ingest and lets the caller skip
-            # materializing the union)
-            a_idx, b_idx = (
-                np.concatenate([a_idx, b_idx]),
-                np.concatenate([b_idx, a_idx]),
-            )
-            m *= 2
-        n = n_real + 1
-        alive = np.ones(m, dtype=bool)
-        prev = None
-        for _ in range(max_rounds):
-            deg = np.bincount(a_idx[alive], minlength=n).astype(np.int64)
-            surv = (deg >= k) & (deg >= 1)
-            n_surv = int(surv.sum())
-            if n_surv == prev or n_surv == 0:
-                vs = np.flatnonzero(surv)
-                ids = [
-                    None if v == null_idx else int(uniques[v]) for v in vs
-                ]
                 yield pa.RecordBatch.from_pydict(
                     {
-                        "v": pa.array(ids, pa.int64()),
-                        "deg": pa.array(
-                            [int(x) for x in deg[vs]], pa.int64()
+                        "v": _decode_ids(
+                            uniques, np.where(vs == null_idx, -1, vs)
                         ),
+                        "deg": pa.array(deg[vs], pa.int64()),
                     }
                 )
                 return
             prev = n_surv
-            surv_join = surv.copy()
-            surv_join[null_idx] = False
-            alive = (
-                alive
-                & surv_join[a_idx]
-                & surv_join[b_idx]
-                & (a_idx != null_idx)
-                & (b_idx != null_idx)
-            )
+            surv[null_idx] = False  # null never equi-matches
+            alive &= surv[a_idx] & surv[b_idx]
+        # non-convergence: a raise here would surface as an opaque
+        # PythonException — emit a sentinel row (deg < 0 is impossible
+        # for a count) and let the driver raise the contract's
+        # RuntimeError
         yield pa.RecordBatch.from_pydict(
-            {"v": pa.array([None], pa.int64()), "deg": pa.array([-1], pa.int64())}
+            {
+                "v": pa.nulls(1, uniques.type),
+                "deg": pa.array([-1], pa.int64()),
+            }
         )
 
     return e.coalesce(1).mapInArrow(run, schema)
@@ -2920,7 +2481,7 @@ def kcore(
     `local_tier=None` (default) auto-gates the small-graph tier: when
     the materialized edge table fits the broadcast budget, the whole
     peel runs in ONE Arrow task (`_kcore_local_arrow`, the pagerank
-    posture) — bit-exact twin, property-pinned. False forces the
+    posture) — bit-exact, property-pinned. False forces the
     distributed peel (tests use this to pin local == distributed)."""
     one = (
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
@@ -2929,7 +2490,7 @@ def kcore(
     )
     # the sizing count doubles as the checkpoint's materializing action
     # (r13: ONLY the one-direction table is ever materialized — the
-    # kernels mirror internally, and the distributed union below is a
+    # kernel mirrors internally, and the distributed union below is a
     # narrow recompute over the checkpoint, so the former 2× union
     # materialization + second cached copy are gone). A tiny graph then
     # peels single-partition — coalesce(1) makes SinglePartition
@@ -2944,53 +2505,18 @@ def kcore(
         # not the stricter 100k single-partition row gate: a 500k-edge
         # peel is still tens of MB — trivially one task's work, while
         # the distributed loop pays per-round scheduled jobs for it.
-        # The checkpoint's REAL block-manager bytes gate it (the r12
-        # fix); since r13 the kernel ingests the ONE-DIRECTION table
-        # and mirrors in numpy, so the budget compares that table's
-        # materialized bytes directly (no ×2) — deserialized
-        # checkpoint rows already run ~3× columnar, erring
-        # conservative (zyf1's 599k-edge graph reads 50 MB here vs
-        # ~15 MB columnar).
-        est = _checkpoint_size_estimate(one)
-        if est is None:
-            est = _plan_size_estimate(one)
-        thr = _local_tier_max_bytes(edges.sparkSession)
-        local_tier = est is not None and 0 < est <= thr
+        # The kernel ingests the ONE-DIRECTION table and mirrors in
+        # numpy, so the budget compares that table's materialized
+        # bytes directly (no ×2) — deserialized checkpoint rows already
+        # run ~3× columnar, erring conservative (zyf1's 599k-edge graph
+        # reads 50 MB here vs ~15 MB columnar).
+        local_tier = _fits_one_task(one)
     if local_tier:
-        from pyspark.sql.types import (
-            ByteType,
-            IntegerType,
-            LongType,
-            ShortType,
-        )
-
-        id_t = one.schema["a"].dataType
-        if isinstance(id_t, (ByteType, ShortType, IntegerType, LongType)):
-            one_long = (
-                one
-                if isinstance(id_t, LongType)
-                else one.select(
-                    F.col("a").cast("long").alias("a"),
-                    F.col("b").cast("long").alias("b"),
-                )
-            )
-            out = _kcore_local_arrow_int(
-                one_long, k, max_rounds, mirror=True
-            ).localCheckpoint(eager=True)
-            if out.filter(F.col("deg") < 0).limit(1).count():
-                raise RuntimeError(
-                    f"k-core did not converge within {max_rounds} rounds"
-                    " — raise max_rounds (a truncated peel would return"
-                    " a core SUPERSET)"
-                )
-            if isinstance(id_t, LongType):
-                return out
-            return out.select(F.col("v").cast(id_t).alias("v"), "deg")
-        e2, restore = _cast_ids_for_arrow(one)
+        e2, restore = _arrow_ids(one)
         if e2 is not None:
-            out = _kcore_local_arrow(
-                e2, k, max_rounds, mirror=True
-            ).localCheckpoint(eager=True)
+            out = _kcore_local_arrow(e2, k, max_rounds).localCheckpoint(
+                eager=True
+            )
             if out.filter(F.col("deg") < 0).limit(1).count():
                 raise RuntimeError(
                     f"k-core did not converge within {max_rounds} rounds"

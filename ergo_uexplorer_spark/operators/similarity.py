@@ -1197,7 +1197,10 @@ def opq_train(
 
     Trains on a bounded seeded sample collected to the driver — the
     standard transform-training posture (FAISS trains transforms on
-    ≤ 2^16 points); the corpus itself never leaves the executors, and
+    ≤ 2^16 points). The sample is ordered by a hash of the vector and
+    the seed, so it depends on the data and the seed only, not on how
+    the scan splits into partitions (`rand(seed)` is seeded per
+    partition). The corpus itself never leaves the executors, and
     the returned (R, codebooks) are literal-sized broadcasts. Returns
     (R as d×d list-of-lists for `rotate_col`, trained codebooks)."""
     import numpy as np
@@ -1210,7 +1213,7 @@ def opq_train(
         src = ivf_assign(emb, centroids, vec_col=vec_col)
         rows = (
             src.select(vec_col, "centroid_id")
-            .orderBy(F.rand(seed))
+            .orderBy(F.xxhash64(vec_col, F.lit(seed)))
             .limit(sample_n)
             .collect()
         )
@@ -1220,7 +1223,10 @@ def opq_train(
         ) - C[np.array([r[1] for r in rows], dtype=np.int64)]
     else:
         rows = (
-            emb.select(vec_col).orderBy(F.rand(seed)).limit(sample_n).collect()
+            emb.select(vec_col)
+            .orderBy(F.xxhash64(vec_col, F.lit(seed)))
+            .limit(sample_n)
+            .collect()
         )
         X = np.array([list(r[0]) for r in rows], dtype=np.float64)
     d = X.shape[1]

@@ -556,7 +556,7 @@ def cooccurrence_pairs(
     False forces the distributed path (property-pinned equal)."""
     from .graph import (
         _PAIRS_WEDGE_BUDGET_CONF,
-        _cast_bipartite_for_arrow,
+        _arrow_ids,
         _local_tier_max_bytes,
         _pair_count_local_arrow,
         _plan_size_estimate,
@@ -608,7 +608,7 @@ def cooccurrence_pairs(
     if tier_stats is not None:
         tier_stats.update(local=use_local, wedges=wedge_vol, budget=budget)
     if use_local and not e_raw.isStreaming:
-        e2, restore = _cast_bipartite_for_arrow(e_raw)
+        e2, restore = _arrow_ids(e_raw)
         if e2 is not None:
             raw = _pair_count_local_arrow(
                 e2,
@@ -616,9 +616,10 @@ def cooccurrence_pairs(
                 min_left_degree=min_support,
                 with_degrees=False,
             )
+            # the kernel emits x < y in value order
             return restore(raw, ["x", "y"]).select(
-                F.least("x", "y").alias("item_a"),
-                F.greatest("x", "y").alias("item_b"),
+                F.col("x").alias("item_a"),
+                F.col("y").alias("item_b"),
                 F.col("common").alias("n_baskets"),
             )
         if tier_stats is not None:

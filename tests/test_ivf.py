@@ -276,6 +276,18 @@ def test_opq_rotation_improves_error_and_recall(emb, centroids):
     assert recall >= 0.7, f"OPQ IVF-PQ recall {recall:.2f}"
 
 
+def test_opq_train_partition_layout_invariant(emb):
+    """The seeded training sample is a function of the rows and the
+    seed only: the same embeddings split into 1 or 7 partitions must
+    train the identical rotation and codebooks."""
+    from ergo_uexplorer_spark.operators.similarity import opq_train
+
+    one = opq_train(emb.repartition(1), iters=2, sample_n=512)
+    seven = opq_train(emb.repartition(7), iters=2, sample_n=512)
+    assert one[0] == seven[0]
+    assert one[1] == seven[1]
+
+
 def test_ivf_assign_large_k_matmul_path(spark):
     """Above CENTROID_LITERAL_MAX the assignment must switch to the
     executor-broadcast Arrow matmul (ArrowEvalPython in the plan, no

@@ -150,7 +150,7 @@ def test_pagerank_local_arrow_equals_distributed(spark):
              (None, "a"), ("b", None)],
             "src string, dst string",
         ),
-        # long ids (exercise the string-cast round-trip)
+        # long ids
         (
             [(1, 2), (2, 3), (3, 1), (3, 4), (4, 4)],
             "src long, dst long",
@@ -162,6 +162,17 @@ def test_pagerank_local_arrow_equals_distributed(spark):
                 for _ in range(200)
             ],
             "src long, dst long",
+        ),
+        # ids past 2^53 with a null: exact int64 through the Arrow ingest
+        (
+            [(2**53 + 1, 2**53 + 3), (2**53 + 3, 2**53 + 1),
+             (2**53 + 3, 2**53 + 5), (None, 2**53 + 1), (2**53 + 5, None)],
+            "src long, dst long",
+        ),
+        # narrow ints widen to long for the kernel and cast back
+        (
+            [(1, 2), (2, 3), (3, 1), (3, 4), (4, None)],
+            "src tinyint, dst tinyint",
         ),
     ]
     for rows, schema in graphs:
@@ -303,22 +314,21 @@ def test_kcore_local_arrow_equals_distributed(spark):
     from ergo_uexplorer_spark.operators.graph import kcore
 
     rng = random.Random(29)
+    ring = [(i, (i + 1) % 5) for i in range(5)] + [(0, 2), (1, 3)]
     cases = [
-        [(i, (i + 1) % 5) for i in range(5)] + [(0, 2), (1, 3)],
-        _rand_edges(rng, 400, 30),
-        [("p", "q"), ("q", "r"), ("r", "p"), ("p", None)],
-        # ids past 2^53 + a real 0 alongside nulls (the r12 int64
-        # kernel fills nulls with 0 before np.unique — the sentinel
-        # remap must keep a GENUINE node 0 distinct from null)
-        [(2**53 + 1, 2**53 + 3), (2**53 + 3, 2**53 + 1),
-         (2**53 + 1, 0), (0, 2**53 + 1), (0, None), (None, 0)],
+        (ring, "a long, b long"),
+        (_rand_edges(rng, 400, 30), "a long, b long"),
+        ([("p", "q"), ("q", "r"), ("r", "p"), ("p", None)],
+         "a string, b string"),
+        # ids past 2^53 + a real 0 alongside nulls: the null sentinel
+        # must keep a GENUINE node 0 distinct from null
+        ([(2**53 + 1, 2**53 + 3), (2**53 + 3, 2**53 + 1),
+          (2**53 + 1, 0), (0, 2**53 + 1), (0, None), (None, 0)],
+         "a long, b long"),
+        # narrow ints widen to long for the kernel and cast back
+        (ring + [(4, None)], "a smallint, b smallint"),
     ]
-    for rows in cases:
-        schema = (
-            "a string, b string"
-            if isinstance(next(x for r in rows for x in r if x is not None), str)
-            else "a long, b long"
-        )
+    for rows, schema in cases:
         edges = spark.createDataFrame(rows, schema)
         for k in (1, 2, 3):
             loc = sorted(
@@ -334,9 +344,9 @@ def test_kcore_local_arrow_equals_distributed(spark):
 
 def test_components_local_arrow_equals_distributed(spark):
     """One-task union-find == hash-min fixpoint: same node set (nulls
-    are singleton components), same min-member labels — including
-    numeric ordering for integral ids round-tripped through strings
-    (ids ≥ 10 would mislabel under lexicographic min)."""
+    are singleton components), same min-member labels — numeric order
+    for integral ids (ids ≥ 10 would mislabel under lexicographic
+    min), bytewise order for string ids."""
     import random
 
     from ergo_uexplorer_spark.operators.graph import connected_components
@@ -348,15 +358,18 @@ def test_components_local_arrow_equals_distributed(spark):
         (_rand_edges(rng, 300, 50), "doc_a long, doc_b long"),
         ([("m", "n"), ("n", "o"), ("x", "y"), (None, "m")],
          "doc_a string, doc_b string"),
-        # r13 int64 kernel hazards: ids past 2^53 stay exact; duplicate
-        # pairs; a NULL next to a graph NOT containing 0 (fill_null's
-        # injected 0 must not surface as a spurious node); genuine 0
-        # alongside nulls
+        # int64 ingest hazards: ids past 2^53 stay exact; duplicate
+        # pairs; a NULL next to a graph NOT containing 0 (null must not
+        # surface as a spurious node 0); genuine 0 alongside nulls
         ([(2**53 + 1, 2**53 + 3), (2**53 + 3, 2**53 + 2),
           (2**53 + 1, 2**53 + 2), (7, None), (8, 9), (8, 9)],
          "doc_a long, doc_b long"),
         ([(0, 5), (5, None), (None, 6)], "doc_a long, doc_b long"),
         ([(3, 4), (4, None)], "doc_a int, doc_b int"),
+        # string ids first seen out of value order, one non-ASCII: the
+        # min-member label must follow Spark's bytewise string order
+        ([("z", "é"), ("é", "a"), ("Z", "b"), ("b", None)],
+         "doc_a string, doc_b string"),
     ]
     for rows, schema in cases:
         pairs = spark.createDataFrame(rows, schema)

@@ -99,6 +99,46 @@ def test_triangle_empty_edges_one_row(spark):
     assert G.triangle_count(empty).collect()[0][0] == 0
 
 
+@pytest.mark.parametrize(
+    "family",
+    ["k_hop", "pagerank", "triangle", "cooccurrence", "components", "kcore",
+     "pairs"],
+)
+def test_one_task_kernels_equal_distributed_on_empty_input(spark, family):
+    """Every one-task kernel agrees with its distributed path on an
+    empty edge frame, where the kernel sees no rows or no partitions.
+    pagerank has no tier switch (its gate refuses an empty graph), so
+    its kernel is called directly."""
+    edges = spark.createDataFrame([], "src long, dst long")
+    groups = spark.createDataFrame([], "items array<long>")
+    run = {
+        "k_hop": lambda lt: G.k_hop_neighbors(
+            edges, [1, None], 2, local_tier=lt
+        ),
+        "pagerank": lambda lt: (
+            G._pagerank_local_arrow(
+                edges, 4, 150_000, 85, 100, 1_000_000, True, False
+            )
+            if lt
+            else G.pagerank_int(edges, iters=4, dangling=True, stats={})
+        ),
+        "triangle": lambda lt: G.triangle_count(edges, local_tier=lt),
+        "cooccurrence": lambda lt: G.cooccurrence_triangles(
+            groups, local_tier=lt
+        ),
+        "components": lambda lt: G.connected_components(
+            edges, "src", "dst", local_tier=lt
+        ),
+        "kcore": lambda lt: G.kcore(edges, 2, "src", "dst", local_tier=lt),
+        "pairs": lambda lt: G.common_neighbor_links(
+            edges, "src", "dst", local_tier=lt
+        ),
+    }[family]
+    loc = sorted(map(repr, run(True).collect()))
+    dist = sorted(map(repr, run(False).collect()))
+    assert loc == dist
+
+
 def test_cooccurrence_triangles_local_equals_fallback(spark):
     """The fused one-task kernel (pair explode → support count →
     threshold → triangle count) must equal the distributed fallback
@@ -141,6 +181,27 @@ def test_cooccurrence_triangles_empty_and_string_items(spark):
     # {a,b,c} and {b,c,d} each co-occur 3×: edges ab ac bc bd cd + the
     # two closed triangles abc, bcd
     assert (loc["n_edges"], loc["n_triangles"]) == (5, 2)
+
+    # items past 2^53 (exact int64 ingest) and non-ASCII string items
+    big = spark.createDataFrame(
+        [([2**53 + 1, 2**53 + 2, 2**53 + 3],)] * 2
+        + [([2**53 + 2, 2**53 + 3, 2**53 + 4, None],)] * 2,
+        "items array<bigint>",
+    )
+    uni = spark.createDataFrame(
+        [(["é", "z", "Z"],)] * 2 + [(["a", "é", "Z", "zz"],)] * 2,
+        "items array<string>",
+    )
+    for df in (big, uni):
+        ts: dict = {}
+        loc = G.cooccurrence_triangles(
+            df, items="items", min_support=2, tier_stats=ts
+        ).collect()[0]
+        dist = G.cooccurrence_triangles(
+            df, items="items", min_support=2, local_tier=False
+        ).collect()[0]
+        assert ts["local"] is True
+        assert loc.asDict() == dist.asDict()
 
 
 def test_guard_stats_total_on_every_path(spark):

@@ -18,6 +18,12 @@ def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
+def _non_ascii(col):
+    """String ids led by "Z", "a" or "é" (one, one and two UTF-8 bytes),
+    so value order differs from first-seen order."""
+    return f"concat(substr('Zaé', {col} % 3 + 1, 1), {col}) {col}"
+
+
 def _bipartite(spark):
     random.seed(11)
     edges = [
@@ -71,7 +77,7 @@ def test_pair_tier_links_string_and_big_ids(spark):
         G.common_neighbor_links(big, "l", "r", min_common=1, local_tier=False)
     )
     # mixed column types: string left ids over integral right ids (the
-    # r12 mapInArrow kernel decodes each column independently)
+    # kernel encodes each column independently)
     mixed = df.selectExpr("cast(l as string) l", "r")
     assert _rows(
         G.common_neighbor_links(mixed, "l", "r", min_common=2)
@@ -80,6 +86,15 @@ def test_pair_tier_links_string_and_big_ids(spark):
             mixed, "l", "r", min_common=2, local_tier=False
         )
     )
+    # non-ASCII string ids: node_a < node_b in Spark's bytewise order
+    uni = df.selectExpr(_non_ascii("l"), "r")
+    ts: dict = {}
+    assert _rows(
+        G.common_neighbor_links(uni, "l", "r", min_common=2, tier_stats=ts)
+    ) == _rows(
+        G.common_neighbor_links(uni, "l", "r", min_common=2, local_tier=False)
+    )
+    assert ts["local"] is True
 
 
 def test_pair_tier_gate_refuses_high_wedge_volume(spark):
@@ -148,9 +163,17 @@ def test_cooccurrence_pairs_local_equals_distributed(spark):
     sdf = df.selectExpr(
         "cast(basket as string) basket", "cast(item as string) item"
     )
-    assert _rows(cooccurrence_pairs(sdf, "basket", "item", 2)) == _rows(
-        cooccurrence_pairs(sdf, "basket", "item", 2, local_tier=False)
-    )
+    # items past 2^53 (exact int64 ingest) and non-ASCII string items
+    big = df.selectExpr("basket", "item + 9007199254740993 as item")
+    uni = df.selectExpr("basket", _non_ascii("item"))
+    for other in (sdf, big, uni):
+        ts = {}
+        assert _rows(
+            cooccurrence_pairs(other, "basket", "item", 2, tier_stats=ts)
+        ) == _rows(
+            cooccurrence_pairs(other, "basket", "item", 2, local_tier=False)
+        )
+        assert ts["local"] is True
 
 
 def test_cooccurrence_pairs_gate_refusal(spark):
