@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .util import local_frame
+
 _PAIR_STRUCTS = (
     "transform(sequence(1, size(__t) - 1),"
     " i -> struct(element_at(__t, i) AS l, element_at(__t, i + 1) AS r))"
@@ -234,8 +236,10 @@ def train_bpe_merges(
             state = state.localCheckpoint(eager=True)
     if stats is not None:
         stats["rounds"] = rounds
-    return state.sparkSession.createDataFrame(
-        merges, "rank long, left string, right string, gain long"
+    return local_frame(
+        state.sparkSession,
+        merges,
+        "rank long, left string, right string, gain long",
     )
 
 

@@ -48,30 +48,36 @@ def _fork_regions(headers: DataFrame):
     unique block just above it (or, for a segment containing the tip,
     by the best-tip tie-break). Nothing else needs to leave the
     executors."""
-    contested_h = (
-        headers.groupBy("height")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter("n > 1")
-        .select("height")
-    )
-    # ONE driver round trip: pull the contested headers AND their anchors
-    # (height+1) together; a height is contested iff ≥2 rows came back —
-    # anchors are uncontested by construction (segments are maximal runs),
-    # so the split is recoverable from the collected rows alone.
-    needed_h = contested_h.unionByName(
-        contested_h.select((F.col("height") + 1).alias("height"))
-    ).distinct()
-    rows = (
-        headers.join(F.broadcast(needed_h), "height", "left_semi")
-        .select("block_id", "parent_id", "height")
+    # ONE aggregate, ONE driver round trip: every header is keyed under
+    # its own height (a member) and under height - 1 (a possible anchor
+    # of that height). A key is contested iff it has >1 member; its
+    # group then holds the contested headers AND the headers one height
+    # above, so the anchor above each segment comes back in the same
+    # collect. Anchors are uncontested by construction (segments are
+    # maximal runs), and a height inside a segment is both a member and
+    # an anchor, so rows are de-duplicated below.
+    height = F.col("height")
+    groups = (
+        headers.select(
+            "block_id",
+            "parent_id",
+            "height",
+            F.explode(F.array(height, height - 1)).alias("__k"),
+        )
+        .groupBy("__k")
+        .agg(
+            F.count_if(height == F.col("__k")).alias("__n"),
+            F.collect_list(F.struct("block_id", "parent_id", "height")).alias(
+                "__rows"
+            ),
+        )
+        .filter("__n > 1")
         .collect()
     )
-    per_h: dict[int, int] = {}
-    for r in rows:
-        per_h[r["height"]] = per_h.get(r["height"], 0) + 1
-    contested = sorted(h for h, n in per_h.items() if n > 1)
+    contested = sorted(g["__k"] for g in groups)
     if not contested:
         return [], []
+    rows = list(dict.fromkeys(r for g in groups for r in g["__rows"]))
     segments = []
     start = prev = contested[0]
     for h in contested[1:]:
@@ -119,32 +125,15 @@ def resolve_main_chain(headers: DataFrame) -> DataFrame:
             if expected == GENESIS_ID:
                 break
 
-    winners_df = headers.sparkSession.createDataFrame(
-        [(w,) for w in sorted(winners)], "block_id string"
-    )
-    contested_heights = {h for lo, hi in segments for h in range(lo, hi + 1)}
-    h_type = dict(headers.dtypes)["height"]
-    heights_df = headers.sparkSession.createDataFrame(
-        [(h,) for h in sorted(contested_heights)], f"height {h_type}"
-    )
-    return (
-        headers.join(
-            F.broadcast(winners_df.withColumn("is_winner", F.lit(True))),
-            "block_id",
-            "left",
-        )
-        .join(
-            F.broadcast(heights_df.withColumn("is_contested", F.lit(True))),
-            "height",
-            "left",
-        )
-        .withColumn(
-            "main_chain",
-            F.when(F.col("is_contested").isNull(), F.lit(True)).otherwise(
-                F.coalesce(F.col("is_winner"), F.lit(False))
-            ),
-        )
-        .drop("is_winner", "is_contested")
+    contested = [h for lo, hi in segments for h in range(lo, hi + 1)]
+    # both lists are O(contested blocks): plain IN literals (an InSet
+    # past Spark's conversion threshold), no literal frame and no join
+    return headers.withColumn(
+        "main_chain",
+        F.when(
+            F.col("height").isin(contested),
+            F.coalesce(F.col("block_id").isin(sorted(winners)), F.lit(False)),
+        ).otherwise(F.lit(True)),
     )
 
 

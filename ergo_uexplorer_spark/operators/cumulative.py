@@ -17,7 +17,9 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, StructField, StructType
+from pyspark.sql.types import IntegerType, LongType, StructField, StructType
+
+from .util import local_frame
 
 _PID = "__op_pid"
 
@@ -113,20 +115,22 @@ def ordered_prefix(
             pm = r[f"__pmax_{o}"]
             if pm is not None and (prev_max[o] is None or pm > prev_max[o]):
                 prev_max[o] = pm
-    fields = [StructField(_PID, LongType()), StructField("__off_cnt", LongType())]
+    fields = [
+        StructField(_PID, IntegerType()),
+        StructField("__off_cnt", LongType()),
+    ]
     fields += [StructField(f"__off_{o}", LongType()) for o in sum_cols]
     fields += [StructField(f"__prev_{o}", LongType()) for o in lag_cols]
     fields += [StructField(f"__pmax_{o}", LongType()) for o in strict_max_cols]
-    off_df = spark.createDataFrame(rows, StructType(fields)).withColumn(
-        _PID, F.col(_PID).cast("int")
-    )
+    off_df = local_frame(spark, rows, StructType(fields))
 
     w = Window.partitionBy(_PID).orderBy(*order_cols)
     wcum = w.rowsBetween(Window.unboundedPreceding, 0)
-    out = ranged.join(F.broadcast(off_df), _PID)
+    wexcl = w.rowsBetween(Window.unboundedPreceding, -1)
+    new: dict[str, Column] = {}
     if row_col:
-        out = out.withColumn(
-            row_col, (F.row_number().over(w) + F.col("__off_cnt")).cast("long")
+        new[row_col] = (F.row_number().over(w) + F.col("__off_cnt")).cast(
+            "long"
         )
     for o, src in sum_cols.items():
         # null-aware boundary add: plain `local + offset` nulls the whole
@@ -135,31 +139,27 @@ def ordered_prefix(
         # non-null value (adversarial null property test)
         local = F.sum(F.col(src).cast("long")).over(wcum)
         off = F.col(f"__off_{o}")
-        out = out.withColumn(
-            o,
-            F.when(local.isNull() & off.isNull(), F.lit(None)).otherwise(
-                F.coalesce(local, F.lit(0)) + F.coalesce(off, F.lit(0))
-            ),
+        new[o] = F.when(local.isNull() & off.isNull(), F.lit(None)).otherwise(
+            F.coalesce(local, F.lit(0)) + F.coalesce(off, F.lit(0))
         )
     for o, src in lag_cols.items():
         # NOT coalesce(lag, boundary): lag() is also NULL when the
         # in-partition previous row's VALUE is null, and that null must
         # survive — only the partition's true first row takes the
         # boundary carry (found by the adversarial null property test)
-        out = out.withColumn(
-            o,
-            F.when(
-                F.row_number().over(w) == 1, F.col(f"__prev_{o}")
-            ).otherwise(F.lag(F.col(src).cast("long")).over(w)),
-        )
-    wexcl = w.rowsBetween(Window.unboundedPreceding, -1)
+        new[o] = F.when(
+            F.row_number().over(w) == 1, F.col(f"__prev_{o}")
+        ).otherwise(F.lag(F.col(src).cast("long")).over(w))
     for o, src in strict_max_cols.items():
         local = F.max(F.col(src).cast("long")).over(wexcl)
-        out = out.withColumn(o, F.greatest(local, F.col(f"__pmax_{o}")))
-    drop = [_PID, "__off_cnt"]
-    drop += [f"__off_{o}" for o in sum_cols] + [f"__prev_{o}" for o in lag_cols]
-    drop += [f"__pmax_{o}" for o in strict_max_cols]
-    return out.drop(*drop)
+        new[o] = F.greatest(local, F.col(f"__pmax_{o}"))
+    # one select, so the plan carries one Window operator, not one per
+    # column; an output named like an input column replaces it in
+    # place and the rest are appended, the order withColumn leaves
+    out = ranged.join(F.broadcast(off_df), _PID)
+    kept = [c for c in out.columns if c not in off_df.columns]
+    cols = [new.pop(c).alias(c) if c in new else F.col(c) for c in kept]
+    return out.select(*cols, *[col.alias(c) for c, col in new.items()])
 
 
 def global_sequence(

@@ -18,6 +18,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .textops import portable_hash, tokens
+from .util import local_frame
 
 SPLIT_SALT = "split-v1"
 DEFAULT_WEIGHTS = (("train", 98), ("val", 1), ("test", 1))
@@ -130,7 +131,8 @@ def mixture_weights(
     documents again.
     """
     spark = avail.sparkSession
-    tgt = spark.createDataFrame(
+    tgt = local_frame(
+        spark,
         [(s, int(t)) for s, t in sorted(targets.items())],
         f"{source_col} string, target_permille long",
     )
@@ -302,7 +304,8 @@ def quantile_normalize(
         df.groupBy(group_col).agg(F.count(F.lit(1)).alias("__ns")).collect()
     )
     ng = sum(r["__ns"] for r in ns_rows)
-    ns = df.sparkSession.createDataFrame(
+    ns = local_frame(
+        df.sparkSession,
         [(r[group_col], r["__ns"]) for r in ns_rows],
         df.select(group_col).schema.add("__ns", "long"),
     )

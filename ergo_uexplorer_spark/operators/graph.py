@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..constants import EMISSION_TREE, FEE_TREE
+from .util import local_frame
 
 NANO = 1_000_000_000
 DUST_THRESHOLD = NANO  # skip < 1 ERG edges (TxGraphWriter.scala:44)
@@ -175,9 +176,7 @@ def _k_hop_local_arrow(e: DataFrame, start_ids: list, k: int) -> DataFrame:
 
     id_t = e.schema["src"].dataType.simpleString()
     schema = f"id {id_t}, hops int"
-    seeds = e.sparkSession.createDataFrame(
-        [(s, 0) for s in start_ids], schema
-    )
+    seeds = local_frame(e.sparkSession, [(s, 0) for s in start_ids], schema)
     start_vals = [s for s in start_ids if s is not None]
 
     def run(batches):
@@ -327,9 +326,7 @@ def k_hop_neighbors(
         frontier = visited.persist()
         f_rows = frontier.count()
     else:
-        visited = spark.createDataFrame(
-            [(s, 0) for s in start_ids], schema
-        )
+        visited = local_frame(spark, [(s, 0) for s in start_ids], schema)
         frontier = visited.persist()
         f_rows = len(start_ids)
     v_rows = f_rows  # exact visited size (sum of counted levels)

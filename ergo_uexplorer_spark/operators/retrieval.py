@@ -37,7 +37,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .textops import tokens
-from .util import pin_corpus_dim
+from .util import local_frame, pin_corpus_dim
 
 # k1 = 6/5, b = 3/4 (the classical defaults, kept rational on purpose —
 # see module docstring for the closed integer form they produce).
@@ -317,7 +317,8 @@ def retrieval_eval(
     # (score desc, id asc) is a TOTAL order, so the fused branches
     # return bit-identical rows to the per-query form.
     spark = docs.sparkSession
-    qt = spark.createDataFrame(
+    qt = local_frame(
+        spark,
         [(q, t) for q, terms in queries.items() for t in terms],
         "query string, term string",
     )
@@ -373,8 +374,8 @@ def retrieval_eval(
             "rel_at_p"
         ),
     )
-    names = docs.sparkSession.createDataFrame(
-        [(q,) for q in queries], "query string"
+    names = local_frame(
+        docs.sparkSession, [(q,) for q in queries], "query string"
     )
     # agg is ≤ one row per query by construction (groupBy("query") of a
     # ≤ n_queries·k-row input) — broadcast it so the final left join

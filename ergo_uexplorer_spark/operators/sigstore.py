@@ -40,7 +40,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .util import pin_corpus_dim
+from .util import local_frame, pin_corpus_dim
 from .dedup import (
     LSH_BANDS,
     all_keep_decisions,
@@ -143,7 +143,8 @@ def write_signature_store(
         # absent (the next write self-heals by overwriting the partial
         # batch) instead of a half-written store whose meta exists but
         # whose bands/shingles tables are missing.
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [(n, n_shards, _hash_fingerprint())],
             "n int, n_shards int, hash_fp string",
         ).coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")

@@ -22,6 +22,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .util import local_frame
+
 # ---------------------------------------------------------------------------
 # hyperplane-LSH constants (seeded ±1 planes, shared with the SQL oracle)
 # ---------------------------------------------------------------------------
@@ -939,7 +941,8 @@ def write_ivf_index(
         .partitionBy("cell")
         .parquet(f"{path}/cells")
     )
-    spark.createDataFrame(
+    local_frame(
+        spark,
         [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
         "cell int, cv array<double>",
     ).coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")

@@ -13,6 +13,8 @@ from functools import reduce
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .util import local_frame
+
 NANO = 1_000_000_000
 HOT_KEY_THRESHOLD = 500  # SuperNodeCounter.scala:19
 
@@ -516,9 +518,7 @@ def misra_gries_heavy_hitters(
         .filter(F.col("n") * F.lit(k) > F.lit(total))
     ).select(F.col("k").alias(key_col), "n")
     if n_null * k > total:
-        null_row = spark.createDataFrame(
-            [(None, n_null)], schema=counts.schema
-        )
+        null_row = local_frame(spark, [(None, n_null)], counts.schema)
         counts = counts.unionByName(null_row)
     return counts
 

@@ -4,7 +4,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def _input_bytes(df: DataFrame) -> int:
@@ -22,6 +23,32 @@ def _input_bytes(df: DataFrame) -> int:
     except Exception:
         return 0
     return total
+
+
+def local_frame(
+    spark: SparkSession, rows: list[tuple], schema: StructType | str
+) -> DataFrame:
+    """A frame over driver-side `rows` with the given Spark `schema` (a
+    StructType or a DDL string), built as an Arrow ``LocalRelation``.
+
+    ``spark.createDataFrame(<python list>)`` plans a ``LogicalRDD`` over
+    a Python RDD: every scan of it runs one Python worker task per
+    default-parallelism slot, each costing about 0.25 s of worker CPU
+    however few rows it gets (SCALE.md "Python worker tax"). A
+    ``pyarrow.Table`` is handed to the JVM whole and scanned with no
+    Python task. The values go through `pa.array` with the schema's
+    Arrow types, so an out-of-range or mistyped value raises here."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) if rows else [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def _free_storage_bytes(df: DataFrame) -> int:

@@ -88,3 +88,21 @@ def whole_stage_codegen_spans(df: DataFrame) -> int:
         if "WholeStageCodegen subtrees" in line:
             return int(line.split("Found ")[1].split(" ")[0])
     return text.count("WholeStageCodegen")
+
+
+def python_list_scans(df: DataFrame) -> list[str]:
+    """Leaves of the optimized plan that scan a Python RDD: the
+    ``LogicalRDD`` that ``createDataFrame(<python list>)`` plans, which
+    runs one Python worker task per partition each time it is scanned.
+    A ``LogicalRDD`` over a JVM-only lineage (a ``localCheckpoint``, a
+    JVM RDD) does not count. No job runs."""
+    found = []
+    leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+    it = leaves.iterator()
+    while it.hasNext():
+        leaf = it.next()
+        if leaf.nodeName() == "LogicalRDD":
+            lineage = leaf.rdd().toDebugString()
+            if "PythonRDD" in lineage:
+                found.append(lineage.splitlines()[0].strip())
+    return found

@@ -26,6 +26,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..operators.util import local_frame
+
 S = StringType()
 I = IntegerType()
 L = LongType()
@@ -167,8 +169,8 @@ def fetch_blocks(
     as a Spark stage so back-pressure/retry land on the task scheduler.
     """
     n = num_partitions or min(len(block_ids), 32) or 1
-    ids_df = spark.createDataFrame(
-        [(b,) for b in block_ids], "block_id string"
+    ids_df = local_frame(
+        spark, [(b,) for b in block_ids], "block_id string"
     ).repartition(n)
 
     def _fetch(batches):

@@ -359,14 +359,22 @@ def test_resolve_main_chain_bounded_collect(spark):
     headers = spark.createDataFrame(
         rows, "block_id string, parent_id string, height int"
     )
-    segments, collected = _fork_regions(headers)
+    sc = spark.sparkContext
+    sc.setJobGroup("fork-regions", "fork regions collect")
+    try:
+        segments, collected = _fork_regions(headers)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # feeds the status store
     assert segments == [(5, 6), (100, 100)]
     # 4 + 2 contested rows + one anchor row per segment
     assert len(collected) <= 8
-    mc = {
-        r["block_id"]: r["main_chain"]
-        for r in resolve_main_chain(headers).collect()
-    }
+    # one aggregate: its AQE shuffle stage and the result stage (the
+    # former group-by → union → distinct → semi-join plan ran 5 here)
+    assert len(sc.statusTracker().getJobIdsForGroup("fork-regions")) == 2
+    resolved = resolve_main_chain(headers)
+    assert not resolved.schema["main_chain"].nullable
+    mc = {r["block_id"]: r["main_chain"] for r in resolved.collect()}
     assert mc["b00005"] and mc["b00006"] and mc["b00100"]
     assert not mc["f00005"] and not mc["f00006"] and not mc["g00100"]
     assert all(mc[f"b{h:05d}"] for h in (1, 4, 7, 99, 101, n))

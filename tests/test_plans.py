@@ -292,6 +292,53 @@ def test_chain_pipeline_plan(spark, tmp_path):
     assert plan == ["height"]
 
 
+def test_local_frame_equals_create_dataframe(spark):
+    """`local_frame` returns what `createDataFrame(rows, schema)` does for
+    every column type the driver-side lists carry, planned as a
+    LocalRelation with no Python RDD under it."""
+    from ergo_uexplorer_spark.operators.util import local_frame
+    from ergo_uexplorer_spark.plans.explain import python_list_scans
+
+    ddl = (
+        "i int, b bigint, s smallint, d double, t string, v array<double>"
+    )
+    rows = [
+        (None, 2**53 + 1, 7, 1.5, "é漢\u00e9", [1.0, None, -0.0]),
+        (2**31 - 1, -(2**63), None, None, None, None),
+        (-3, None, -(2**15), float("inf"), "", []),
+    ]
+    for case in (rows, []):
+        want = spark.createDataFrame(case, ddl)
+        got = local_frame(spark, case, ddl)
+        assert got.schema == want.schema
+        assert got.collect() == want.collect()
+        leaf = got._jdf.queryExecution().optimizedPlan()
+        assert leaf.nodeName() == "LocalRelation"
+        assert python_list_scans(got) == []
+        assert python_list_scans(want)  # the check sees the list scan
+
+
+def test_ingest_plans_scan_no_python_list(spark, tmp_path):
+    """Over a forked dump, no leaf of the `blocks`, `utxo` or
+    `address_stats` plans scans a Python RDD (each such scan is one
+    Python worker task per partition, per job), and the `blocks`
+    prefix columns come from one Window operator."""
+    from ergo_uexplorer_spark.fixtures.chaingen import ChainGen, write_jsonl_gz
+    from ergo_uexplorer_spark.pipeline import ingest_blocks
+    from ergo_uexplorer_spark.plans.explain import python_list_scans
+
+    gen = ChainGen(seed=3)
+    gen.generate(60)
+    fork = [b for b in gen.fork(55, 1, "f") if b["header"]["height"] >= 55]
+    path = write_jsonl_gz(gen.blocks + fork, str(tmp_path / "f.jsonl.gz"))
+    tables = ingest_blocks(spark, path)
+    assert tables["headers_main"].count() == 61
+    for name in ("blocks", "utxo", "address_stats"):
+        assert python_list_scans(tables[name]) == [], name
+    plan = tables["blocks"]._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("Window [") == 1, plan
+
+
 def test_r6_extras_plans_have_no_unbounded_products(spark):
     """Every z35–z52 entry must be free of cartesian/nested-loop joins.
     The single exception is z42's final scalar crossJoin (two one-row

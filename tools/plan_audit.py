@@ -10,6 +10,11 @@ that no entry regressed into a shape that dies at 100 TB:
   * BroadcastNestedLoopJoin — non-equi product; allowed ONLY for the
     sanctioned single-row corpus-scalar broadcasts (an allowlist below,
     each justified where it is constructed).
+  * python-list-scan — a LogicalRDD leaf whose lineage holds a
+    PythonRDD (`createDataFrame(<python list>)`): every job that scans
+    it runs one Python worker task per partition, about 0.25 s of
+    worker CPU each however few rows it holds (`operators.util.
+    local_frame` builds the same frame with no Python task).
   * "No Partition Defined" windows — a Window with no partitionBy over
     a non-tiny input collapses to ONE task. Detected structurally:
     a WindowExec whose partition spec is empty. Allowlisted where the
@@ -98,13 +103,22 @@ UNPART_WINDOW_ALLOW_PATTERNS = (
 
 
 def audit_one(name, fn, spark, sf_dir):
-    from ergo_uexplorer_spark.plans.explain import formatted_plan
+    from ergo_uexplorer_spark.plans.explain import (
+        formatted_plan,
+        python_list_scans,
+    )
 
     findings = []
     try:
-        plan = formatted_plan(fn(spark, sf_dir))
+        df = fn(spark, sf_dir)
+        plan = formatted_plan(df)
+        py_scans = python_list_scans(df)
     except Exception as exc:  # noqa: BLE001 - report, don't abort the sweep
         return [{"name": name, "kind": "plan-error", "detail": repr(exc)[:200]}]
+    if py_scans:
+        findings.append(
+            {"name": name, "kind": "python-list-scan", "count": len(py_scans)}
+        )
     if "CartesianProduct" in plan:
         findings.append({"name": name, "kind": "cartesian"})
     nl = len(re.findall(r"\(\d+\)\s+BroadcastNestedLoopJoin", plan))
