@@ -5,9 +5,10 @@ spent, any} × {by-address, by-ergo-tree, by-ergo-tree-hash, by-template,
 by-template-hash, by-token-id, by-id(s)} (backend/TapirRoutes.scala:
 24-120), all backed by per-key SQL with client-side set diffs and a
 32-way parallel fan-out (BoxService.scala:13-26). Here the whole matrix
-is TWO functions over the lakehouse tables — liveness picks the
-anti/semi-join side, key-kind picks the filter column, and one joined
-DataFrame answers any number of keys at once (no fan-out needed: Q10).
+is TWO functions over the lakehouse tables — liveness is a filter on
+`boxes_main.spent_height` (null while a box is live), key-kind picks
+the filter column, and one DataFrame answers any number of keys at
+once (no fan-out needed: Q10).
 
 Address / tree / template inputs are normalized to hash keys driver-side
 (they arrive as scalar API parameters), mirroring
@@ -28,7 +29,6 @@ from ..functions.crypto import (
     decode_address,
     p2sh_tree,
 )
-from .utxo import spent_inputs
 
 Liveness = Literal["unspent", "spent", "any"]
 KeyKind = Literal[
@@ -114,9 +114,11 @@ def select_boxes(
     probe_cap: int = 1_000,
 ) -> DataFrame:
     """The generic surface: liveness × key-kind × dynamic whitelisted
-    predicates × column projection. Equality predicates land in the scan
-    (Catalyst pushdown); token filtering is a semi-join on the assets
-    table (Q7).
+    predicates × column projection. Liveness reads the `spent_height`
+    column the ingest stores on `boxes_main` (null: unspent), so a
+    liveness route scans one table in one job. Equality predicates land
+    in the scan (Catalyst pushdown); token filtering is a semi-join on
+    the assets table (Q7).
 
     `probe_ids=True` is the interactive-serving strategy for the
     token lookup — the Spark mirror of the reference's
@@ -136,10 +138,10 @@ def select_boxes(
     they cross at ≈1.3k ids, so the probe stays never-worse below
     1_000 and the fallback takes over above."""
     boxes = tables["boxes_main"]
-    if liveness != "any":
-        spent_ids = spent_inputs(tables["inputs_main"]).select("box_id")
-        how = "left_semi" if liveness == "spent" else "left_anti"
-        boxes = boxes.join(spent_ids, "box_id", how)
+    if liveness == "unspent":
+        boxes = boxes.filter(F.col("spent_height").isNull())
+    elif liveness == "spent":
+        boxes = boxes.filter(F.col("spent_height").isNotNull())
     if key_kind == "token_id":
         # no distinct for the semi-join: it ignores duplicate keys
         holders = (

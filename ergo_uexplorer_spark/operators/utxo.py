@@ -24,6 +24,23 @@ def spent_inputs(inputs: DataFrame) -> DataFrame:
     return inputs.filter(~F.col("box_id").isin(*sorted(GENESIS_BOXES)))
 
 
+def with_spent_height(boxes: DataFrame, inputs: DataFrame) -> DataFrame:
+    """`boxes` plus `spent_height`: the lowest height of an input in
+    `inputs` that spends the box, null while the box is live. This is
+    the reference's "spent = Box ∖ Utxo" (PersistentBoxRepo.scala:
+    47-70) stored once on the box row, so a liveness query is a filter
+    instead of a join. The inputs are aggregated by box_id before the
+    left join, so a duplicated input row cannot duplicate a box."""
+    spent = (
+        spent_inputs(inputs)
+        .groupBy("box_id")
+        .agg(F.min("height").alias("spent_height"))
+    )
+    return boxes.join(spent, "box_id", "left").select(
+        *boxes.columns, "spent_height"
+    )
+
+
 def utxo(boxes: DataFrame, inputs: DataFrame) -> DataFrame:
     """The live set: Box ∖ spent (BoxService.scala:132-138 semantics,
     in-engine)."""

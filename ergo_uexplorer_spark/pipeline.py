@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 from .operators import normalize as N
 from .operators.blockstats import build_block_table
 from .operators.chain import resolve_main_chain
-from .operators.utxo import address_stats, utxo
+from .operators.utxo import address_stats, utxo, with_spent_height
 from .sources.blocks import read_blocks
 
 
@@ -96,7 +96,15 @@ def ingest_raw(raw: DataFrame, cache: bool = False) -> dict[str, DataFrame]:
     because at production scale the right posture is materializing
     silver with `storage.write_lakehouse` and reading gold inputs back —
     durable, shareable, and it survives executor loss, which a .persist
-    does not."""
+    does not.
+
+    The normalized frames (`headers`, `transactions`, `inputs`,
+    `boxes`, ...) keep the rows of every block. The `*_main` tables,
+    the gold tables, `assets` and `tokens` keep main-chain rows only,
+    as the reference writes them. `boxes_main` carries `spent_height`,
+    the lowest height of a main-chain input that spends the box (null
+    while it is live), so the box routes answer liveness with a
+    filter; `blocks` and `utxo` read the on-main boxes without it."""
     tables = N.normalize(raw)
     hdrs = resolve_main_chain(tables["headers"])
     main_ids = hdrs.filter("main_chain").select("block_id")
@@ -108,25 +116,27 @@ def ingest_raw(raw: DataFrame, cache: bool = False) -> dict[str, DataFrame]:
 
     headers_main = hdrs.filter("main_chain")
     tx_main = on_main(tables["transactions"])
-    boxes_main = on_main(tables["boxes"])
+    boxes_on_main = on_main(tables["boxes"])
     inputs_main = on_main(tables["inputs"])
     if cache:
         headers_main = headers_main.persist()
         tx_main = tx_main.persist()
-        boxes_main = boxes_main.persist()
+        boxes_on_main = boxes_on_main.persist()
         inputs_main = inputs_main.persist()
 
-    utxo_df = utxo(boxes_main, inputs_main)
+    utxo_df = utxo(boxes_on_main, inputs_main)
     result = dict(tables)
     result.update(
         {
             "headers": hdrs,
             "headers_main": headers_main,
             "transactions_main": tx_main,
-            "boxes_main": boxes_main,
+            "boxes_main": with_spent_height(boxes_on_main, inputs_main),
             "inputs_main": inputs_main,
+            "assets": on_main(tables["assets"]),
+            "tokens": on_main(tables["tokens"]),
             "blocks": build_block_table(
-                headers_main, tx_main, boxes_main
+                headers_main, tx_main, boxes_on_main
             ),
             "utxo": utxo_df,
             "address_stats": address_stats(utxo_df),

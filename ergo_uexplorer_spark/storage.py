@@ -3,7 +3,7 @@ indexes + MVStore page cache with partition pruning and file-level
 clustering).
 
 Layout rules (SCALE.md):
-  * fact tables (`boxes`, `inputs`, `transactions`) partition by
+  * fact tables (`boxes`, `inputs`, `transactions`, `assets`) partition by
     `height_bucket` (height div 65536) — bounded partition count over any
     chain length, natural append pattern (new blocks touch one bucket),
     and range queries prune directories;
@@ -193,7 +193,7 @@ def write_lakehouse(
     table names for a table-based sink such as Cassandra — the S9 swap:
     same tables, same call, different `SinkConfig`)."""
     sink = sink or sink_from_env()
-    facts = ("boxes_main", "inputs_main", "transactions_main")
+    facts = ("boxes_main", "inputs_main", "transactions_main", "assets")
     dims = ("blocks", "ergo_trees", "tokens", "address_stats")
     if not sink.path_based:
         out: dict[str, str] = {}
@@ -225,6 +225,7 @@ def read_lakehouse(
         "boxes",
         "inputs",
         "transactions",
+        "assets",
         "blocks",
         "ergo_trees",
         "tokens",

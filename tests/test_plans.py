@@ -339,6 +339,51 @@ def test_ingest_plans_scan_no_python_list(spark, tmp_path):
     assert plan.count("Window [") == 1, plan
 
 
+def test_ingest_gold_plans_read_the_on_main_boxes(spark, tmp_path):
+    """`blocks`, `utxo` and `address_stats` are planned exactly as when
+    every ingest table read the semi-joined on-main boxes: the
+    `spent_height` join on `boxes_main` adds no work to the gold
+    tables. Compared as canonicalized optimized plans."""
+    from ergo_uexplorer_spark.fixtures.chaingen import ChainGen, write_jsonl_gz
+    from ergo_uexplorer_spark.operators import normalize as N
+    from ergo_uexplorer_spark.operators.blockstats import build_block_table
+    from ergo_uexplorer_spark.operators.chain import resolve_main_chain
+    from ergo_uexplorer_spark.operators.utxo import address_stats, utxo
+    from ergo_uexplorer_spark.pipeline import ingest_blocks
+    from ergo_uexplorer_spark.sources.blocks import read_blocks
+
+    gen = ChainGen(seed=3)
+    gen.generate(60)
+    fork = [b for b in gen.fork(55, 1, "f") if b["header"]["height"] >= 55]
+    path = write_jsonl_gz(gen.blocks + fork, str(tmp_path / "f.jsonl.gz"))
+    tables = ingest_blocks(spark, path)
+
+    silver = N.normalize(read_blocks(spark, path))
+    hdrs = resolve_main_chain(silver["headers"])
+    main_ids = F.broadcast(hdrs.filter("main_chain").select("block_id"))
+
+    def on_main(name: str):
+        return silver[name].join(main_ids, "block_id", "left_semi")
+
+    boxes_main = on_main("boxes")
+    utxo_df = utxo(boxes_main, on_main("inputs"))
+    want = {
+        "blocks": build_block_table(
+            hdrs.filter("main_chain"), on_main("transactions"), boxes_main
+        ),
+        "utxo": utxo_df,
+        "address_stats": address_stats(utxo_df),
+    }
+
+    def canon(df) -> str:
+        plan = df._jdf.queryExecution().optimizedPlan()
+        return plan.canonicalized().toString()
+
+    for name, df in want.items():
+        assert canon(tables[name]) == canon(df), name
+    assert "spent_height" in tables["boxes_main"].columns
+
+
 def test_r6_extras_plans_have_no_unbounded_products(spark):
     """Every z35–z52 entry must be free of cartesian/nested-loop joins.
     The single exception is z42's final scalar crossJoin (two one-row

@@ -16,6 +16,7 @@ from ergo_uexplorer_spark.fixtures.chaingen import (
 )
 from ergo_uexplorer_spark.functions.crypto import _tree_to_address
 from ergo_uexplorer_spark.operators import boxes as B
+from ergo_uexplorer_spark.operators import normalize as N
 from ergo_uexplorer_spark.operators.alerts import high_value_txs
 from ergo_uexplorer_spark.operators.graph import (
     graph_edges,
@@ -26,8 +27,11 @@ from ergo_uexplorer_spark.operators.stats import (
     hot_keys,
     top_addresses_by_utxo_count,
     top_addresses_by_value,
+    top_tokens_by_box_count,
 )
+from ergo_uexplorer_spark.operators.utxo import with_spent_height
 from ergo_uexplorer_spark.pipeline import ingest_blocks
+from ergo_uexplorer_spark.sources.blocks import read_blocks
 
 N_BLOCKS = 200
 
@@ -42,7 +46,7 @@ def tables(spark, tmp_path_factory):
 
 
 # the tables an explorer holds in memory to serve every route
-SERVE_TABLES = ("boxes_main", "inputs_main", "assets", "blocks", "address_stats")
+SERVE_TABLES = ("boxes_main", "assets", "blocks", "address_stats")
 
 
 @pytest.fixture(scope="module")
@@ -415,9 +419,10 @@ def _jobs(spark, group: str, action) -> int:
 
 
 def test_served_route_job_budget(spark, served):
-    """Over persisted serving tables, the block, info and top-address
-    routes answer in one job and the box and token routes in at most
-    two (a broadcast of the key side, then the scan): AQE coalesces the
+    """Over persisted serving tables, the block, info, top-address and
+    box-liveness routes answer in one job (liveness is a filter on
+    `boxes_main.spent_height`), and the token route in at most two (a
+    broadcast of the holder side, then the scan): AQE coalesces the
     small cached tables, and nothing pins extra lineage to `blocks`."""
     blocks = served["blocks"].orderBy("height").collect()
     tip = blocks[-1]["block_id"]
@@ -430,9 +435,9 @@ def test_served_route_job_budget(spark, served):
         ("info", None, 1),
         ("stats/top-addresses/by-box-count", None, 1),
         ("stats/top-addresses/by-value", None, 1),
-        ("boxes/unspent/by-id", box, 2),
-        ("boxes/unspent/by-address", EXCHANGE_ADDR, 2),
-        ("boxes/spent/by-address", EXCHANGE_ADDR, 2),
+        ("boxes/unspent/by-id", box, 1),
+        ("boxes/unspent/by-address", EXCHANGE_ADDR, 1),
+        ("boxes/spent/by-address", EXCHANGE_ADDR, 1),
         ("box-ids/any/by-token-id", tok, 2),
     ]
     over = []
@@ -444,3 +449,81 @@ def test_served_route_job_budget(spark, served):
         if not 1 <= n <= most:
             over.append((route, n, most))
     assert not over, over
+
+
+def test_spent_route_duplicate_input_row(tables):
+    """An input row listed twice (once more at a higher height) leaves
+    one box row: the spent route returns the box once, at the lowest
+    spending height."""
+    inputs = tables["inputs_main"]
+    spent = tables["boxes_main"].filter(F.col("spent_height").isNotNull())
+    box = spent.select("box_id").limit(1).collect()[0]["box_id"]
+    row = inputs.filter(F.col("box_id") == box)
+    doubled = inputs.unionByName(row).unionByName(
+        row.withColumn("height", F.col("height") + 5)
+    )
+    boxes = with_spent_height(
+        tables["boxes_main"].drop("spent_height"), doubled
+    )
+    served = {**tables, "boxes_main": boxes}
+    rows = api.endpoint(served, "boxes/spent/by-id", keys=[box]).collect()
+    assert [r["box_id"] for r in rows] == [box]
+    heights = boxes.filter(F.col("box_id") == box).collect()
+    assert [r["spent_height"] for r in heights] == [row.first()["height"]]
+
+
+@pytest.fixture(scope="module")
+def forked(spark, tmp_path_factory):
+    """A dump whose losing branch (heights 60-70 of an 80-block main
+    chain) spends main-chain boxes and carries token outputs, and a
+    dump of the main chain alone: the main blocks, the branch blocks,
+    the two dump paths and the forked dump's ingest."""
+    d = tmp_path_factory.mktemp("forked")
+    gen = ChainGen(seed=21)
+    gen.generate(80)
+    branch = [b for b in gen.fork(60, -10, "f") if b["header"]["height"] >= 60]
+    path = write_jsonl_gz(gen.blocks + branch, str(d / "forked.jsonl.gz"))
+    main_path = write_jsonl_gz(gen.blocks, str(d / "main.jsonl.gz"))
+    return gen.blocks, branch, path, main_path, ingest_blocks(spark, path)
+
+
+def _ids(blocks: list[dict], side: str) -> set[str]:
+    return {
+        x["boxId"] for b in blocks for t in b["transactions"] for x in t[side]
+    }
+
+
+def test_box_spent_only_on_losing_branch_is_unspent(forked):
+    """A main-chain box spent only on the losing branch is unspent, and
+    the live boxes by `spent_height` are exactly the `utxo` table."""
+    main, branch, _, _, tables = forked
+    fork_only = sorted(
+        (_ids(branch, "inputs") & _ids(main, "outputs")) - _ids(main, "inputs")
+    )
+    assert fork_only
+    unspent = api.endpoint(tables, "box-ids/unspent/by-id", keys=fork_only)
+    assert sorted(r["box_id"] for r in unspent.collect()) == fork_only
+    spent = api.endpoint(tables, "box-ids/spent/by-id", keys=fork_only)
+    assert spent.count() == 0
+    live = tables["boxes_main"].filter(F.col("spent_height").isNull())
+    want = {r["box_id"] for r in tables["utxo"].select("box_id").collect()}
+    assert {r["box_id"] for r in live.select("box_id").collect()} == want
+    assert want
+
+
+def test_top_tokens_route_counts_main_chain_only(spark, forked):
+    """The top-tokens route over a forked ingest equals the same
+    aggregate over the main-chain blocks alone, which differs from the
+    aggregate over every block: the losing branch's token outputs
+    count for nothing."""
+    _, _, path, main_path, tables = forked
+
+    def top(assets) -> list[tuple]:
+        return [
+            tuple(r) for r in top_tokens_by_box_count(assets, k=500).collect()
+        ]
+
+    want = top(N.assets(N.outputs(read_blocks(spark, main_path))))
+    route = api.endpoint(tables, "stats/top-tokens/by-box-count")
+    assert [tuple(r) for r in route.collect()] == want
+    assert top(N.assets(N.outputs(read_blocks(spark, path)))) != want

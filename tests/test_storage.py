@@ -8,7 +8,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from ergo_uexplorer_spark import storage
+from ergo_uexplorer_spark import api, storage
 from ergo_uexplorer_spark.fixtures.chaingen import ChainGen, write_jsonl_gz
 from ergo_uexplorer_spark.operators import boxes as B
 from ergo_uexplorer_spark.pipeline import ingest_blocks
@@ -48,6 +48,46 @@ def test_query_surface_over_lakehouse(lake):
     some_box = tables["utxo"].first()["box_id"]
     got = B.select_boxes(rt, "unspent", "box_id", [some_box])
     assert got.count() == 1
+
+
+def test_routes_over_lakehouse_equal_in_memory(lake):
+    """Every served route family answers from the tables
+    `read_lakehouse` returns exactly as from the ingest's in-memory
+    tables: the on-disk boxes carry `spent_height`, and `assets` is
+    written and read back."""
+    spark, root, paths, tables = lake
+    rt = storage.read_lakehouse(spark, root)
+    assert "spent_height" in rt["boxes"].columns
+    spent = (
+        tables["boxes_main"]
+        .filter(F.col("spent_height").isNotNull())
+        .select("box_id", "address")
+        .first()
+    )
+    live = tables["utxo"].first()["box_id"]
+    token = tables["assets"].first()["token_id"]
+    block = tables["blocks"].first()["block_id"]
+    cases = [
+        ("boxes/unspent/by-id", [live]),
+        ("boxes/unspent/by-id", [spent["box_id"]]),
+        ("boxes/spent/by-id", [spent["box_id"]]),
+        ("boxes/unspent/by-address", [spent["address"]]),
+        ("boxes/spent/by-address", [spent["address"]]),
+        ("box-ids/any/by-token-id", [token]),
+        ("blocks/latest", None),
+        ("blocks/by-id", [block]),
+        ("info", None),
+        ("stats/top-addresses/by-box-count", None),
+        ("stats/top-addresses/by-value", None),
+        ("stats/top-tokens/by-box-count", None),
+    ]
+    for route, keys in cases:
+        mem, disk = (
+            sorted(map(repr, api.endpoint(t, route, keys=keys).collect()))
+            for t in (tables, rt)
+        )
+        assert mem == disk, route
+        assert mem or keys == [spent["box_id"]], route
 
 
 def test_bucket_pruning_in_plan(lake):
@@ -182,7 +222,7 @@ def test_mock_cassandra_sink_end_to_end(lake, tmp_path_factory):
     )
     names = storage.write_lakehouse(tables, root="", sink=sink)
     assert set(names) == {
-        "boxes", "inputs", "transactions", "blocks",
+        "boxes", "inputs", "transactions", "assets", "blocks",
         "ergo_trees", "tokens", "address_stats", "utxo",
     }
     for table in names:

@@ -12,8 +12,9 @@ the posture of a serving node answering interactive queries.
 
 Usage: python tools/scale_chain_bench.py [--blocks-only]
 Writes the fixture under .bench/chain_scale/ (reused if present) and
-prints one JSON line with per-endpoint seconds. Results are recorded in
-SCALE.md's chain-domain section.
+prints one JSON line with per-endpoint seconds. SPARK_GRAFT_CPUS (default
+32) and SPARK_GRAFT_DRIVER_MEMORY (default 24g) size the local session.
+Results are recorded in SCALE.md's chain-domain section.
 """
 
 from __future__ import annotations
@@ -108,7 +109,10 @@ def run_queries() -> dict:
             f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
         )
         .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.driver.memory", "24g")
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEMORY", "24g"),
+        )
         .config(
             "spark.sql.warehouse.dir",
             os.path.join(FIXTURE_DIR, "..", "chain_warehouse"),
