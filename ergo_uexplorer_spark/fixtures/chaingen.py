@@ -271,13 +271,16 @@ class ChainGen:
         return regs
 
     def _assets(
-        self, tx_first_input: str, mint: bool, reuse_pool: list[str]
+        self, tx_first_input: str, mint: bool, n_reuse: int
     ) -> tuple[list, dict | None]:
-        """`reuse_pool` excludes tokens minted by the current tx: a token
-        id IS its mint tx's first-input box id, and that box is consumed
-        by the mint itself — so re-circulation can never re-satisfy the
+        """Re-circulated tokens are drawn from the first `n_reuse`
+        minted tokens, the ones minted before the current tx: a token id
+        IS its mint tx's first-input box id, and that box is consumed by
+        the mint itself — so re-circulation can never re-satisfy the
         mint predicate (OutputBuilder.scala:21-26). Drawing from the live
-        pool would fabricate impossible double-mints."""
+        pool would fabricate impossible double-mints. A count, not a
+        copy of the list: a copy per tx would make long chains
+        superlinear to build."""
         assets, props = [], None
         if mint:
             props = {
@@ -293,10 +296,13 @@ class ChainGen:
             assets.append(
                 {"tokenId": self.hot_token, "amount": self.rng.randrange(1, 1000)}
             )
-        if reuse_pool and self.rng.random() < 0.2:
+        if n_reuse and self.rng.random() < 0.2:
             assets.append(
                 {
-                    "tokenId": self.rng.choice(reuse_pool),
+                    # randrange(n) consumes the random stream as
+                    # choice() over n items does; the cached fixtures
+                    # depend on it (test_chaingen_stream_is_frozen)
+                    "tokenId": self.minted_tokens[self.rng.randrange(n_reuse)],
                     "amount": self.rng.randrange(1, 500),
                 }
             )
@@ -329,12 +335,12 @@ class ChainGen:
         spendable = in_value - fee
         outputs = []
         exchange_tree = p2pk_tree(EXCHANGE_PK)
-        reuse_pool = list(self.minted_tokens)  # pre-tx snapshot
+        n_reuse = len(self.minted_tokens)  # pre-tx count
         for oi in range(n_outputs):
             box_id = _hex(f"box-{variant}-{height}-{txi}-{oi}")
             value = spendable // n_outputs
             assets, props = self._assets(
-                inputs[0]["boxId"], mint and oi == 0, reuse_pool
+                inputs[0]["boxId"], mint and oi == 0, n_reuse
             )
             tree = self._pick_tree()
             outputs.append(

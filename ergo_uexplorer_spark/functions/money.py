@@ -8,8 +8,7 @@ inputs, and the dirty-twin sweep verifies the refusals agree two-sided
 refusal out — but a pipeline consumer who wants the job to FINISH on a
 corrupted source needs the quarantine alternative: accepted rows
 aggregate exactly as the strict entry would, refused rows are excluded
-and COUNTED by reason, the way `operators.similarity.screen_embeddings`
-surfaces dropped vectors (r10 VERDICT next-round #6).
+and COUNTED by reason (r10 VERDICT next-round #6).
 
 `money_reason` labels a row from the numeric columns it contributes:
 'nan' if any is NaN, else 'inf' if any is ±Inf, else — when the caller

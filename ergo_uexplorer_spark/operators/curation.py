@@ -51,14 +51,6 @@ def deterministic_split(
     return docs.withColumn("split", expr)
 
 
-def sql_split_bucket(id_expr: str, salt: str = SPLIT_SALT) -> str:
-    """DuckDB mirror of split_bucket."""
-    return (
-        f"(('0x' || substr(md5('{salt}' || CAST({id_expr} AS VARCHAR)), 1, 15))"
-        "::BIGINT) % 100"
-    )
-
-
 SAMPLE_SALT = "sample-v1"
 
 

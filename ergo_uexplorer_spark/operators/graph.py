@@ -1615,10 +1615,10 @@ def connected_components(
     near-dup clusters — dense blobs produced by candidate generation —
     the diameter is tiny, so this beats the alternating large-star/
     small-star scheme (Kiveris et al., "Connected Components in MapReduce
-    and Beyond") in round count; for adversarial long-path graphs use
-    `connected_components_two_phase` (same contract, O(log² n) rounds
-    regardless of diameter). Each round eagerly localCheckpoints the label
-    table (bounded: one row per distinct node), so plan depth stays O(1);
+    and Beyond") in round count; a long path favours that scheme instead
+    (O(log² n) rounds regardless of diameter). Each round eagerly
+    localCheckpoints the label table (bounded: one row per distinct
+    node), so plan depth stays O(1);
     convergence = zero per-row label changes in a round (labels only ever
     decrease, so zero changes is a fixpoint and the loop must terminate —
     and unlike a label-sum probe this works for string ids too).
@@ -1800,138 +1800,6 @@ def degree_assortativity_stats(
         big(d * F.col("skv")).cast("string").alias("sum_jk"),
         big(d * d * F.col("cnt")).cast("string").alias("sum_j2"),
         big(F.col("skv2")).cast("string").alias("sum_k2"),
-    )
-
-
-def connected_components_two_phase(
-    pairs: DataFrame,
-    a_col: str = "doc_a",
-    b_col: str = "doc_b",
-    max_iter: int = 40,
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """Alternating large-star/small-star connected components (Kiveris
-    et al., "Connected Components in MapReduce and Beyond") →
-    (id, component), component = minimum member id — the LONG-DIAMETER
-    companion of `connected_components`: hash-min needs O(diameter)
-    rounds (fine for near-dup blobs, deadly for path-like graphs);
-    alternation converges in O(log² n) rounds regardless of diameter.
-
-    Per round, both operators are one groupBy-min + one equi-join over
-    the current edge set — never an all-pairs product; edges only ever
-    rewire toward smaller ids, and the paper proves connectivity is
-    preserved across rewires. Large-star connects each node's STRICTLY
-    LARGER neighbors to its neighborhood minimum; small-star orients
-    every edge toward the smaller endpoint and connects each node and
-    its (now all-smaller) neighbors to that minimum. Convergence is
-    EXACT set equality of successive edge sets (two anti-join counts on
-    the checkpointed, edge-dim tables — not a hash heuristic). The
-    converged set is a union of stars centered at component minima, so
-    labels read off as each leaf's single neighbor.
-    """
-    spark = pairs.sparkSession
-    # same adaptive per-round exchange sizing as `connected_components`:
-    # size to the actual edge list (pinned once so the count and the
-    # node/edge builds don't recompute candidate generation), capped at
-    # cluster parallelism for big graphs
-    if pairs.isStreaming:
-        n = num_partitions or spark.sparkContext.defaultParallelism
-    else:
-        pairs = pairs.localCheckpoint(eager=True)
-        n = num_partitions or max(
-            1,
-            min(
-                spark.sparkContext.defaultParallelism,
-                pairs.count() // 10_000 + 1,
-            ),
-        )
-    a, b = F.col("a"), F.col("b")
-    u, v = F.col("u"), F.col("v")
-
-    def large_star(e: DataFrame) -> DataFrame:
-        sym = e.select(a.alias("u"), b.alias("v")).unionByName(
-            e.select(b.alias("u"), a.alias("v"))
-        )
-        mins = (
-            sym.repartition(n, "u")
-            .groupBy("u")
-            .agg(F.min("v").alias("mn"))
-            .select("u", F.least(u, F.col("mn")).alias("m"))
-        )
-        return (
-            sym.join(mins, "u")
-            .filter(v > u)
-            .select(v.alias("a"), F.col("m").alias("b"))
-            .repartition(n, "a")
-            .distinct()
-        )
-
-    def small_star(e: DataFrame) -> DataFrame:
-        ori = e.select(
-            F.greatest(a, b).alias("u"), F.least(a, b).alias("v")
-        )
-        mins = (
-            ori.repartition(n, "u")
-            .groupBy("u")
-            .agg(F.min("v").alias("mn"))
-        )
-        rewired = (
-            ori.join(mins, "u")
-            .filter(v != F.col("mn"))
-            .select(v.alias("a"), F.col("mn").alias("b"))
-        )
-        own = mins.select(u.alias("a"), F.col("mn").alias("b"))
-        return (
-            rewired.unionByName(own).repartition(n, "a").distinct()
-        )
-
-    nodes = (
-        pairs.select(F.col(a_col).alias("id"))
-        .unionByName(pairs.select(F.col(b_col).alias("id")))
-        .repartition(n, "id")
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    edges = (
-        pairs.select(
-            F.least(F.col(a_col), F.col(b_col)).alias("a"),
-            F.greatest(F.col(a_col), F.col(b_col)).alias("b"),
-        )
-        .filter(a != b)
-        .repartition(n, "a")
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    converged = False
-    for _ in range(max_iter):
-        nxt = small_star(large_star(edges)).localCheckpoint(eager=True)
-        # exact set-equality convergence: both edge tables are
-        # checkpointed and edge-dim-sized; two anti-join counts
-        same = (
-            nxt.join(edges, ["a", "b"], "left_anti").isEmpty()
-            and edges.join(nxt, ["a", "b"], "left_anti").isEmpty()
-        )
-        edges = nxt
-        if same:
-            converged = True
-            break
-    if not converged:
-        raise RuntimeError(
-            f"connected_components_two_phase did not converge in "
-            f"{max_iter} alternating rounds"
-        )
-    # converged stars: orient (larger → smaller); each leaf's single
-    # neighbor is its center; centers (never a 'u') label themselves
-    ori = edges.select(
-        F.greatest(a, b).alias("u"), F.least(a, b).alias("v")
-    )
-    leaf_labels = ori.repartition(n, "u").groupBy("u").agg(
-        F.min("v").alias("component")
-    )
-    return nodes.join(
-        leaf_labels, nodes.id == leaf_labels.u, "left"
-    ).select(
-        "id", F.coalesce(F.col("component"), F.col("id")).alias("component")
     )
 
 

@@ -1,9 +1,9 @@
 """Multimodal column plumbing for a training-data pipeline.
 
 Media lives as opaque `binary` columns with typed metadata structs; all
-heavy per-item work (decode, resize, feature extraction, frame sampling)
-runs as Arrow-batched `mapInPandas` so bytes never materialize on the
-driver and each task streams batches. The compressed codecs (PIL/ffmpeg/
+heavy per-item work (decode, feature extraction) runs as Arrow-batched
+`mapInPandas` so bytes never materialize on the driver and each task
+streams batches. The compressed codecs (PIL/ffmpeg/
 torchaudio) are NOT in this container — the decode kernel is pluggable.
 Two kernels ship: `_fake_decode` (deterministic per content hash, the
 default — the synthetic testdata bytes are opaque blobs) and
@@ -23,7 +23,6 @@ from typing import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
@@ -233,42 +232,6 @@ def extract_features(
             )
 
     return media.mapInPandas(_extract, FEATURES_SCHEMA)
-
-
-def frame_sample_plan(media: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Video frame-sampling *plan*: one row per (media_id, frame_ts_ms)
-    from metadata only — pure column algebra, no decode. The decode of
-    planned frames is `extract_features` over the planned subset."""
-    return (
-        media.filter(F.col("media_type") == "video")
-        .select(
-            "media_id",
-            F.explode(
-                F.sequence(
-                    F.lit(0),
-                    F.greatest(F.col("meta.duration_ms") - 1, F.lit(0)),
-                    F.lit(every_ms),
-                )
-            ).alias("frame_ts_ms"),
-        )
-    )
-
-
-def resize_plan(media: DataFrame, max_side: int = 512) -> DataFrame:
-    """Image resize *plan*: target dims preserving aspect ratio, metadata
-    only (the pixel work belongs in the pluggable kernel)."""
-    img = media.filter(F.col("media_type") == "image")
-    w, h = F.col("meta.width"), F.col("meta.height")
-    scale = F.least(
-        F.lit(1.0), F.lit(max_side) / F.greatest(w, h).cast("double")
-    )
-    return img.select(
-        "media_id",
-        w.alias("width"),
-        h.alias("height"),
-        F.round(w * scale).cast("int").alias("target_width"),
-        F.round(h * scale).cast("int").alias("target_height"),
-    )
 
 
 # Ship this module by VALUE to Spark python workers (they don't share the

@@ -22,7 +22,6 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .util import local_frame
 
 # ---------------------------------------------------------------------------
 # hyperplane-LSH constants (seeded ±1 planes, shared with the SQL oracle)
@@ -106,8 +105,7 @@ def valid_embeddings(
     past the threshold filter, while the Arrow path's np.stack RAISES
     and kills the executor task — one null embedding in a 100 TB
     corpus failed the whole job. Dropping is the correct semantics
-    (no vector ⇒ no similarity); `screen_embeddings` makes the
-    dropped rows observable so a pipeline can quarantine them.
+    (no vector ⇒ no similarity).
 
     A NULL ELEMENT inside a correct-length vector is screened at this
     BASE level (r11, after the -7 dirty row exposed it): Spark's
@@ -139,41 +137,6 @@ def valid_embeddings(
     return emb.filter(cond)
 
 
-def screen_embeddings(
-    emb: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int | None = None,
-) -> DataFrame:
-    """Quarantine screen → (id, n_dims, reason) for every row
-    `valid_embeddings` would drop, plus non-finite flags (NaN/±Inf
-    ELEMENTS pass the base validity filter but poison every score they
-    touch — fold and Arrow paths alike — so a pipeline wants them
-    surfaced even though they cannot crash a task; null elements are
-    dropped by the base screen itself since r11 and surface here under
-    the same flag). reason ∈ null_vector | wrong_dim | non_finite; one
-    row per offending input row, worst reason wins in that order."""
-    sz = F.size(vec_col)
-    bad_elem = F.exists(
-        vec_col,
-        lambda x: x.isNull()
-        | F.isnan(x.cast("double"))
-        | (F.abs(x.cast("double")) == F.lit(float("inf"))),
-    )
-    reason = F.when(F.col(vec_col).isNull(), F.lit("null_vector"))
-    if dim is not None:
-        reason = reason.when(sz != dim, F.lit("wrong_dim"))
-    reason = reason.when(bad_elem, F.lit("non_finite"))
-    return (
-        emb.select(
-            F.col(id_col).alias("id"),
-            F.coalesce(sz, F.lit(-1)).cast("long").alias("n_dims"),
-            reason.alias("reason"),
-        )
-        .filter(F.col("reason").isNotNull())
-    )
-
-
 def _stack_batch(vecs, np):
     """np.stack with a diagnosable failure: a RAGGED Arrow batch (mixed
     embedding dims inside one operator call) is a contract violation —
@@ -183,8 +146,8 @@ def _stack_batch(vecs, np):
     except ValueError as ex:
         raise ValueError(
             "ragged embedding dimensions inside one batch — run "
-            "screen_embeddings()/valid_embeddings(dim=...) to quarantine "
-            f"mixed-dim rows before this operator ({ex})"
+            "valid_embeddings(dim=...) to drop mixed-dim rows before "
+            f"this operator ({ex})"
         ) from ex
 
 
@@ -904,87 +867,17 @@ def ivf_topk(
     them. The join key is the cell id, so at scale each query touches
     ~n_probes/n_centroids of the corpus (same shape as lsh_topk, but the
     cells are data-adaptive). Pass `corpus=` (a prebuilt/persisted
-    `ivf_index` result) to search an existing index; for an index ON
-    DISK with partition-pruned probes use `ivf_topk_from_index`."""
+    `ivf_index` result) to search an existing index."""
     if corpus is None:
         corpus = ivf_index(emb, centroids, id_col, vec_col)
     probes = _probe_df(queries, centroids, n_probes, id_col, vec_col)
     return _rank_in_cells(probes, corpus, k)
 
 
-def write_ivf_index(
-    emb: DataFrame,
-    centroids: list[list[float]],
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Persist the IVF index as a CELL-PARTITIONED dataset plus its
-    centroid table — the build-once / search-many posture on disk:
-
-      {path}/cells/cell=<c>/   (n_id, nv) — one directory per cell
-      {path}/centroids         (cell, cv) — the quantizer, read back by
-                               `ivf_topk_from_index` so searches never
-                               need the training-time centroid list
-
-    The cell directories are what make disk-side probing cheap: a
-    search's probed-cell filter becomes parquet PARTITION PRUNING, so
-    only ~n_probes/n_centroids of the stored corpus is ever read."""
-    spark = emb.sparkSession
-    idx = ivf_index(emb, centroids, id_col, vec_col)
-    (
-        # cluster by cell first: one task per cell writes one file per
-        # cell directory (same small-files discipline as the signature
-        # store's shard write)
-        idx.repartition(max(len(centroids) // 4, 1), "cell")
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(f"{path}/cells")
-    )
-    local_frame(
-        spark,
-        [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
-        "cell int, cv array<double>",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
-
-
-def ivf_topk_from_index(
-    queries: DataFrame,
-    path: str,
-    k: int = 10,
-    n_probes: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Search a persisted IVF index (`write_ivf_index`) with
-    partition-pruned reads: the union of all queries' probed cells is
-    collected driver-side (bounded by ≤ n_queries × n_probes ints, and
-    by the centroid count) and pushed as a partition filter, so the
-    scan touches ONLY the probed cell directories — the on-disk
-    realization of IVF's ~n_probes/n_centroids read fraction. Results
-    are identical to `ivf_topk` over the same corpus and quantizer
-    (pinned by test_ivf)."""
-    spark = queries.sparkSession
-    cent = spark.read.parquet(f"{path}/centroids").orderBy("cell").collect()
-    centroids = [list(r["cv"]) for r in cent]
-    probes = _probe_df(
-        queries, centroids, n_probes, id_col, vec_col
-    ).localCheckpoint(eager=True)
-    cells = [r["cell"] for r in probes.select("cell").distinct().collect()]
-    corpus = (
-        spark.read.option("basePath", f"{path}/cells")
-        .parquet(f"{path}/cells")
-        .filter(F.col("cell").isin(cells))
-    )
-    return _rank_in_cells(probes, corpus, k)
-
-
-def _pq_cb_lit(m: int, codebooks=None) -> Column:
-    """Literal array<struct<k:int, cv:array<double>>> for subspace m —
-    one parsed SQL expression (see _cents_lit for why not per-F.lit),
-    parse-once cached like the centroid array. `codebooks` overrides the
-    fixed seeded books (e.g. k-means-trained / residual-trained)."""
-    books = PQ_CODEBOOKS if codebooks is None else codebooks
+def _pq_cb_lit(m: int) -> Column:
+    """Literal array<struct<k:int, cv:array<double>>> for subspace m of
+    PQ_CODEBOOKS — one parsed SQL expression (see _cents_lit for why not
+    per-F.lit), parse-once cached like the centroid array."""
 
     def build() -> Column:
         return F.array(
@@ -993,15 +886,11 @@ def _pq_cb_lit(m: int, codebooks=None) -> Column:
                     F.lit(k).alias("k"),
                     F.lit([float(v) for v in cv]).alias("cv"),
                 )
-                for k, cv in enumerate(books[m])
+                for k, cv in enumerate(PQ_CODEBOOKS[m])
             ]
         )
 
-    # Memo key is the full value tuple, not hash(key_books): a hash
-    # collision between two trained codebooks would silently reuse the
-    # wrong cached literal (wrong codes/LUTs).
-    key_books = tuple(tuple(tuple(cv) for cv in b) for b in books)
-    return _memo_expr(("pqcb", m, key_books), build)
+    return _memo_expr(("pqcb", m), build)
 
 
 def _subvec(vec: Column, m: int) -> Column:
@@ -1033,242 +922,27 @@ def _lut_lambda(sv: Column):
     return lambda c: _subdist(sv, c["cv"])
 
 
-def pq_codes_col(vec: Column, codebooks=None) -> Column:
+def pq_codes_col(vec: Column) -> Column:
     """array<int> of PQ_M codes: per subspace, the argmin-distance code
     (tie → smaller code id, via struct-ordered array_min)."""
     codes = []
     for m in range(PQ_M):
         scored = F.transform(
-            _pq_cb_lit(m, codebooks), _score_lambda(_subvec(vec, m))
+            _pq_cb_lit(m), _score_lambda(_subvec(vec, m))
         )
         codes.append(F.array_min(scored)["k"])
     return F.array(*codes)
 
 
-def pq_lut_col(vec: Column, codebooks=None) -> Column:
+def pq_lut_col(vec: Column) -> Column:
     """Flattened query lookup table: PQ_M × PQ_K subspace distances,
     laid out [m*PQ_K + k] (0-based), so the ADC fold is a pure
     element_at per subspace."""
     luts = [
-        F.transform(_pq_cb_lit(m, codebooks), _lut_lambda(_subvec(vec, m)))
+        F.transform(_pq_cb_lit(m), _lut_lambda(_subvec(vec, m)))
         for m in range(PQ_M)
     ]
     return F.flatten(F.array(*luts))
-
-
-def pq_quantization_error(
-    emb: DataFrame,
-    codebooks=None,
-    vec_col: str = "embedding",
-    centroids: list[list[float]] | None = None,
-    rotation: list[list[float]] | None = None,
-) -> float:
-    """Mean total squared quantization error Σ_m ||sv_m − cb_m[code_m]||²
-    over the corpus (residualized against `centroids` and/or rotated by
-    an OPQ `rotation` when given) — the objective training descends on;
-    rotation preserves ‖·‖², so errors are comparable across rotations."""
-    emb = valid_embeddings(
-        emb, vec_col, len(centroids[0]) if centroids else None
-    )
-    base = _residual_col(vec_col, centroids) if centroids else F.col(vec_col)
-    if rotation is not None:
-        base = rotate_col(base, rotation)
-    per_m = []
-    for m in range(PQ_M):
-        scored = F.transform(
-            _pq_cb_lit(m, codebooks), _score_lambda(_subvec(base, m))
-        )
-        per_m.append(F.array_min(scored)["d"])
-    total = sum(per_m[1:], per_m[0])
-    df = emb
-    if centroids:
-        df = ivf_assign(emb, centroids, vec_col=vec_col)
-    return df.select(F.avg(total).alias("e")).first()["e"]
-
-
-def _residual_col(
-    vec_col: str, centroids: list[list[float]]
-) -> Column:
-    """vec − centroid(assigned cell): requires a `centroid_id` column
-    (from `ivf_assign`) on the row."""
-    cent = F.element_at(
-        _cents_lit(centroids), F.col("centroid_id").cast("int") + 1
-    )["cv"]
-    return F.zip_with(
-        F.col(vec_col), cent, lambda x, c: x.cast("double") - c
-    )
-
-
-def pq_train_codebooks(
-    emb: DataFrame,
-    iters: int = 3,
-    vec_col: str = "embedding",
-    centroids: list[list[float]] | None = None,
-):
-    """Train the PQ codebooks with per-subspace Lloyd's k-means,
-    initialized from the fixed seeded books (so the first assignment is
-    the fixed scheme and every iteration weakly DECREASES quantization
-    error — the test gate). With `centroids`, training runs over IVF
-    RESIDUALS (v − coarse centroid), the FAISS IVFPQ recipe: residual
-    magnitudes are what the code budget must cover, so codes spend
-    precision where the coarse quantizer left error.
-
-    Distributed shape: per iteration and subspace, one argmin projection
-    + one (code, dim) groupBy-avg whose result is PQ_K × PQ_SUBDIM rows —
-    driver traffic is codebook-sized, vectors never leave executors."""
-    emb = valid_embeddings(
-        emb, vec_col, len(centroids[0]) if centroids else None
-    )
-    df = emb
-    if centroids:
-        df = ivf_assign(emb, centroids, vec_col=vec_col)
-        base = _residual_col(vec_col, centroids)
-    else:
-        base = F.col(vec_col)
-    books = [
-        [list(cv) for cv in PQ_CODEBOOKS[m]] for m in range(PQ_M)
-    ]
-    for _ in range(iters):
-        key = tuple(tuple(tuple(cv) for cv in b) for b in books)
-        for m in range(PQ_M):
-            sv = _subvec(base, m)
-            scored = F.transform(_pq_cb_lit(m, key), _score_lambda(sv))
-            code = F.array_min(scored)["k"]
-            means = (
-                df.select(code.alias("code"), F.posexplode(sv).alias("dim", "x"))
-                .groupBy("code", "dim")
-                .agg(F.avg(F.col("x").cast("double")).alias("mu"))
-                .collect()
-            )
-            for r in means:
-                books[m][r["code"]][r["dim"]] = r["mu"]
-    return tuple(tuple(tuple(cv) for cv in b) for b in books)
-
-
-def _rot_lit(R: list[list[float]]) -> Column:
-    """Parse-once literal of the OPQ rotation's COLUMNS (array of d
-    arrays of d doubles) so `rotate_col` is one element-wise fold per
-    output dim: rotated[j] = dot(vec, R[:, j])."""
-    cols = tuple(
-        tuple(float(R[i][j]) for i in range(len(R)))
-        for j in range(len(R[0]))
-    )
-
-    def build() -> Column:
-        return F.lit([list(c) for c in cols])
-
-    return _memo_expr(("opqrot", cols), build)
-
-
-def rotate_col(vec: Column, R: list[list[float]]) -> Column:
-    """x ↦ x·R as a column expression (R broadcast as a parse-once
-    literal). R is orthonormal, so L2 distances are preserved exactly —
-    ADC distances computed in rotated space rank identically to the
-    original space, only the subspace SPLIT changes (which is the whole
-    point of OPQ: rotate so variance spreads evenly across the PQ_M
-    subspaces before cutting)."""
-    return F.transform(
-        _rot_lit(R),
-        lambda colj: F.aggregate(
-            F.zip_with(vec, colj, lambda x, c: x.cast("double") * c),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ),
-    )
-
-
-def opq_train(
-    emb: DataFrame,
-    iters: int = 8,
-    sample_n: int = 4096,
-    seed: int = 7,
-    vec_col: str = "embedding",
-    kmeans_iters: int = 4,
-    centroids: list[list[float]] | None = None,
-):
-    """OPQ-NP (Ge et al., "Optimized Product Quantization", CVPR 2013 —
-    the recipe FAISS ships as OPQMatrix): learn an orthonormal rotation
-    R minimizing PQ reconstruction error ‖XR − Y‖² by alternating
-      (1) per-subspace k-means on the rotated sample (codebook update),
-      (2) the orthogonal Procrustes solve R = U·Vᵀ from SVD(Xᵀ·Y).
-
-    With `centroids` the rotation/books are trained on IVF RESIDUALS
-    (v − assigned coarse centroid) — what the codes actually quantize in
-    an IVFPQ index, matching FAISS's OPQ-as-pretransform composition;
-    pass the result to `ivf_pq_index/topk` with the SAME centroids and
-    `residual=True`.
-
-    Trains on a bounded seeded sample collected to the driver — the
-    standard transform-training posture (FAISS trains transforms on
-    ≤ 2^16 points). The sample is ordered by a hash of the vector and
-    the seed, so it depends on the data and the seed only, not on how
-    the scan splits into partitions (`rand(seed)` is seeded per
-    partition). The corpus itself never leaves the executors, and
-    the returned (R, codebooks) are literal-sized broadcasts. Returns
-    (R as d×d list-of-lists for `rotate_col`, trained codebooks)."""
-    import numpy as np
-
-    emb = valid_embeddings(
-        emb, vec_col, len(centroids[0]) if centroids else None
-    )
-
-    if centroids is not None:
-        src = ivf_assign(emb, centroids, vec_col=vec_col)
-        rows = (
-            src.select(vec_col, "centroid_id")
-            .orderBy(F.xxhash64(vec_col, F.lit(seed)))
-            .limit(sample_n)
-            .collect()
-        )
-        C = np.array(centroids, dtype=np.float64)
-        X = np.array(
-            [list(r[0]) for r in rows], dtype=np.float64
-        ) - C[np.array([r[1] for r in rows], dtype=np.int64)]
-    else:
-        rows = (
-            emb.select(vec_col)
-            .orderBy(F.xxhash64(vec_col, F.lit(seed)))
-            .limit(sample_n)
-            .collect()
-        )
-        X = np.array([list(r[0]) for r in rows], dtype=np.float64)
-    d = X.shape[1]
-    sub = d // PQ_M
-    R = np.eye(d)
-    books = np.array(
-        [[list(cv) for cv in PQ_CODEBOOKS[m]] for m in range(PQ_M)],
-        dtype=np.float64,
-    )
-
-    def quantize(Xr: "np.ndarray") -> "np.ndarray":
-        """k-means update per subspace; returns the reconstruction Y."""
-        Y = np.empty_like(Xr)
-        for m in range(PQ_M):
-            sv = Xr[:, m * sub : (m + 1) * sub]
-            cb = books[m]
-            for _ in range(kmeans_iters):
-                d2 = ((sv[:, None, :] - cb[None, :, :]) ** 2).sum(-1)
-                code = d2.argmin(1)
-                for kk in range(PQ_K):
-                    mask = code == kk
-                    if mask.any():
-                        cb[kk] = sv[mask].mean(0)
-            d2 = ((sv[:, None, :] - cb[None, :, :]) ** 2).sum(-1)
-            Y[:, m * sub : (m + 1) * sub] = cb[d2.argmin(1)]
-        return Y
-
-    for _ in range(iters):
-        Y = quantize(X @ R)
-        U, _s, Vt = np.linalg.svd(X.T @ Y)
-        R = U @ Vt
-    quantize(X @ R)  # refresh codebooks for the final rotation
-    return (
-        R.tolist(),
-        tuple(
-            tuple(tuple(float(v) for v in cv) for cv in books[m])
-            for m in range(PQ_M)
-        ),
-    )
 
 
 def _adc_dist(lut: Column, codes: Column) -> Column:
@@ -1289,9 +963,6 @@ def ivf_pq_index(
     centroids: list[list[float]],
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    codebooks=None,
-    residual: bool = False,
-    rotation: list[list[float]] | None = None,
 ) -> DataFrame:
     """The IVF-PQ *index build* (FAISS `index.add`, Spark-shaped): one
     pass over the corpus producing (n_id, cell, codes) — the 8-byte code
@@ -1299,17 +970,12 @@ def ivf_pq_index(
     an index: in production it lives in the lakehouse next to the
     vectors and is rebuilt only when the corpus changes); `ivf_pq_topk`
     takes it via `corpus=` so per-query cost never includes re-encoding
-    the corpus. `rotation` applies a trained OPQ rotation (`opq_train`)
-    before the subspace split — same 8-byte budget, lower quantization
-    error."""
+    the corpus."""
     assigned = ivf_assign(emb, centroids, id_col, vec_col)
-    enc = _residual_col(vec_col, centroids) if residual else F.col(vec_col)
-    if rotation is not None:
-        enc = rotate_col(enc, rotation)
     return assigned.select(
         F.col(id_col).alias("n_id"),
         F.col("centroid_id").alias("cell"),
-        pq_codes_col(enc, codebooks).alias("codes"),
+        pq_codes_col(F.col(vec_col)).alias("codes"),
     )
 
 
@@ -1323,9 +989,6 @@ def ivf_pq_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     corpus: DataFrame | None = None,
-    codebooks=None,
-    residual: bool = False,
-    rotation: list[list[float]] | None = None,
 ) -> DataFrame:
     """IVF-PQ ANN (the FAISS IVFPQ architecture, Spark-shaped): the
     cell-scanned corpus side carries ONLY (id, cell, 8 codes) — 8 bytes
@@ -1341,9 +1004,7 @@ def ivf_pq_topk(
     persisted) to search an existing index; omitting it builds the index
     inline, which is only sensible for one-shot jobs."""
     if corpus is None:
-        corpus = ivf_pq_index(
-            emb, centroids, id_col, vec_col, codebooks, residual, rotation
-        )
+        corpus = ivf_pq_index(emb, centroids, id_col, vec_col)
     # same entry contract as _probe_df/lsh_topk: a null or wrong-dim
     # query would otherwise null its centroid cosines yet still probe
     # cells, and Spark ranks null ADC distances FIRST — emitting top-k
@@ -1360,23 +1021,10 @@ def ivf_pq_topk(
         "cells",
         F.slice(F.array_sort(scored_cells, _best_cell_first), 1, n_probes),
     ).select("q_id", "qv", F.explode("cells.cell").alias("cell"))
-    if residual:
-        # FAISS IVFPQ: codes quantize (v − cell centroid), so the query
-        # LUT is PER PROBED CELL over the query's residual in that cell
-        cell_cv = F.element_at(
-            _cents_lit(centroids), F.col("cell").cast("int") + 1
-        )["cv"]
-        q_enc = F.zip_with(
-            F.col("qv"), cell_cv, lambda x, c: x.cast("double") - c
-        )
-    else:
-        q_enc = F.col("qv")
-    if rotation is not None:
-        q_enc = rotate_col(q_enc, rotation)
     probes = probed.select(
         "q_id",
         "qv",
-        pq_lut_col(q_enc, codebooks).alias("lut"),
+        pq_lut_col(F.col("qv")).alias("lut"),
         "cell",
     )
     adc = (
@@ -1508,99 +1156,6 @@ def lsh_topk(
     )
 
 
-def near_dup_pairs_multiprobe(
-    emb: DataFrame,
-    threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    probe_bits: int = 1,
-    release: bool = True,
-    banding: str = "vectorized",
-) -> DataFrame:
-    """Multi-probe variant of `near_dup_pairs` (Lv et al.,
-    "Multi-Probe LSH"): one side of the candidate self-join additionally
-    probes every bucket within `probe_bits` sign flips of its own, so a
-    true pair collides in a band when the bucket Hamming distance is
-    ≤ probe_bits — recall per band goes from p^8 to
-    Σ_{i≤probe_bits} C(8,i) p^(8-i)(1-p)^i at probe_bits× (+1) candidate
-    volume, a far better recall/cost trade than adding whole bands
-    (which re-scan the corpus).
-
-    Scale shape is unchanged: probing is a projection (explode of ≤ 9
-    bucket ids per row per band); candidates remain an equi-join on
-    (band, bucket); verification touches candidates only. Asymmetric
-    probing (A probes, B stays exact) covers both flip directions for an
-    (a < b) pair without double-probing."""
-    emb = valid_embeddings(emb, vec_col, EMB_DIM, finite=True)
-    e = emb.select(
-        F.col(id_col).alias("vid"),
-        F.col(vec_col).alias("v"),
-        F.sqrt(dot(F.col(vec_col), F.col(vec_col))).alias("norm"),
-    ).persist()
-    if probe_bits not in (0, 1):
-        raise ValueError("probe_bits ∈ {0, 1} supported")
-
-    def banded(probe: bool) -> DataFrame:
-        # single-pass banding (see near_dup_pairs): one projection for
-        # all bands; the posexplode Generate materializes each bucket
-        # id once, so probe expansion (second explode) reuses it
-        # instead of recomputing the 8 plane dots per probed bucket
-        base = e.select(
-            "vid",
-            F.posexplode(_nd_all_buckets(F.col("v"), banding)).alias("band", "bkt0"),
-        )
-        if not probe:
-            return base.select("vid", "band", F.col("bkt0").alias("bkt"))
-        return base.select(
-            "vid",
-            "band",
-            F.explode(
-                F.array(
-                    F.col("bkt0"),
-                    *[
-                        F.col("bkt0").bitwiseXOR(F.lit(1 << i))
-                        for i in range(ND_PLANES_PER_BAND)
-                    ],
-                )
-            ).alias("bkt"),
-        )
-
-    probing = banded(probe=probe_bits > 0).alias("a")
-    exact = banded(probe=False).alias("b")
-    cand = (
-        probing.join(
-            exact,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bkt") == F.col("b.bkt"))
-            & (F.col("a.vid") < F.col("b.vid")),
-        )
-        .select(F.col("a.vid").alias("vec_a"), F.col("b.vid").alias("vec_b"))
-        .distinct()
-    )
-    if release:
-        cand = cand.localCheckpoint(eager=True)
-    va = e.select(
-        F.col("vid").alias("vec_a"), F.col("v").alias("va"), F.col("norm").alias("na")
-    )
-    vb = e.select(
-        F.col("vid").alias("vec_b"), F.col("v").alias("vb"), F.col("norm").alias("nb")
-    )
-    out = (
-        cand.join(va, "vec_a")
-        .join(vb, "vec_b")
-        .withColumn(
-            "cos_sim", dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))
-        )
-        .filter(F.col("cos_sim") >= threshold)
-        .select("vec_a", "vec_b", "cos_sim")
-    )
-    if not release:
-        return out
-    from .util import materialize_and_release
-
-    return materialize_and_release(out, e)
-
-
 def embedding_centroid_stats(
     emb: DataFrame,
     label_col: str = "label",
@@ -1673,8 +1228,7 @@ def embedding_gram_stats(
     Gram is computed per Arrow batch, so a wrong-dim vector that lands
     alone in a batch would otherwise contribute a partial of the WRONG
     shape and silently skew the (i, j) sums it overlaps (mixed dims
-    INSIDE one batch fail loudly via _stack_batch either way;
-    screen_embeddings surfaces the offending rows)."""
+    INSIDE one batch fail loudly via _stack_batch either way)."""
     import pandas as pd
 
     emb = valid_embeddings(emb, vec_col, dim, finite=True)

@@ -248,90 +248,6 @@ def group_zscore_outliers(
     )
 
 
-def topk_rows_per_group(
-    df: DataFrame,
-    group_cols: list[str],
-    order_col: str,
-    k: int,
-    tiebreak_col: str | None = None,
-    ascending: bool = False,
-) -> DataFrame:
-    """Exact top-k ROWS per group with a map-side combiner Spark lacks
-    natively: the standard `row_number() <= k` window shuffles EVERY
-    row to its group's reducer, and `collect_list`-based partials
-    buffer and ship everything too — at 100 TB the shuffle is the whole
-    cost. This prunes each input partition to ≤ k rows per group first
-    (one Arrow-batched pass, no shuffle, state = k rows per group seen
-    in that partition), so the window's exchange carries at most
-    k × num_partitions rows per group regardless of input size — the
-    combiner-style reduction groupBy count/sum get for free.
-
-    Exactness needs a total order: `tiebreak_col` (default: first group
-    col is NOT enough — pass a unique column) breaks order_col ties the
-    same way in the local prune and the global window, so the survivor
-    set provably contains the global top-k. Equality with the plain
-    window is pinned by pytest."""
-    import pandas as pd
-
-    if tiebreak_col is None:
-        import warnings
-
-        # without a total order the local prune and the global window
-        # may break order_col ties differently, so the returned ROW SET
-        # is only deterministic if order_col is unique per group — make
-        # the silent exactness loss loud instead of a docstring caveat
-        warnings.warn(
-            "topk_rows_per_group without tiebreak_col is only exact "
-            "when order_col is unique within each group; ties at the "
-            "k boundary are otherwise resolved nondeterministically. "
-            "Pass a unique tiebreak_col for a total order.",
-            stacklevel=2,
-        )
-
-    tb = tiebreak_col
-    cols = list(df.columns)
-    asc = ascending
-
-    def prune(batches):
-        best: dict = {}
-        for pdf in batches:
-            pool = (
-                pd.concat([*best.values(), pdf])
-                if best
-                else pdf
-            )
-            # global sort then groupby.head(k): vectorized (no per-group
-            # Python lambda) and immune to pandas 3's include_groups
-            # flip, which breaks groupby.apply callbacks that read the
-            # grouping columns
-            keep = (
-                pool.sort_values(
-                    [order_col] + ([tb] if tb else []),
-                    ascending=[asc] + ([True] if tb else []),
-                    kind="mergesort",
-                )
-                .groupby(group_cols, sort=False, dropna=False)
-                .head(k)
-                .reset_index(drop=True)
-            )
-            best = {0: keep}
-        if best:
-            yield best[0][cols]
-
-    from pyspark.sql import Window
-
-    survivors = df.mapInPandas(prune, schema=df.schema)
-    order = [
-        F.asc(order_col) if asc else F.desc(order_col),
-    ] + ([F.asc(tb)] if tb else [])
-    w = Window.partitionBy(*group_cols).orderBy(*order)
-    return (
-        survivors.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .drop("__rn")
-    )
-
-
 def spearman_by_group(
     df: DataFrame,
     group_col: str,

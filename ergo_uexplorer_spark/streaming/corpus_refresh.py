@@ -1,9 +1,11 @@
-"""Streaming corpus refresh: the continuous form of the z21 operator.
+"""Corpus refresh: the incremental form of the z21 operator.
 
-New documents arrive as a stream; every micro-batch is screened against
-the ACCEPTED base corpus with `dedup.incremental_dedup` (cross-side-only
-MinHash-LSH + exact verify) and the survivors append to the base — so a
-document accepted in batch k is part of the dedup base for batch k+1.
+New documents arrive in batches; `process_batch(batch, batch_id, ...)`
+has the `foreachBatch` callback's shape, so a stream can drive it
+directly. Every batch is screened against the ACCEPTED base corpus with
+`dedup.incremental_dedup` (cross-side-only MinHash-LSH + exact verify)
+and the survivors append to the base — so a document accepted in batch
+k is part of the dedup base for batch k+1.
 This is the loop a continuously-crawling pipeline actually runs: the
 base corpus only ever grows by screened batches, and nothing ever
 re-pairs the base against itself.
@@ -154,35 +156,3 @@ def process_batch(
         decisions.write.mode("overwrite").parquet(
             f"{decisions_path}/batch={batch_id}"
         )
-
-
-def corpus_refresh_stream(
-    docs_stream: DataFrame,
-    base_path: str,
-    checkpoint: str,
-    decisions_path: str | None = None,
-    num: int = 4,
-    den: int = 5,
-    available_now: bool = True,
-    store_path: str | None = None,
-):
-    """Start the refresh loop over a streaming documents DataFrame
-    (doc_id, text, ...). Returns the StreamingQuery. Decisions
-    (doc_id, dup_of, keep) are optionally recorded per batch under
-    `decisions_path` with the same idempotent batch=<id> layout.
-    `store_path` switches the base side to the persisted signature
-    store (see `process_batch`)."""
-
-    def process(batch: DataFrame, batch_id: int) -> None:
-        process_batch(
-            batch, batch_id, base_path,
-            decisions_path=decisions_path, num=num, den=den,
-            store_path=store_path,
-        )
-
-    return (
-        docs_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=available_now)
-        .start()
-    )

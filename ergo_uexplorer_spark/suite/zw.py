@@ -891,11 +891,10 @@ def zwh_wedge_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 # in the dirty sweep); these twins are the keep-going alternative a
 # pipeline consumer wants on a corrupted source: accepted rows
 # aggregate EXACTLY as the strict entry would, refused rows are
-# excluded and counted by reason ('nan' / 'inf') the way
-# screen_embeddings surfaces dropped vectors. Plain NULLs are ordinary
-# missing data — null-skipped by the aggregates on both engines, never
-# quarantined. functions/money.py holds the shared reason predicate and
-# its DuckDB mirror.
+# excluded and counted by reason ('nan' / 'inf'). Plain NULLs are
+# ordinary missing data — null-skipped by the aggregates on both
+# engines, never quarantined. functions/money.py holds the shared reason
+# predicate and its DuckDB mirror.
 # --------------------------------------------------------------------------
 from ..functions.money import accepted_cents, money_reason, money_reason_sql
 

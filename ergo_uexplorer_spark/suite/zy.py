@@ -432,12 +432,12 @@ def zy8_ewma_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------------------------------------------
 # zy9: mergeable-sketch distinct counting — per-day HLL sketches union
-# to the global per-type distinct-user count (the store-backed
-# incremental shape of operators/sketchstore.py, here expressed in one
-# plan). HLL estimates are engine-specific, so the deterministic
-# contract follows a02: exact count + `within_tol` asserting the
-# merged estimate landed inside 5·rsd of exact (rsd ≈ 1.04/√2^lgk ≈
-# 1.6% at lgk=12; the 5σ band absorbs hash-unlucky keys at any sf).
+# to the global per-type distinct-user count (union-of-partials ≡
+# sketch-of-union, expressed in one plan). HLL estimates are
+# engine-specific, so the deterministic contract follows a02: exact
+# count + `within_tol` asserting the merged estimate landed inside
+# 5·rsd of exact (rsd ≈ 1.04/√2^lgk ≈ 1.6% at lgk=12; the 5σ band
+# absorbs hash-unlucky keys at any sf).
 # --------------------------------------------------------------------------
 _ZY9_LGK = 12
 _ZY9_TOL = 5 * 1.04 / (2**_ZY9_LGK) ** 0.5

@@ -1,12 +1,8 @@
-"""API facade routes, SQL views (Q20), and the applyInPandasWithState
-streaming sessionizer vs its batch twin."""
+"""API facade routes and SQL views (Q20)."""
 
 from __future__ import annotations
 
-import json
-
 import pytest
-from pyspark.sql import functions as F
 
 from ergo_uexplorer_spark import api
 from ergo_uexplorer_spark.constants import EXCHANGE_PK
@@ -17,7 +13,6 @@ from ergo_uexplorer_spark.fixtures.chaingen import (
 )
 from ergo_uexplorer_spark.functions.crypto import _tree_to_address
 from ergo_uexplorer_spark.pipeline import ingest_blocks
-from ergo_uexplorer_spark.streaming.stateful import sessionize_stream
 
 EXCHANGE_ADDR = _tree_to_address(p2pk_tree(EXCHANGE_PK))
 
@@ -200,69 +195,3 @@ def test_sql_views_q20(spark, tables):
         f"SELECT count(*) AS n FROM boxes WHERE ergo_tree_hash = '{hash_}'"
     ).first()["n"]
     assert n >= 1
-
-
-def test_stateful_sessionizer_matches_batch(spark, tmp_path):
-    """Stream events in 3 time-ordered file batches; session ids must
-    equal the batch window computation over the full set."""
-    from ergo_uexplorer_spark.suite.base import load
-
-    (events,) = load(spark, "/root/testdata/sf0.001", "events")
-    pdf = events.select("user_id", "event_id", "ts").toPandas().sort_values("ts")
-    in_dir = tmp_path / "ev"
-    in_dir.mkdir()
-    n = len(pdf)
-    for i in range(3):
-        chunk = pdf.iloc[i * n // 3 : (i + 1) * n // 3]
-        with open(in_dir / f"b{i}.json", "w") as f:
-            for _, r in chunk.iterrows():
-                f.write(
-                    json.dumps(
-                        {
-                            "user_id": int(r.user_id),
-                            "event_id": int(r.event_id),
-                            "ts": int(r.ts),
-                        }
-                    )
-                    + "\n"
-                )
-    stream = (
-        spark.readStream.schema("user_id long, event_id long, ts long")
-        .option("maxFilesPerTrigger", 1)
-        .json(str(in_dir))
-    )
-    out = sessionize_stream(stream)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("sessions")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .start()
-    )
-    q.awaitTermination(300)
-    streamed = {
-        (r["user_id"], r["event_id"]): r["session_id"]
-        for r in spark.sql("select * from sessions").collect()
-    }
-    # batch twin (suite e01 logic over raw nanos)
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    wc = w.rowsBetween(Window.unboundedPreceding, 0)
-    batch = (
-        events.withColumn("prev", F.lag("ts").over(w))
-        .withColumn(
-            "is_new",
-            F.when(
-                F.col("prev").isNull()
-                | (F.col("ts") - F.col("prev") > 1_800_000_000_000),
-                1,
-            ).otherwise(0),
-        )
-        .select("user_id", "event_id", F.sum("is_new").over(wc).alias("sid"))
-    )
-    expected = {
-        (r["user_id"], r["event_id"]): r["sid"] for r in batch.collect()
-    }
-    assert streamed == expected

@@ -315,6 +315,24 @@ def test_address_tree_roundtrip_and_checksum():
         address_to_ergo_tree("not-base58-0OIl")
 
 
+def test_chaingen_stream_is_frozen():
+    """ChainGen's output is pinned byte for byte: the cached perfbench
+    and e2e fixtures are built from it, so a change to how the generator
+    draws (e.g. the token re-circulation pick) must not move a block."""
+    import hashlib
+    import json
+
+    gen = ChainGen(seed=42)
+    main = gen.generate(300)
+    forked = gen.fork(280, 2, "f1")
+    digest = hashlib.sha256(
+        json.dumps([main, forked], sort_keys=True).encode()
+    ).hexdigest()
+    assert digest == (
+        "1bf0b9d1754819a715ee6fa5b18e9f8cb017ee801886d0bc42c96865dce16065"
+    )
+
+
 def test_malformed_lines_dropped(spark, tmp_path):
     """Permissive-mode null rows from garbage lines must not reach the
     chain operators (they'd poison height arithmetic)."""

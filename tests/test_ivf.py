@@ -119,82 +119,6 @@ def test_ivfpq_codes_and_recall(emb, centroids):
     assert recall_vs_ivf >= 0.8, f"recall vs IVF {recall_vs_ivf:.2f}"
 
 
-def test_pq_training_descends_and_residual_recall(emb, centroids):
-    """Lloyd's invariant: k-means-trained codebooks (init = the fixed
-    seeded books) weakly decrease mean quantization error, raw AND
-    residualized; a residual-trained IVFPQ index still clears the same
-    recall bar as the fixed one in the same probed cells."""
-    from ergo_uexplorer_spark.operators.similarity import (
-        ivf_pq_topk,
-        pq_quantization_error,
-        pq_train_codebooks,
-    )
-
-    # raw-vector training descends
-    e_fixed = pq_quantization_error(emb)
-    trained = pq_train_codebooks(emb, iters=2)
-    e_trained = pq_quantization_error(emb, codebooks=trained)
-    assert e_trained <= e_fixed + 1e-9, (e_trained, e_fixed)
-
-    # residual training descends on the residual objective
-    e_fixed_res = pq_quantization_error(emb, centroids=centroids)
-    trained_res = pq_train_codebooks(emb, iters=2, centroids=centroids)
-    e_trained_res = pq_quantization_error(
-        emb, codebooks=trained_res, centroids=centroids
-    )
-    assert e_trained_res <= e_fixed_res + 1e-9, (e_trained_res, e_fixed_res)
-    # residuals are smaller than raw vectors, so the residual objective
-    # after training should beat raw-vector quantization error too
-    assert e_trained_res <= e_trained + 1e-9
-
-    # end-to-end: residual-trained index + per-cell residual LUT search
-    queries = emb.filter(F.col("vec_id") < 10)
-    ivf = ivf_topk(emb, queries, centroids, k=10, n_probes=6)
-    pq_res = ivf_pq_topk(
-        emb, queries, centroids, k=10, n_probes=6, refine=100,
-        codebooks=trained_res, residual=True,
-    )
-    i = {(r["q_id"], r["n_id"]) for r in ivf.collect()}
-    p = {(r["q_id"], r["n_id"]) for r in pq_res.collect()}
-    recall = len(i & p) / len(i)
-    assert recall >= 0.8, f"residual-PQ recall vs IVF {recall:.2f}"
-
-
-def test_opq_on_residuals(emb, centroids):
-    """FAISS composition OPQ ∘ IVF-residual-PQ: a rotation trained on
-    coarse residuals must not lose to the residual-trained plain PQ on
-    the residual objective, and the end-to-end index still clears the
-    brute-force recall bar at the same 8-byte budget."""
-    from ergo_uexplorer_spark.operators.similarity import (
-        brute_force_topk,
-        ivf_pq_topk,
-        opq_train,
-        pq_quantization_error,
-        pq_train_codebooks,
-    )
-
-    trained_res = pq_train_codebooks(emb, iters=2, centroids=centroids)
-    e_plain = pq_quantization_error(
-        emb, codebooks=trained_res, centroids=centroids
-    )
-    R, books = opq_train(emb, iters=6, sample_n=2048, centroids=centroids)
-    e_opq = pq_quantization_error(
-        emb, codebooks=books, centroids=centroids, rotation=R
-    )
-    assert e_opq <= e_plain * 1.001, (e_opq, e_plain)
-
-    queries = emb.filter(F.col("vec_id") < 10)
-    exact = brute_force_topk(emb, queries, k=10)
-    approx = ivf_pq_topk(
-        emb, queries, centroids, k=10, n_probes=6, refine=40,
-        codebooks=books, residual=True, rotation=R,
-    )
-    e = {(r["q_id"], r["n_id"]) for r in exact.collect()}
-    a = {(r["q_id"], r["n_id"]) for r in approx.collect()}
-    recall = len(e & a) / len(e)
-    assert recall >= 0.7, f"residual-OPQ IVF-PQ recall {recall:.2f}"
-
-
 def test_vectorized_banding_matches_hof(emb, spark):
     """The Arrow-batched banding path (matmul + guarded exact recompute)
     must produce bucket ids IDENTICAL to the interpreted HOF fold — the
@@ -243,49 +167,6 @@ def test_vectorized_banding_matches_hof(emb, spark):
             ).collect()
         }
         assert all(a == b for a, b in got.values()), got
-
-
-def test_opq_rotation_improves_error_and_recall(emb, centroids):
-    """OPQ (learned rotation before the subspace split) must not lose to
-    plain trained PQ on the SAME 8-byte code budget: quantization error
-    ≤ the unrotated trained books, and end-to-end IVF-PQ recall vs brute
-    force ≥ 0.7 at k=10 (the r4 verdict's tightened gate)."""
-    from ergo_uexplorer_spark.operators.similarity import (
-        brute_force_topk,
-        ivf_pq_topk,
-        opq_train,
-        pq_quantization_error,
-        pq_train_codebooks,
-    )
-
-    trained = pq_train_codebooks(emb, iters=2)
-    e_plain = pq_quantization_error(emb, codebooks=trained)
-    R, opq_books = opq_train(emb, iters=6, sample_n=2048)
-    e_opq = pq_quantization_error(emb, codebooks=opq_books, rotation=R)
-    assert e_opq <= e_plain * 1.001, (e_opq, e_plain)
-
-    queries = emb.filter(F.col("vec_id") < 10)
-    exact = brute_force_topk(emb, queries, k=10)
-    approx = ivf_pq_topk(
-        emb, queries, centroids, k=10, n_probes=6, refine=40,
-        codebooks=opq_books, rotation=R,
-    )
-    e = {(r["q_id"], r["n_id"]) for r in exact.collect()}
-    a = {(r["q_id"], r["n_id"]) for r in approx.collect()}
-    recall = len(e & a) / len(e)
-    assert recall >= 0.7, f"OPQ IVF-PQ recall {recall:.2f}"
-
-
-def test_opq_train_partition_layout_invariant(emb):
-    """The seeded training sample is a function of the rows and the
-    seed only: the same embeddings split into 1 or 7 partitions must
-    train the identical rotation and codebooks."""
-    from ergo_uexplorer_spark.operators.similarity import opq_train
-
-    one = opq_train(emb.repartition(1), iters=2, sample_n=512)
-    seven = opq_train(emb.repartition(7), iters=2, sample_n=512)
-    assert one[0] == seven[0]
-    assert one[1] == seven[1]
 
 
 def test_ivf_assign_large_k_matmul_path(spark):
@@ -356,51 +237,12 @@ def test_ivf_topk_large_k_probe_path(spark):
     assert all(r["count"] <= 5 for r in got) and len(got) == 3
 
 
-def test_persisted_ivf_index_matches_inmemory_and_prunes(spark, tmp_path):
-    """ivf_topk_from_index == ivf_topk on the same corpus/quantizer,
-    and the disk search reads only the probed cell directories
-    (partition pruning: the scan's partition filter carries the
-    probed-cell set, strictly smaller than the full cell count)."""
-    from ergo_uexplorer_spark.operators.similarity import (
-        FIXED_CENTROIDS,
-        ivf_topk,
-        ivf_topk_from_index,
-        write_ivf_index,
-    )
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    queries = emb.filter(F.col("vec_id") < 3)
-    cents = list(FIXED_CENTROIDS)
-    path = str(tmp_path / "ivf")
-    write_ivf_index(emb, cents, path)
-
-    want = sorted(
-        (r["q_id"], r["n_id"]) for r in ivf_topk(emb, queries, cents, k=5).collect()
-    )
-    got_df = ivf_topk_from_index(queries, path, k=5)
-    got = sorted((r["q_id"], r["n_id"]) for r in got_df.collect())
-    assert got == want and len(got) > 0
-
-    # pruning: the probed-cell filter must reach the scan as a
-    # PARTITION filter (cell is the partition column), and the probed
-    # set must be a strict subset of the quantizer's cells
-    from ergo_uexplorer_spark.operators.similarity import _probe_df
-
-    plan = got_df._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "cell" in plan
-    probed = {
-        r["cell"]
-        for r in _probe_df(queries, cents, 4, "vec_id", "embedding").collect()
-    }
-    assert 0 < len(probed) < len(cents)
-
-
 def test_dirty_embeddings_never_crash_and_equal_clean(spark):
     """Null / wrong-dim vectors must neither kill an executor task
     (np.stack raised on the Arrow paths) nor silently skew results
     (zip_with paths null-padded): every public similarity operator
     filters to valid vectors at entry and equals itself on the
-    pre-cleaned corpus; screen_embeddings labels what was dropped."""
+    pre-cleaned corpus."""
     import pyspark.sql.functions as F
 
     from ergo_uexplorer_spark.operators import similarity as S
@@ -437,9 +279,6 @@ def test_dirty_embeddings_never_crash_and_equal_clean(spark):
     assert rows(S.ivf_topk(dirty, q, cents, k=3)) == rows(
         S.ivf_topk(clean, q, cents, k=3)
     )
-    assert rows(S.near_dup_pairs_multiprobe(dirty, 0.9)) == rows(
-        S.near_dup_pairs_multiprobe(clean, 0.9)
-    )
     fixed = [list(c) for c in S.FIXED_CENTROIDS]
     assert rows(S.semantic_dedup(dirty, fixed, 0.9)) == rows(
         S.semantic_dedup(clean, fixed, 0.9)
@@ -450,35 +289,6 @@ def test_dirty_embeddings_never_crash_and_equal_clean(spark):
     assert rows(S.embedding_quant_stats(dirty)) == rows(
         S.embedding_quant_stats(clean)
     )
-    screened = {
-        r["id"]: r["reason"]
-        for r in S.screen_embeddings(dirty, dim=64).collect()
-    }
-    assert screened == {2: "null_vector", 4: "wrong_dim"}
-
-
-def test_screen_embeddings_flags_non_finite(spark):
-    from ergo_uexplorer_spark.operators import similarity as S
-
-    df = spark.createDataFrame(
-        [
-            (1, [1.0, 2.0]),
-            (2, [float("nan"), 0.0]),
-            (3, [1.0, None]),
-            (4, [float("inf"), 1.0]),
-            (5, [-float("inf"), 1.0]),
-        ],
-        "vec_id long, embedding array<double>",
-    )
-    out = {r["id"]: r["reason"] for r in S.screen_embeddings(df).collect()}
-    # ±Inf poisons cosine/gram scores exactly like NaN — the quarantine
-    # report must flag it under the reason its name promises
-    assert out == {
-        2: "non_finite",
-        3: "non_finite",
-        4: "non_finite",
-        5: "non_finite",
-    }
 
 
 def test_ivf_pq_topk_drops_invalid_queries(spark):

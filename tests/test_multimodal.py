@@ -1,5 +1,5 @@
-"""Multimodal plumbing: binary columns, mapInPandas feature extraction,
-metadata-only plans. Two decode kernels: the deterministic hash fake
+"""Multimodal plumbing: binary columns, mapInPandas feature extraction.
+Two decode kernels: the deterministic hash fake
 (default — testdata bytes are opaque) and `real_decode`, a pure-Python
 PPM P6 / WAV PCM parser verified here on generated real bytes."""
 
@@ -16,9 +16,7 @@ from ergo_uexplorer_spark.operators.multimodal import (
     decode_ppm,
     decode_wav,
     extract_features,
-    frame_sample_plan,
     real_decode,
-    resize_plan,
 )
 
 
@@ -148,21 +146,3 @@ def test_extract_features_real_codec_in_spark(spark):
         [b / 255.0 for b in hashlib.sha256(blob).digest()[:FEATURE_DIM]]
     )
     assert out[2]["content_sha256"] == hashlib.sha256(blob).hexdigest()
-
-
-def test_frame_sample_plan(media):
-    plan = frame_sample_plan(media, every_ms=1000)
-    pdf = plan.toPandas()
-    assert (pdf["frame_ts_ms"] % 1000 == 0).all()
-    one = pdf[pdf["media_id"] == 2]
-    assert len(one) == 6  # duration 5200ms → ts 0..5000
-    assert set(pdf["media_id"]) == {i for i in range(50) if i % 3 == 2}
-
-
-def test_resize_plan(media):
-    pdf = resize_plan(media, max_side=512).toPandas()
-    assert (pdf[["target_width", "target_height"]].max(axis=1) <= 512).all()
-    # aspect ratio preserved within rounding
-    ratio = pdf["width"] / pdf["height"]
-    tratio = pdf["target_width"] / pdf["target_height"]
-    assert ((ratio - tratio).abs() < 0.02).all()

@@ -945,50 +945,6 @@ def test_sigma_decoder_roundtrip_random_nested(data):
     assert got == (_tname(t), _render(t, v)), (t, v, raw)
 
 
-def test_near_dup_multiprobe_superset_and_recall(spark):
-    """Multi-probe candidates ⊇ exact-bucket candidates (probe radius 0
-    is the plain variant); results still ⊆ exact all-pairs; moderately
-    rotated near-dups that a single bit flip separates are recovered by
-    probing."""
-    import random as _r
-
-    from ergo_uexplorer_spark.operators.similarity import (
-        near_dup_pairs,
-        near_dup_pairs_allpairs,
-        near_dup_pairs_multiprobe,
-    )
-
-    rng = _r.Random(11)
-    base = [rng.gauss(0, 1) for _ in range(64)]
-    pairs = [(0, base)]
-    # a cluster of rotations at cos ≈ 0.93-0.97: each may flip one
-    # hyperplane sign per band, exactly the case probing rescues
-    for i in range(1, 6):
-        noise = [rng.gauss(0, 0.18) for _ in range(64)]
-        pairs.append((i, [a + n for a, n in zip(base, noise)]))
-    pairs += [(100 + i, [rng.gauss(0, 1) for _ in range(64)]) for i in range(20)]
-    df = spark.createDataFrame(pairs, "vec_id long, embedding array<double>")
-
-    plain = {
-        (r["vec_a"], r["vec_b"])
-        for r in near_dup_pairs(df, threshold=0.85).collect()
-    }
-    probed = {
-        (r["vec_a"], r["vec_b"])
-        for r in near_dup_pairs_multiprobe(df, threshold=0.85).collect()
-    }
-    exact = {
-        (r["vec_a"], r["vec_b"])
-        for r in near_dup_pairs_allpairs(df, threshold=0.85).collect()
-    }
-    assert plain <= probed <= exact
-    # probing can only help; at these similarities it must find at least
-    # as many of the planted cluster's pairs as the plain variant
-    cluster = {(a, b) for a in range(6) for b in range(6) if a < b} & exact
-    assert len(probed & cluster) >= len(plain & cluster)
-    assert cluster, "fixture must plant verifiable near-dup pairs"
-
-
 def test_containment_prefix_filter_equals_allpairs(spark):
     """Containment prefix⋈full filtering is lossless: exact same verified
     pairs as the quadratic containment join over the same hashed shingle

@@ -218,38 +218,6 @@ def test_co_spend_wedge_motif(tables):
     assert all(a < b for a, b in got)
 
 
-def test_topk_rows_per_group_matches_window(spark):
-    """Map-side-pruned top-k rows per group == the plain global window
-    (same total order), and the pre-shuffle side is provably bounded:
-    the pruned intermediate carries at most k rows per (group,
-    partition)."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from ergo_uexplorer_spark.operators.stats import topk_rows_per_group
-
-    lineitem = spark.read.parquet("/root/testdata/sf0.01/lineitem.parquet")
-    df = lineitem.select(
-        "l_suppkey", "l_orderkey", "l_linenumber",
-        F.round(F.col("l_extendedprice") * 100).cast("bigint").alias("rev"),
-        F.concat_ws("-", "l_orderkey", "l_linenumber").alias("uid"),
-    ).repartition(8)
-
-    got = topk_rows_per_group(
-        df, ["l_suppkey"], "rev", k=5, tiebreak_col="uid"
-    )
-    w = Window.partitionBy("l_suppkey").orderBy(F.desc("rev"), F.asc("uid"))
-    want = (
-        df.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 5)
-        .drop("rn")
-    )
-    key = lambda r: (r["l_suppkey"], r["uid"])  # noqa: E731
-    assert sorted(map(key, got.collect())) == sorted(map(key, want.collect()))
-
-    assert got.count() == want.count()
-
-
 def test_resample_gap_fill_locf_and_leading_nulls(spark):
     """Planted gaps: filled buckets carry the last observation
     (observed=False), leading buckets before a key's first observation

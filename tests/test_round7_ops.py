@@ -169,51 +169,6 @@ def test_assortativity_path_graph(spark):
     assert row.sum_k2 == str(4 + 1 + 1 + 4)
 
 
-def _cc_sets(rows):
-    from collections import defaultdict
-
-    comps = defaultdict(set)
-    for r in rows:
-        comps[r.component].add(r.id)
-    return {frozenset(s) for s in comps.values()}
-
-
-def test_two_phase_cc_equals_hashmin_random(spark):
-    import random
-
-    from ergo_uexplorer_spark.operators.graph import (
-        connected_components,
-        connected_components_two_phase,
-    )
-
-    rng = random.Random(7)
-    pairs = [
-        (rng.randrange(200), rng.randrange(200)) for _ in range(150)
-    ]
-    pairs = [(x, y) for x, y in pairs if x != y]
-    df = spark.createDataFrame(pairs, "doc_a long, doc_b long")
-    hm = _cc_sets(connected_components(df).collect())
-    tp = _cc_sets(connected_components_two_phase(df).collect())
-    assert hm == tp
-
-
-def test_two_phase_cc_long_path(spark):
-    """A 120-node path has diameter 119 — hash-min would need 119
-    rounds; alternation must converge in far fewer (O(log² n)) and
-    still produce the single component labeled by the minimum id."""
-    from ergo_uexplorer_spark.operators.graph import (
-        connected_components_two_phase,
-    )
-
-    n = 120
-    df = spark.createDataFrame(
-        [(i, i + 1) for i in range(n - 1)], "doc_a long, doc_b long"
-    )
-    rows = connected_components_two_phase(df, max_iter=12).collect()
-    assert len(rows) == n
-    assert {r.component for r in rows} == {0}
-
-
 def test_ewma_states_per_row(spark):
     from ergo_uexplorer_spark.operators.cumulative import ewma_states
 
@@ -230,120 +185,3 @@ def test_ewma_states_per_row(spark):
         2: (200, 125, 75),
         3: (50, 106, -56),
     }
-
-
-def test_ewma_stream_matches_batch_operator(spark, tmp_path):
-    """Stream (user_id, event_id, ts, v) in 3 time-ordered file batches;
-    the per-row EWMA states must equal the batch `ewma_states` fold over
-    the full set — the state store carries the recurrence across
-    micro-batches."""
-    import json
-
-    from pyspark.sql import functions as F
-
-    from ergo_uexplorer_spark.operators.cumulative import ewma_states
-    from ergo_uexplorer_spark.streaming.stateful import ewma_stream
-    from ergo_uexplorer_spark.suite.base import load
-
-    (events,) = load(spark, "/root/testdata/sf0.001", "events")
-    ev = events.select(
-        "user_id",
-        "event_id",
-        "ts",
-        F.round(F.col("value") * 100).cast("long").alias("v"),
-    )
-    pdf = ev.toPandas().sort_values("ts")
-    in_dir = tmp_path / "ev"
-    in_dir.mkdir()
-    n = len(pdf)
-    for i in range(3):
-        chunk = pdf.iloc[i * n // 3 : (i + 1) * n // 3]
-        with open(in_dir / f"b{i}.json", "w") as f:
-            for _, r in chunk.iterrows():
-                f.write(
-                    json.dumps(
-                        {
-                            "user_id": int(r.user_id),
-                            "event_id": int(r.event_id),
-                            "ts": int(r.ts),
-                            "v": int(r.v),
-                        }
-                    )
-                    + "\n"
-                )
-    stream = (
-        spark.readStream.schema("user_id long, event_id long, ts long, v long")
-        .option("maxFilesPerTrigger", 1)
-        .json(str(in_dir))
-    )
-    q = (
-        ewma_stream(stream)
-        .writeStream.format("memory")
-        .queryName("ewma_out")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .start()
-    )
-    q.awaitTermination(300)
-    streamed = {
-        (r["user_id"], r["event_id"]): (r["v"], r["s"], r["resid"])
-        for r in spark.sql("select * from ewma_out").collect()
-    }
-    batch = {
-        (r["user_id"], r["event_id"]): (r["v"], r["s"], r["resid"])
-        for r in ewma_states(
-            ev, "user_id", ["ts", "event_id"], "v"
-        ).collect()
-    }
-    assert streamed == batch
-
-
-def test_hll_store_incremental_equals_oneshot(spark, tmp_path):
-    """Three batches written incrementally must union to the same
-    estimates as one batch over the full data, redelivery must be
-    idempotent (rewriting batch 1 changes nothing), and the estimate
-    must sit within 5·rsd of the exact distinct count."""
-    from pyspark.sql import functions as F
-
-    from ergo_uexplorer_spark.operators.sketchstore import (
-        distinct_estimates,
-        write_hll_batch,
-    )
-
-    df = spark.range(30_000).select(
-        (F.col("id") % 3).alias("k"), (F.col("id") % 7_000).alias("v")
-    )
-    store = str(tmp_path / "hll")
-    # split by row ranges so every batch carries every key
-    parts = [
-        df.filter((F.col("id") >= i * 10_000) & (F.col("id") < (i + 1) * 10_000))
-        for i in range(3)
-    ]
-    for i, p in enumerate(parts):
-        write_hll_batch(p, store, str(i), ["k"], "v")
-    inc = {
-        r.k: r.n_distinct_est
-        for r in distinct_estimates(spark, store, ["k"]).collect()
-    }
-    oneshot_store = str(tmp_path / "hll_one")
-    write_hll_batch(df, oneshot_store, "all", ["k"], "v")
-    one = {
-        r.k: r.n_distinct_est
-        for r in distinct_estimates(spark, oneshot_store, ["k"]).collect()
-    }
-    assert inc == one  # union of partials ≡ sketch of union
-    # idempotent redelivery: rewriting batch 1 changes nothing
-    write_hll_batch(parts[1], store, "1", ["k"], "v")
-    assert inc == {
-        r.k: r.n_distinct_est
-        for r in distinct_estimates(spark, store, ["k"]).collect()
-    }
-    exact = {
-        r.k: r.n
-        for r in df.groupBy("k")
-        .agg(F.count_distinct("v").alias("n"))
-        .collect()
-    }
-    for k, est in inc.items():
-        assert abs(est - exact[k]) <= max(1.0, 0.082 * exact[k])

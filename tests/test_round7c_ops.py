@@ -14,8 +14,6 @@ from ergo_uexplorer_spark.operators.intervals import (
 from ergo_uexplorer_spark.operators.retrieval import bm25_topk, rrf_fuse
 from ergo_uexplorer_spark.operators.stats import rfm_segments
 
-from pyspark.sql import functions as F
-
 WORDS = ["alpha", "beta", "gamma", "delta", "epsilon", "zeta", "eta"]
 
 
@@ -272,72 +270,3 @@ def test_round7c_plans_have_no_unbounded_products(spark):
         assert "CartesianProduct" not in plan, name
         nl = len(_re.findall(r"\(\d+\)\s+BroadcastNestedLoopJoin", plan))
         assert nl <= (1 if name == "zyc1_bm25_topk" else 0), name
-
-
-def test_scd2_stream_matches_batch_closed_intervals(spark, tmp_path):
-    """Stream (user_id, event_id, ts, state) in 3 time-ordered file
-    batches; the streamed CLOSED intervals must equal the batch
-    operator's is_current=false rows — the open run carries across
-    micro-batches through the state store."""
-    import json
-
-    from ergo_uexplorer_spark.streaming.stateful import scd2_stream
-    from ergo_uexplorer_spark.suite.base import load
-
-    (events,) = load(spark, "/root/testdata/sf0.001", "events")
-    ev = events.select(
-        "user_id", "event_id", "ts", F.col("event_type").alias("state")
-    )
-    pdf = ev.toPandas().sort_values(["ts", "event_id"])
-    in_dir = tmp_path / "ev"
-    in_dir.mkdir()
-    n = len(pdf)
-    for i in range(3):
-        chunk = pdf.iloc[i * n // 3 : (i + 1) * n // 3]
-        with open(in_dir / f"b{i}.json", "w") as f:
-            for _, r in chunk.iterrows():
-                f.write(
-                    json.dumps(
-                        {
-                            "user_id": int(r.user_id),
-                            "event_id": int(r.event_id),
-                            "ts": int(r.ts),
-                            "state": str(r.state),
-                        }
-                    )
-                    + "\n"
-                )
-    stream = (
-        spark.readStream.schema(
-            "user_id long, event_id long, ts long, state string"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .json(str(in_dir))
-    )
-    q = (
-        scd2_stream(stream)
-        .writeStream.format("memory")
-        .queryName("scd2_out")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .start()
-    )
-    q.awaitTermination(300)
-    streamed = {
-        (r.user_id, r.version): (r.state, r.valid_from, r.valid_to, r.n_events)
-        for r in spark.sql("select * from scd2_out").collect()
-    }
-    batch = {
-        (r.user_id, r.version): (
-            r.state,
-            r.valid_from,
-            r.valid_to,
-            r.n_events,
-        )
-        for r in scd2_intervals(ev, "user_id", "state", "ts", "event_id")
-        .filter(~F.col("is_current"))
-        .collect()
-    }
-    assert streamed == batch
-    assert len(streamed) > 100  # the fixture genuinely exercises runs

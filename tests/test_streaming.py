@@ -274,57 +274,46 @@ def test_intra_batch_create_and_spend_nets_out(spark, tmp_path):
 
 
 def test_streaming_corpus_refresh_cross_batch_base(spark, tmp_path):
-    """Streaming corpus refresh: batch 1's accepted docs join the base
-    that batch 2 is screened against (doc 3 near-dups doc 2, which was
-    only accepted one batch earlier — a purely seed-based screen would
-    wrongly keep it). Decisions record who displaced whom."""
-    import time
-
+    """Corpus refresh across batches: batch 1's accepted docs join the
+    base that batch 2 is screened against (doc 3 near-dups doc 2, which
+    was only accepted one batch earlier — a purely seed-based screen
+    would wrongly keep it). Decisions record who displaced whom."""
     from ergo_uexplorer_spark.streaming.corpus_refresh import (
-        corpus_refresh_stream,
+        process_batch,
         read_base,
         seed_base,
     )
 
     text_a = " ".join(f"a{i}" for i in range(120))
     text_b = " ".join(f"b{i}" for i in range(120))
+    schema = "doc_id long, text string"
     seed = spark.createDataFrame(
         [(100, text_a)] + [
             (110 + i, " ".join(f"s{i}_{j}" for j in range(60)))
             for i in range(3)
         ],
-        "doc_id long, text string",
+        schema,
     )
     base_path = str(tmp_path / "base")
     seed_base(seed, base_path)
-
-    in_dir = tmp_path / "incoming"
-    in_dir.mkdir()
-    ckpt = str(tmp_path / "ckpt")
-    schema = "doc_id long, text string"
-
-    def run_batch(rows, fname):
-        with open(in_dir / fname, "w") as f:
-            for doc_id, text in rows:
-                f.write(json.dumps({"doc_id": doc_id, "text": text}) + "\n")
-        stream = spark.readStream.schema(schema).json(str(in_dir))
-        q = corpus_refresh_stream(
-            stream, base_path, ckpt,
-            decisions_path=str(tmp_path / "decisions"),
-        )
-        q.awaitTermination(180)
+    dec_path = str(tmp_path / "decisions")
 
     # batch 1: doc 1 near-dups seed doc 100 (drop), doc 2 fresh (accept)
-    run_batch(
-        [(1, text_a.replace("a50", "q50")), (2, text_b)], "b0.json"
+    process_batch(
+        spark.createDataFrame(
+            [(1, text_a.replace("a50", "q50")), (2, text_b)], schema
+        ),
+        0, base_path, decisions_path=dec_path,
     )
     # batch 2: doc 3 near-dups doc 2 — accepted ONE batch ago (drop);
     # doc 4 fresh (accept)
-    time.sleep(1.1)  # distinct mod time for the file source
-    run_batch(
-        [(3, text_b.replace("b50", "q50")),
-         (4, " ".join(f"c{j}" for j in range(120)))],
-        "b1.json",
+    process_batch(
+        spark.createDataFrame(
+            [(3, text_b.replace("b50", "q50")),
+             (4, " ".join(f"c{j}" for j in range(120)))],
+            schema,
+        ),
+        1, base_path, decisions_path=dec_path,
     )
 
     base_ids = {
@@ -332,8 +321,7 @@ def test_streaming_corpus_refresh_cross_batch_base(spark, tmp_path):
     }
     assert base_ids == {100, 110, 111, 112, 2, 4}
     dec = {
-        r["doc_id"]: r
-        for r in spark.read.parquet(str(tmp_path / "decisions")).collect()
+        r["doc_id"]: r for r in spark.read.parquet(dec_path).collect()
     }
     assert not dec[1]["keep"] and dec[1]["dup_of"] == 100
     assert dec[2]["keep"]

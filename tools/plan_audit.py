@@ -67,7 +67,7 @@ BNLJ_ALLOW = {
     # join, once per query — same scalar as zyc1
     "zwi_local_supplier_volume_quarantine": 1,  # the 1-row quarantine
     # reason frame (n_nan, n_inf) broadcast into the result — the
-    # screen_embeddings-style observability the twins exist for
+    # per-reason refusal counts the twins exist to report
     "zwj_small_quantity_revenue_quarantine": 1,  # same 1-row reason
     # frame
     "zwm_regional_volume_quarantine": 1,  # same 1-row reason frame
