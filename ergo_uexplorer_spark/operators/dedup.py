@@ -44,6 +44,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from . import sizing
 from .textops import portable_hash, shingles, tokens
 from .util import ensure_parallelism as _ensure_parallelism
 from .util import materialize_and_release, pin_corpus_dim
@@ -75,38 +76,13 @@ SIMHASH_SCALE_BITS = 60
 SIMHASH_KERNEL_CHUNK_VALS = 1 << 18
 
 
-# Candidate-pair rows are two ids — 5M rows is low hundreds of MB, far
-# under the 8 GB broadcast hard cap and any sane driver heap.
+# Candidate-pair rows are two ids: the verify join broadcasts a
+# checkpointed candidate table of up to this many rows (its block-manager
+# bytes within BROADCAST_CAND_MAX_ROWS × sizing.PAIR_ROW_BYTES, ~420 MB),
+# far under the 8 GB broadcast hard cap. Near-dup candidates grow
+# QUADRATICALLY with cluster size on duplicate-heavy corpora, so past it
+# the verify stays a shuffled hash join.
 BROADCAST_CAND_MAX_ROWS = 5_000_000
-
-
-def _broadcast_if_bounded(cand: DataFrame, counted: bool) -> DataFrame:
-    """Broadcast the candidate-pair table only when a cheap count proves
-    it bounded: near-dup candidate pairs grow QUADRATICALLY with cluster
-    size on duplicate-heavy corpora (precisely the dedup workload), so an
-    unconditional hint risks the broadcast cap / driver OOM. Past the
-    threshold the verify falls back to a shuffled hash join — the same
-    gate-then-fallback pattern as k_hop_neighbors'
-    broadcast_frontier_max_rows. `counted=False` (release=False callers:
-    the candidates aren't checkpointed, so a count would recompute the
-    whole candidate DAG) attaches no hint and lets AQE promote small
-    sides to broadcast at runtime.
-
-    When the candidate table IS a materialized checkpoint, its real
-    block-manager bytes answer the question WITHOUT a scheduled count
-    job (r13): ~40 B/deserialized pair row keeps the implied row gate
-    within the same order as the row cap, and the byte form is the
-    quantity the broadcast actually costs."""
-    if not counted:
-        return cand
-    from .graph import _checkpoint_size_estimate
-
-    est = _checkpoint_size_estimate(cand)
-    if est is not None:
-        return F.broadcast(cand) if est <= 192 * (1 << 20) else cand
-    if cand.count() <= BROADCAST_CAND_MAX_ROWS:
-        return F.broadcast(cand)
-    return cand
 
 
 def normalized_text(col):
@@ -305,7 +281,6 @@ def _verify_pairs(
     b_col: str,
     num: int,
     den: int,
-    counted: bool,
     containment: bool = False,
 ) -> DataFrame:
     """Exact verify of candidate id pairs against the pinned doc-dim
@@ -313,11 +288,15 @@ def _verify_pairs(
     arrays (per-pair bounded work), threshold in exact integer
     arithmetic — Jaccard (den·shared ≥ num·(na+nb−shared)) or
     containment (den·shared ≥ num·min(na,nb)). The candidate table is
-    broadcast only when a cheap count proves it bounded
-    (`_broadcast_if_bounded`)."""
+    broadcast only when it is a checkpoint whose bytes prove it bounded;
+    an unpinned one (release=False callers) gets no hint, and AQE may
+    still broadcast it at run time."""
+    if sizing.broadcast_ok(
+        cand, BROADCAST_CAND_MAX_ROWS * sizing.PAIR_ROW_BYTES
+    ):
+        cand = F.broadcast(cand)
     j = (
-        _broadcast_if_bounded(cand, counted)
-        .join(
+        cand.join(
             arr_a.select(F.col("doc_id").alias(a_col), F.col("hs").alias("__ha")),
             a_col,
         )
@@ -410,7 +389,7 @@ def jaccard_prefix_pairs(
         # list is tiny — checkpoint it so the verify job starts from a
         # bounded RDD instead of re-walking the prefix-join DAG
         cand = cand.localCheckpoint(eager=True)
-    out = _verify_pairs(cand, arr, arr, "doc_a", "doc_b", num, den, release)
+    out = _verify_pairs(cand, arr, arr, "doc_a", "doc_b", num, den)
     return materialize_and_release(out, arr) if release else out
 
 
@@ -458,7 +437,7 @@ def jaccard_prefix_stats(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    verified = _verify_pairs(cand, arr, arr, "doc_a", "doc_b", num, den, True)
+    verified = _verify_pairs(cand, arr, arr, "doc_a", "doc_b", num, den)
 
     def _count_row(df: DataFrame, stage: str) -> DataFrame:
         return df.agg(F.count(F.lit(1)).cast("bigint").alias("n")).select(
@@ -601,7 +580,7 @@ def containment_prefix_pairs(
     if release:
         cand = cand.localCheckpoint(eager=True)
     out = _verify_pairs(
-        cand, arr, arr, "doc_a", "doc_b", num, den, release, containment=True
+        cand, arr, arr, "doc_a", "doc_b", num, den, containment=True
     ).select(
         "doc_a",
         "doc_b",
@@ -717,7 +696,7 @@ def minhash_lsh_pairs(
         arr = pin_corpus_dim(arr, force=False)
         sig = minhash_signatures_from_arrays(arr).localCheckpoint(eager=True)
         cand = lsh_candidates(sig).localCheckpoint(eager=True)
-    out = _verify_pairs(cand, arr, arr, "doc_a", "doc_b", num, den, release)
+    out = _verify_pairs(cand, arr, arr, "doc_a", "doc_b", num, den)
     return materialize_and_release(out, arr) if release else out
 
 
@@ -774,7 +753,7 @@ def incremental_dedup(
     if release:
         cand = cand.localCheckpoint(eager=True)
     verified = _verify_pairs(
-        cand, arr_new, arr_base, "new_id", "base_id", num, den, release
+        cand, arr_new, arr_base, "new_id", "base_id", num, den
     ).select("new_id", "base_id")
     out = (
         new_docs.select(F.col(id_col).alias("doc_id"))
@@ -839,7 +818,7 @@ def incremental_jaccard_exact(
     if release:
         cand = cand.localCheckpoint(eager=True)
     verified = _verify_pairs(
-        cand, arr_new, arr_base, "new_id", "base_id", num, den, release
+        cand, arr_new, arr_base, "new_id", "base_id", num, den
     ).select("new_id", "base_id")
     out = (
         new_docs.select(F.col(id_col).alias("doc_id"))

@@ -12,10 +12,11 @@ from __future__ import annotations
 
 import re
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..constants import EMISSION_TREE, FEE_TREE
+from . import sizing
 from .util import local_frame
 
 NANO = 1_000_000_000
@@ -253,7 +254,7 @@ def k_hop_neighbors(
     distance.
 
     `local_tier=None` (default) auto-gates the small-graph tier: when
-    the materialized edge table fits the broadcast budget, the whole
+    the materialized edge table fits `sizing.one_task_ok`, the whole
     BFS runs in ONE Arrow task (`_k_hop_local_arrow` — the pagerank
     posture; per-level scheduled jobs dominate tiny-graph cost).
     Bit-exact against the distributed loop, property-pinned; False
@@ -296,7 +297,7 @@ def k_hop_neighbors(
     if local_tier is None and not e.isStreaming:
         e.count()  # materialize: real size for the tier gate (and the
         # cache every level-1 consumer reads anyway)
-        local_tier = _fits_one_task(e)
+        local_tier = sizing.one_task_ok(e)
     if local_tier:
         e2, restore = _arrow_ids(e)
         if e2 is not None:
@@ -413,91 +414,6 @@ _MOTIF_TERM = re.compile(
 )
 
 
-def _plan_size_estimate(df: DataFrame) -> int | None:
-    """Catalyst's optimized-plan size estimate (driver-only, no job):
-    reflects pushed filters and projection width — the signal the motif
-    join ordering ranks terms by. None when the internal API drifts."""
-    try:
-        raw = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        size = raw if isinstance(raw, int) else int(str(raw))
-        return size if 0 <= size < (1 << 62) else None
-    except Exception:  # noqa: BLE001 — py4j/internal API drift
-        return None
-
-
-def _parse_size_bytes(raw: str, default: int) -> int:
-    raw = str(raw).strip().lower()
-    units = {"b": 1, "k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
-    num, mult = raw, 1
-    for suffix in ("kb", "mb", "gb", "tb", "b", "k", "m", "g", "t"):
-        if raw.endswith(suffix):
-            num, mult = raw[: -len(suffix)], units[suffix[0]]
-            break
-    try:
-        return max(0, int(num) * mult)
-    except ValueError:
-        return default
-
-
-def _broadcast_threshold_bytes(spark: SparkSession) -> int:
-    """spark.sql.autoBroadcastJoinThreshold in bytes (-1 → 0: disabled)."""
-    return _parse_size_bytes(
-        spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760"),
-        10 << 20,
-    )
-
-
-_LOCAL_TIER_MAX_BYTES_CONF = "spark.graft.localTier.maxBytes"
-
-
-def _local_tier_max_bytes(spark: SparkSession) -> int:
-    """Byte gate for the small-graph one-Arrow-task tiers (pagerank /
-    k-hop / k-core / components / triangle / pair kernels): the
-    largest MATERIALIZED graph the whole-graph kernel will ingest as
-    ONE task. Decoupled from autoBroadcastJoinThreshold in r12:
-    that conf models SHIPPING a join build side to every executor;
-    this one models a single task scanning the graph once — a
-    different cost with a much higher knee. Measured on local[32]
-    at sf0.1 (interleaved A/B, best-of-3): the 599k-edge k-core peel
-    runs 4.6 s one-task vs 8.3 s distributed, the 2.7M-edge 4-hop
-    BFS 3.1 s vs 6.4 s — the distributed loops pay per-round
-    scheduled stages for near-empty tasks, a latency that only grows
-    on a busy cluster. Default 64 MB: ids ride to the kernel as
-    exact Arrow columns and are encoded to int64 codes, so the one
-    task peaks well under a few hundred MB — inside any standard
-    executor; a 100 TB-derived graph is GBs of edges and refuses here
-    exactly as it refused the broadcast gate. Set the conf lower for
-    memory-tight executors (0 disables every local tier)."""
-    return _parse_size_bytes(
-        spark.conf.get(_LOCAL_TIER_MAX_BYTES_CONF, "67108864"),
-        64 << 20,
-    )
-
-
-def _fanout_partitions(
-    spark: SparkSession, out_rows: int, row_bytes: int = 24
-) -> int:
-    """Shuffle-partition count for a join whose measured OUTPUT volume
-    far exceeds its input bytes (wedge joins: Σdeg² rows out of an
-    edge-dim input). AQE sizes post-shuffle partitions from INPUT
-    bytes, so a small-input/large-fanout join coalesces to ~1 task and
-    the whole explosion runs serially — measured on zya8's 18.6M-wedge
-    join at sf0.1: 3.3 s coalesced vs 1.7 s at 32 wedge partitions
-    (guide §2.5: AQE cannot see fan-out; an explicit repartition with
-    a user-set count is exempt from coalescing). Sized from the
-    measured fan-out against AQE's own advisory partition size, with
-    cluster parallelism as the floor — scale-adaptive, no local-mode
-    constant: at 10B wedges this returns ~3,700 partitions."""
-    advisory = _parse_size_bytes(
-        spark.conf.get(
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes", "67108864"
-        ),
-        64 << 20,
-    )
-    need = int(out_rows) * row_bytes // max(1, advisory) + 1
-    return max(spark.sparkContext.defaultParallelism, need)
-
-
 def _order_motif_terms(
     term_names: list[set], sizes: list[int | None]
 ) -> list[int]:
@@ -606,27 +522,16 @@ def motif_find(edges: DataFrame, pattern: str, reduce: bool = False) -> DataFram
         return src.select(*cols)
 
     tdfs = [term_df(i, a, e, b) for i, (a, e, b) in enumerate(pos)]
-    sizes = [_plan_size_estimate(t) for t in tdfs]
+    sizes = [sizing.plan_bytes(t) for t in tdfs]
     term_names = [{n for n in (a, b) if n} for a, _, b in pos]
     order = _order_motif_terms(term_names, sizes)
 
-    # r12 VERDICT item: a checkpoint-backed edge table (the common
-    # caller posture — z01 pins its derived graph) is a stat-less
-    # LogicalRDD, so every chain join fell back to SortMergeJoin even
-    # for an edge table of a few MB. Read the checkpoint's REAL
-    # block-manager bytes (r12 gate machinery) and broadcast the
-    # joining term sides when the WHOLE edge table fits the broadcast
-    # threshold (every term projects a subset of it). Fact-scale edge
-    # tables keep their SMJ: file-stat estimates exceed the threshold
-    # and checkpointed ones report their true (large) size.
-    esz = _checkpoint_size_estimate(edges)
-    if esz is None:
-        esz = _plan_size_estimate(edges)
-    small = (
-        not edges.isStreaming
-        and esz is not None
-        and 0 < esz <= _broadcast_threshold_bytes(edges.sparkSession)
-    )
+    # Broadcast the joining term sides when the WHOLE materialized edge
+    # table fits the broadcast threshold (every term projects a subset
+    # of it): a checkpointed edge table (z01 pins its derived graph)
+    # otherwise chains SortMergeJoins even at a few MB. An unpinned edge
+    # table gets no hint; the planner and AQE size it themselves.
+    small = sizing.broadcast_ok(edges)
 
     def maybe_b(df: DataFrame) -> DataFrame:
         return F.broadcast(df) if small else df
@@ -813,23 +718,21 @@ def pagerank_int(
     dimension-sized, orders of magnitude smaller than edges — are
     broadcast into the per-round join, so the EDGE table never
     re-exchanges across rounds (the only shuffle per round is the
-    contribution groupBy). The default (None) auto-gates: it compares
-    Catalyst's size estimate of the materialized rank table against
-    spark.sql.autoBroadcastJoinThreshold and broadcasts only when the
-    node dimension fits the budget — so at billions of vertices the
-    loop degrades to sort-merge joins by itself instead of OOMing an
-    executor on a forced broadcast (pre-partition edges by src then so
-    every round reuses one shuffle layout). Pass True/False to force.
+    contribution groupBy). The default (None) auto-gates: the rank
+    table is broadcast only when its materialized bytes pass
+    `sizing.broadcast_ok` — so at billions of vertices the loop
+    degrades to sort-merge joins by itself instead of OOMing an
+    executor on a forced broadcast. Pass True/False to force.
 
-    Small-graph tier (r11): when the MATERIALIZED edge table fits the
-    broadcast budget (same auto-gate), the whole loop runs in ONE
-    Arrow task (`_pagerank_local_arrow`) — a graph that fits a
-    broadcast fits one task, and per-round scheduled actions (~0.4 s
+    Small-graph tier (r11): when the MATERIALIZED edge table passes
+    `sizing.one_task_ok`, the whole loop runs in ONE Arrow task
+    (`_pagerank_local_arrow`) — per-round scheduled actions (~0.4 s
     fixed latency each on local mode) dominate a tiny graph's cost.
     Bit-exact against the distributed loop, property-pinned, null-key
-    semantics included. Passing `stats` (or forcing
-    `broadcast_tables`) keeps the distributed loop, which tests use
-    to pin local == distributed.
+    semantics included. Forcing `broadcast_tables` keeps the
+    distributed loop; so does a one-task budget of 0
+    (`sizing.one_task_max_bytes`), which tests use to pin local ==
+    distributed.
 
     `dangling=True` redistributes dangling mass instead of dropping it
     (the at-scale-correct form: on real graphs a large rank fraction
@@ -850,7 +753,8 @@ def pagerank_int(
     previous rank through the checkpoint, so each check is a
     projection-agg over the just-materialized table — no join with the
     old rank table is scheduled. `stats` (optional dict) receives
-    `{"rounds": r, "converged": bool}` for callers/tests.
+    `{"local": bool, "rounds": r, "converged": bool}`; the one-task
+    kernel does not report its rounds, so both are None when `local`.
 
     `convergence_check_every=k` amortizes the stop check: the Δ scan is
     a driver ACTION per round (the dominant per-round latency on short
@@ -863,7 +767,7 @@ def pagerank_int(
     # REAL sizes, and the local-Arrow gate must fire before the node-dim
     # build schedules its checkpoint job
     e.count()
-    if broadcast_tables is None and stats is None and _fits_one_task(e):
+    if broadcast_tables is None and sizing.one_task_ok(e):
         e2, restore = _arrow_ids(e)
         if e2 is not None:
             out = _pagerank_local_arrow(
@@ -871,6 +775,8 @@ def pagerank_int(
                 early_stop,
             ).localCheckpoint(eager=True)
             e.unpersist(blocking=False)
+            if stats is not None:
+                stats.update(local=True, rounds=None, converged=None)
             return restore(out, ["id"])
         # exotic id types (float/binary/struct): distributed loop
 
@@ -895,8 +801,8 @@ def pagerank_int(
     if dangling:
         ranks = ranks.withColumn("__dang", F.col("outdeg") == 0)
     ranks = ranks.localCheckpoint(eager=True)
-    # Execution mode, decided from MATERIALIZED stats (e is persisted,
-    # ranks checkpointed — real sizes, not plan guesses):
+    # Execution mode, decided from MATERIALIZED bytes (e is persisted,
+    # ranks checkpointed):
     # - single: the whole graph fits the broadcast budget, so the loop
     #   runs single-partition — coalesce(1) makes SinglePartition
     #   planner-visible, which satisfies every join/agg distribution
@@ -912,24 +818,11 @@ def pagerank_int(
     #   strategy per round from runtime sizes and degrades to sort-
     #   merge instead of OOMing an executor on a forced broadcast.
     # broadcast_tables True/False force broadcast/plain respectively.
-    thr = _broadcast_threshold_bytes(edges.sparkSession)
-    est_ranks = _plan_size_estimate(ranks)
-    est_edges = _plan_size_estimate(e)
     single_mode = False
     if broadcast_tables is None:
-        small = (
-            est_edges is not None
-            and est_ranks is not None
-            and 0 < est_edges <= thr
-            and 0 < est_ranks <= thr
-        )
-        if small:
-            single_mode = True
-            broadcast_tables = False
-        else:
-            big_edges = est_edges is None or est_edges > thr
-            ranks_fit = est_ranks is None or (0 < est_ranks <= thr)
-            broadcast_tables = big_edges and ranks_fit
+        ranks_fit = sizing.broadcast_ok(ranks)
+        single_mode = ranks_fit and sizing.broadcast_ok(e)
+        broadcast_tables = ranks_fit and not single_mode
     if single_mode:
         e = e.coalesce(1)
         ranks = ranks.coalesce(1)
@@ -1066,12 +959,10 @@ def pagerank_int(
                 break
     e.unpersist(blocking=False)
     if stats is not None:
-        stats["rounds"] = rounds_run
-        stats["converged"] = converged
+        stats.update(local=False, rounds=rounds_run, converged=converged)
     return ranks.select("id", "rank")
 
 
-_TRI_WEDGE_BUDGET_CONF = "spark.graft.triangles.localWedgeBudget"
 _TRI_DENSE_MAX_N = 32_768  # bitset matrix ≤ n²/8 = 128 MB
 
 
@@ -1264,13 +1155,13 @@ def triangle_count(
     `local_tier=None` (default) auto-gates the small-graph one-Arrow-
     task tier (`_triangle_local_arrow`). The gate is TWO-stage and
     keyed on WEDGE volume, not edge bytes (r11 VERDICT #1): first the
-    free materialized-size check (the raw edge projection must fit the
-    broadcast budget — at 100 TB this refuses instantly and nothing
-    extra runs), then a one-aggregate Σ outdeg² probe of the
-    canonically (value-)oriented distinct edge set against
-    `spark.graft.triangles.localWedgeBudget` (default 32M wedge rows
-    ≈ the distributed wedge join's row count) — because a
-    broadcast-sized edge table can still carry a quadratic wedge load
+    free materialized-size check (`sizing.one_task_ok` on the raw edge
+    projection — at 100 TB this refuses instantly and nothing extra
+    runs), then a one-aggregate Σ outdeg² probe of the canonically
+    (value-)oriented distinct edge set against
+    `sizing.TRIANGLE_WEDGE_BUDGET` (32M wedge rows ≈ the distributed
+    wedge join's row count) — because a one-task-sized edge table can
+    still carry a quadratic wedge load
     (a single hub's deg² dominates). The probe measures the "id"
     orientation for BOTH orients: degree orientation's volume is no
     larger on the skewed graphs the gate exists for, so the gate errs
@@ -1284,9 +1175,7 @@ def triangle_count(
     from .util import materialize_and_release
 
     e_raw = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    budget = int(
-        edges.sparkSession.conf.get(_TRI_WEDGE_BUDGET_CONF, "32000000")
-    )
+    budget = sizing.TRIANGLE_WEDGE_BUDGET
     wedge_vol = None
     use_local = bool(local_tier)
     pinned: list[DataFrame] = []
@@ -1294,18 +1183,15 @@ def triangle_count(
         e_raw = e_raw.persist()
         pinned.append(e_raw)
         e_raw.count()  # materialize: real size for stage-1 of the gate
-        if _fits_one_task(e_raw):
-            wedge_vol = (
+        if sizing.one_task_ok(e_raw):
+            wedge_vol = sizing.wedge_volume(
                 e_raw.filter(F.col("u") != F.col("v"))
                 .select(
                     F.least("u", "v").alias("u"),
                     F.greatest("u", "v").alias("v"),
                 )
-                .distinct()
-                .groupBy("u")
-                .agg(F.count(F.lit(1)).alias("d"))
-                .agg(F.sum(F.col("d") * F.col("d")).alias("w"))
-                .collect()[0]["w"]
+                .distinct(),
+                "u",
             )
             use_local = wedge_vol is not None and wedge_vol <= budget
     if tier_stats is not None:
@@ -1380,7 +1266,7 @@ def cooccurrence_triangles(
     the fact-scale `groupBy(basket)` stays a distributed aggregation
     at every scale; what this operator fuses is everything AFTER it.
     `local_tier=None` auto-gates on the MATERIALIZED size of the
-    item-set table (the `_fits_one_task` broadcast-budget rule): when
+    item-set table (`sizing.one_task_ok`): when
     it fits, pair explode → support count → threshold → orientation →
     triangle count all run in ONE Arrow task (numpy unique/bincount —
     the distributed fallback pays two more shuffles plus the
@@ -1389,7 +1275,7 @@ def cooccurrence_triangles(
     from the sorted arrays, counts them with a hash aggregate, and
     delegates to `triangle_count` (which applies its own wedge-volume
     gate). Bounded-regret corner, stated honestly: an adversarial
-    broadcast-fit input (huge item arrays / a hub item) makes the
+    one-task-fit input (huge item arrays / a hub item) makes the
     kernel's worst case the same Σdeg² wedge work the DISTRIBUTED
     join would do, minus executor parallelism — bounded by the gate's
     byte budget, and the dense-bitset path (n ≤ 32k items) covers the
@@ -1421,8 +1307,8 @@ def cooccurrence_triangles(
     if local_tier is None and not g.isStreaming:
         g = g.persist()
         pinned.append(g)
-        g.count()  # materialize: real size for the broadcast-budget gate
-        use_local = _fits_one_task(g)
+        g.count()  # materialize: real size for the one-task gate
+        use_local = sizing.one_task_ok(g)
     use_local = use_local and wide_t is not None
     if tier_stats is not None:
         tier_stats.update(local=use_local)
@@ -1624,7 +1510,7 @@ def connected_components(
     and unlike a label-sum probe this works for string ids too).
 
     `local_tier=None` (default) auto-gates the small-graph tier: when
-    the materialized pair table fits the broadcast budget, the whole
+    the materialized pair table passes `sizing.one_task_ok`, the whole
     fixpoint runs as union-find in ONE Arrow task
     (`_components_local_arrow` — the pagerank posture). Bit-exact
     against the distributed loop, property-pinned; False forces it."""
@@ -1652,7 +1538,7 @@ def connected_components(
         # Inputs that ARE already a materialized checkpoint (dedup
         # pipelines hand over materialize_and_release output) skip the
         # redundant re-pin — one fewer barrier job (r13).
-        if not _is_checkpoint_backed(pairs):
+        if not sizing.is_checkpoint_backed(pairs):
             pairs = pairs.localCheckpoint(eager=True)
         n = num_partitions or max(
             1,
@@ -1664,7 +1550,7 @@ def connected_components(
     if local_tier is None and not pairs.isStreaming:
         # pairs is already eagerly checkpointed + counted above — the
         # size estimate is real; symmetrized edges ≤ 2× pairs bytes
-        local_tier = _fits_one_task(pairs)
+        local_tier = sizing.one_task_ok(pairs)
     if local_tier and not pairs.isStreaming:
         one = pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
         e2, restore = _arrow_ids(one)
@@ -1850,9 +1736,6 @@ def _auto_hub_cap(hist: list, floor: int, ratio: int) -> int:
     return max(floor, ratio * median)
 
 
-_PAIRS_WEDGE_BUDGET_CONF = "spark.graft.pairs.localWedgeBudget"
-
-
 def _pair_count_local_arrow(
     e: DataFrame,
     min_pair: int,
@@ -1860,7 +1743,7 @@ def _pair_count_local_arrow(
     with_degrees: bool = False,
 ) -> DataFrame:
     """Small-graph execution of the bipartite WEDGE pair count (shared
-    by `common_neighbor_links` and `stats.cooccurrence_pairs`): over a
+    by `common_neighbor_links` and `cooccurrence_pairs`): over a
     (l, r) edge list, count for every unordered pair of LEFT nodes the
     number of shared RIGHT neighbors, entirely in ONE Arrow task — the
     same one-task posture as `_triangle_local_arrow`, gated by the
@@ -2092,21 +1975,7 @@ def common_neighbor_links(
     # endpoints, duplicate edges, string ids, ids past 2^53).
     use_local = bool(local_tier)
     wedge_vol = None
-    # Default re-measured in r12 on GENUINE entries (interleaved
-    # same-session A/B, tier flipped via this conf): at 3.0M wedges
-    # the one-task kernel wins ~2× (zya6 1.6 s vs 3.0+ s), at 18.6M
-    # it LOSES ~1.4× (zya8 5.9-6.9 s vs 4.0-4.9 s distributed) —
-    # even though a synthetic sweep on a pre-pinned edge frame had
-    # the kernel "winning" at every volume up to 18.6M (SCALE.md
-    # records both and the lesson: pinned-frame sweeps over-credit
-    # the kernel; only genuine-entry A/B arbitrates). 4M sits above
-    # the measured 3.0M win with margin and below the un-evidenced
-    # mid-band. Σd² ≥ edge rows, so an accepted graph is ≤4M edge
-    # rows in the one task; the localTier.maxBytes size check above
-    # still refuses first at 100 TB.
-    budget = int(
-        edges.sparkSession.conf.get(_PAIRS_WEDGE_BUDGET_CONF, "4000000")
-    )
+    budget = sizing.PAIRS_WEDGE_BUDGET
     if hist is not None:
         # the auto-guard histogram is already on the driver — derive
         # the wedge volume from it unconditionally (free); it sizes
@@ -2117,15 +1986,9 @@ def common_neighbor_links(
             for r in hist
             if cap is None or r["rd"] <= cap
         )
-    if local_tier is None and not e.isStreaming and _fits_one_task(e):
+    if local_tier is None and sizing.one_task_ok(e):
         if wedge_vol is None:
-            row = (
-                e.groupBy("r")
-                .agg(F.count(F.lit(1)).alias("rd"))
-                .agg(F.sum(F.col("rd") * F.col("rd")).alias("w"))
-                .collect()
-            )
-            wedge_vol = row[0]["w"] if row else None
+            wedge_vol = sizing.wedge_volume(e, "r")
         use_local = wedge_vol is not None and wedge_vol <= budget
     if tier_stats is not None:
         tier_stats.update(local=use_local, wedges=wedge_vol, budget=budget)
@@ -2145,17 +2008,11 @@ def common_neighbor_links(
         if tier_stats is not None:
             tier_stats["local"] = False
     deg = e.groupBy("l").agg(F.count(F.lit(1)).alias("deg"))
-    if not e.isStreaming:
-        # deg is an aggregate of the checkpointed edge dim (stat-less
-        # LogicalRDD → the planner would SMJ both final joins); deg has
-        # ≤ e's rows, so broadcast it when e's REAL materialized bytes
-        # fit the broadcast threshold — fact-scale graphs refuse (r13;
+    if sizing.broadcast_ok(e):
+        # deg is an aggregate of the checkpointed edge dim with ≤ e's
+        # rows; unhinted, the planner SMJs both final joins (r13:
         # interleaved A/B ~0.1-0.2 s and two exchanges+sorts fewer)
-        esz = _checkpoint_size_estimate(e)
-        if esz is not None and 0 < esz <= _broadcast_threshold_bytes(
-            e.sparkSession
-        ):
-            deg = F.broadcast(deg)
+        deg = F.broadcast(deg)
     a = e.select("r", F.col("l").alias("node_a"))
     b = e.select("r", F.col("l").alias("node_b"))
     if wedge_vol:
@@ -2163,8 +2020,8 @@ def common_neighbor_links(
         # input: repartition both sides by the join key so the fan-out
         # spreads over measured-volume-sized partitions instead of the
         # ~1 task AQE coalesces the tiny input to (the join reuses this
-        # partitioning — no extra exchange; see _fanout_partitions)
-        n_w = _fanout_partitions(edges.sparkSession, wedge_vol)
+        # partitioning — no extra exchange; see sizing.fanout_partitions)
+        n_w = sizing.fanout_partitions(edges.sparkSession, wedge_vol)
         a = a.repartition(n_w, "r")
         b = b.repartition(n_w, "r")
     pairs = (
@@ -2183,64 +2040,105 @@ def common_neighbor_links(
     )
 
 
-def _checkpoint_size_estimate(df: DataFrame) -> int | None:
-    """Real cached bytes of a localCheckpoint-backed frame: a
-    checkpointed DataFrame's plan is a LogicalRDD whose Catalyst
-    sizeInBytes is UNKNOWN (Long.MaxValue), so `_plan_size_estimate`
-    returns None and a size gate would always refuse — the r12
-    optimization round found the `connected_components` local tier
-    dead on exactly this (its gate ran on the checkpointed pair table
-    and never fired). The checkpoint IS persisted, so the block
-    manager knows its true size: read it from getRDDStorageInfo via
-    the LogicalRDD's rdd id. Deserialized checkpoint rows are a few ×
-    larger than columnar bytes, so this errs conservative (refuses
-    sooner than a parquet-side estimate would). None when the frame is
-    not checkpoint-backed or the internal API drifts."""
-    try:
-        lp = df._jdf.queryExecution().analyzed()
-        if not lp.getClass().getName().endswith("LogicalRDD"):
-            return None
-        rid = lp.rdd().id()
-        sc = df.sparkSession.sparkContext
-        for info in sc._jsc.sc().getRDDStorageInfo():
-            if info.id() == rid:
-                size = int(info.memSize()) + int(info.diskSize())
-                return size if size > 0 else None
-    except Exception:  # noqa: BLE001 — py4j/internal API drift
-        return None
-    return None
+def cooccurrence_pairs(
+    df: DataFrame,
+    basket_col: str,
+    item_col: str,
+    min_support: int,
+    local_tier: bool | None = None,
+    tier_stats: dict | None = None,
+) -> DataFrame:
+    """Frequent item PAIRS by basket co-occurrence → (item_a, item_b,
+    n_baskets), support ≥ min_support — the market-basket / feature-
+    co-occurrence primitive (event types that fire together per user);
+    `common_neighbor_links` with items as left nodes and baskets as
+    right nodes.
 
+    A-priori pruning keeps the self-join bounded: an item in a frequent
+    pair is itself frequent (support is anti-monotone), so items below
+    min_support are dropped BEFORE pairing — the wedge join then costs
+    Σ|basket ∩ frequent|², not Σ|basket|². Distinct-first (multiset →
+    set per basket), equi-join on the basket key, item_a < item_b for
+    one row per unordered pair.
 
-def _is_checkpoint_backed(df: DataFrame) -> bool:
-    """True when `df` IS a materialized localCheckpoint (its analyzed
-    plan is a LogicalRDD with blocks in the block manager) — used to
-    skip a redundant re-checkpoint: several operators eagerly pin their
-    output (`materialize_and_release`) and a downstream operator that
-    pins its input again (connected_components) would schedule one more
-    barrier job to copy an already-bounded RDD (r13)."""
-    return _checkpoint_size_estimate(df) is not None
-
-
-def _fits_one_task(e: DataFrame) -> bool:
-    """Gate for the small-graph one-Arrow-task tiers (the triangle and
-    pair tiers add a wedge-volume check): the MATERIALIZED edge table
-    fits the local-tier budget (`_local_tier_max_bytes`). Callers must
-    have materialized `e` (persist+count or checkpoint) so the estimate is a real size, not a plan guess; for
-    checkpoint-backed frames the real size comes from the block
-    manager (`_checkpoint_size_estimate`)."""
-    if e.isStreaming:
-        return False
-    # exact cached bytes FIRST: a checkpoint-backed frame's Catalyst
-    # stats are a per-row default guess (~2^40 observed — large but
-    # under the 2^62 sanity filter, so it silently shadowed the real
-    # size and kept this gate refusing 50 MB graphs; r12 final
-    # session). The block-manager number is the truth when present;
-    # the plan estimate covers persisted/scan-backed frames.
-    est = _checkpoint_size_estimate(e)
-    if est is None:
-        est = _plan_size_estimate(e)
-    thr = _local_tier_max_bytes(e.sparkSession)
-    return est is not None and 0 < est <= thr
+    `local_tier=None` (default) auto-gates the one-Arrow-task tier: the
+    raw (item, basket) projection is pinned unless its plan estimate
+    already refuses (`sizing.one_task_refused` — at 100 TB file
+    statistics refuse and the lazy distributed plan below is returned
+    untouched), then its pinned bytes must pass `sizing.one_task_ok`
+    and a one-aggregate Σ per-basket-rows² probe over the RAW rows (an
+    overestimate of the deduped wedge volume) must stay within
+    `sizing.PAIRS_WEDGE_BUDGET`. When taken, the WHOLE pipeline —
+    distinct, a-priori prune, pair expansion, support threshold — runs
+    inside `_pair_count_local_arrow`. Pass `tier_stats={}` to observe
+    {"local", "wedges", "budget"}; False forces the distributed path
+    (property-pinned equal)."""
+    e_raw = df.select(
+        F.col(item_col).alias("l"), F.col(basket_col).alias("r")
+    )
+    use_local = bool(local_tier)
+    wedge_vol = None
+    budget = sizing.PAIRS_WEDGE_BUDGET
+    if (
+        local_tier is None
+        and not e_raw.isStreaming
+        and not sizing.one_task_refused(e_raw)
+    ):
+        # probe, kernel AND the distributed fallback all re-read these
+        # rows; unpinned, each re-executed the source scan (r12: auto
+        # path 3.6 s vs 1.6 s forced-local at sf0.1)
+        e_raw = e_raw.localCheckpoint(eager=True)
+        if sizing.one_task_ok(e_raw):
+            wedge_vol = sizing.wedge_volume(e_raw, "r")
+            use_local = wedge_vol is not None and wedge_vol <= budget
+    if tier_stats is not None:
+        tier_stats.update(local=use_local, wedges=wedge_vol, budget=budget)
+    if use_local and not e_raw.isStreaming:
+        e2, restore = _arrow_ids(e_raw)
+        if e2 is not None:
+            raw = _pair_count_local_arrow(
+                e2,
+                min_pair=min_support,
+                min_left_degree=min_support,
+                with_degrees=False,
+            )
+            # the kernel emits x < y in value order
+            return restore(raw, ["x", "y"]).select(
+                F.col("x").alias("item_a"),
+                F.col("y").alias("item_b"),
+                F.col("common").alias("n_baskets"),
+            )
+        if tier_stats is not None:
+            tier_stats["local"] = False
+    its = (
+        e_raw.select(
+            F.col("r").alias("b"), F.col("l").alias("i")
+        ).distinct()
+    )
+    freq = (
+        its.groupBy("i")
+        .agg(F.count(F.lit(1)).alias("nf"))
+        .filter(F.col("nf") >= min_support)
+        .select("i")
+    )
+    pruned = its.join(F.broadcast(freq), "i", "left_semi")
+    a = pruned.select("b", F.col("i").alias("item_a"))
+    bdf = pruned.select("b", F.col("i").alias("item_b"))
+    if wedge_vol:
+        # measured fan-out: the pair join emits ≤ wedge_vol rows from a
+        # tiny input — repartition by the basket key so AQE's
+        # input-byte coalescing can't serialize the explosion into one
+        # task (sizing.fanout_partitions)
+        n_w = sizing.fanout_partitions(df.sparkSession, wedge_vol)
+        a = a.repartition(n_w, "b")
+        bdf = bdf.repartition(n_w, "b")
+    return (
+        a.join(bdf, "b")
+        .filter(F.col("item_a") < F.col("item_b"))
+        .groupBy("item_a", "item_b")
+        .agg(F.count(F.lit(1)).alias("n_baskets"))
+        .filter(F.col("n_baskets") >= min_support)
+    )
 
 
 def _kcore_local_arrow(e: DataFrame, k: int, max_rounds: int) -> DataFrame:
@@ -2344,7 +2242,7 @@ def kcore(
     core. Input is one row per undirected edge; mirrored internally.
 
     `local_tier=None` (default) auto-gates the small-graph tier: when
-    the materialized edge table fits the broadcast budget, the whole
+    the materialized edge table passes `sizing.one_task_ok`, the whole
     peel runs in ONE Arrow task (`_kcore_local_arrow`, the pagerank
     posture) — bit-exact, property-pinned. False forces the
     distributed peel (tests use this to pin local == distributed)."""
@@ -2375,7 +2273,7 @@ def kcore(
         # bytes directly (no ×2) — deserialized checkpoint rows already
         # run ~3× columnar, erring conservative (zyf1's 599k-edge graph
         # reads 50 MB here vs ~15 MB columnar).
-        local_tier = _fits_one_task(one)
+        local_tier = sizing.one_task_ok(one)
     if local_tier:
         e2, restore = _arrow_ids(one)
         if e2 is not None:

@@ -439,140 +439,6 @@ def misra_gries_heavy_hitters(
     return counts
 
 
-def cooccurrence_pairs(
-    df: DataFrame,
-    basket_col: str,
-    item_col: str,
-    min_support: int,
-    local_tier: bool | None = None,
-    tier_stats: dict | None = None,
-) -> DataFrame:
-    """Frequent item PAIRS by basket co-occurrence → (item_a, item_b,
-    n_baskets), support ≥ min_support — the market-basket / feature-
-    co-occurrence primitive (event types that fire together per user).
-
-    A-priori pruning keeps the self-join bounded: an item in a frequent
-    pair is itself frequent (support is anti-monotone), so items below
-    min_support are dropped BEFORE pairing — the wedge join then costs
-    Σ|basket ∩ frequent|², not Σ|basket|². Distinct-first (multiset →
-    set per basket), equi-join on the basket key, item_a < item_b for
-    one row per unordered pair.
-
-    `local_tier=None` (default) auto-gates the small-graph one-Arrow-
-    task tier (the z42 `cooccurrence_triangles` posture): free
-    materialized-size check of the raw (item, basket) projection, then
-    a one-aggregate Σ per-basket-degree² probe against
-    `spark.graft.pairs.localWedgeBudget` (default 4M — a broadcast-
-    sized table can still carry a quadratic wedge load). When taken,
-    the WHOLE pipeline — distinct, a-priori prune, pair expansion,
-    support threshold — runs inside one Arrow kernel
-    (`graph._pair_count_local_arrow`); at 100 TB the size check
-    refuses instantly and the distributed join below is untouched.
-    Pass `tier_stats={}` to observe {"local", "wedges", "budget"};
-    False forces the distributed path (property-pinned equal)."""
-    from .graph import (
-        _PAIRS_WEDGE_BUDGET_CONF,
-        _arrow_ids,
-        _local_tier_max_bytes,
-        _pair_count_local_arrow,
-        _plan_size_estimate,
-    )
-
-    e_raw = df.select(
-        F.col(item_col).alias("l"), F.col(basket_col).alias("r")
-    )
-    use_local = bool(local_tier)
-    wedge_vol = None
-    budget = int(
-        df.sparkSession.conf.get(_PAIRS_WEDGE_BUDGET_CONF, "4000000")
-    )
-    if local_tier is None and not e_raw.isStreaming:
-        # stage 1 is FREE (no job, no pin): the raw projection sits
-        # directly on the source scan, so Catalyst's optimized-plan
-        # size estimate is file-stat-based — at 100 TB this refuses
-        # instantly and the lazy distributed plan below is returned
-        # untouched. Only when the input is NOT provably huge (small
-        # estimate, or a stat-less local/checkpoint frame) does stage 2
-        # run: one Σ per-basket-count² probe job over RAW rows (an
-        # overestimate of the deduped wedge volume — conservative).
-        # Σd² ≤ budget itself bounds the edge list (Σd² ≥ Σd = rows),
-        # so a probe-accepted graph always fits the one Arrow task.
-        est = _plan_size_estimate(e_raw)
-        thr = _local_tier_max_bytes(df.sparkSession)
-        if est is None or 0 < est <= thr:
-            # pin the stage-1-bounded projection before the probe:
-            # probe, kernel AND the distributed fallback all re-read
-            # these rows, and without the pin each re-executed the
-            # source scan (r12: auto path 3.6 s vs 1.6 s forced-local
-            # at sf0.1 — the delta was exactly this double scan). One
-            # 2-column parallel materialization, only when the size
-            # estimate is KNOWN ≤ the local-tier budget — est None means
-            # a stat-less local/checkpoint frame: already materialized
-            # upstream (cheap to re-read) and of UNKNOWN size, so
-            # never eagerly pinned here. The 100 TB path never reaches
-            # here (stage 1 refuses on file stats).
-            if est is not None:
-                e_raw = e_raw.localCheckpoint(eager=True)
-            row = (
-                e_raw.groupBy("r")
-                .agg(F.count(F.lit(1)).alias("d"))
-                .agg(F.sum(F.col("d") * F.col("d")).alias("w"))
-                .collect()
-            )
-            wedge_vol = row[0]["w"] if row else None
-            use_local = wedge_vol is not None and wedge_vol <= budget
-    if tier_stats is not None:
-        tier_stats.update(local=use_local, wedges=wedge_vol, budget=budget)
-    if use_local and not e_raw.isStreaming:
-        e2, restore = _arrow_ids(e_raw)
-        if e2 is not None:
-            raw = _pair_count_local_arrow(
-                e2,
-                min_pair=min_support,
-                min_left_degree=min_support,
-                with_degrees=False,
-            )
-            # the kernel emits x < y in value order
-            return restore(raw, ["x", "y"]).select(
-                F.col("x").alias("item_a"),
-                F.col("y").alias("item_b"),
-                F.col("common").alias("n_baskets"),
-            )
-        if tier_stats is not None:
-            tier_stats["local"] = False
-    its = (
-        e_raw.select(
-            F.col("r").alias("b"), F.col("l").alias("i")
-        ).distinct()
-    )
-    freq = (
-        its.groupBy("i")
-        .agg(F.count(F.lit(1)).alias("nf"))
-        .filter(F.col("nf") >= min_support)
-        .select("i")
-    )
-    pruned = its.join(F.broadcast(freq), "i", "left_semi")
-    a = pruned.select("b", F.col("i").alias("item_a"))
-    bdf = pruned.select("b", F.col("i").alias("item_b"))
-    if wedge_vol:
-        # measured fan-out: the pair join emits ≤ wedge_vol rows from a
-        # tiny input — repartition by the basket key so AQE's
-        # input-byte coalescing can't serialize the explosion into one
-        # task (the zya8 fix, graph._fanout_partitions)
-        from .graph import _fanout_partitions
-
-        n_w = _fanout_partitions(df.sparkSession, wedge_vol)
-        a = a.repartition(n_w, "b")
-        bdf = bdf.repartition(n_w, "b")
-    return (
-        a.join(bdf, "b")
-        .filter(F.col("item_a") < F.col("item_b"))
-        .groupBy("item_a", "item_b")
-        .agg(F.count(F.lit(1)).alias("n_baskets"))
-        .filter(F.col("n_baskets") >= min_support)
-    )
-
-
 def weighted_median_by_group(
     df: DataFrame,
     group_col: str,

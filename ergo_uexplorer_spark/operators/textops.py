@@ -229,8 +229,7 @@ def source_unigram_tvd(docs, ppm: int = 1_000_000):
         F.col("y.tppm").alias("tb"),
     )
     return (
-        F.broadcast(pairs)
-        .join(matched, ["source_a", "source_b"], "left")
+        pairs.join(matched, ["source_a", "source_b"], "left")
         .select(
             "source_a",
             "source_b",
@@ -249,7 +248,7 @@ def ngram_diversity(docs):
     tripwire (templated sources shows normal TTR but collapsed bigram
     diversity). Integer permille via int64 div; distincts are exact
     (count_distinct over the aggregated gram table)."""
-    from .dedup import _ensure_parallelism
+    from .util import ensure_parallelism
 
     # tokenize+shingle is CPU-bound string work: a single-file corpus
     # scan would pin one core through BOTH explode branches (19.7 s vs
@@ -262,7 +261,7 @@ def ngram_diversity(docs):
     # sf0.1). outer explode generates no such predicate; the null row
     # an empty array produces is dropped by a cheap post-explode
     # filter instead.
-    base = _ensure_parallelism(docs).select(
+    base = ensure_parallelism(docs).select(
         "source", tokens(F.col("text")).alias("t")
     ).select("source", "t", shingles(F.col("t"), 2).alias("bg"))
     uni = (

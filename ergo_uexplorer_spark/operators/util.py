@@ -2,27 +2,10 @@
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
-
-def _input_bytes(df: DataFrame) -> int:
-    """Best-effort size of the files feeding `df` (0 when unknown —
-    in-memory fixtures, non-local URIs). Driver-side only, no job."""
-    total = 0
-    try:
-        for f in df.inputFiles():
-            p = f[7:] if f.startswith("file:") and f[5:7] == "//" else f
-            p = p[5:] if p.startswith("file:") else p
-            try:
-                total += os.path.getsize(p)
-            except OSError:
-                pass
-    except Exception:
-        return 0
-    return total
+from . import sizing
 
 
 def local_frame(
@@ -51,22 +34,6 @@ def local_frame(
     return spark.createDataFrame(table, schema)
 
 
-def _free_storage_bytes(df: DataFrame) -> int:
-    """Remaining block-manager storage memory across executors (driver
-    included in local mode). 0 when the probe fails."""
-    try:
-        status = (
-            df.sparkSession.sparkContext._jsc.sc().getExecutorMemoryStatus()
-        )
-        it = status.iterator()
-        total = 0
-        while it.hasNext():
-            total += it.next()._2()._2()
-        return total
-    except Exception:
-        return 0
-
-
 def pin_corpus_dim(df: DataFrame, force: bool = True) -> DataFrame:
     """Eagerly pin a reduced-but-CORPUS-sized table (doc-dim hash
     arrays, per-doc token stats) so multi-stage candidate/verify
@@ -83,35 +50,12 @@ def pin_corpus_dim(df: DataFrame, force: bool = True) -> DataFrame:
     once the operator's output is materialized, so repeated dedup calls
     in one session no longer accumulate corpus-sized blocks.
 
-    Adaptive level: when the projected pin size (input file bytes — the
-    hashed-array dim is the same order as the text it came from) crowds
-    the storage memory currently free, the disk tier is mandatory
-    anyway, so the pin uses MEMORY_AND_DISK serialized; otherwise the
-    deserialized columnar default. ``spark.graft.pin.serialized``
-    (true/false) still overrides both ways."""
+    The storage level is `sizing.pin_serialized`'s choice."""
     from pyspark.storagelevel import StorageLevel
 
-    conf = df.sparkSession.conf.get("spark.graft.pin.serialized", "")
-    if conf == "true":
-        serialized = True
-    elif conf == "false":
-        serialized = False
-    else:
-        est = _input_bytes(df) * 3  # raw rows ≈ 3× compressed parquet
-        free = _free_storage_bytes(df)
-        if free:
-            serialized = est > free // 2
-        else:
-            # The probe uses a private JVM API; when it breaks (any
-            # Spark upgrade) or the frame isn't file-backed (est==0,
-            # size unknowable) we must fail toward the SAFE level —
-            # deserialized is exactly what OOM'd at 100× in round 8.
-            # Only a provably small pin (<256 MB of source files) keeps
-            # the fast deserialized default without memory evidence.
-            serialized = est == 0 or est > 256 * 1024 * 1024
     level = (
         StorageLevel.MEMORY_AND_DISK
-        if serialized
+        if sizing.pin_serialized(df)
         else StorageLevel.MEMORY_AND_DISK_DESER
     )
     df = df.persist(level)

@@ -290,7 +290,7 @@ _ZYA6_SUPPORT = 2
     tags=("join", "agg"),
 )
 def zya6_item_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.stats import cooccurrence_pairs
+    from ..operators.graph import cooccurrence_pairs
 
     (lineitem,) = load(spark, sf_dir, "lineitem")
     return cooccurrence_pairs(

@@ -167,7 +167,9 @@ def test_pagerank_round_broadcasts_rank_table(spark):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_pagerank_auto_gate_demotes_oversized_rank_table(spark):
+def test_pagerank_auto_gate_demotes_oversized_rank_table(
+    spark, one_task_off
+):
     """broadcast_tables=None (default) must compare the materialized
     rank-table size against autoBroadcastJoinThreshold: under it the
     per-round join is a BroadcastHashJoin; with broadcasting disabled
@@ -180,20 +182,22 @@ def test_pagerank_auto_gate_demotes_oversized_rank_table(spark):
     edges = spark.createDataFrame(
         [("a", "b"), ("b", "c"), ("c", "a")], "src string, dst string"
     )
-    # stats={} opts out of the single-Arrow-task tier so the
-    # distributed auto-gate logic itself is what gets inspected
-    under = formatted_plan(
-        pagerank_int(edges, iters=1, checkpoint_every=0, stats={})
-    )
+    # a one-task budget of 0 opts out of the single-Arrow-task tier so
+    # the distributed auto-gate logic itself is what gets inspected
+    with one_task_off():
+        under = formatted_plan(
+            pagerank_int(edges, iters=1, checkpoint_every=0)
+        )
     assert "BroadcastHashJoin" in under
 
     key = "spark.sql.autoBroadcastJoinThreshold"
     prev = spark.conf.get(key)
     spark.conf.set(key, "-1")
     try:
-        over = formatted_plan(
-            pagerank_int(edges, iters=1, checkpoint_every=0, stats={})
-        )
+        with one_task_off():
+            over = formatted_plan(
+                pagerank_int(edges, iters=1, checkpoint_every=0)
+            )
     finally:
         spark.conf.set(key, prev)
     assert "SortMergeJoin" in over

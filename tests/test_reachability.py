@@ -152,3 +152,34 @@ def test_unreached_definitions_equal_the_keep_list():
         "stale KEEP entries (now reached, or no longer defined): "
         f"{sorted(set(KEEP) - unreached)}"
     )
+
+
+def private_cross_imports() -> list[str]:
+    """`module: from .other import _name` for every import of an
+    underscore name from another `operators/` module."""
+    ops = PKG / "operators"
+    found = []
+    for f in sorted(ops.glob("*.py")):
+        for node in ast.walk(ast.parse(f.read_text())):
+            if not isinstance(node, ast.ImportFrom) or not node.module:
+                continue
+            mod = node.module
+            if node.level == 1:
+                other = mod.split(".")[0]
+            elif node.level == 2 and mod.startswith("operators."):
+                other = mod.split(".")[1]
+            elif mod.startswith("ergo_uexplorer_spark.operators."):
+                other = mod.split(".")[2]
+            else:
+                continue
+            for a in node.names:
+                if a.name.startswith("_") and other != f.stem:
+                    found.append(f"{f.name}: from {other} import {a.name}")
+    return found
+
+
+def test_no_operator_imports_a_private_name_of_another():
+    """A private helper another operator module needs is shared code:
+    it belongs in a module both import by its public name (sizing,
+    util), not reached into across modules."""
+    assert private_cross_imports() == []

@@ -131,13 +131,13 @@ def test_hub_guard_stats_surfaced_in_band(spark):
         spark.conf.unset("spark.graft.linkpred.hubFloor")
 
 
-def test_pagerank_local_arrow_equals_distributed(spark):
+def test_pagerank_local_arrow_equals_distributed(spark, one_task_off):
     """The single-Arrow-task tier must be a bit-exact twin of the
     distributed loop — same integer truncation, same dangling share,
     same null-key semantics (a NULL src/dst is a node whose edges
-    never match the per-round equi-join). stats={} forces the
-    distributed loop; the default gate takes the local tier on these
-    tiny graphs."""
+    never match the per-round equi-join). A one-task budget of 0
+    forces the distributed loop; the default gate takes the local
+    tier on these tiny graphs."""
     import random
 
     from ergo_uexplorer_spark.operators.graph import pagerank_int
@@ -187,10 +187,11 @@ def test_pagerank_local_arrow_equals_distributed(spark):
                 (x["id"],): x["rank"]
                 for x in pagerank_int(edges, **kw).collect()
             }
-            dist = {
-                (x["id"],): x["rank"]
-                for x in pagerank_int(edges, **kw, stats={}).collect()
-            }
+            with one_task_off():
+                dist = {
+                    (x["id"],): x["rank"]
+                    for x in pagerank_int(edges, **kw).collect()
+                }
             assert local == dist, (schema, kw)
 
 

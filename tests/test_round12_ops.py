@@ -12,6 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from ergo_uexplorer_spark.operators import graph as G
+from ergo_uexplorer_spark.operators import sizing
 
 
 def _mixed_graph(spark):
@@ -71,23 +72,20 @@ def test_triangle_local_tier_sparse_kernel(spark):
     assert loc[0][0] == G.triangle_count(rdf, local_tier=False).collect()[0][0]
 
 
-def test_triangle_gate_refuses_high_wedge_volume(spark):
+def test_triangle_gate_refuses_high_wedge_volume(spark, monkeypatch):
     """The tier gate is keyed on Σdeg² (r11 VERDICT #1): a star graph
-    whose edge table trivially fits the broadcast budget must still be
+    whose edge table trivially fits the one-task budget must still be
     refused when its wedge volume exceeds the budget — a tiny edge
     table can carry a quadratic wedge load."""
-    spark.conf.set("spark.graft.triangles.localWedgeBudget", "100")
-    try:
-        star = spark.createDataFrame(
-            [(0, i) for i in range(1, 50)], "src long, dst long"
-        )
-        ts: dict = {}
-        out = G.triangle_count(star, tier_stats=ts).collect()
-        assert ts["local"] is False
-        assert ts["wedges"] == 49 * 49
-        assert out[0]["n_triangles"] == 0
-    finally:
-        spark.conf.unset("spark.graft.triangles.localWedgeBudget")
+    monkeypatch.setattr(sizing, "TRIANGLE_WEDGE_BUDGET", 100)
+    star = spark.createDataFrame(
+        [(0, i) for i in range(1, 50)], "src long, dst long"
+    )
+    ts: dict = {}
+    out = G.triangle_count(star, tier_stats=ts).collect()
+    assert ts["local"] is False
+    assert ts["wedges"] == 49 * 49
+    assert out[0]["n_triangles"] == 0
 
 
 def test_triangle_empty_edges_one_row(spark):
@@ -104,11 +102,13 @@ def test_triangle_empty_edges_one_row(spark):
     ["k_hop", "pagerank", "triangle", "cooccurrence", "components", "kcore",
      "pairs"],
 )
-def test_one_task_kernels_equal_distributed_on_empty_input(spark, family):
+def test_one_task_kernels_equal_distributed_on_empty_input(
+    spark, one_task_off, family
+):
     """Every one-task kernel agrees with its distributed path on an
     empty edge frame, where the kernel sees no rows or no partitions.
-    pagerank has no tier switch (its gate refuses an empty graph), so
-    its kernel is called directly."""
+    pagerank has no tier switch, so its kernel is called directly and
+    its distributed loop runs with every one-task tier off."""
     edges = spark.createDataFrame([], "src long, dst long")
     groups = spark.createDataFrame([], "items array<long>")
     run = {
@@ -120,7 +120,7 @@ def test_one_task_kernels_equal_distributed_on_empty_input(spark, family):
                 edges, 4, 150_000, 85, 100, 1_000_000, True, False
             )
             if lt
-            else G.pagerank_int(edges, iters=4, dangling=True, stats={})
+            else G.pagerank_int(edges, iters=4, dangling=True)
         ),
         "triangle": lambda lt: G.triangle_count(edges, local_tier=lt),
         "cooccurrence": lambda lt: G.cooccurrence_triangles(
@@ -135,7 +135,8 @@ def test_one_task_kernels_equal_distributed_on_empty_input(spark, family):
         ),
     }[family]
     loc = sorted(map(repr, run(True).collect()))
-    dist = sorted(map(repr, run(False).collect()))
+    with one_task_off():
+        dist = sorted(map(repr, run(False).collect()))
     assert loc == dist
 
 

@@ -11,7 +11,8 @@ import random
 from pyspark.sql import functions as F
 
 from ergo_uexplorer_spark.operators import graph as G
-from ergo_uexplorer_spark.operators.stats import cooccurrence_pairs
+from ergo_uexplorer_spark.operators import sizing
+from ergo_uexplorer_spark.operators.graph import cooccurrence_pairs
 
 
 def _rows(df):
@@ -97,23 +98,20 @@ def test_pair_tier_links_string_and_big_ids(spark):
     assert ts["local"] is True
 
 
-def test_pair_tier_gate_refuses_high_wedge_volume(spark):
-    """A broadcast-sized edge table over the wedge budget must stay on
+def test_pair_tier_gate_refuses_high_wedge_volume(spark, monkeypatch):
+    """A one-task-sized edge table over the wedge budget must stay on
     the distributed path (and still be correct)."""
     star = spark.createDataFrame(
         [(i, 0) for i in range(60)], "l long, r long"
     )
-    spark.conf.set("spark.graft.pairs.localWedgeBudget", "100")
-    try:
-        ts: dict = {}
-        out = G.common_neighbor_links(star, "l", "r", min_common=1,
-                                      hub_guard="off", tier_stats=ts)
-        rows = out.collect()
-        assert ts["local"] is False
-        assert ts["wedges"] == 60 * 60
-        assert len(rows) == 60 * 59 // 2
-    finally:
-        spark.conf.unset("spark.graft.pairs.localWedgeBudget")
+    monkeypatch.setattr(sizing, "PAIRS_WEDGE_BUDGET", 100)
+    ts: dict = {}
+    out = G.common_neighbor_links(star, "l", "r", min_common=1,
+                                  hub_guard="off", tier_stats=ts)
+    rows = out.collect()
+    assert ts["local"] is False
+    assert ts["wedges"] == 60 * 60
+    assert len(rows) == 60 * 59 // 2
 
 
 def test_pair_tier_respects_hub_cap(spark):
@@ -176,18 +174,15 @@ def test_cooccurrence_pairs_local_equals_distributed(spark):
         assert ts["local"] is True
 
 
-def test_cooccurrence_pairs_gate_refusal(spark):
+def test_cooccurrence_pairs_gate_refusal(spark, monkeypatch):
     star = spark.createDataFrame(
         [(0, i) for i in range(40)], "basket long, item long"
     )
-    spark.conf.set("spark.graft.pairs.localWedgeBudget", "10")
-    try:
-        ts: dict = {}
-        out = cooccurrence_pairs(star, "basket", "item", 1, tier_stats=ts)
-        assert ts["local"] is False
-        assert out.count() == 40 * 39 // 2
-    finally:
-        spark.conf.unset("spark.graft.pairs.localWedgeBudget")
+    monkeypatch.setattr(sizing, "PAIRS_WEDGE_BUDGET", 10)
+    ts: dict = {}
+    out = cooccurrence_pairs(star, "basket", "item", 1, tier_stats=ts)
+    assert ts["local"] is False
+    assert out.count() == 40 * 39 // 2
 
 
 def test_assortativity_regrouped_equals_edge_join_form(spark):

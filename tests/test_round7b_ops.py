@@ -14,9 +14,9 @@ from ergo_uexplorer_spark.operators.cumulative import (
     ordered_prefix,
     time_weighted_stats,
 )
+from ergo_uexplorer_spark.operators.graph import cooccurrence_pairs
 from ergo_uexplorer_spark.operators.quality import fk_audit, profile_columns
 from ergo_uexplorer_spark.operators.stats import (
-    cooccurrence_pairs,
     misra_gries_heavy_hitters,
     pareto_frontier_2d,
 )
