@@ -289,7 +289,7 @@ def _verify_pairs(
     arithmetic — Jaccard (den·shared ≥ num·(na+nb−shared)) or
     containment (den·shared ≥ num·min(na,nb)). The candidate table is
     broadcast only when it is a checkpoint whose bytes prove it bounded;
-    an unpinned one (release=False callers) gets no hint, and AQE may
+    a candidate table that is not checkpointed gets no hint, and AQE may
     still broadcast it at run time."""
     if sizing.broadcast_ok(
         cand, BROADCAST_CAND_MAX_ROWS * sizing.PAIR_ROW_BYTES
@@ -332,7 +332,6 @@ def jaccard_prefix_pairs(
     n: int = 3,
     num: int = 4,
     den: int = 5,
-    release: bool = True,
 ) -> DataFrame:
     """Exact n-gram Jaccard ≥ num/den via LOSSLESS prefix filtering
     (AllPairs / PPJoin candidate generation, Bayardo et al.): sort each
@@ -358,9 +357,7 @@ def jaccard_prefix_pairs(
     per-pair bounded computation with the tiny candidate table
     broadcast. Nothing corpus-sized shuffles at any point.
     """
-    arr = hashed_shingle_arrays(docs, id_col, text_col, n)
-    if release and not arr.isStreaming:
-        arr = pin_corpus_dim(arr, force=False)
+    arr = pin_corpus_dim(hashed_shingle_arrays(docs, id_col, text_col, n))
     # PPJoin+-style LOSSLESS pruning inside the candidate join, before
     # anything shuffles to the distinct (`_ppjoin_conditions`)
     prefix = _prefix_slice_rows(arr, num, den)
@@ -383,14 +380,13 @@ def jaccard_prefix_pairs(
             F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
         )
         .distinct()
-    )
-    if release:
         # staged execution (see minhash_lsh_pairs): the candidate pair
         # list is tiny — checkpoint it so the verify job starts from a
         # bounded RDD instead of re-walking the prefix-join DAG
-        cand = cand.localCheckpoint(eager=True)
+        .localCheckpoint(eager=True)
+    )
     out = _verify_pairs(cand, arr, arr, "doc_a", "doc_b", num, den)
-    return materialize_and_release(out, arr) if release else out
+    return materialize_and_release(out, arr)
 
 
 def jaccard_prefix_stats(
@@ -412,9 +408,7 @@ def jaccard_prefix_stats(
     a cluster-day. Same constants and filter arithmetic as
     `jaccard_prefix_pairs` (shared expressions below), so the funnel is
     exactly what the production operator would do."""
-    arr = pin_corpus_dim(
-        hashed_shingle_arrays(docs, id_col, text_col, n), force=False
-    )
+    arr = pin_corpus_dim(hashed_shingle_arrays(docs, id_col, text_col, n))
     prefix = _prefix_slice_rows(arr, num, den).localCheckpoint(eager=True)
     a, b = prefix.alias("a"), prefix.alias("b")
     cand = (
@@ -509,7 +503,6 @@ def containment_prefix_pairs(
     n: int = 3,
     num: int = 9,
     den: int = 10,
-    release: bool = True,
 ) -> DataFrame:
     """Exact n-gram containment ≥ num/den via LOSSLESS prefix filtering.
 
@@ -536,9 +529,7 @@ def containment_prefix_pairs(
     with no distinct/window stage of its own), and the verify is
     |array_intersect| with the tiny candidate table broadcast.
     """
-    arr = hashed_shingle_arrays(docs, id_col, text_col, n)
-    if release and not arr.isStreaming:
-        arr = pin_corpus_dim(arr, force=False)
+    arr = pin_corpus_dim(hashed_shingle_arrays(docs, id_col, text_col, n))
     nn = F.size("hs")
     plen = (
         nn - F.expr(f"({num} * size(hs) + {den - 1}) div {den}") + F.lit(1)
@@ -576,9 +567,8 @@ def containment_prefix_pairs(
             F.greatest("a.doc_id", "b.doc_id").alias("doc_b"),
         )
         .distinct()
+        .localCheckpoint(eager=True)
     )
-    if release:
-        cand = cand.localCheckpoint(eager=True)
     out = _verify_pairs(
         cand, arr, arr, "doc_a", "doc_b", num, den, containment=True
     ).select(
@@ -589,7 +579,7 @@ def containment_prefix_pairs(
         "nb",
         F.expr("1000 * shared div least(na, nb)").alias("cont_permille"),
     )
-    return materialize_and_release(out, arr) if release else out
+    return materialize_and_release(out, arr)
 
 
 def minhash_signatures(sh_hashed: DataFrame) -> DataFrame:
@@ -670,7 +660,6 @@ def minhash_lsh_pairs(
     n: int = 3,
     num: int = 4,
     den: int = 5,
-    release: bool = True,
 ) -> DataFrame:
     """MinHash→LSH→exact-verify near-dup pairs ≥ num/den Jaccard.
 
@@ -689,15 +678,11 @@ def minhash_lsh_pairs(
     re-analyzing one ~30-stage DAG — the same staged-beats-fused
     A/B result measured in round 5 holds for the array form.
     """
-    arr = hashed_shingle_arrays(docs, id_col, text_col, n)
-    if not release:
-        cand = lsh_candidates(minhash_signatures_from_arrays(arr))
-    else:
-        arr = pin_corpus_dim(arr, force=False)
-        sig = minhash_signatures_from_arrays(arr).localCheckpoint(eager=True)
-        cand = lsh_candidates(sig).localCheckpoint(eager=True)
+    arr = pin_corpus_dim(hashed_shingle_arrays(docs, id_col, text_col, n))
+    sig = minhash_signatures_from_arrays(arr).localCheckpoint(eager=True)
+    cand = lsh_candidates(sig).localCheckpoint(eager=True)
     out = _verify_pairs(cand, arr, arr, "doc_a", "doc_b", num, den)
-    return materialize_and_release(out, arr) if release else out
+    return materialize_and_release(out, arr)
 
 
 def incremental_dedup(
@@ -708,7 +693,6 @@ def incremental_dedup(
     n: int = 3,
     num: int = 4,
     den: int = 5,
-    release: bool = True,
 ) -> DataFrame:
     """Screen an INCOMING batch against an EXISTING corpus: for every new
     document, find whether some base document is a near-dup (n-gram
@@ -730,28 +714,29 @@ def incremental_dedup(
     the arrays — so the operator is self-contained over the driver
     tables.
     """
-    arr_new = hashed_shingle_arrays(new_docs, id_col, text_col, n)
-    arr_base = hashed_shingle_arrays(base_docs, id_col, text_col, n)
-    if release:
-        # staged execution, same rationale as minhash_lsh_pairs: the
-        # signature/candidate stages are doc-dim/collision-sized; the
-        # BASE side is the 100 TB one, so it gets the adaptive pin too
-        arr_new = pin_corpus_dim(arr_new, force=False)
-        arr_base = pin_corpus_dim(arr_base, force=False)
-    sig_new = minhash_signatures_from_arrays(arr_new)
-    sig_base = minhash_signatures_from_arrays(arr_base)
-    if release:
-        sig_new = sig_new.localCheckpoint(eager=True)
-        sig_base = sig_base.localCheckpoint(eager=True)
+    # staged execution, same rationale as minhash_lsh_pairs: the
+    # signature/candidate stages are doc-dim/collision-sized; the BASE
+    # side is the 100 TB one, so it gets the adaptive pin too
+    arr_new = pin_corpus_dim(hashed_shingle_arrays(new_docs, id_col, text_col, n))
+    arr_base = pin_corpus_dim(
+        hashed_shingle_arrays(base_docs, id_col, text_col, n)
+    )
+    sig_new = minhash_signatures_from_arrays(arr_new).localCheckpoint(eager=True)
+    sig_base = minhash_signatures_from_arrays(arr_base).localCheckpoint(
+        eager=True
+    )
     bn = banded_signatures(sig_new).select(
         F.col("doc_id").alias("new_id"), "band", "bsig"
     )
     bb = banded_signatures(sig_base).select(
         F.col("doc_id").alias("base_id"), "band", "bsig"
     )
-    cand = bn.join(bb, ["band", "bsig"]).select("new_id", "base_id").distinct()
-    if release:
-        cand = cand.localCheckpoint(eager=True)
+    cand = (
+        bn.join(bb, ["band", "bsig"])
+        .select("new_id", "base_id")
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
     verified = _verify_pairs(
         cand, arr_new, arr_base, "new_id", "base_id", num, den
     ).select("new_id", "base_id")
@@ -764,7 +749,7 @@ def incremental_dedup(
         )
         .select("doc_id", "dup_of", F.col("dup_of").isNull().alias("keep"))
     )
-    return materialize_and_release(out, arr_new, arr_base) if release else out
+    return materialize_and_release(out, arr_new, arr_base)
 
 
 def incremental_jaccard_exact(
@@ -775,7 +760,6 @@ def incremental_jaccard_exact(
     n: int = 3,
     num: int = 4,
     den: int = 5,
-    release: bool = True,
 ) -> DataFrame:
     """EXACT-threshold corpus-refresh screen — `incremental_dedup`'s
     deterministic twin: for every incoming document, find whether some
@@ -792,11 +776,10 @@ def incremental_jaccard_exact(
     prefix rows ≈ 20% of base shingles at t=0.8 — at true scale they'd
     be a precomputed artifact next to the signature store). base×base
     pairs are never generated: the join is strictly cross-side."""
-    arr_new = hashed_shingle_arrays(new_docs, id_col, text_col, n)
-    arr_base = hashed_shingle_arrays(base_docs, id_col, text_col, n)
-    if release:
-        arr_new = pin_corpus_dim(arr_new, force=False)
-        arr_base = pin_corpus_dim(arr_base, force=False)
+    arr_new = pin_corpus_dim(hashed_shingle_arrays(new_docs, id_col, text_col, n))
+    arr_base = pin_corpus_dim(
+        hashed_shingle_arrays(base_docs, id_col, text_col, n)
+    )
     a = _prefix_slice_rows(arr_new, num, den, "new_id", "new_nn", "new_i")
     b = _prefix_slice_rows(arr_base, num, den, "base_id", "base_nn", "base_i")
     cand = (
@@ -814,9 +797,8 @@ def incremental_jaccard_exact(
         )
         .select("new_id", "base_id")
         .distinct()
+        .localCheckpoint(eager=True)
     )
-    if release:
-        cand = cand.localCheckpoint(eager=True)
     verified = _verify_pairs(
         cand, arr_new, arr_base, "new_id", "base_id", num, den
     ).select("new_id", "base_id")
@@ -829,7 +811,7 @@ def incremental_jaccard_exact(
         )
         .select("doc_id", "dup_of", F.col("dup_of").isNull().alias("keep"))
     )
-    return materialize_and_release(out, arr_new, arr_base) if release else out
+    return materialize_and_release(out, arr_new, arr_base)
 
 
 def dedup_keep_best(
@@ -1178,7 +1160,6 @@ def duplicate_spans(
     n: int = 6,
     min_run: int = 5,
     max_df: int = 50,
-    release: bool = True,
 ) -> DataFrame:
     """Cross-document duplicate SPANS — the token-granular form of
     exact-substring dedup (Lee et al., "Deduplicating Training Data
@@ -1209,13 +1190,12 @@ def duplicate_spans(
         )
         .withColumn("h", portable_hash(F.col("g")))
         .select("doc_id", "pos", "h")
-    )
-    if release:
         # the positioned-gram table feeds the df rollup AND both sides
         # of the self-join — persist so tokenize+shingle+hash runs once
         # (same posture as the jaccard/minhash `sh` table); released via
         # materialize_and_release before returning
-        grams = grams.persist()
+        .persist()
+    )
     persisted = grams
     rare = (
         grams.groupBy("h")
@@ -1261,7 +1241,7 @@ def duplicate_spans(
         .filter(F.col("run_len") >= min_run)
         .select("doc_a", "doc_b", "start_a", "start_b", "run_len")
     )
-    return materialize_and_release(out, persisted) if release else out
+    return materialize_and_release(out, persisted)
 
 
 def dedup_clusters(

@@ -225,7 +225,6 @@ def k_hop_neighbors(
     directed: bool = True,
     num_partitions: int | None = None,
     broadcast_frontier_max_rows: int = 4_000_000,
-    local_tier: bool | None = None,
 ) -> DataFrame:
     """General bounded traversal (the Gremlin `repeat(out()).times(k)`
     family behind Q19's endpoint — StreamExecutor.scala:37-41): BFS
@@ -253,12 +252,11 @@ def k_hop_neighbors(
     side. Returns (id, hops) with hops = BFS level = minimum hop
     distance.
 
-    `local_tier=None` (default) auto-gates the small-graph tier: when
-    the materialized edge table fits `sizing.one_task_ok`, the whole
-    BFS runs in ONE Arrow task (`_k_hop_local_arrow` — the pagerank
-    posture; per-level scheduled jobs dominate tiny-graph cost).
-    Bit-exact against the distributed loop, property-pinned; False
-    forces the distributed loop.
+    Small-graph tier: when the materialized edge table fits
+    `sizing.one_task_ok`, the whole BFS runs in ONE Arrow task
+    (`_k_hop_local_arrow` — the pagerank posture; per-level scheduled
+    jobs dominate tiny-graph cost). Bit-exact against the distributed
+    loop, property-pinned.
 
     `start_ids` may be a SEED FRAME (a one-column DataFrame) instead
     of a Python list (r11 VERDICT #8): at 100 TB a large seed set —
@@ -276,8 +274,6 @@ def k_hop_neighbors(
     from pyspark.sql import types as T
 
     seed_frame = isinstance(start_ids, DataFrame)
-    if seed_frame:
-        local_tier = False
     n = num_partitions or spark.sparkContext.defaultParallelism
     e = edges.select("src", "dst")
     if not directed:
@@ -294,11 +290,12 @@ def k_hop_neighbors(
     # demotes to the shuffled join — from the cached copy, not the
     # source scan — and reused by every subsequent shuffled level.
     e = e.persist()
-    if local_tier is None and not e.isStreaming:
+    use_local = False
+    if not seed_frame and not e.isStreaming:
         e.count()  # materialize: real size for the tier gate (and the
         # cache every level-1 consumer reads anyway)
-        local_tier = sizing.one_task_ok(e)
-    if local_tier:
+        use_local = sizing.one_task_ok(e)
+    if use_local:
         e2, restore = _arrow_ids(e)
         if e2 is not None:
             out = _k_hop_local_arrow(e2, list(start_ids), k).localCheckpoint(
@@ -1133,7 +1130,6 @@ def triangle_count(
     src: str = "src",
     dst: str = "dst",
     orient: str = "id",
-    local_tier: bool | None = None,
     tier_stats: dict | None = None,
 ) -> DataFrame:
     """Total triangle count over an undirected edge list → one row
@@ -1152,12 +1148,12 @@ def triangle_count(
     pins the equality — so the suite uses "id" for the oracle and a
     100 TB caller flips to "degree".
 
-    `local_tier=None` (default) auto-gates the small-graph one-Arrow-
-    task tier (`_triangle_local_arrow`). The gate is TWO-stage and
-    keyed on WEDGE volume, not edge bytes (r11 VERDICT #1): first the
-    free materialized-size check (`sizing.one_task_ok` on the raw edge
-    projection — at 100 TB this refuses instantly and nothing extra
-    runs), then a one-aggregate Σ outdeg² probe of the canonically
+    Small-graph tier: the one-Arrow-task kernel
+    (`_triangle_local_arrow`) runs when its gate admits. The gate is
+    TWO-stage and keyed on WEDGE volume, not edge bytes (r11 VERDICT
+    #1): first the free materialized-size check (`sizing.one_task_ok`
+    on the raw edge projection — at 100 TB this refuses instantly and
+    nothing extra runs), then a one-aggregate Σ outdeg² probe of the canonically
     (value-)oriented distinct edge set against
     `sizing.TRIANGLE_WEDGE_BUDGET` (32M wedge rows ≈ the distributed
     wedge join's row count) — because a one-task-sized edge table can
@@ -1169,17 +1165,18 @@ def triangle_count(
     ENTIRE pipeline (dedup, orientation, count) runs inside the one
     Arrow task — no distributed symmetrize/distinct stages at all.
     Pass `tier_stats={}` to observe the decision in-band: {"local",
-    "wedges", "budget"}. `False` forces the distributed wedge join;
-    both paths are property-pinned equal, including null-endpoint and
-    duplicate-edge inputs."""
+    "wedges", "budget"}. Both paths are property-pinned equal,
+    including null-endpoint and duplicate-edge inputs; a one-task
+    budget of 0 (`sizing.one_task_max_bytes`) forces the distributed
+    wedge join."""
     from .util import materialize_and_release
 
     e_raw = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     budget = sizing.TRIANGLE_WEDGE_BUDGET
     wedge_vol = None
-    use_local = bool(local_tier)
+    use_local = False
     pinned: list[DataFrame] = []
-    if local_tier is None and not e_raw.isStreaming:
+    if not e_raw.isStreaming:
         e_raw = e_raw.persist()
         pinned.append(e_raw)
         e_raw.count()  # materialize: real size for stage-1 of the gate
@@ -1251,7 +1248,6 @@ def cooccurrence_triangles(
     groups: DataFrame,
     items: str = "items",
     min_support: int = 1,
-    local_tier: bool | None = None,
     tier_stats: dict | None = None,
 ) -> DataFrame:
     """Market-basket graph metrics in one shot → a single row
@@ -1265,12 +1261,12 @@ def cooccurrence_triangles(
     The input is the AGGREGATED group dimension, not the fact table —
     the fact-scale `groupBy(basket)` stays a distributed aggregation
     at every scale; what this operator fuses is everything AFTER it.
-    `local_tier=None` auto-gates on the MATERIALIZED size of the
-    item-set table (`sizing.one_task_ok`): when
-    it fits, pair explode → support count → threshold → orientation →
-    triangle count all run in ONE Arrow task (numpy unique/bincount —
-    the distributed fallback pays two more shuffles plus the
-    triangle-gate probes for the same answer on a one-task graph);
+    The tier is gated on the MATERIALIZED size of the item-set table
+    (`sizing.one_task_ok`): when it fits, pair explode → support count
+    → threshold → orientation → triangle count all run in ONE Arrow
+    task (numpy unique/bincount — the distributed fallback pays two
+    more shuffles plus the triangle-gate probes for the same answer on
+    a one-task graph);
     when it does not, the distributed fallback explodes ordered pairs
     from the sorted arrays, counts them with a hash aggregate, and
     delegates to `triangle_count` (which applies its own wedge-volume
@@ -1302,9 +1298,9 @@ def cooccurrence_triangles(
     g = groups.select(F.col(items).alias("items"))
     elem_t = g.schema["items"].dataType.elementType  # type: ignore[attr-defined]
     wide_t = _arrow_id_type(elem_t)
-    use_local = bool(local_tier)
+    use_local = False
     pinned: list[DataFrame] = []
-    if local_tier is None and not g.isStreaming:
+    if not g.isStreaming:
         g = g.persist()
         pinned.append(g)
         g.count()  # materialize: real size for the one-task gate
@@ -1489,7 +1485,6 @@ def connected_components(
     b_col: str = "doc_b",
     max_iter: int = 50,
     num_partitions: int | None = None,
-    local_tier: bool | None = None,
 ) -> DataFrame:
     """Distributed connected components over an undirected pair list →
     (id, component) with component = the minimum member id.
@@ -1509,11 +1504,10 @@ def connected_components(
     decrease, so zero changes is a fixpoint and the loop must terminate —
     and unlike a label-sum probe this works for string ids too).
 
-    `local_tier=None` (default) auto-gates the small-graph tier: when
-    the materialized pair table passes `sizing.one_task_ok`, the whole
-    fixpoint runs as union-find in ONE Arrow task
-    (`_components_local_arrow` — the pagerank posture). Bit-exact
-    against the distributed loop, property-pinned; False forces it."""
+    Small-graph tier: when the materialized pair table passes
+    `sizing.one_task_ok`, the whole fixpoint runs as union-find in ONE
+    Arrow task (`_components_local_arrow` — the pagerank posture).
+    Bit-exact against the distributed loop, property-pinned."""
     u, v = F.col("u"), F.col("v")
     # Every per-round exchange is pinned to an EXPLICIT partition count
     # instead of the session's spark.sql.shuffle.partitions: the label
@@ -1547,11 +1541,9 @@ def connected_components(
                 pairs.count() // 10_000 + 1,
             ),
         )
-    if local_tier is None and not pairs.isStreaming:
-        # pairs is already eagerly checkpointed + counted above — the
-        # size estimate is real; symmetrized edges ≤ 2× pairs bytes
-        local_tier = sizing.one_task_ok(pairs)
-    if local_tier and not pairs.isStreaming:
+    # pairs is already eagerly checkpointed + counted above — the size
+    # is real; symmetrized edges ≤ 2× pairs bytes
+    if not pairs.isStreaming and sizing.one_task_ok(pairs):
         one = pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
         e2, restore = _arrow_ids(one)
         if e2 is not None:
@@ -1716,8 +1708,10 @@ def right_degree_histogram(
     )
 
 
-_HUB_FLOOR_CONF = "spark.graft.linkpred.hubFloor"
-_HUB_RATIO_CONF = "spark.graft.linkpred.hubRatio"
+# `common_neighbor_links`'s auto hub guard: a right node is a hub when
+# its degree exceeds max(HUB_FLOOR, HUB_RATIO × median right degree)
+HUB_FLOOR = 64
+HUB_RATIO = 16
 
 
 def _auto_hub_cap(hist: list, floor: int, ratio: int) -> int:
@@ -1850,7 +1844,6 @@ def common_neighbor_links(
     max_right_degree: int | None = None,
     hub_guard: str = "auto",
     guard_stats: dict | None = None,
-    local_tier: bool | None = None,
     tier_stats: dict | None = None,
 ) -> DataFrame:
     """Link prediction by common-neighbor counting over a bipartite
@@ -1872,10 +1865,9 @@ def common_neighbor_links(
     job — the same hot-key posture as the reference's SuperNodeMvMap
     (SuperNodeMvMap.scala:18). The default `hub_guard="auto"` therefore
     drops only degree OUTLIERS: rights with degree >
-    max(hubFloor, hubRatio × median degree) (conf
-    `spark.graft.linkpred.hubFloor`/`hubRatio`, defaults 64/16). On a
-    skew-free graph no right crosses that line and auto == exact (a
-    test pins this); on a hot-key graph the guard trips and the dropped
+    max(HUB_FLOOR, HUB_RATIO × median degree) (module constants 64 and
+    16). On a skew-free graph no right crosses that line and auto ==
+    exact (a test pins this); on a hot-key graph the guard trips and the dropped
     hubs are logged with their wedge volume. `hub_guard="off"` is the
     exactness escape hatch; an explicit `max_right_degree` cap takes
     precedence over both. Because the auto guard CHANGES results when
@@ -1912,9 +1904,6 @@ def common_neighbor_links(
     cap = max_right_degree
     hist = None
     if cap is None and hub_guard == "auto" and not e.isStreaming:
-        sess = e.sparkSession
-        floor = int(sess.conf.get(_HUB_FLOOR_CONF, "64"))
-        ratio = int(sess.conf.get(_HUB_RATIO_CONF, "16"))
         hist = (
             e.groupBy("r")
             .agg(F.count(F.lit(1)).alias("rd"))
@@ -1923,7 +1912,7 @@ def common_neighbor_links(
             .collect()
         )
         if hist:
-            auto_cap = _auto_hub_cap(hist, floor, ratio)
+            auto_cap = _auto_hub_cap(hist, HUB_FLOOR, HUB_RATIO)
             hubs = [r for r in hist if r["rd"] > auto_cap]
             if guard_stats is not None:
                 guard_stats.update(
@@ -1973,7 +1962,7 @@ def common_neighbor_links(
     # check refuses instantly and the distributed wedge join below is
     # untouched. local == distributed is property-pinned (null
     # endpoints, duplicate edges, string ids, ids past 2^53).
-    use_local = bool(local_tier)
+    use_local = False
     wedge_vol = None
     budget = sizing.PAIRS_WEDGE_BUDGET
     if hist is not None:
@@ -1986,13 +1975,13 @@ def common_neighbor_links(
             for r in hist
             if cap is None or r["rd"] <= cap
         )
-    if local_tier is None and sizing.one_task_ok(e):
+    if sizing.one_task_ok(e):
         if wedge_vol is None:
             wedge_vol = sizing.wedge_volume(e, "r")
         use_local = wedge_vol is not None and wedge_vol <= budget
     if tier_stats is not None:
         tier_stats.update(local=use_local, wedges=wedge_vol, budget=budget)
-    if use_local and not e.isStreaming:
+    if use_local:
         e2, restore = _arrow_ids(e)
         if e2 is not None:
             raw = _pair_count_local_arrow(
@@ -2045,7 +2034,6 @@ def cooccurrence_pairs(
     basket_col: str,
     item_col: str,
     min_support: int,
-    local_tier: bool | None = None,
     tier_stats: dict | None = None,
 ) -> DataFrame:
     """Frequent item PAIRS by basket co-occurrence → (item_a, item_b,
@@ -2061,29 +2049,24 @@ def cooccurrence_pairs(
     set per basket), equi-join on the basket key, item_a < item_b for
     one row per unordered pair.
 
-    `local_tier=None` (default) auto-gates the one-Arrow-task tier: the
-    raw (item, basket) projection is pinned unless its plan estimate
-    already refuses (`sizing.one_task_refused` — at 100 TB file
+    The one-Arrow-task tier is gated: the raw (item, basket) projection
+    is pinned unless its plan estimate already refuses (`sizing.one_task_refused` — at 100 TB file
     statistics refuse and the lazy distributed plan below is returned
     untouched), then its pinned bytes must pass `sizing.one_task_ok`
     and a one-aggregate Σ per-basket-rows² probe over the RAW rows (an
     overestimate of the deduped wedge volume) must stay within
     `sizing.PAIRS_WEDGE_BUDGET`. When taken, the WHOLE pipeline —
     distinct, a-priori prune, pair expansion, support threshold — runs
-    inside `_pair_count_local_arrow`. Pass `tier_stats={}` to observe
-    {"local", "wedges", "budget"}; False forces the distributed path
-    (property-pinned equal)."""
+    inside `_pair_count_local_arrow`, property-pinned equal to the
+    distributed path. Pass `tier_stats={}` to observe {"local",
+    "wedges", "budget"}."""
     e_raw = df.select(
         F.col(item_col).alias("l"), F.col(basket_col).alias("r")
     )
-    use_local = bool(local_tier)
+    use_local = False
     wedge_vol = None
     budget = sizing.PAIRS_WEDGE_BUDGET
-    if (
-        local_tier is None
-        and not e_raw.isStreaming
-        and not sizing.one_task_refused(e_raw)
-    ):
+    if not e_raw.isStreaming and not sizing.one_task_refused(e_raw):
         # probe, kernel AND the distributed fallback all re-read these
         # rows; unpinned, each re-executed the source scan (r12: auto
         # path 3.6 s vs 1.6 s forced-local at sf0.1)
@@ -2093,7 +2076,7 @@ def cooccurrence_pairs(
             use_local = wedge_vol is not None and wedge_vol <= budget
     if tier_stats is not None:
         tier_stats.update(local=use_local, wedges=wedge_vol, budget=budget)
-    if use_local and not e_raw.isStreaming:
+    if use_local:
         e2, restore = _arrow_ids(e_raw)
         if e2 is not None:
             raw = _pair_count_local_arrow(
@@ -2221,7 +2204,6 @@ def kcore(
     src: str = "a",
     dst: str = "b",
     max_rounds: int = 10,
-    local_tier: bool | None = None,
 ) -> DataFrame:
     """k-core decomposition membership via iterative peeling →
     (v, deg): the maximal subgraph in which every node keeps degree
@@ -2241,11 +2223,10 @@ def kcore(
     truncating, because a truncated peel returns a SUPERSET of the
     core. Input is one row per undirected edge; mirrored internally.
 
-    `local_tier=None` (default) auto-gates the small-graph tier: when
-    the materialized edge table passes `sizing.one_task_ok`, the whole
-    peel runs in ONE Arrow task (`_kcore_local_arrow`, the pagerank
-    posture) — bit-exact, property-pinned. False forces the
-    distributed peel (tests use this to pin local == distributed)."""
+    Small-graph tier: when the materialized edge table passes
+    `sizing.one_task_ok`, the whole peel runs in ONE Arrow task
+    (`_kcore_local_arrow`, the pagerank posture) — bit-exact,
+    property-pinned against the distributed peel."""
     one = (
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .distinct()
@@ -2263,18 +2244,16 @@ def kcore(
     # driver latency on local mode regardless of data size). The
     # mirrored multiset is exactly 2× the one-direction rows.
     single = 2 * one.count() <= 100_000
-    if local_tier is None:
-        # the one-task tier is gated on BYTES (the local-tier budget),
-        # not the stricter 100k single-partition row gate: a 500k-edge
-        # peel is still tens of MB — trivially one task's work, while
-        # the distributed loop pays per-round scheduled jobs for it.
-        # The kernel ingests the ONE-DIRECTION table and mirrors in
-        # numpy, so the budget compares that table's materialized
-        # bytes directly (no ×2) — deserialized checkpoint rows already
-        # run ~3× columnar, erring conservative (zyf1's 599k-edge graph
-        # reads 50 MB here vs ~15 MB columnar).
-        local_tier = sizing.one_task_ok(one)
-    if local_tier:
+    # the one-task tier is gated on BYTES (the local-tier budget), not
+    # the stricter 100k single-partition row gate: a 500k-edge peel is
+    # still tens of MB — trivially one task's work, while the
+    # distributed loop pays per-round scheduled jobs for it. The kernel
+    # ingests the ONE-DIRECTION table and mirrors in numpy, so the
+    # budget compares that table's materialized bytes directly (no ×2)
+    # — deserialized checkpoint rows already run ~3× columnar, erring
+    # conservative (zyf1's 599k-edge graph reads 50 MB here vs ~15 MB
+    # columnar).
+    if sizing.one_task_ok(one):
         e2, restore = _arrow_ids(one)
         if e2 is not None:
             out = _kcore_local_arrow(e2, k, max_rounds).localCheckpoint(

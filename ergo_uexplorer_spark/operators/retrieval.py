@@ -70,7 +70,7 @@ def _bm25_prepare(
     columns (no broadcast exchange, no checkpoint barrier — the same
     bounded driver-control read the IVF seeds use), and that one
     stats job doubles as the pin's cache-building action
-    (`pin_corpus_dim(force=False)`), collapsing the former
+    (`pin_corpus_dim` is lazy), collapsing the former
     pin-count + stats-checkpoint pair of jobs into one. Streaming
     frames keep the broadcast-join form (no driver read mid-plan)."""
     base = docs.select(F.col(id_col), tokens(F.col(text_col)).alias("__t"))
@@ -81,7 +81,7 @@ def _bm25_prepare(
     )
     streaming = narrow.isStreaming
     if not streaming:
-        narrow = pin_corpus_dim(narrow, force=False)
+        narrow = pin_corpus_dim(narrow)
         row = narrow.agg(
             F.count(F.lit(1)).alias("__n"), F.sum("__dl").alias("__l")
         ).first()

@@ -108,9 +108,7 @@ def write_signature_store(
     # derive from the pinned arrays without re-tokenizing — the store's
     # ON-DISK format stays row-form (shard-pruned equi-joins at screen
     # time), only the derivation changed.
-    arr = pin_corpus_dim(
-        hashed_shingle_arrays(docs, id_col, text_col, n), force=False
-    )
+    arr = pin_corpus_dim(hashed_shingle_arrays(docs, id_col, text_col, n))
     bands = banded_signatures(minhash_signatures_from_arrays(arr))
     bands.write.mode("overwrite").parquet(f"{path}/bands/batch={batch}")
     sh = arr.select("doc_id", F.explode("hs").alias("h"))
@@ -205,9 +203,7 @@ def incremental_dedup_from_store(
             f"signature store at {path} uses hash config {fp}, "
             f"engine has {_hash_fingerprint()}"
         )
-    arr_new = pin_corpus_dim(
-        hashed_shingle_arrays(new_docs, id_col, text_col, n), force=False
-    )
+    arr_new = pin_corpus_dim(hashed_shingle_arrays(new_docs, id_col, text_col, n))
     sh_new = arr_new.select("doc_id", F.explode("hs").alias("h"))
     sig_new = minhash_signatures_from_arrays(arr_new).localCheckpoint(
         eager=True

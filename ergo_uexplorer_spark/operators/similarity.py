@@ -22,6 +22,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .util import materialize_and_release
+
 
 # ---------------------------------------------------------------------------
 # hyperplane-LSH constants (seeded ±1 planes, shared with the SQL oracle)
@@ -290,8 +292,6 @@ def near_dup_pairs(
     threshold: float,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    release: bool = True,
-    banding: str = "vectorized",
 ) -> DataFrame:
     """Embedding-cosine near-dup pairs (a < b, cos ≥ threshold) via
     banded hyperplane-LSH bucketing + exact verify — same composition as
@@ -324,7 +324,7 @@ def near_dup_pairs(
     # oracle's banding mirrors exactly as before.
     allb = e.select(
         "vid",
-        F.posexplode(_nd_all_buckets(F.col("v"), banding)).alias("band", "bkt"),
+        F.posexplode(_nd_all_buckets(F.col("v"))).alias("band", "bkt"),
     )
     ba, bb = allb.alias("a"), allb.alias("b")
     cand = (
@@ -336,12 +336,11 @@ def near_dup_pairs(
         )
         .select(F.col("a.vid").alias("vec_a"), F.col("b.vid").alias("vec_b"))
         .distinct()
-    )
-    if release:
         # staged execution (see dedup.minhash_lsh_pairs): candidate id
         # pairs are tiny — checkpoint so the verify join starts from a
         # bounded RDD rather than re-walking the banding DAG twice
-        cand = cand.localCheckpoint(eager=True)
+        .localCheckpoint(eager=True)
+    )
     va = e.select(
         F.col("vid").alias("vec_a"), F.col("v").alias("va"), F.col("norm").alias("na")
     )
@@ -357,10 +356,6 @@ def near_dup_pairs(
         .filter(F.col("cos_sim") >= threshold)
         .select("vec_a", "vec_b", "cos_sim")
     )
-    if not release:
-        return out
-    from .util import materialize_and_release
-
     return materialize_and_release(out, e)
 
 
@@ -401,7 +396,6 @@ def semantic_dedup(
     threshold: float,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    release: bool = True,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, "SemDeDup: Data-efficient learning
     at web-scale through semantic deduplication"): cluster-scoped
@@ -429,9 +423,8 @@ def semantic_dedup(
             F.col("centroid_id").alias("cell"),
         )
         .withColumn("norm", F.sqrt(dot(F.col("v"), F.col("v"))))
+        .persist()
     )
-    if release:
-        cells = cells.persist()
     a = cells.select(
         F.col("vid").alias("vec_a"),
         F.col("v").alias("va"),
@@ -464,10 +457,6 @@ def semantic_dedup(
             F.col("dup").isNull().alias("keep"),
         )
     )
-    if not release:
-        return out
-    from .util import materialize_and_release
-
     return materialize_and_release(out, cells)
 
 

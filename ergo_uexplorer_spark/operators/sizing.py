@@ -5,11 +5,13 @@ distributed plan.
 Measurements (driver-side, no Spark job):
 
   * `checkpoint_bytes` — block-manager bytes of a `localCheckpoint`;
+  * `cache_bytes` — the CacheManager's measured size of a persisted,
+    computed frame;
   * `plan_bytes` — Catalyst's optimized-plan size estimate;
   * `free_storage_bytes` — storage memory free across executors;
   * `input_bytes` — the size of the files a frame scans.
 
-The first three go through private JVM APIs (`_jdf`/`_jsc`); a Spark
+The first four go through private JVM APIs (`_jdf`/`_jsc`); a Spark
 upgrade can break any of them, and a broken probe returns None or 0
 without an error, which turns every tier it gates off. A Tier-1 test
 asserts that each returns a positive number on the installed PySpark.
@@ -167,14 +169,27 @@ def input_bytes(df: DataFrame) -> int:
     return total
 
 
-def _is_loaded_cache(df: DataFrame) -> bool:
+def cache_bytes(df: DataFrame) -> int | None:
+    """Measured size of `df`'s entry in the session CacheManager once its
+    columnar buffers are built (persisted and computed). None when `df`
+    is not cached, not yet computed, or the internal API drifts.
+
+    The lookup matches `df`'s plan against the cache, so it does not
+    depend on call order: reading the frame's own optimized plan would
+    miss a cache added after that plan was first computed (Spark keeps
+    the first one), e.g. a plan-size probe before `persist()`."""
     try:
-        rel = df._jdf.queryExecution().optimizedPlan()
-        return rel.getClass().getName().endswith(
-            "InMemoryRelation"
-        ) and bool(rel.cacheBuilder().isCachedColumnBuffersLoaded())
+        cm = df.sparkSession._jsparkSession.sharedState().cacheManager()
+        found = cm.lookupCachedData(df._jdf)
+        if found.isEmpty():
+            return None
+        builder = found.get().cachedRepresentation().cacheBuilder()
+        if not builder.isCachedColumnBuffersLoaded():
+            return None
+        size = int(builder.sizeInBytesStats().value())
+        return size if size > 0 else None
     except Exception:  # noqa: BLE001 — py4j/internal API drift
-        return False
+        return None
 
 
 def materialized_bytes(df: DataFrame) -> int | None:
@@ -184,9 +199,7 @@ def materialized_bytes(df: DataFrame) -> int | None:
     if df.isStreaming:
         return None
     size = checkpoint_bytes(df)
-    if size is None and _is_loaded_cache(df):
-        size = plan_bytes(df)
-    return size
+    return size if size is not None else cache_bytes(df)
 
 
 def is_checkpoint_backed(df: DataFrame) -> bool:

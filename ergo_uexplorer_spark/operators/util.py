@@ -34,12 +34,12 @@ def local_frame(
     return spark.createDataFrame(table, schema)
 
 
-def pin_corpus_dim(df: DataFrame, force: bool = True) -> DataFrame:
-    """Eagerly pin a reduced-but-CORPUS-sized table (doc-dim hash
-    arrays, per-doc token stats) so multi-stage candidate/verify
-    operators derive every stage from ONE materialization.
+def pin_corpus_dim(df: DataFrame) -> DataFrame:
+    """Pin a reduced-but-CORPUS-sized table (doc-dim hash arrays,
+    per-doc token stats) so multi-stage candidate/verify operators
+    derive every stage from ONE materialization.
 
-    Storage is the SQL columnar cache (`persist` + forced build), not a
+    Storage is the SQL columnar cache (`persist`), not a
     `localCheckpoint`: cached batches are compressed columnar buffers
     that unroll in bounded ~10k-row chunks and spill to disk under
     pressure — the deserialized row blocks the old checkpoint pin held
@@ -50,7 +50,11 @@ def pin_corpus_dim(df: DataFrame, force: bool = True) -> DataFrame:
     once the operator's output is materialized, so repeated dedup calls
     in one session no longer accumulate corpus-sized blocks.
 
-    The storage level is `sizing.pin_serialized`'s choice."""
+    The pin is lazy: the caller's first action builds the cache. Every
+    caller's first action is itself a full pass over the pin (a stats
+    aggregate, a signature or candidate checkpoint), so pinning costs
+    no extra scheduled job (r13). The storage level is
+    `sizing.pin_serialized`'s choice."""
     from pyspark.storagelevel import StorageLevel
 
     level = (
@@ -58,13 +62,7 @@ def pin_corpus_dim(df: DataFrame, force: bool = True) -> DataFrame:
         if sizing.pin_serialized(df)
         else StorageLevel.MEMORY_AND_DISK_DESER
     )
-    df = df.persist(level)
-    if force:
-        df.count()  # force the cache build (the checkpoint pin was eager)
-    # force=False: the CALLER's first action builds the cache — use when
-    # that action is itself a full pass over the pin (e.g. a stats
-    # aggregate), so pinning costs no extra scheduled job (r13)
-    return df
+    return df.persist(level)
 
 
 def materialize_and_release(result: DataFrame, *cached: DataFrame) -> DataFrame:

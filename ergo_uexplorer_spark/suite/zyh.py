@@ -169,7 +169,7 @@ def zyh2_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ncount aggregate disappears. Signatures from arrays are
     # bit-identical to the groupBy form (same hash family over the same
     # distinct sets — dedup.minhash_signatures_from_arrays docstring).
-    arr = pin_corpus_dim(D.hashed_shingle_arrays(docs), force=False)
+    arr = pin_corpus_dim(D.hashed_shingle_arrays(docs))
     sig = D.minhash_signatures_from_arrays(arr).localCheckpoint(eager=True)
     cand = D.lsh_candidates(sig).localCheckpoint(eager=True)
 

@@ -30,3 +30,24 @@ def one_task_off(spark):
             spark.conf.unset(LOCAL_TIER_MAX_BYTES_CONF)
 
     return off
+
+
+@pytest.fixture
+def kernel_calls(monkeypatch):
+    """`kernel_calls(name)` wraps the one-task kernel `graph.<name>` for
+    the test's duration and returns a list that gets one entry per call,
+    so a test can assert that the gate admitted its input."""
+    from ergo_uexplorer_spark.operators import graph as G
+
+    def record(name: str) -> list:
+        calls: list = []
+        kernel = getattr(G, name)
+
+        def wrapped(*args, **kwargs):
+            calls.append(name)
+            return kernel(*args, **kwargs)
+
+        monkeypatch.setattr(G, name, wrapped)
+        return calls
+
+    return record

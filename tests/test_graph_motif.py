@@ -277,7 +277,7 @@ def test_connected_components_basic(spark):
         | {100 + i: 100 for i in range(10)}
     )
 
-def test_connected_components_raises_on_non_convergence(spark):
+def test_connected_components_raises_on_non_convergence(spark, one_task_off):
     """ADVICE r4: silently returning un-converged labels under-merges
     clusters. A long path graph with max_iter too small must raise, not
     return partial components."""
@@ -292,8 +292,8 @@ def test_connected_components_raises_on_non_convergence(spark):
     # diameter), and since r12 the gate actually fires on small inputs
     # (checkpoint-backed sizes are now visible to it), so force the
     # distributed path for the non-convergence pin
-    with _pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(df, max_iter=2, local_tier=False)
+    with one_task_off(), _pytest.raises(RuntimeError, match="did not converge"):
+        connected_components(df, max_iter=2)
     ok = connected_components(df, max_iter=20)
     assert {r["component"] for r in ok.collect()} == {0}
     # the auto-gated tier on the same tiny graph is exact even at a

@@ -63,11 +63,44 @@ def test_bucketed_ann_plans_are_equijoins(spark, name):
     assert "BroadcastNestedLoopJoin" not in plan, f"{name}: nested-loop join"
 
 
-def _near_dup_raw_plans(spark):
-    """The three candidate/verify operators eagerly checkpoint their
-    (small) output by default so session-lifetime caches get released —
-    which also hides the join plan. Build them with release=False here
-    so the gate still sees the real candidate-generation plan."""
+@pytest.fixture
+def checkpointed_plans(monkeypatch):
+    """Every frame `localCheckpoint`ed during the test, as its formatted
+    plan. Staged operators checkpoint each stage (signatures,
+    candidates) and their output, which hides those joins from the
+    final plan; this list is where a plan gate sees them."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    from ergo_uexplorer_spark.plans.explain import formatted_plan
+
+    plans: list[str] = []
+    local_checkpoint = DataFrame.localCheckpoint
+
+    def recording(self, *args, **kwargs):
+        plans.append(formatted_plan(self))
+        return local_checkpoint(self, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrame, "localCheckpoint", recording)
+    return plans
+
+
+def _assert_no_product(stages: list[str], df, name: str) -> None:
+    """No CartesianProduct and no nested-loop join in any checkpointed
+    stage or in the final plan; at least one stage was recorded, so a
+    recorder that catches nothing fails."""
+    from ergo_uexplorer_spark.plans.explain import formatted_plan
+
+    assert stages, f"{name}: no checkpointed stage recorded"
+    for plan in [*stages, formatted_plan(df)]:
+        assert "CartesianProduct" not in plan, f"{name}: cartesian product"
+        assert "BroadcastNestedLoopJoin" not in plan, f"{name}: nested-loop join"
+
+
+def _near_dup_raw_plans(spark, name: str):
+    """Build near-dup entry `name` with its operators' defaults — the
+    plans the registry really runs. The candidate/verify operators
+    checkpoint their stages and their output, so the joins show up in
+    the `checkpointed_plans` recorder, not in the returned frame."""
     from ergo_uexplorer_spark.operators.dedup import (
         jaccard_prefix_pairs,
         minhash_lsh_pairs,
@@ -78,17 +111,19 @@ def _near_dup_raw_plans(spark):
 
     docs, emb = load(spark, SF_DIR, "documents", "embeddings")
     return {
-        "zz_d02_dedup_ngram_jaccard": jaccard_prefix_pairs(
-            docs, num=4, den=5, release=False
+        "zz_d02_dedup_ngram_jaccard": lambda: jaccard_prefix_pairs(
+            docs, num=4, den=5
         ),
-        "zz_d03_dedup_minhash_lsh": minhash_lsh_pairs(
-            docs, num=4, den=5, release=False
+        "zz_d03_dedup_minhash_lsh": lambda: minhash_lsh_pairs(
+            docs, num=4, den=5
         ),
-        "zz_d04_dedup_simhash": REGISTRY["zz_d04_dedup_simhash"].fn(spark, SF_DIR),
-        "zz_d05_dedup_embedding_cosine": near_dup_pairs(
-            emb, threshold=_NEAR_DUP_T, release=False
+        "zz_d04_dedup_simhash": lambda: REGISTRY["zz_d04_dedup_simhash"].fn(
+            spark, SF_DIR
         ),
-    }
+        "zz_d05_dedup_embedding_cosine": lambda: near_dup_pairs(
+            emb, threshold=_NEAR_DUP_T
+        ),
+    }[name]()
 
 
 @pytest.mark.parametrize(
@@ -100,16 +135,12 @@ def _near_dup_raw_plans(spark):
         "zz_d05_dedup_embedding_cosine",
     ],
 )
-def test_near_dup_plans_are_bucketed(spark, name):
+def test_near_dup_plans_are_bucketed(spark, checkpointed_plans, name):
     """The registered near-dup plans are candidate-join shaped: no
     CartesianProduct and no nested-loop join of any kind — pair
     generation must be an equi-join on a bucket/block/prefix key."""
-    from ergo_uexplorer_spark.plans.explain import formatted_plan
-
-    df = _near_dup_raw_plans(spark)[name]
-    plan = formatted_plan(df)
-    assert "CartesianProduct" not in plan, f"{name}: cartesian product"
-    assert "BroadcastNestedLoopJoin" not in plan, f"{name}: nested-loop join"
+    df = _near_dup_raw_plans(spark, name)
+    _assert_no_product(checkpointed_plans, df, name)
 
 
 def test_decontaminate_broadcasts_eval_grams(spark):
@@ -215,45 +246,35 @@ def test_pagerank_auto_gate_demotes_oversized_rank_table(
     assert "BroadcastHashJoin" in forced
 
 
-def test_incremental_dedup_plan_is_bucketed(spark):
+def test_incremental_dedup_plan_is_bucketed(spark, checkpointed_plans):
     """z21: cross-side candidate generation must be an equi-join on
     (band, bsig) — no cartesian / nested-loop anywhere, same gate as the
-    one-shot near-dup family (release=False exposes the live plan)."""
+    one-shot near-dup family (the recorder sees the staged joins)."""
     from ergo_uexplorer_spark.operators.curation import sample_bucket
     from ergo_uexplorer_spark.operators.dedup import incremental_dedup
-    from ergo_uexplorer_spark.plans.explain import formatted_plan
     from ergo_uexplorer_spark.suite.base import load
     from ergo_uexplorer_spark.suite.dedup import _INCR_RATE, _INCR_SALT
 
     (docs,) = load(spark, SF_DIR, "documents")
     bucket = sample_bucket(F.col("doc_id"), _INCR_SALT)
     df = incremental_dedup(
-        docs.filter(bucket < _INCR_RATE),
-        docs.filter(bucket >= _INCR_RATE),
-        release=False,
+        docs.filter(bucket < _INCR_RATE), docs.filter(bucket >= _INCR_RATE)
     )
-    plan = formatted_plan(df)
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
+    _assert_no_product(checkpointed_plans, df, "incremental_dedup")
 
 
-def test_semantic_dedup_plan_is_cell_scoped(spark):
+def test_semantic_dedup_plan_is_cell_scoped(spark, checkpointed_plans):
     """z23: within-cell pairing must be an equi-join on the cell id —
     no cartesian / nested-loop product over the vector table."""
     from ergo_uexplorer_spark.operators.similarity import (
         FIXED_CENTROIDS,
         semantic_dedup,
     )
-    from ergo_uexplorer_spark.plans.explain import formatted_plan
     from ergo_uexplorer_spark.suite.base import load
 
     (emb,) = load(spark, SF_DIR, "embeddings")
-    df = semantic_dedup(
-        emb, list(FIXED_CENTROIDS), threshold=0.4, release=False
-    )
-    plan = formatted_plan(df)
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
+    df = semantic_dedup(emb, list(FIXED_CENTROIDS), threshold=0.4)
+    _assert_no_product(checkpointed_plans, df, "semantic_dedup")
 
 
 def test_quality_floor_broadcasts_floors(spark):

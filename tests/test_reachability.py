@@ -183,3 +183,16 @@ def test_no_operator_imports_a_private_name_of_another():
     it belongs in a module both import by its public name (sizing,
     util), not reached into across modules."""
     assert private_cross_imports() == []
+
+
+def test_only_sizing_names_a_graft_conf():
+    """The one remaining package conf is the one-task budget in
+    `operators/sizing.py`. A knob is a constant unless it has a value
+    in use outside tests, so a new `spark.graft.` conf elsewhere fails
+    here."""
+    named = sorted(
+        str(f.relative_to(PKG))
+        for f in PKG.rglob("*.py")
+        if "spark.graft." in f.read_text()
+    )
+    assert named == ["operators/sizing.py"]

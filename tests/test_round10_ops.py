@@ -6,6 +6,7 @@ a corrupted twin of sf0.001 (see tests/dirty.py for why)."""
 import pytest
 from pyspark.sql import functions as F
 
+from ergo_uexplorer_spark.operators import graph as G
 from ergo_uexplorer_spark.operators.graph import (
     _auto_hub_cap,
     common_neighbor_links,
@@ -49,7 +50,7 @@ def test_hub_guard_noop_on_skew_free(bipartite):
     assert auto == exact and auto
 
 
-def test_hub_guard_trips_on_supernode(spark):
+def test_hub_guard_trips_on_supernode(spark, monkeypatch):
     """One right shared by hundreds of lefts (the exchange-hot-wallet
     shape) is dropped by auto; the result equals the explicit manual
     cap, and the off escape hatch keeps the exact (hub-inclusive)
@@ -57,42 +58,33 @@ def test_hub_guard_trips_on_supernode(spark):
     normal = [(left, r) for r in range(1, 21) for left in (r, r + 1, r + 2)]
     hub = [(left, 999) for left in range(1, 201)]
     edges = spark.createDataFrame(normal + hub, "l long, r long")
-    spark.conf.set("spark.graft.linkpred.hubFloor", "16")
-    try:
-        auto = _links(common_neighbor_links(edges, "l", "r", min_common=1))
-        manual = _links(
-            common_neighbor_links(
-                edges, "l", "r", min_common=1, max_right_degree=48
-            )
-        )
-        exact = _links(
-            common_neighbor_links(edges, "l", "r", min_common=1,
-                                  hub_guard="off")
-        )
-        # median right degree is 3 → cap = max(16, 48) = 48: the hub
-        # (degree 200) is dropped, every normal right kept
-        assert auto == manual
-        assert auto != exact
-        # exact includes every hub-mediated pair: 200 lefts choose 2
-        assert len(exact) >= 200 * 199 // 2
-    finally:
-        spark.conf.unset("spark.graft.linkpred.hubFloor")
+    monkeypatch.setattr(G, "HUB_FLOOR", 16)
+    auto = _links(common_neighbor_links(edges, "l", "r", min_common=1))
+    manual = _links(
+        common_neighbor_links(edges, "l", "r", min_common=1, max_right_degree=48)
+    )
+    exact = _links(
+        common_neighbor_links(edges, "l", "r", min_common=1, hub_guard="off")
+    )
+    # median right degree is 3 → cap = max(16, 48) = 48: the hub
+    # (degree 200) is dropped, every normal right kept
+    assert auto == manual
+    assert auto != exact
+    # exact includes every hub-mediated pair: 200 lefts choose 2
+    assert len(exact) >= 200 * 199 // 2
 
 
-def test_hub_guard_degrees_consistent_with_guarded_graph(spark):
+def test_hub_guard_degrees_consistent_with_guarded_graph(spark, monkeypatch):
     """Under the guard, deg_a/deg_b count the GUARDED graph so the
     caller's Jaccard (common / (deg_a + deg_b − common)) stays within
     [0, 1] — mixing exact degrees with guarded commons would not."""
     normal = [(1, r) for r in range(1, 4)] + [(2, r) for r in range(1, 4)]
     hub = [(left, 999) for left in range(1, 100)]
     edges = spark.createDataFrame(normal + hub, "l long, r long")
-    spark.conf.set("spark.graft.linkpred.hubFloor", "8")
-    try:
-        out = common_neighbor_links(edges, "l", "r", min_common=1).collect()
-        row = {(r["node_a"], r["node_b"]): r for r in out}[(1, 2)]
-        assert (row["common"], row["deg_a"], row["deg_b"]) == (3, 3, 3)
-    finally:
-        spark.conf.unset("spark.graft.linkpred.hubFloor")
+    monkeypatch.setattr(G, "HUB_FLOOR", 8)
+    out = common_neighbor_links(edges, "l", "r", min_common=1).collect()
+    row = {(r["node_a"], r["node_b"]): r for r in out}[(1, 2)]
+    assert (row["common"], row["deg_a"], row["deg_b"]) == (3, 3, 3)
 
 
 def test_auto_hub_cap_median_by_right_count():

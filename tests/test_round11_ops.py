@@ -98,37 +98,32 @@ def test_quarantine_twin_matches_strict_on_clean_data(spark):
     ) == (strict_c[0]["revenue_cents"], strict_c[0]["n_lines"], 0, 0)
 
 
-def test_hub_guard_stats_surfaced_in_band(spark):
+def test_hub_guard_stats_surfaced_in_band(spark, monkeypatch):
     """r10 ADVICE: the auto hub guard changes results when it trips, so
     callers must be able to observe it without reading logs — the
     guard_stats out-dict reports tripped/cap/dropped volumes on both
     the tripped and the silent path."""
-    from ergo_uexplorer_spark.operators.graph import common_neighbor_links
+    from ergo_uexplorer_spark.operators import graph as G
 
     normal = [(left, r) for r in range(1, 21) for left in (r, r + 1, r + 2)]
     hub = [(left, 999) for left in range(1, 201)]
     edges = spark.createDataFrame(normal + hub, "l long, r long")
-    spark.conf.set("spark.graft.linkpred.hubFloor", "16")
-    try:
-        gs: dict = {}
-        common_neighbor_links(
-            edges, "l", "r", min_common=1, guard_stats=gs
-        ).collect()
-        assert gs["tripped"] is True
-        assert gs["cap"] == 48
-        assert gs["dropped_rights"] == 1
-        assert gs["dropped_wedges"] == 200 * 200
-        assert gs["total_wedges"] > gs["dropped_wedges"]
+    monkeypatch.setattr(G, "HUB_FLOOR", 16)
+    gs: dict = {}
+    G.common_neighbor_links(edges, "l", "r", min_common=1, guard_stats=gs).collect()
+    assert gs["tripped"] is True
+    assert gs["cap"] == 48
+    assert gs["dropped_rights"] == 1
+    assert gs["dropped_wedges"] == 200 * 200
+    assert gs["total_wedges"] > gs["dropped_wedges"]
 
-        silent: dict = {}
-        skew_free = spark.createDataFrame(normal, "l long, r long")
-        common_neighbor_links(
-            skew_free, "l", "r", min_common=1, guard_stats=silent
-        ).collect()
-        assert silent["tripped"] is False
-        assert silent["dropped_rights"] == 0
-    finally:
-        spark.conf.unset("spark.graft.linkpred.hubFloor")
+    silent: dict = {}
+    skew_free = spark.createDataFrame(normal, "l long, r long")
+    G.common_neighbor_links(
+        skew_free, "l", "r", min_common=1, guard_stats=silent
+    ).collect()
+    assert silent["tripped"] is False
+    assert silent["dropped_rights"] == 0
 
 
 def test_pagerank_local_arrow_equals_distributed(spark, one_task_off):
@@ -264,7 +259,7 @@ def _rand_edges(rng, n_rows, n_nodes, null_rate=0.05):
     return [(nid(), nid()) for _ in range(n_rows)]
 
 
-def test_k_hop_local_arrow_equals_distributed(spark):
+def test_k_hop_local_arrow_equals_distributed(spark, one_task_off, kernel_calls):
     """The one-Arrow-task BFS must equal the distributed loop as a
     MULTISET (the distributed form re-admits a null dst at every level
     it appears, and keeps duplicate seed rows — quirks included)."""
@@ -288,25 +283,29 @@ def test_k_hop_local_arrow_equals_distributed(spark):
         # narrow integral ids exercise the upcast + cast-back lane
         ([(1, 2), (2, 3), (3, None)], "src int, dst int", [1], 3),
     ]
+    calls = kernel_calls("_k_hop_local_arrow")
     for rows, schema, starts, k in cases:
         edges = spark.createDataFrame(rows, schema)
         for directed in (True, False):
+            n_calls = len(calls)
             loc = Counter(
                 (r["id"], r["hops"])
                 for r in k_hop_neighbors(
-                    edges, starts, k, directed=directed, local_tier=True
+                    edges, starts, k, directed=directed
                 ).collect()
             )
-            dist = Counter(
-                (r["id"], r["hops"])
-                for r in k_hop_neighbors(
-                    edges, starts, k, directed=directed, local_tier=False
-                ).collect()
-            )
+            with one_task_off():
+                dist = Counter(
+                    (r["id"], r["hops"])
+                    for r in k_hop_neighbors(
+                        edges, starts, k, directed=directed
+                    ).collect()
+                )
+            assert len(calls) == n_calls + 1, (schema, directed)
             assert loc == dist, (schema, starts, directed)
 
 
-def test_kcore_local_arrow_equals_distributed(spark):
+def test_kcore_local_arrow_equals_distributed(spark, one_task_off, kernel_calls):
     """One-task peel == distributed peel, nulls included (a null
     endpoint counts toward round-1 degrees but its edges never survive
     a semi-join)."""
@@ -329,21 +328,23 @@ def test_kcore_local_arrow_equals_distributed(spark):
         # narrow ints widen to long for the kernel and cast back
         (ring + [(4, None)], "a smallint, b smallint"),
     ]
+    calls = kernel_calls("_kcore_local_arrow")
     for rows, schema in cases:
         edges = spark.createDataFrame(rows, schema)
         for k in (1, 2, 3):
-            loc = sorted(
-                (r["v"], r["deg"])
-                for r in kcore(edges, k, local_tier=True).collect()
-            )
-            dist = sorted(
-                (r["v"], r["deg"])
-                for r in kcore(edges, k, local_tier=False).collect()
-            )
+            n_calls = len(calls)
+            loc = sorted((r["v"], r["deg"]) for r in kcore(edges, k).collect())
+            with one_task_off():
+                dist = sorted(
+                    (r["v"], r["deg"]) for r in kcore(edges, k).collect()
+                )
+            assert len(calls) == n_calls + 1, (schema, k)
             assert loc == dist, (schema, k)
 
 
-def test_components_local_arrow_equals_distributed(spark):
+def test_components_local_arrow_equals_distributed(
+    spark, one_task_off, kernel_calls
+):
     """One-task union-find == hash-min fixpoint: same node set (nulls
     are singleton components), same min-member labels — numeric order
     for integral ids (ids ≥ 10 would mislabel under lexicographic
@@ -372,14 +373,18 @@ def test_components_local_arrow_equals_distributed(spark):
         ([("z", "é"), ("é", "a"), ("Z", "b"), ("b", None)],
          "doc_a string, doc_b string"),
     ]
+    calls = kernel_calls("_components_local_arrow")
     for rows, schema in cases:
         pairs = spark.createDataFrame(rows, schema)
+        n_calls = len(calls)
         loc = sorted(
             repr((r["id"], r["component"]))
-            for r in connected_components(pairs, local_tier=True).collect()
+            for r in connected_components(pairs).collect()
         )
-        dist = sorted(
-            repr((r["id"], r["component"]))
-            for r in connected_components(pairs, local_tier=False).collect()
-        )
+        with one_task_off():
+            dist = sorted(
+                repr((r["id"], r["component"]))
+                for r in connected_components(pairs).collect()
+            )
+        assert len(calls) == n_calls + 1, schema
         assert loc == dist, schema

@@ -25,24 +25,27 @@ def _mixed_graph(spark):
     return spark.createDataFrame(edges, "src long, dst long")
 
 
-def test_triangle_local_tier_equals_distributed(spark):
+def test_triangle_local_tier_equals_distributed(spark, one_task_off):
     """The one-Arrow-task triangle kernel must be bit-equal to the
     distributed wedge join on duplicate edges, self-loops, null
     endpoints, both orientations, string ids, and ids past 2^53 (the
     Arrow float64 cliff — ints round-trip through strings)."""
+    def both(edges, orient="id"):
+        ts: dict = {}
+        loc = G.triangle_count(edges, orient=orient, tier_stats=ts).collect()
+        assert ts["local"] is True
+        with one_task_off():
+            dist = G.triangle_count(edges, orient=orient).collect()
+        return loc[0]["n_triangles"], dist[0]["n_triangles"]
+
     df = _mixed_graph(spark)
     for orient in ("id", "degree"):
-        ts: dict = {}
-        loc = G.triangle_count(df, orient=orient, tier_stats=ts).collect()
-        dist = G.triangle_count(df, orient=orient, local_tier=False).collect()
-        assert ts["local"] is True
-        assert loc[0]["n_triangles"] == dist[0]["n_triangles"]
+        loc, dist = both(df, orient)
+        assert loc == dist
 
     sdf = df.selectExpr("cast(src as string) src", "cast(dst as string) dst")
-    assert (
-        G.triangle_count(sdf).collect()[0][0]
-        == G.triangle_count(sdf, local_tier=False).collect()[0][0]
-    )
+    loc, dist = both(sdf)
+    assert loc == dist
 
     big = spark.createDataFrame(
         [
@@ -53,13 +56,11 @@ def test_triangle_local_tier_equals_distributed(spark):
         ],
         "src long, dst long",
     )
-    assert (
-        G.triangle_count(big).collect()[0][0]
-        == G.triangle_count(big, local_tier=False).collect()[0][0]
-    )
+    loc, dist = both(big)
+    assert loc == dist
 
 
-def test_triangle_local_tier_sparse_kernel(spark):
+def test_triangle_local_tier_sparse_kernel(spark, one_task_off):
     """n > 32k nodes forces the chunked compact-forward kernel (the
     dense bitset is capped at n ≤ 32k); equality must hold there too."""
     n = 40_000
@@ -69,7 +70,8 @@ def test_triangle_local_tier_sparse_kernel(spark):
     ts: dict = {}
     loc = G.triangle_count(rdf, tier_stats=ts).collect()
     assert ts["local"] is True
-    assert loc[0][0] == G.triangle_count(rdf, local_tier=False).collect()[0][0]
+    with one_task_off():
+        assert loc[0][0] == G.triangle_count(rdf).collect()[0][0]
 
 
 def test_triangle_gate_refuses_high_wedge_volume(spark, monkeypatch):
@@ -93,7 +95,8 @@ def test_triangle_empty_edges_one_row(spark):
     (n_triangles=0) row the distributed aggregate produces — the total
     comes from an aggregate ABOVE the kernel, not from inside it."""
     empty = spark.createDataFrame([], "src long, dst long")
-    assert G.triangle_count(empty, local_tier=True).collect()[0][0] == 0
+    kernel = G._triangle_local_arrow(empty.toDF("u", "v"), "id")
+    assert kernel.collect()[0][0] == 0
     assert G.triangle_count(empty).collect()[0][0] == 0
 
 
@@ -107,40 +110,53 @@ def test_one_task_kernels_equal_distributed_on_empty_input(
 ):
     """Every one-task kernel agrees with its distributed path on an
     empty edge frame, where the kernel sees no rows or no partitions.
-    pagerank has no tier switch, so its kernel is called directly and
-    its distributed loop runs with every one-task tier off."""
+    The gate admits no empty input (it needs a positive size), so each
+    kernel is called directly on the projection its operator hands it,
+    and the operator runs its distributed path with every one-task
+    tier off."""
     edges = spark.createDataFrame([], "src long, dst long")
     groups = spark.createDataFrame([], "items array<long>")
-    run = {
-        "k_hop": lambda lt: G.k_hop_neighbors(
-            edges, [1, None], 2, local_tier=lt
+    kernel, operator = {
+        "k_hop": (
+            lambda: G._k_hop_local_arrow(edges, [1, None], 2),
+            lambda: G.k_hop_neighbors(edges, [1, None], 2),
         ),
-        "pagerank": lambda lt: (
-            G._pagerank_local_arrow(
+        "pagerank": (
+            lambda: G._pagerank_local_arrow(
                 edges, 4, 150_000, 85, 100, 1_000_000, True, False
-            )
-            if lt
-            else G.pagerank_int(edges, iters=4, dangling=True)
+            ),
+            lambda: G.pagerank_int(edges, iters=4, dangling=True),
         ),
-        "triangle": lambda lt: G.triangle_count(edges, local_tier=lt),
-        "cooccurrence": lambda lt: G.cooccurrence_triangles(
-            groups, local_tier=lt
+        "triangle": (
+            lambda: G._triangle_local_arrow(edges.toDF("u", "v"), "id"),
+            lambda: G.triangle_count(edges),
         ),
-        "components": lambda lt: G.connected_components(
-            edges, "src", "dst", local_tier=lt
+        "cooccurrence": (
+            lambda: G._cooccur_local_arrow(groups, 1),
+            lambda: G.cooccurrence_triangles(groups),
         ),
-        "kcore": lambda lt: G.kcore(edges, 2, "src", "dst", local_tier=lt),
-        "pairs": lambda lt: G.common_neighbor_links(
-            edges, "src", "dst", local_tier=lt
+        "components": (
+            lambda: G._components_local_arrow(edges.toDF("u", "v")),
+            lambda: G.connected_components(edges, "src", "dst"),
+        ),
+        "kcore": (
+            lambda: G._kcore_local_arrow(edges.toDF("a", "b"), 2, 10),
+            lambda: G.kcore(edges, 2, "src", "dst"),
+        ),
+        "pairs": (
+            lambda: G._pair_count_local_arrow(
+                edges.toDF("l", "r"), min_pair=2, with_degrees=True
+            ).toDF("node_a", "node_b", "common", "deg_a", "deg_b"),
+            lambda: G.common_neighbor_links(edges, "src", "dst"),
         ),
     }[family]
-    loc = sorted(map(repr, run(True).collect()))
+    loc = sorted(map(repr, kernel().collect()))
     with one_task_off():
-        dist = sorted(map(repr, run(False).collect()))
+        dist = sorted(map(repr, operator().collect()))
     assert loc == dist
 
 
-def test_cooccurrence_triangles_local_equals_fallback(spark):
+def test_cooccurrence_triangles_local_equals_fallback(spark, one_task_off):
     """The fused one-task kernel (pair explode → support count →
     threshold → triangle count) must equal the distributed fallback
     (sorted-array pair explode + hash aggregate + triangle_count) on
@@ -158,14 +174,15 @@ def test_cooccurrence_triangles_local_equals_fallback(spark):
         loc = G.cooccurrence_triangles(
             g, items="items", min_support=support, tier_stats=ts
         ).collect()[0]
-        dist = G.cooccurrence_triangles(
-            g, items="items", min_support=support, local_tier=False
-        ).collect()[0]
+        with one_task_off():
+            dist = G.cooccurrence_triangles(
+                g, items="items", min_support=support
+            ).collect()[0]
         assert ts["local"] is True
         assert loc.asDict() == dist.asDict(), support
 
 
-def test_cooccurrence_triangles_empty_and_string_items(spark):
+def test_cooccurrence_triangles_empty_and_string_items(spark, one_task_off):
     empty = spark.createDataFrame([], "items array<string>")
     row = G.cooccurrence_triangles(empty, items="items").collect()[0]
     assert (row["n_edges"], row["n_triangles"]) == (0, 0)
@@ -174,10 +191,13 @@ def test_cooccurrence_triangles_empty_and_string_items(spark):
         [(["a", "b", "c"],)] * 3 + [(["b", "c", "d"],)] * 3,
         "items array<string>",
     )
-    loc = G.cooccurrence_triangles(s, items="items", min_support=3).collect()[0]
-    dist = G.cooccurrence_triangles(
-        s, items="items", min_support=3, local_tier=False
+    ts: dict = {}
+    loc = G.cooccurrence_triangles(
+        s, items="items", min_support=3, tier_stats=ts
     ).collect()[0]
+    assert ts["local"] is True
+    with one_task_off():
+        dist = G.cooccurrence_triangles(s, items="items", min_support=3).collect()[0]
     assert loc.asDict() == dist.asDict()
     # {a,b,c} and {b,c,d} each co-occur 3×: edges ab ac bc bd cd + the
     # two closed triangles abc, bcd
@@ -198,9 +218,10 @@ def test_cooccurrence_triangles_empty_and_string_items(spark):
         loc = G.cooccurrence_triangles(
             df, items="items", min_support=2, tier_stats=ts
         ).collect()[0]
-        dist = G.cooccurrence_triangles(
-            df, items="items", min_support=2, local_tier=False
-        ).collect()[0]
+        with one_task_off():
+            dist = G.cooccurrence_triangles(
+                df, items="items", min_support=2
+            ).collect()[0]
         assert ts["local"] is True
         assert loc.asDict() == dist.asDict()
 
@@ -237,9 +258,8 @@ def test_k_hop_local_tier_emits_seeds_without_kernel(spark):
     edge frame whose kernel never runs (empty input) must still return
     every seed at hops=0, duplicates and nulls included."""
     empty = spark.createDataFrame([], "src string, dst string")
-    out = G.k_hop_neighbors(
-        empty, ["a", "b", "a", None], 3, local_tier=True
-    ).collect()
+    # the gate admits no empty input, so the kernel is called directly
+    out = G._k_hop_local_arrow(empty, ["a", "b", "a", None], 3).collect()
     got = sorted(
         ((r["id"], r["hops"]) for r in out),
         key=lambda t: (t[0] is None, t[0]),
@@ -508,7 +528,7 @@ def test_r12_quarantine_twins_match_strict_on_clean_data(spark):
     } == strict_z13
 
 
-def test_k_hop_seed_frame_equals_list(spark):
+def test_k_hop_seed_frame_equals_list(spark, one_task_off):
     """r11 VERDICT #8: the seed-FRAME overload must produce exactly the
     list form's BFS labels (deduplicated — a frame is a set of seeds)
     without shipping ids through the driver; mismatched seed column
@@ -520,12 +540,11 @@ def test_k_hop_seed_frame_equals_list(spark):
     ]
     df = spark.createDataFrame(edges, "src long, dst long")
     seeds = [1, 2, 3, 4, 5]
-    via_list = {
-        (r["id"], r["hops"])
-        for r in G.k_hop_neighbors(
-            df, seeds, 3, local_tier=False
-        ).collect()
-    }
+    with one_task_off():
+        via_list = {
+            (r["id"], r["hops"])
+            for r in G.k_hop_neighbors(df, seeds, 3).collect()
+        }
     seed_df = spark.createDataFrame(
         [(s,) for s in seeds + [3, 3]], "seed long"  # dupes dedup away
     )

@@ -36,7 +36,7 @@ def _bipartite(spark):
     return spark.createDataFrame(edges, "l long, r long")
 
 
-def test_pair_tier_links_equals_distributed(spark):
+def test_pair_tier_links_equals_distributed(spark, one_task_off):
     """common_neighbor_links local kernel must be row-identical to the
     distributed wedge join on duplicate edges and null endpoints —
     including degrees, which count NULL-right rows exactly like the
@@ -47,24 +47,34 @@ def test_pair_tier_links_equals_distributed(spark):
         loc = G.common_neighbor_links(
             df, "l", "r", min_common=mc, tier_stats=ts
         )
-        dist = G.common_neighbor_links(
-            df, "l", "r", min_common=mc, local_tier=False
-        )
+        with one_task_off():
+            dist = G.common_neighbor_links(df, "l", "r", min_common=mc)
         assert ts["local"] is True
         assert _rows(loc) == _rows(dist)
 
 
-def test_pair_tier_links_string_and_big_ids(spark):
+def test_pair_tier_links_string_and_big_ids(spark, one_task_off):
     """String ids order lexicographically ("10" < "9" never leaks into
     the value-ordered output) and ids past 2^53 survive the Arrow
     boundary (string round-trip)."""
+
+    def assert_local_equals_distributed(edges, min_common):
+        ts: dict = {}
+        loc = _rows(
+            G.common_neighbor_links(
+                edges, "l", "r", min_common=min_common, tier_stats=ts
+            )
+        )
+        assert ts["local"] is True
+        with one_task_off():
+            dist = _rows(
+                G.common_neighbor_links(edges, "l", "r", min_common=min_common)
+            )
+        assert loc == dist
+
     df = _bipartite(spark)
     sdf = df.selectExpr("cast(l as string) l", "cast(r as string) r")
-    assert _rows(
-        G.common_neighbor_links(sdf, "l", "r", min_common=2)
-    ) == _rows(
-        G.common_neighbor_links(sdf, "l", "r", min_common=2, local_tier=False)
-    )
+    assert_local_equals_distributed(sdf, 2)
     big = spark.createDataFrame(
         [
             (2**53 + a, b)
@@ -72,30 +82,14 @@ def test_pair_tier_links_string_and_big_ids(spark):
         ],
         "l long, r long",
     )
-    assert _rows(
-        G.common_neighbor_links(big, "l", "r", min_common=1)
-    ) == _rows(
-        G.common_neighbor_links(big, "l", "r", min_common=1, local_tier=False)
-    )
+    assert_local_equals_distributed(big, 1)
     # mixed column types: string left ids over integral right ids (the
     # kernel encodes each column independently)
     mixed = df.selectExpr("cast(l as string) l", "r")
-    assert _rows(
-        G.common_neighbor_links(mixed, "l", "r", min_common=2)
-    ) == _rows(
-        G.common_neighbor_links(
-            mixed, "l", "r", min_common=2, local_tier=False
-        )
-    )
+    assert_local_equals_distributed(mixed, 2)
     # non-ASCII string ids: node_a < node_b in Spark's bytewise order
     uni = df.selectExpr(_non_ascii("l"), "r")
-    ts: dict = {}
-    assert _rows(
-        G.common_neighbor_links(uni, "l", "r", min_common=2, tier_stats=ts)
-    ) == _rows(
-        G.common_neighbor_links(uni, "l", "r", min_common=2, local_tier=False)
-    )
-    assert ts["local"] is True
+    assert_local_equals_distributed(uni, 2)
 
 
 def test_pair_tier_gate_refuses_high_wedge_volume(spark, monkeypatch):
@@ -114,36 +108,33 @@ def test_pair_tier_gate_refuses_high_wedge_volume(spark, monkeypatch):
     assert len(rows) == 60 * 59 // 2
 
 
-def test_pair_tier_respects_hub_cap(spark):
+def test_pair_tier_respects_hub_cap(spark, one_task_off, monkeypatch):
     """When the auto hub guard trips, the local kernel must see the
     CAPPED edge set — identical to the distributed capped result."""
     # one supernode right (degree 70) over a floor-4/ratio-2 guard
     edges = [(i, 0) for i in range(70)]
     edges += [(i, 1 + i % 5) for i in range(25)]
     df = spark.createDataFrame(edges, "l long, r long")
-    spark.conf.set("spark.graft.linkpred.hubFloor", "4")
-    spark.conf.set("spark.graft.linkpred.hubRatio", "2")
-    try:
-        gs_l: dict = {}
-        ts: dict = {}
-        loc = G.common_neighbor_links(
-            df, "l", "r", min_common=1, guard_stats=gs_l, tier_stats=ts
-        )
-        gs_d: dict = {}
+    monkeypatch.setattr(G, "HUB_FLOOR", 4)
+    monkeypatch.setattr(G, "HUB_RATIO", 2)
+    gs_l: dict = {}
+    ts: dict = {}
+    loc = G.common_neighbor_links(
+        df, "l", "r", min_common=1, guard_stats=gs_l, tier_stats=ts
+    )
+    gs_d: dict = {}
+    with one_task_off():
         dist = G.common_neighbor_links(
-            df, "l", "r", min_common=1, guard_stats=gs_d, local_tier=False
+            df, "l", "r", min_common=1, guard_stats=gs_d
         )
-        assert gs_l["tripped"] and gs_d["tripped"]
-        assert ts["local"] is True
-        # post-cap wedge volume only (the capped hub contributes none)
-        assert ts["wedges"] == gs_l["total_wedges"] - gs_l["dropped_wedges"]
-        assert _rows(loc) == _rows(dist)
-    finally:
-        spark.conf.unset("spark.graft.linkpred.hubFloor")
-        spark.conf.unset("spark.graft.linkpred.hubRatio")
+    assert gs_l["tripped"] and gs_d["tripped"]
+    assert ts["local"] is True
+    # post-cap wedge volume only (the capped hub contributes none)
+    assert ts["wedges"] == gs_l["total_wedges"] - gs_l["dropped_wedges"]
+    assert _rows(loc) == _rows(dist)
 
 
-def test_cooccurrence_pairs_local_equals_distributed(spark):
+def test_cooccurrence_pairs_local_equals_distributed(spark, one_task_off):
     """The fused kernel (distinct + a-priori prune + pair count) must
     equal the distributed join for every support level, including null
     baskets/items and duplicate rows, and for string ids."""
@@ -153,9 +144,8 @@ def test_cooccurrence_pairs_local_equals_distributed(spark):
         loc = cooccurrence_pairs(
             df, "basket", "item", support, tier_stats=ts
         )
-        dist = cooccurrence_pairs(
-            df, "basket", "item", support, local_tier=False
-        )
+        with one_task_off():
+            dist = cooccurrence_pairs(df, "basket", "item", support)
         assert ts["local"] is True
         assert _rows(loc) == _rows(dist)
     sdf = df.selectExpr(
@@ -166,11 +156,10 @@ def test_cooccurrence_pairs_local_equals_distributed(spark):
     uni = df.selectExpr("basket", _non_ascii("item"))
     for other in (sdf, big, uni):
         ts = {}
-        assert _rows(
-            cooccurrence_pairs(other, "basket", "item", 2, tier_stats=ts)
-        ) == _rows(
-            cooccurrence_pairs(other, "basket", "item", 2, local_tier=False)
-        )
+        loc = cooccurrence_pairs(other, "basket", "item", 2, tier_stats=ts)
+        with one_task_off():
+            dist = cooccurrence_pairs(other, "basket", "item", 2)
+        assert _rows(loc) == _rows(dist)
         assert ts["local"] is True
 
 
